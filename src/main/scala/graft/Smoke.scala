@@ -48,7 +48,7 @@ object Smoke {
 
     import graft.dedup.Dedup
     println("== simhash sample ==")
-    Dedup.simhash(Tables.documents(spark, sfDir), "doc_id", "text").show(3, false)
+    Dedup.simhashMd5(Tables.documents(spark, sfDir), "doc_id", "text").show(3, false)
 
     import graft.similarity.Similarity
     println("== cosineTopK sample ==")

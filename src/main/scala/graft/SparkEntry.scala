@@ -2,13 +2,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query registry (see SURVEY.md §7).
   *
   * Every implemented operator from SURVEY.md §2 is registered here as a
-  * named query over the driver's testdata tables, with the equivalent
-  * DuckDB oracle SQL where the operator is SQL-expressible (xxhash64 /
-  * seeded-LSH sketches run with the weaker rows-only check; their exact
-  * verification stages are oracle-checked separately).
+  * named query over the testdata tables, each with the equivalent DuckDB
+  * oracle SQL. Sketches hash with md5 so the oracle recomputes them too;
+  * no query runs with a rows-only check.
   */
 object SparkEntry {
 
@@ -207,9 +206,13 @@ object SparkEntry {
     registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Every query has one. */
   def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    registry.map(q => q.name -> q.oracle).toMap
+
+  /** Registered names in registry order, duplicates kept: `queries` and
+    * `oracleSql` are maps, so they cannot show a name registered twice. */
+  private[graft] def registryNames: Seq[String] = registry.map(_.name)
 
   /** One-time physical-layout prep for `sfDir` (bucketed CTAS etc.) —
     * idempotent; every query also self-prepares, so calling this is only

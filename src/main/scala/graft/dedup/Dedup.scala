@@ -15,9 +15,9 @@ import graft.text.TextFunctions
   *    shuffle, map-side combined) -> banding -> bucket self-join. Only
   *    same-bucket pairs are ever compared; cost is bounded by bucket
   *    population, not corpus².
-  *  - SimHash: per-doc collect of token hashes folded into a 64-bit
-  *    signature with higher-order array functions; near-dup = signature
-  *    Hamming distance, joinable on rotated band keys.
+  *  - SimHash: one native pass per doc folds md5 token hashes into a
+  *    64-bit signature; near-dup = signature Hamming distance, joined on
+  *    Manku block-combination keys.
   *  - n-gram Jaccard: exact verification for candidate pairs (or small
   *    corpora) via distinct-token self-join — the brute-force baseline the
   *    sketches approximate.
@@ -43,74 +43,6 @@ object Dedup {
   def distinctShingles(textCol: Column, n: Int): Column =
     graft.functions.ShingleFunctions.distinctShingles(textCol, n)
 
-  /** Per-permutation re-mix of one base hash: `xxhash64(i, h)` hashes a
-    * fixed 12 bytes per permutation — the k-permutation MinHash
-    * construction with each shingle's string bytes hashed ONCE, instead
-    * of k full re-hashes of the text. (An affine `a_i*h + b_i` mix would
-    * be cheaper still, but ANSI mode makes wrap-around long arithmetic an
-    * overflow error.) */
-  private def permHash(h: Column, i: Int): Column = xxhash64(lit(i), h)
-
-  /** MinHash signature: k independent min-hashes per doc. The aggregate
-    * is k `min`s — map-side partial aggregation keeps the shuffle tiny
-    * regardless of document length. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int, shingleN: Int = 3): DataFrame = {
-    val sh = df.select(col(idCol), explode(distinctShingles(col(textCol), shingleN)).as("shingle"))
-    minhashSignaturesFromSets(sh, idCol, numHashes)
-  }
-
-  /** LSH banding: split the k-wide signature into bands of `rowsPerBand`,
-    * hash each band, and emit (band_idx, band_hash, id). Candidate pairs
-    * are ids sharing any (band_idx, band_hash) bucket. */
-  def lshCandidatePairs(sigs: DataFrame, idCol: String, numHashes: Int,
-                        rowsPerBand: Int): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    val bands = (0 until numBands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"mh_$i"))
-      struct(lit(b).as("band_idx"), xxhash64(cols: _*).as("band_hash"))
-    }
-    val buckets = sigs.select(col(idCol), explode(array(bands: _*)).as("band"))
-      .select(col(idCol), col("band.band_idx"), col("band.band_hash"))
-    val l = buckets.as("l")
-    val r = buckets.as("r")
-    l.join(r,
-        col("l.band_idx") === col("r.band_idx") &&
-        col("l.band_hash") === col("r.band_hash") &&
-        col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id1"), col(s"r.$idCol").as("id2"))
-      .distinct()
-  }
-
-  /** MinHash signatures computed from an already-exploded distinct
-    * (id, shingle) set — lets callers share the explode with the
-    * verification pass. */
-  def minhashSignaturesFromSets(sets: DataFrame, idCol: String,
-                                numHashes: Int): DataFrame = {
-    // Hash in a projection below the aggregate so each shingle's bytes
-    // are hashed exactly once, not once per permutation.
-    val hashed = sets.select(col(idCol), xxhash64(col("shingle")).as("_h"))
-    val aggs = (0 until numHashes).map(i => min(permHash(col("_h"), i)).as(s"mh_$i"))
-    hashed.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** MinHash+LSH near-duplicate pairs with exact Jaccard verification of
-    * the candidates (the full dedup pipeline). The exploded distinct
-    * shingle set — the heaviest intermediate — is persisted and reused by
-    * both the signature aggregation and the verification join, so the
-    * corpus text is read and shingled exactly once. (At cluster scale the
-    * same role is played by checkpointing the set to parquet.) */
-  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      numHashes: Int = 32, rowsPerBand: Int = 4,
-                      shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val sets = graft.ops.CacheOnce.swap("minhash-shingles",
-      df.select(col(idCol),
-        explode(distinctShingles(col(textCol), shingleN)).as("shingle")))
-    val sigs = minhashSignaturesFromSets(sets, idCol, numHashes)
-    val cands = lshCandidatePairs(sigs, idCol, numHashes, rowsPerBand)
-    verifyJaccard(cands, sets, idCol, threshold)
-  }
-
   /** Exact Jaccard for candidate pairs given exploded distinct element
     * sets (id, element). Shuffles by element and by pair — both keyed,
     * both combinable. */
@@ -132,7 +64,7 @@ object Dedup {
   }
 
   /** Exact pairwise n-gram (word) Jaccard above a threshold — brute-force
-    * baseline; use [[minhashNearDups]] at scale. */
+    * baseline; use [[minhashNearDupsMd5]] at scale. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double): DataFrame = {
     val sets = df.select(col(idCol),
@@ -145,131 +77,18 @@ object Dedup {
       sets, idCol, threshold)
   }
 
-  /** 64-bit SimHash signature per document via the native
-    * [[graft.functions.SimHash64]] expression (one primitive loop per
-    * doc; see [[simhashComposable]] for the operator formulation it
-    * replaces, kept as its cross-checkable twin). */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-      graft.functions.SimHashFunctions.simhash64(col(textCol)).as("simhash"))
-
-  /** SimHash via higher-order array functions only — fold token hashes
-    * into per-bit vote counts, then take the sign bit-vector. Allocates
-    * a 64-wide array per token through interpreted lambdas; prefer
-    * [[simhash]] anywhere performance matters. */
-  def simhashComposable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val hashed = df.select(col(idCol),
-      transform(TextFunctions.tokens(col(textCol)), t => xxhash64(t)).as("hs"))
-    hashed.select(col(idCol),
-      expr(
-        """aggregate(
-          |  zip_with(
-          |    aggregate(hs, array_repeat(0L, 64),
-          |      (acc, h) -> zip_with(acc, sequence(0, 63),
-          |        (a, b) -> a + if(((h >> b) & 1L) = 1L, 1L, -1L))),
-          |    sequence(0, 63),
-          |    (v, b) -> if(v > 0, shiftleft(1L, b), 0L)),
-          |  0L, (s, x) -> s | x)""".stripMargin).as("simhash"))
-  }
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b)).cast("long")
-
-  /** Contiguous bit ranges `(startBit, width)` covering bits 0..63 in
-    * `blocks` near-equal pieces, LSB first. */
-  private[graft] def blockRanges(blocks: Int): Seq[(Int, Int)] = {
-    val base = 64 / blocks
-    val extra = 64 % blocks
-    val widths = Seq.tabulate(blocks)(i => base + (if (i < extra) 1 else 0))
-    widths.scanLeft(0)(_ + _).zip(widths)
-  }
-
-  /** Manku-style block-combination bucket keys: one key per
-    * `m`-combination of blocks, each key the concatenation of the chosen
-    * block values (plus the combination index as part of the join key).
-    * Any pair agreeing on >= m blocks shares at least one combination's
-    * full key. Returned as (comboIdx, key) structs. */
-  private[graft] def comboKeys(blockVals: Seq[(Column, Int)], m: Int): Seq[Column] =
-    blockVals.indices.combinations(m).toSeq.zipWithIndex.map { case (combo, ci) =>
-      val key = combo.foldLeft(lit(0L)) { (acc, bi) =>
-        shiftleft(acc, blockVals(bi)._2).bitwiseOR(blockVals(bi)._1)
-      }
-      struct(lit(ci).as("combo"), key.as("bkey"))
-    }
-
-  /** (id, simhash, combo, bkey) bucket rows for the Manku scheme. */
-  private[graft] def simhashBuckets(sigs: DataFrame, idCol: String,
-                                    maxHamming: Int, blocks: Int): DataFrame = {
-    require(maxHamming < blocks, "recall guarantee needs maxHamming < blocks")
-    require(blocks >= 2 && blocks <= 64, "blocks must be in 2..64")
-    val m = blocks - maxHamming
-    val vals = blockRanges(blocks).map { case (start, w) =>
-      val mask = if (w == 64) -1L else (1L << w) - 1
-      (shiftrightunsigned(col("simhash"), start).bitwiseAND(lit(mask)), w)
-    }
-    sigs.select(col(idCol), col("simhash"),
-        explode(array(comboKeys(vals, m): _*)).as("_ck"))
-      .select(col(idCol), col("simhash"),
-        col("_ck.combo").as("combo"), col("_ck.bkey").as("bkey"))
-  }
-
-  /** Candidate pairs (id1 < id2, with both signatures) sharing any
-    * block-combination bucket — pre-Hamming-verification, exposed so the
-    * sub-quadratic candidate growth is assertable in tests. */
-  private[graft] def simhashCandidatePairs(sigs: DataFrame, idCol: String,
-                                           maxHamming: Int, blocks: Int): DataFrame = {
-    val buckets = simhashBuckets(sigs, idCol, maxHamming, blocks)
-    val l = buckets.select(col(idCol).as("id1"), col("simhash").as("s1"),
-      col("combo"), col("bkey"))
-    val r = buckets.select(col(idCol).as("id2"), col("simhash").as("s2"),
-      col("combo"), col("bkey"))
-    l.join(r, Seq("combo", "bkey")).filter(col("id1") < col("id2"))
-  }
-
-  /** SimHash near-duplicate pairs, Manku-style (Manku, Jain & Das Sarma,
-    * WWW'07 block-permutation dedup, re-expressed as a bucket join):
-    * split the 64-bit signature into `blocks` near-equal bit-blocks and
-    * bucket each doc once per `m = blocks - maxHamming` combination of
-    * blocks, keyed by the CONCATENATION of those block values. Pigeonhole
-    * recall guarantee: a pair within Hamming distance maxHamming differs
-    * in at most maxHamming blocks, so it agrees on >= m blocks and shares
-    * at least one combination key — recall is exactly 1, no sketch miss.
-    *
-    * Scale: the key is ~ (blocks - maxHamming) * 64/blocks bits wide —
-    * with the defaults (maxHamming 3, blocks 6) that is 32 bits, so
-    * unrelated docs collide with p ~ 2^-32 per combination and candidate
-    * volume grows linearly with true near-dup density, never as N²/2^band
-    * (the failure mode of single-block bucketing, whose 8..16-bit keys
-    * collapse at corpus scale). The cost knob: C(blocks, m) bucket rows
-    * per doc (20 at the defaults); raising maxHamming means choosing
-    * more/narrower blocks — keep maxHamming small and blocks ~ 2x
-    * maxHamming for corpus-scale runs. Hamming verification runs BEFORE
-    * the pair distinct, so far-apart collisions never cross the distinct
-    * exchange. */
-  def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3, blocks: Int = 6): DataFrame = {
-    // Same self-join shape as the md5 twin: cache the signature table so
-    // the per-token hash + bit-vote chain executes once, not per side.
-    val sigs = graft.ops.CacheOnce.swap("simhash-xx-sigs",
-      simhash(df, idCol, textCol))
-    simhashCandidatePairs(sigs, idCol, maxHamming, blocks)
-      .select(col("id1"), col("id2"), hamming64(col("s1"), col("s2")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-  }
-
-  // ---- md5 twins ----------------------------------------------------
+  // ---- md5 sketches ------------------------------------------------
   //
-  // Every sketch above hashes with xxhash64 (cheap, codegen'd) — which no
-  // ANSI-SQL oracle can reproduce. Each sketch therefore has an md5 twin
-  // built from exactly the same pipeline shape with md5-derived hash
-  // material (32-bit words parsed from hex nibbles, combined with plain
-  // integer arithmetic), so an independent engine can recompute the
-  // whole pipeline — signatures, banding, candidate join, verification —
-  // bit for bit. The twins trade per-row hash cost for auditability; the
-  // xxhash64 variants remain the production path.
+  // Every sketch hashes with md5-derived material (32-bit words parsed
+  // from hex nibbles, combined with plain integer arithmetic) because an
+  // independent engine such as DuckDB can re-derive md5, but not Spark's
+  // own seeded hash functions. So the oracle recomputes each whole
+  // pipeline — signatures, banding, candidate join, verification — bit
+  // for bit. Names keep their `Md5` suffix, and memo keys their `md5`
+  // tag, so callers and memo keys stay stable.
 
-  /** [[minhashSignaturesFromSets]]' md5 twin, 2-word affine
+  /** MinHash signature from an already-exploded distinct (id, shingle)
+    * set, one `mh_i` column per permutation, 2-word affine
     * construction (Kirsch & Mitzenmacher's two-hash scheme): ONE md5
     * per shingle, split into two 32-bit words (big-endian hex parse of
     * nibbles 1-8 and 9-16), with permutation i's value the affine
@@ -290,7 +109,7 @@ object Dedup {
     words.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** (id, band_idx, band_hash) bucket rows, md5-twin banding: the band
+  /** (id, band_idx, band_hash) bucket rows, md5 banding: the band
     * key is the '|'-joined decimal rendering of the band's signature
     * values in permutation order — a direct composite key, no further
     * hashing needed (the join is on equality, not on key width). */
@@ -319,7 +138,8 @@ object Dedup {
         concat(col("band_idx").cast("string"), lit(":"), col("band_hash"))
           .as("band_key"))
 
-  /** [[lshCandidatePairs]]' md5 twin. */
+  /** LSH banding: candidate pairs (id1 < id2) are ids sharing any
+    * (band_idx, band_hash) bucket of [[bandBucketsMd5]]. */
   def lshCandidatePairsMd5(sigs: DataFrame, idCol: String, numHashes: Int,
                            rowsPerBand: Int): DataFrame = {
     val buckets = bandBucketsMd5(sigs, idCol, numHashes, rowsPerBand)
@@ -360,7 +180,7 @@ object Dedup {
     * shingle Jaccard reaches `threshold`, via the SAME MinHash+LSH shape
     * as [[minhashNearDupsMd5]] but with the band-bucket join taken
     * BETWEEN the two corpora — candidates are bucket-keyed, never
-    * |train| x |test|. md5 twin hashing, so an independent engine can
+    * |train| x |test|. md5 hashing, so an independent engine can
     * recompute the whole pass. Output: (train_id, test_id, jaccard). */
   def crossCorpusNearDupsMd5(train: DataFrame, test: DataFrame, idCol: String,
                              textCol: String, numHashes: Int = 32,
@@ -667,9 +487,12 @@ object Dedup {
     * the two DRIVER JOBS every invocation of [[bloomContamination]]
     * paid (a full count action + the bloomFilter aggregate) even though
     * both are constants of the (test corpus generation, shingleN, fpp):
-    * the contamStateBloom discipline applied to the ad-hoc path. Keyed
-    * by the caller's `memoTag`, which must carry the test source's
-    * generation fingerprint plus the sketch parameters. */
+    * the contamStateBloom discipline applied to the ad-hoc path. The key
+    * is `memoTag|n=shingleN|fpp=fpp|test=<semantic hash>`: the caller's
+    * `memoTag` (which must carry the test source's generation
+    * fingerprint), the shingle width `shingleN`, the filter's `fpp`,
+    * and the semantic hash of the test shingle frame's analyzed plan,
+    * so two test splits under one tag never share a filter. */
   private val testBloomMemo = new java.util.LinkedHashMap[
       String, (Long, org.apache.spark.util.sketch.BloomFilter)](16, 0.75f, true) {
     override def removeEldestEntry(
@@ -822,9 +645,12 @@ object Dedup {
         col("best_test_id"), col("n_shared"))
   }
 
-  /** [[minhashNearDups]]' md5 twin — same pipeline (shared shingle set,
-    * signature aggregate, banded bucket join, exact Jaccard
-    * verification), oracle-reproducible end to end. */
+  /** MinHash+LSH near-duplicate pairs with exact Jaccard verification of
+    * the candidates (the full dedup pipeline), oracle-reproducible end
+    * to end. The exploded distinct shingle set — the heaviest
+    * intermediate — is persisted and reused by both the signature
+    * aggregation and the verification join, so the corpus text is read
+    * and shingled exactly once. */
   def minhashNearDupsMd5(df: DataFrame, idCol: String, textCol: String,
                          numHashes: Int = 32, rowsPerBand: Int = 4,
                          shingleN: Int = 3, threshold: Double = 0.8): DataFrame = {
@@ -836,7 +662,7 @@ object Dedup {
     verifyJaccard(cands, sets, idCol, threshold)
   }
 
-  /** [[simhash]]'s md5 twin: token hash = the first 16 hex chars of
+  /** 64-bit SimHash signature per document: token hash = the first 16 hex chars of
     * md5(token) read as a big-endian 64-bit value, carried as two
     * non-negative 32-bit halves (`sig_hi` = bits 32..63, `sig_lo` = bits
     * 0..31) so neither engine ever parses a >= 2^63 literal. Tokenless
@@ -846,8 +672,8 @@ object Dedup {
     * expression — one primitive loop per document, PER-ROW (no explode,
     * no groupBy), so the same signer serves batch and streaming alike.
     * [[simhashMd5Agg]] is the composed aggregate formulation it
-    * replaced, kept as its cross-checkable twin (IncrementalSimhashSpec
-    * pins bit-equality). */
+    * replaced, kept as its cross-checkable reference
+    * (IncrementalSimhashSpec pins bit-equality). */
   def simhashMd5(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val packed = graft.functions.SimHashFunctions.simhashMd5Packed(col(textCol))
     df.select(col(idCol),
@@ -857,7 +683,7 @@ object Dedup {
 
   /** The operator-composed (explode + 64 vote aggregates) formulation
     * [[simhashMd5]] replaced — quadratically more expensive per token,
-    * kept as the native expression's cross-checkable twin. */
+    * kept as the native expression's cross-checkable reference. */
   private[graft] def simhashMd5Agg(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tok = df.select(col(idCol),
         explode(TextFunctions.tokens(col(textCol))).as("_t"))
@@ -890,32 +716,62 @@ object Dedup {
   def hammingHiLo(h1: Column, l1: Column, h2: Column, l2: Column): Column =
     (bit_count(h1.bitwiseXOR(h2)) + bit_count(l1.bitwiseXOR(l2))).cast("long")
 
-  /** [[simhashNearDups]]' md5 twin: the same Manku block-combination
-    * scheme over (sig_hi, sig_lo) halves. `blocks` must be even — each
-    * 32-bit half is split into blocks/2 pieces so no block straddles the
-    * half boundary (keeps the oracle's bit arithmetic trivial). */
-  def simhashNearDupsMd5(df: DataFrame, idCol: String, textCol: String,
-                         maxHamming: Int = 3, blocks: Int = 6): DataFrame = {
-    require(blocks % 2 == 0, "md5-twin blocks must be even (split per 32-bit half)")
+  /** The Manku block layout over (sig_hi, sig_lo) halves — the ONE
+    * definition behind both [[simhashNearDupsMd5]]'s self-join and
+    * [[simhashMankuKeysMd5]]'s persisted keys, so probe and self-join
+    * find the same candidate sets. `blocks` must be even: each 32-bit
+    * half splits into blocks/2 near-equal pieces (LSB first), so no
+    * block straddles the half boundary (keeps the oracle's bit
+    * arithmetic trivial). Explodes one (combo, bkey) struct per
+    * `m = blocks - maxHamming` combination of blocks, bkey the
+    * concatenation of the chosen block values: any pair agreeing on
+    * >= m blocks shares at least one combination's full key. */
+  private def mankuComboKeys(maxHamming: Int, blocks: Int): Column = {
+    require(blocks % 2 == 0, "blocks must be even (split per 32-bit half)")
     require(maxHamming < blocks, "recall guarantee needs maxHamming < blocks")
-    val m = blocks - maxHamming
     val half = blocks / 2
-    val base32 = 32 / half
-    val extra32 = 32 % half
-    val widths = Seq.tabulate(half)(i => base32 + (if (i < extra32) 1 else 0))
+    val widths = Seq.tabulate(half)(i => 32 / half + (if (i < 32 % half) 1 else 0))
     val ranges = widths.scanLeft(0)(_ + _).zip(widths)
     def vals(c: Column): Seq[(Column, Int)] = ranges.map { case (s, w) =>
       (shiftright(c, s).bitwiseAND(lit((1L << w) - 1)), w)
     }
+    val blockVals = vals(col("sig_lo")) ++ vals(col("sig_hi"))
+    val keys = blockVals.indices.combinations(blocks - maxHamming).toSeq
+      .zipWithIndex.map { case (combo, ci) =>
+        val key = combo.foldLeft(lit(0L)) { (acc, bi) =>
+          shiftleft(acc, blockVals(bi)._2).bitwiseOR(blockVals(bi)._1)
+        }
+        struct(lit(ci).as("combo"), key.as("bkey"))
+      }
+    explode(array(keys: _*))
+  }
+
+  /** SimHash near-duplicate pairs, Manku-style (Manku, Jain & Das Sarma,
+    * WWW'07 block-permutation dedup, re-expressed as a bucket join):
+    * bucket each doc once per [[mankuComboKeys]] combination. Pigeonhole
+    * recall guarantee: a pair within Hamming distance maxHamming differs
+    * in at most maxHamming blocks, so it agrees on >= m blocks and shares
+    * at least one combination key — recall is exactly 1, no sketch miss.
+    *
+    * Scale: the key is ~ (blocks - maxHamming) * 64/blocks bits wide —
+    * 32 bits at the defaults (maxHamming 3, blocks 6) — so unrelated
+    * docs collide with p ~ 2^-32 per combination and candidate volume
+    * grows linearly with true near-dup density, never as N²/2^band. The
+    * cost knob: C(blocks, m) bucket rows per doc (20 at the defaults);
+    * keep maxHamming small and blocks ~ 2x maxHamming for corpus-scale
+    * runs. Hamming verification runs BEFORE the pair distinct, so
+    * far-apart collisions never cross the distinct exchange. */
+  def simhashNearDupsMd5(df: DataFrame, idCol: String, textCol: String,
+                         maxHamming: Int = 3, blocks: Int = 6): DataFrame = {
+    val combos = mankuComboKeys(maxHamming, blocks)
     // The signature table feeds BOTH sides of the bucket self-join, and
     // computing it is the expensive part (per-token md5 + 64 bit-vote
     // aggregates); cached, the chain runs once instead of twice — and
     // dd_simhash / dd_simhash_neardups over the same corpus share it.
     val sigs = graft.ops.CacheOnce.swap("simhash-md5-sigs",
       simhashMd5(df, idCol, textCol))
-    val blockVals = vals(col("sig_lo")) ++ vals(col("sig_hi"))
     val buckets = sigs.select(col(idCol), col("sig_hi"), col("sig_lo"),
-        explode(array(comboKeys(blockVals, m): _*)).as("_ck"))
+        combos.as("_ck"))
       .select(col(idCol), col("sig_hi"), col("sig_lo"),
         col("_ck.combo").as("combo"), col("_ck.bkey").as("bkey"))
     val l = buckets.select(col(idCol).as("id1"), col("sig_hi").as("h1"),
@@ -929,35 +785,20 @@ object Dedup {
       .distinct()
   }
 
-  /** (id, sig_hi, sig_lo, mkey) Manku bucket rows over md5-twin hi/lo
+  /** (id, sig_hi, sig_lo, mkey) Manku bucket rows over hi/lo
     * signature halves — the PERSISTABLE form of
-    * [[simhashNearDupsMd5]]'s bucket stage: the (combo, bkey) pair
-    * packs into ONE long (`mkey` = combo << 40 | bkey; any
-    * 3-of-6 block choice concatenates to at most 33 bits, so 40 clears
-    * it) so a state table can bucket on exactly the probe-join key.
-    * Same halved block layout and combination order as
-    * [[simhashNearDupsMd5]] — the two MUST stay in lockstep or probe
-    * and self-join find different candidate sets. */
+    * [[simhashNearDupsMd5]]'s bucket stage, over the same
+    * [[mankuComboKeys]] layout: the (combo, bkey) pair packs into ONE
+    * long (`mkey` = combo << 40 | bkey; any 3-of-6 block choice
+    * concatenates to at most 33 bits, so 40 clears it) so a state table
+    * can bucket on exactly the probe-join key. */
   def simhashMankuKeysMd5(sigs: DataFrame, idCol: String,
-                          maxHamming: Int = 3, blocks: Int = 6): DataFrame = {
-    require(blocks % 2 == 0, "md5-twin blocks must be even (split per 32-bit half)")
-    require(maxHamming < blocks, "recall guarantee needs maxHamming < blocks")
-    val m = blocks - maxHamming
-    val half = blocks / 2
-    val base32 = 32 / half
-    val extra32 = 32 % half
-    val widths = Seq.tabulate(half)(i => base32 + (if (i < extra32) 1 else 0))
-    val ranges = widths.scanLeft(0)(_ + _).zip(widths)
-    def vals(c: Column): Seq[(Column, Int)] = ranges.map { case (s, w) =>
-      (shiftright(c, s).bitwiseAND(lit((1L << w) - 1)), w)
-    }
-    val blockVals = vals(col("sig_lo")) ++ vals(col("sig_hi"))
+                          maxHamming: Int = 3, blocks: Int = 6): DataFrame =
     sigs.select(col(idCol), col("sig_hi"), col("sig_lo"),
-        explode(array(comboKeys(blockVals, m): _*)).as("_ck"))
+        mankuComboKeys(maxHamming, blocks).as("_ck"))
       .select(col(idCol), col("sig_hi"), col("sig_lo"),
         shiftleft(col("_ck.combo").cast("long"), 40)
           .bitwiseOR(col("_ck.bkey")).as("mkey"))
-  }
 
   /** Incremental SimHash near-dup dedup against persisted Manku-key
     * state — [[incrementalNearDups]]' shape for the SimHash family,

@@ -2,44 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 64-bit SimHash of whitespace tokens in one native pass.
-  *
-  * Matches the higher-order formulation bit for bit — per token,
-  * h = xxhash64(token) (seed 42, same as Spark's `xxhash64`); per bit,
-  * vote +1/-1 on `(h >> b) & 1`; signature bit set where the vote sum is
-  * positive; empty/blank text hashes to 0. The HOF version allocates a
-  * 64-element array per token per document through three nested
-  * interpreted lambdas; this is a primitive loop per document.
-  */
-object SimHashUtil {
-  def simhash(text: UTF8String): Long = {
-    val t = text.trim()
-    if (t.numBytes == 0) return 0L
-    val toks = t.toString.split("\\s+", -1)
-    val counts = new Array[Int](64)
-    var i = 0
-    while (i < toks.length) {
-      val u = UTF8String.fromString(toks(i))
-      val h = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-      var b = 0
-      while (b < 64) {
-        if (((h >> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) sig |= (1L << b); b += 1 }
-    sig
-  }
-}
-
-/** md5-twin SimHash in one native pass, PACKED as (sig_hi << 32 |
+/** md5 SimHash in one native pass, PACKED as (sig_hi << 32 |
   * sig_lo) — the (hi, lo) 32-bit-half encoding every md5-twin oracle
   * shares, in a single long. Matches [[graft.dedup.Dedup]]'s
   * aggregate formulation bit for bit: per token, whi/wlo = the md5
@@ -93,23 +60,7 @@ case class SimHashMd5Packed(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(s: Any): Any =
-    SimHashUtil.simhash(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SimHashUtil.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHashFunctions {
-  def simhash64(text: Column): Column =
-    GraftShim.column(SimHash64(GraftShim.expression(text.cast("string"))))
-
   def simhashMd5Packed(text: Column): Column =
     GraftShim.column(SimHashMd5Packed(GraftShim.expression(text.cast("string"))))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass winnowing fingerprints (Schleimer/Wilkerson/Aiken).
@@ -22,24 +22,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * Semantics (identical to the composable formulation and the SQL
   * oracle): m = number of grams; if m >= w the fingerprints are
   * { min(h[p..p+w-1]) : 0 <= p <= m-w }, else { min(h[0..m-1]) }.
-  * `useMd5 = true` hashes grams with MD5 and compares hex strings
-  * lexicographically (reproducible in any engine); `false` uses
-  * xxhash64(seed 42) longs, matching Spark's `xxhash64` — the cheap
-  * production path.
+  * Grams hash with MD5 and compare as hex strings lexicographically, so
+  * any engine with md5 reproduces the fingerprints.
   */
-case class WinnowFingerprints(child: Expression, n: Int, w: Int, useMd5: Boolean)
+case class WinnowFingerprints(child: Expression, n: Int, w: Int)
     extends UnaryExpression {
   require(n >= 1 && w >= 1, "gram size and window must be >= 1")
 
-  override def dataType: DataType =
-    ArrayType(if (useMd5) StringType else LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override protected def nullSafeEval(s: Any): Any =
-    WinnowUtil.winnow(s.asInstanceOf[UTF8String], n, w, useMd5)
+    WinnowUtil.winnow(s.asInstanceOf[UTF8String], n, w)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.WinnowUtil.winnow($c, $n, $w, $useMd5)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.WinnowUtil.winnow($c, $n, $w)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -71,64 +67,35 @@ object WinnowUtil {
     UTF8String.fromString(new String(out))
   }
 
-  def winnow(text: UTF8String, n: Int, w: Int, useMd5: Boolean): ArrayData = {
+  def winnow(text: UTF8String, n: Int, w: Int): ArrayData = {
     val grams = ShingleUtil.charGrams(text, n)
     val m = grams.numElements()
-
-    if (useMd5) {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hs = new Array[Array[Byte]](m)
-      var i = 0
-      while (i < m) {
-        md.reset()
-        hs(i) = md.digest(grams.getUTF8String(i).getBytes)
-        i += 1
-      }
-      val out = new java.util.LinkedHashSet[UTF8String]
-      if (m < w) {
-        var best = hs(0); i = 1
-        while (i < m) { if (less(hs(i), best)) best = hs(i); i += 1 }
-        out.add(hex(best))
-      } else {
-        // Monotonic deque of candidate indices: O(m) total.
-        val deque = new Array[Int](m); var head = 0; var tail = 0
-        i = 0
-        while (i < m) {
-          while (tail > head && !less(hs(deque(tail - 1)), hs(i))) tail -= 1
-          deque(tail) = i; tail += 1
-          if (deque(head) <= i - w) head += 1
-          if (i >= w - 1) out.add(hex(hs(deque(head))))
-          i += 1
-        }
-      }
-      toArrayData(out)
-    } else {
-      val hs = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val g = grams.getUTF8String(i)
-        hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUnsafeBytes(g.getBaseObject, g.getBaseOffset, g.numBytes, 42L)
-        i += 1
-      }
-      val out = new java.util.LinkedHashSet[java.lang.Long]
-      if (m < w) {
-        var best = hs(0); i = 1
-        while (i < m) { if (hs(i) < best) best = hs(i); i += 1 }
-        out.add(best)
-      } else {
-        val deque = new Array[Int](m); var head = 0; var tail = 0
-        i = 0
-        while (i < m) {
-          while (tail > head && hs(deque(tail - 1)) >= hs(i)) tail -= 1
-          deque(tail) = i; tail += 1
-          if (deque(head) <= i - w) head += 1
-          if (i >= w - 1) out.add(hs(deque(head)))
-          i += 1
-        }
-      }
-      toArrayData(out)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hs = new Array[Array[Byte]](m)
+    var i = 0
+    while (i < m) {
+      md.reset()
+      hs(i) = md.digest(grams.getUTF8String(i).getBytes)
+      i += 1
     }
+    val out = new java.util.LinkedHashSet[UTF8String]
+    if (m < w) {
+      var best = hs(0); i = 1
+      while (i < m) { if (less(hs(i), best)) best = hs(i); i += 1 }
+      out.add(hex(best))
+    } else {
+      // Monotonic deque of candidate indices: O(m) total.
+      val deque = new Array[Int](m); var head = 0; var tail = 0
+      i = 0
+      while (i < m) {
+        while (tail > head && !less(hs(deque(tail - 1)), hs(i))) tail -= 1
+        deque(tail) = i; tail += 1
+        if (deque(head) <= i - w) head += 1
+        if (i >= w - 1) out.add(hex(hs(deque(head))))
+        i += 1
+      }
+    }
+    toArrayData(out)
   }
 
   private def toArrayData(set: java.util.LinkedHashSet[_]): ArrayData = {
@@ -144,11 +111,5 @@ object WinnowFunctions {
   /** Oracle-reproducible md5-hex fingerprints (array<string>). */
   def winnowMd5(text: Column, n: Int, w: Int): Column =
     GraftShim.column(WinnowFingerprints(
-      GraftShim.expression(text.cast("string")), n, w, useMd5 = true))
-
-  /** Production xxhash64 fingerprints (array<long>, seed 42 like
-    * Spark's `xxhash64`). */
-  def winnowXx(text: Column, n: Int, w: Int): Column =
-    GraftShim.column(WinnowFingerprints(
-      GraftShim.expression(text.cast("string")), n, w, useMd5 = false))
+      GraftShim.expression(text.cast("string")), n, w))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import graft.functions._
 
 /** SQL-surface registration of graft's custom Catalyst expressions, so
-  * `spark.sql("SELECT graft_simhash64(text) ...")` works exactly like
+  * `spark.sql("SELECT graft_winnow(text, 5, 8) ...")` works exactly like
   * the Column API — the same codegen'd expressions, reachable from pure
   * SQL (notebooks, JDBC/Thrift clients, views). Registered either at
   * session build via `spark.sql.extensions=graft.plans.GraftExtensions`
@@ -45,12 +45,6 @@ object GraftSqlFunctions {
   /** Every graft SQL function: name, codegen expression, arg contract. */
   val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
 
-    fd("graft_simhash64", classOf[SimHash64],
-      "graft_simhash64(text) - 64-bit SimHash of whitespace tokens (xxhash64 votes)") { args =>
-      arity("graft_simhash64", 1, args)
-      SimHash64(args.head)
-    },
-
     fd("graft_dot", classOf[DotProduct],
       "graft_dot(a, b) - index-ordered dot product of two float/double arrays") { args =>
       arity("graft_dot", 2, args)
@@ -76,10 +70,10 @@ object GraftSqlFunctions {
     },
 
     fd("graft_winnow", classOf[WinnowFingerprints],
-      "graft_winnow(text, n, w) - winnowing fingerprints over char n-grams, window w") { args =>
+      "graft_winnow(text, n, w) - md5-hex winnowing fingerprints over char n-grams, window w") { args =>
       arity("graft_winnow", 3, args)
       WinnowFingerprints(args.head, intLit("graft_winnow", "n")(args(1)),
-        intLit("graft_winnow", "w")(args(2)), useMd5 = false)
+        intLit("graft_winnow", "w")(args(2)))
     },
 
     fd("graft_multi_occurrences", classOf[MultiOccurrences],

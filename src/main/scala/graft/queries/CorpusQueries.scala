@@ -12,11 +12,9 @@ import graft.text.TextFunctions
   *
   * Oracle construction mirrors the Scala expressions literally (same
   * replace-arithmetic, same marker lists) so both engines compute
-  * identical values. xxhash64-based sketches (minhash, simhash) and
-  * seeded-hyperplane LSH are not expressible in DuckDB — those entries
-  * run with the weaker rows-only check, while their exact verification
-  * stages (Jaccard, cosine) ARE oracle-checked through the n-gram and
-  * brute-force queries.
+  * identical values. Every sketch (MinHash, SimHash, winnowing, hashed
+  * bag-of-words) hashes with md5, which DuckDB re-derives, so each
+  * sketch pipeline is oracle-checked end to end.
   */
 object CorpusQueries {
 
@@ -1207,7 +1205,7 @@ SELECT cell, n_old, n_new,
   /** Hashed-BoW md5-twin embedding CTEs over documents -> `nv`
     * (vec_id, embedding, nrm) at the given dim: token -> bucket =
     * first-8-hex-chars-of-md5 mod dim, per-bucket counts, L2-normalized
-    * REAL array. Mirrors hashedBowEmbedding(useMd5 = true) + the
+    * REAL array. Mirrors hashedBowEmbedding + the
     * norm > 0 filter of ivfScored (tokenless docs embed as zero and are
     * excluded). */
   private def bowNvCte(dim: Int): String = {
@@ -1459,11 +1457,10 @@ FROM jb GROUP BY 1""") { (s, d) =>
         Tables.documents(s, d).filter(col("doc_id") < 500), "doc_id", "text", 1, 0.5)
     },
 
-    // MinHash+LSH near-dup pipeline, registered as its md5 twin so the
-    // ENTIRE pipeline — distinct 2-gram shingles, 32 permutation min-
-    // hashes, 8 banded band-hashes, bucket join, exact Jaccard verify —
-    // is recomputed independently by DuckDB. (The xxhash64 production
-    // variant is pipeline-identical; twin equivalence is spec-proven.)
+    // MinHash+LSH near-dup pipeline, md5-hashed so the ENTIRE pipeline
+    // — distinct 2-gram shingles, 32 permutation min-hashes, 8 banded
+    // band-hashes, bucket join, exact Jaccard verify — is recomputed
+    // independently by DuckDB.
     Q("dd_minhash_neardups", minhashMd5Sql) { (s, d) =>
       // Same CacheOnce key/plan as pg_pagerank's edge source: whichever
       // runs first pays the band join + Jaccard verify, the other reads
@@ -1527,9 +1524,9 @@ SELECT id AS doc_id, round(r, 6) AS rank FROM p3"""
         .select(col("id").as("doc_id"), col("triangles"))
     },
 
-    // SimHash signatures, md5 twin: token hash = first 16 hex chars of
-    // md5, signature carried as two 32-bit halves so neither engine
-    // parses a >= 2^63 literal. Oracle recomputes the per-bit votes from
+    // SimHash signatures: token hash = first 16 hex chars of md5,
+    // signature carried as two 32-bit halves so neither engine parses
+    // a >= 2^63 literal. Oracle recomputes the per-bit votes from
     // the hex nibbles.
     Q("dd_simhash", s"WITH $simhashSigCte SELECT doc_id, sig_hi, sig_lo FROM sg") { (s, d) =>
       // same CacheOnce key/plan as dd_simhash_neardups' signature stage:
@@ -1538,7 +1535,7 @@ SELECT id AS doc_id, round(r, 6) AS rank FROM p3"""
         Dedup.simhashMd5(Tables.documents(s, d), "doc_id", "text"))
     },
 
-    // SimHash Manku block-combination near-dup pairs over the md5 twin
+    // SimHash Manku block-combination near-dup pairs over the md5
     // signatures (recall 1 within maxHamming by pigeonhole; 32-bit
     // combination keys): the oracle rebuilds the same 20 block
     // combinations and the Hamming verification from the hi/lo halves.
@@ -2162,7 +2159,7 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
 
     // Embedding generation -> similarity, end to end: hashed
     // bag-of-words embeddings (feature hashing, vocabulary-free) fed
-    // into IVF top-k search, registered as the md5-bucket twin so DuckDB
+    // into IVF top-k search, md5-bucketed so DuckDB
     // rebuilds the embeddings AND the IVF search. Top-k, not a
     // threshold: template-generated corpora put most pairs above any
     // fixed cosine cutoff, so a threshold query degenerates
@@ -2177,12 +2174,12 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
       // scale the seam is a parquet checkpoint of the feature table,
       // not executor cache.
       val emb = graft.text.CorpusStats.hashedBowEmbedding(
-        Tables.documents(s, d), "doc_id", "text", dim = 32, useMd5 = true)
+        Tables.documents(s, d), "doc_id", "text", dim = 32)
       // Feature hashing is per-document, so centroid embeddings can be
       // computed from a pushed-down filtered scan of just those docs.
       val cents = graft.text.CorpusStats.hashedBowEmbedding(
         Tables.documents(s, d).filter(col("doc_id") < 32), "doc_id", "text",
-        dim = 32, useMd5 = true)
+        dim = 32)
       Similarity.ivfTopK(emb, "doc_id", "embedding", 3,
         numCells = 32, nprobe = 4, queryPred = Some(col("doc_id") < 200),
         centroids = Some(cents))
@@ -2993,7 +2990,7 @@ FROM bk""") { (s, d) =>
 
     // The composed corpus-cleaning pipeline, end to end: quality gate ->
     // language gate -> exact dedup (min-id survivor) -> MinHash near-dup
-    // removal (md5 twin; greedy min-id survivor). The oracle recomputes
+    // removal (greedy min-id survivor). The oracle recomputes
     // every stage — the strongest composition check in the registry: one
     // wrong stage anywhere shifts the surviving id set.
     Q("pipe_corpus_clean",
@@ -3010,7 +3007,7 @@ kept AS MATERIALIZED (SELECT g.doc_id, g.text FROM gated g JOIN grp ON g.doc_id 
 ${minhashMd5Ctes("kept", 0.5)}
 SELECT doc_id FROM kept WHERE doc_id NOT IN (SELECT id2 FROM nd)""") { (s, d) =>
       graft.text.CorpusPipeline.cleanCorpus(
-          Tables.documents(s, d), "doc_id", "text", useMd5 = true)
+          Tables.documents(s, d), "doc_id", "text")
         .select("doc_id")
     },
 
@@ -3065,29 +3062,10 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // Watch registered BEFORE the shared-feed truncation executes the
       // probe as an eager job at plan build.
       graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
-      // The three scale claims, asserted from the UN-truncated pair-feed
-      // plan per invocation (PlanChecks descends into the CacheOnce'd
-      // stages): (1) the bucketed LSH state enters its probe join
-      // exchange-free; (2) no documents scan is the unfiltered corpus —
-      // every one carries the increment/state modulo split; (3) the
-      // state-side text rescan is collision-pruned (a left-semi sits
-      // above it). The feed itself is the r19 SHARED truncation —
-      // executed once per session for all three family members.
-      val incPairs = sharedUncappedIncPairs(s, d, check = feed => {
-        import graft.plans.PlanChecks
-        val plan = feed.queryExecution.executedPlan
-        PlanChecks.requireExchangeFreeBucketedProbe(plan, "LSH state")
-        val docScans = PlanChecks.fileScanPaths(plan, "documents")
-        require(docScans.nonEmpty,
-          "no documents scan found in the incremental pair feed plan")
-        docScans.foreach { case (scan, path) =>
-          require(PlanChecks.pathHasPredicate(scan, path, "% 3"),
-            "unfiltered full-corpus documents scan in the incremental " +
-              "pair feed — the O(corpus) sketch the incremental family exists to avoid")
-        }
-        require(docScans.exists { case (_, path) => PlanChecks.pathHasLeftSemi(path) },
-          "state-side text rescan is not collision-pruned (no left-semi above it)")
-      })
+      // The feed is the r19 SHARED truncation — executed once per
+      // session for all three family members; its scale REQUIREs run
+      // inside sharedUncappedIncPairs for whichever member calls first.
+      val incPairs = sharedUncappedIncPairs(s, d)
       Dedup.incrementalClusters(state, incPairs,
         memoTag = ":" + graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
     },
@@ -3157,7 +3135,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       val stateRanks = s.read.parquet(rankStatePath(s, d))
       // r19: the SHARED uncapped pair feed (one probe+verify execution
       // per session for the whole cluster/graph family; the feed's own
-      // layout REQUIREs run in dd_incremental_clusters' check).
+      // layout REQUIREs run inside sharedUncappedIncPairs).
       val incPairs = sharedUncappedIncPairs(s, d)
       val out = graft.graph.PageRank.incrementalPageRank(
           stateEdges, graft.graph.PageRank.symmetrize(incPairs),
@@ -3690,7 +3668,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
       // before r18 this free-rode the CacheManager's plan substitution,
       // which cannot see a truncated LogicalRDD (dd_dup_clusters' fix).
       graft.text.CorpusPipeline.keepBestByQuality(Tables.documents(s, d),
-        "doc_id", "text", jaccardThreshold = 0.5, shingleN = 2, useMd5 = true,
+        "doc_id", "text", jaccardThreshold = 0.5, shingleN = 2,
         precomputedPairs = Some(graft.ops.CacheOnce.swapTruncated(
           "minhash-md5-neardups:" +
             graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
@@ -3700,8 +3678,8 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
 
     // Winnowing fingerprints (rolling-hash document fingerprinting,
     // Schleimer et al.): char 5-grams, window-of-8 minima, distinct per
-    // doc. The oracle-reproducible variant hashes with md5 (lexicographic
-    // string min); the library default is xxhash64.
+    // doc, hashed with md5 (lexicographic string min) so DuckDB
+    // reproduces them.
     Q("t_fingerprint",
       "WITH base AS (SELECT doc_id, text, " +
         "unnest(generate_series(1, greatest(length(text) - 4, 1))) AS i FROM documents), " +
@@ -3714,7 +3692,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
         "WHERE pos <= m - 8 OR (m < 8 AND pos = 0)") { (s, d) =>
       graft.text.CorpusStats.winnowFingerprintsNative(
         graft.ops.ScaleOps.splitNarrowInput(Tables.documents(s, d)),
-        "doc_id", "text", n = 5, w = 8, useMd5 = true)
+        "doc_id", "text", n = 5, w = 8)
     })
 
   /** dd_incremental's persisted digest-state table, keyed by source dir
@@ -4186,16 +4164,22 @@ FROM rw"""
     * truncation name (incr-cluster-pairs / ipr-inc-edges / itri-delta),
     * so the chain executed three times per session (once per family
     * member's first action — ~40 s-cpu each at sf0.1) and the Verify
-    * gate paid it three times. `check` runs the caller's plan REQUIREs
-    * on the feed's own (un-truncated) plan, where the bucketed probe,
-    * the %3 scan predicates and the left-semi prune are still visible;
-    * downstream truncations (cluster pairs, symmetrized edges, triangle
-    * delta) now key on this feed's LogicalRDD leaf, which changes with
-    * the generation — staleness rides the fingerprint in THIS name. */
+    * gate paid it three times. Downstream truncations (cluster pairs,
+    * symmetrized edges, triangle delta) key on this feed's LogicalRDD
+    * leaf, which changes with the generation — staleness rides the
+    * fingerprint in THIS name.
+    *
+    * The feed's three scale claims are REQUIREd here, on every call and
+    * so for whichever family member builds the feed first, from the
+    * feed's own un-truncated plan (PlanChecks descends into the
+    * CacheOnce'd stages): (1) the bucketed LSH state enters its probe
+    * join exchange-free; (2) no documents scan is the unfiltered corpus
+    * — every one carries the increment/state modulo split; (3) the
+    * state-side text rescan is collision-pruned (a left-semi sits above
+    * it). */
   private def sharedUncappedIncPairs(s: org.apache.spark.sql.SparkSession,
-                                     d: String,
-                                     check: org.apache.spark.sql.DataFrame => Unit = _ => ())
-      : org.apache.spark.sql.DataFrame = {
+                                     d: String): org.apache.spark.sql.DataFrame = {
+    import graft.plans.PlanChecks
     val docs = Tables.documents(s, d)
     val feed = Dedup.incrementalNearDupPairs(
       docs.filter(col("doc_id") % 3 === 2),
@@ -4203,7 +4187,18 @@ FROM rw"""
       s.table(lshStateTable(d)),
       "doc_id", "text", numHashes = 32, rowsPerBand = 4,
       shingleN = 2, threshold = 0.5, bandBucketCap = None)
-    check(feed)
+    val plan = feed.queryExecution.executedPlan
+    PlanChecks.requireExchangeFreeBucketedProbe(plan, "LSH state")
+    val docScans = PlanChecks.fileScanPaths(plan, "documents")
+    require(docScans.nonEmpty,
+      "no documents scan found in the incremental pair feed plan")
+    docScans.foreach { case (scan, path) =>
+      require(PlanChecks.pathHasPredicate(scan, path, "% 3"),
+        "unfiltered full-corpus documents scan in the incremental " +
+          "pair feed — the O(corpus) sketch the incremental family exists to avoid")
+    }
+    require(docScans.exists { case (_, path) => PlanChecks.pathHasLeftSemi(path) },
+      "state-side text rescan is not collision-pruned (no left-semi above it)")
     graft.ops.CacheOnce.swapTruncated("incr-nd-pairs-uncapped:" +
       graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"), feed)
   }

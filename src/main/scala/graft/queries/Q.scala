@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One harness-registered query: a Spark implementation over the testdata
-  * tables plus (where expressible) the equivalent DuckDB oracle SQL.
+  * tables plus the equivalent DuckDB oracle SQL.
   *
   * Oracle-parity rules (the driver hash-compares values after sorting
   * columns by name):
@@ -17,9 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Q {
   def apply(name: String, oracle: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, Some(oracle))
+    Q(name, run, oracle)
 }

@@ -18,8 +18,9 @@ import graft.dedup.Dedup
   * Scale shape: two narrow filters, one digest-keyed aggregate + semi
   * join, then the bucketed MinHash pipeline — no stage is all-pairs, no
   * stage collects. The greedy survivor rule is deterministic (pairs are
-  * ordered id1 < id2), so the surviving set is reproducible — and, in
-  * the md5-twin variant, recomputable by an independent SQL engine.
+  * ordered id1 < id2), so the surviving set is reproducible — and,
+  * since every sketch hashes with md5, recomputable by an independent
+  * SQL engine.
   */
 object CorpusPipeline {
 
@@ -44,8 +45,7 @@ object CorpusPipeline {
 
   def cleanCorpus(df: DataFrame, idCol: String, textCol: String,
                   minQuality: Double = 0.6667, dropUnidentified: Boolean = true,
-                  jaccardThreshold: Double = 0.5, shingleN: Int = 2,
-                  useMd5: Boolean = false): DataFrame = {
+                  jaccardThreshold: Double = 0.5, shingleN: Int = 2): DataFrame = {
     val langGate: Column =
       if (dropUnidentified) TextFunctions.langIdFast(col(textCol)) =!= "und" else lit(true)
     // The gate expressions (marker-count language ID, quality ratios)
@@ -59,15 +59,9 @@ object CorpusPipeline {
     val groups = Dedup.exactGroups(gated, idCol, textCol)
     val exactKept = gated.join(
       groups.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
-    val pairs =
-      if (useMd5)
-        Dedup.minhashNearDupsMd5(exactKept, idCol, textCol,
-          numHashes = 32, rowsPerBand = 4, shingleN = shingleN,
-          threshold = jaccardThreshold)
-      else
-        Dedup.minhashNearDups(exactKept, idCol, textCol,
-          numHashes = 32, rowsPerBand = 4, shingleN = shingleN,
-          threshold = jaccardThreshold)
+    val pairs = Dedup.minhashNearDupsMd5(exactKept, idCol, textCol,
+      numHashes = 32, rowsPerBand = 4, shingleN = shingleN,
+      threshold = jaccardThreshold)
     exactKept.join(pairs.select(col("id2").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
   }
@@ -83,7 +77,6 @@ object CorpusPipeline {
     * a narrow (id, quality) projection. */
   def keepBestByQuality(df: DataFrame, idCol: String, textCol: String,
                         jaccardThreshold: Double = 0.5, shingleN: Int = 2,
-                        useMd5: Boolean = false,
                         precomputedPairs: Option[DataFrame] = None): DataFrame = {
     val q = df.select(col(idCol),
       TextFunctions.qualityScoreFast(col(textCol)).as("quality"))
@@ -91,16 +84,10 @@ object CorpusPipeline {
     // set (the registry's shared truncated minhash-md5 feed) pass it in
     // instead of re-deriving the whole chain — the cosineTopKExcluding
     // precedent.
-    val pairs = precomputedPairs.getOrElse {
-      if (useMd5)
-        Dedup.minhashNearDupsMd5(df, idCol, textCol,
-          numHashes = 32, rowsPerBand = 4, shingleN = shingleN,
-          threshold = jaccardThreshold)
-      else
-        Dedup.minhashNearDups(df, idCol, textCol,
-          numHashes = 32, rowsPerBand = 4, shingleN = shingleN,
-          threshold = jaccardThreshold)
-    }
+    val pairs = precomputedPairs.getOrElse(
+      Dedup.minhashNearDupsMd5(df, idCol, textCol,
+        numHashes = 32, rowsPerBand = 4, shingleN = shingleN,
+        threshold = jaccardThreshold))
     val losers = pairs
       .join(q.select(col(idCol).as("id1"), col("quality").as("_q1")), Seq("id1"))
       .join(q.select(col(idCol).as("id2"), col("quality").as("_q2")), Seq("id2"))

@@ -75,20 +75,17 @@ object CorpusStats {
   }
 
   /** Hashed bag-of-words embedding (feature hashing): token -> bucket
-    * xxhash64(token) mod dim, per-bucket counts, L2-normalized
+    * (first 8 hex chars of md5(token), a 32-bit value any ANSI engine
+    * can re-derive) mod dim, per-bucket counts, L2-normalized
     * `array<float>` — deterministic, vocabulary-free embedding
     * generation for the similarity/dedup operators when no model
     * embeddings exist. One explode + one keyed aggregate per doc;
     * the dense array materializes per document, never per token. Empty
     * documents embed as the zero vector. */
   def hashedBowEmbedding(docs: DataFrame, idCol: String, textCol: String,
-                         dim: Int, useMd5: Boolean = false): DataFrame = {
-    // `useMd5` swaps the bucket hash for the first 8 hex chars of
-    // md5(term) (a 32-bit value any ANSI engine can re-derive) — the
-    // oracle-reproducible twin of the xxhash64 production hash.
-    val bucketOf: Column => Column =
-      if (useMd5) t => pmod(conv(substring(md5(t), 1, 8), 16, 10).cast("long"), lit(dim.toLong))
-      else t => pmod(xxhash64(t), lit(dim.toLong))
+                         dim: Int): DataFrame = {
+    def bucketOf(t: Column): Column =
+      pmod(conv(substring(md5(t), 1, 8), 16, 10).cast("long"), lit(dim.toLong))
     // One codegen'd HashAggregate of `dim` conditional counts (the same
     // fixed-width-aggregate shape as the MinHash signature) — NOT a
     // collect_list/map build, which would run on the non-codegen
@@ -116,18 +113,13 @@ object CorpusStats {
   /** Winnowing fingerprints via the one-pass native expression
     * [[graft.functions.WinnowFingerprints]]: scan -> project -> explode,
     * no shuffle. Guarantees any shared substring of length >= n + w - 1
-    * contributes a shared fingerprint. `useMd5 = true` gives the
-    * oracle-reproducible hex-string variant; `false` the cheap xxhash64
-    * longs. */
+    * contributes a shared fingerprint. Fingerprints are md5 hex
+    * strings, so an independent engine can recompute them. */
   def winnowFingerprintsNative(docs: DataFrame, idCol: String,
-                               textCol: String, n: Int, w: Int,
-                               useMd5: Boolean = false): DataFrame = {
-    import graft.functions.WinnowFunctions
-    val fps =
-      if (useMd5) WinnowFunctions.winnowMd5(col(textCol), n, w)
-      else WinnowFunctions.winnowXx(col(textCol), n, w)
-    docs.select(col(idCol), explode(fps).as("fingerprint"))
-  }
+                               textCol: String, n: Int, w: Int): DataFrame =
+    docs.select(col(idCol),
+      explode(graft.functions.WinnowFunctions.winnowMd5(col(textCol), n, w))
+        .as("fingerprint"))
 
   /** Substring-level cross-corpus contamination: (train_id, test_id)
     * pairs sharing at least `minShared` winnowing fingerprints — i.e.
@@ -143,7 +135,7 @@ object CorpusStats {
                          maxDocFreq: Option[Int] = None,
                          derivedDocFreqCap: Option[(Int, Double)] = None): DataFrame = {
     def fps(df: DataFrame) =
-      winnowFingerprintsNative(df, idCol, textCol, n, w, useMd5 = true)
+      winnowFingerprintsNative(df, idCol, textCol, n, w)
     // Density-derived cap (floor, fracOfTrain): greatest(floor,
     // ceil(frac * |train|)) computed IN-PLAN as a 1-row broadcast — no
     // separate count() action per run, and Long arithmetic end to end
@@ -257,7 +249,7 @@ object CorpusStats {
                                   minShared: Int = 3, occCap: Int = 16,
                                   derivedDocFreqCap: Option[(Int, Double)] = None): DataFrame = {
     def fps(df: DataFrame) =
-      winnowFingerprintsNative(df, idCol, textCol, n, w, useMd5 = true)
+      winnowFingerprintsNative(df, idCol, textCol, n, w)
     val derivedCapDf = derivedDocFreqCap.map { case (floor, frac) =>
       train.agg(greatest(lit(floor.toLong),
         ceil(lit(frac) * count(lit(1))).cast("long")).as("_cap"))
@@ -315,7 +307,13 @@ object CorpusStats {
     * caps shingle document frequency per side (boilerplate/stop-phrase
     * shingles would otherwise fan the join quadratically). Returns
     * (train_id, test_id, train_start, test_start, span_tokens) for
-    * spans of at least `minSpanTokens` tokens. */
+    * spans of at least `minSpanTokens` tokens.
+    *
+    * Precondition: `idCol` is unique within `train` and unique within
+    * `test`. Matches are keyed by (id, token position) with no distinct
+    * pass, so a repeated id mixes two documents' positions on one
+    * diagonal: the run detection then splits or merges runs, and the
+    * reported spans are wrong. */
   def verbatimSpans(train: DataFrame, test: DataFrame, idCol: String,
                     textCol: String, k: Int = 4, minSpanTokens: Int = 8,
                     maxDocFreq: Option[Int] = None,
@@ -399,16 +397,13 @@ object CorpusStats {
     * the cross-checkable twin of the native expression; it explodes one
     * row per character and shuffles them through a window sort, so
     * prefer [[winnowFingerprintsNative]] anywhere performance matters.
-    *
-    * `hash` maps a gram column to an orderable hash column — `xxhash64`
-    * for production, `md5` (hex string, lexicographic min) when the
-    * result must be reproducible in an engine without xxhash64. */
+    * Grams hash with md5 (hex string, lexicographic min), as in the
+    * native expression. */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                         n: Int, w: Int,
-                         hash: Column => Column = xxhash64(_)): DataFrame = {
+                         n: Int, w: Int): DataFrame = {
     val grams = docs.select(col(idCol),
       posexplode(ShingleFunctions.charGrams(col(textCol), n)))
-      .select(col(idCol), col("pos"), hash(col("col")).as("h"))
+      .select(col(idCol), col("pos"), md5(col("col")).as("h"))
     val win = Window.partitionBy(col(idCol)).orderBy(col("pos"))
       .rowsBetween(Window.currentRow, w - 1)
     val cnt = Window.partitionBy(col(idCol))

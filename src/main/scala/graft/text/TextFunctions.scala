@@ -136,9 +136,6 @@ object TextFunctions {
   /** Content fingerprint (md5 of exact bytes) — exact-dedup key. */
   def fingerprint(c: Column): Column = md5(c)
 
-  /** 64-bit content hash for joins/sketches. */
-  def fingerprint64(c: Column): Column = xxhash64(c)
-
   /** Marker-word language ID over a fixed language set. Scores each
     * language by whole-token marker hits and takes the argmax
     * (deterministic tie-break by list order). N-gram-free heuristic:

@@ -23,7 +23,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("minhashNearDups finds the planted near-duplicate pair") {
-    val pairs = rows(Dedup.minhashNearDups(docs, "doc_id", "text",
+    val pairs = rows(Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
       numHashes = 32, rowsPerBand = 2, shingleN = 2, threshold = 0.5)
       .select("id1", "id2").orderBy("id1", "id2"))
     // (1,4) exact dup always; (1,2)/(2,4) share 7 of 9 distinct 2-shingles.
@@ -40,12 +40,14 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("simhash: identical texts same signature; near-dups close in Hamming") {
-    val sigs = Dedup.simhash(docs, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sigs = Dedup.simhashMd5(docs, "doc_id", "text").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(sigs(1L) == sigs(4L))
-    val near = java.lang.Long.bitCount(sigs(1L) ^ sigs(2L))
-    val far = java.lang.Long.bitCount(sigs(1L) ^ sigs(3L))
-    assert(near < far)
+    // Hamming distance over both 32-bit halves
+    def hamming(a: Long, b: Long) =
+      java.lang.Long.bitCount(sigs(a)._1 ^ sigs(b)._1) +
+        java.lang.Long.bitCount(sigs(a)._2 ^ sigs(b)._2)
+    assert(hamming(1L, 2L) < hamming(1L, 3L))
   }
 
   test("dot/cosine/l2dist on known vectors") {

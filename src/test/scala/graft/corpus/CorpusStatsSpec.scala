@@ -42,27 +42,9 @@ class CorpusStatsSpec extends SparkSpec {
       Row(5L, "中文字符串的测试文本内容与更多字符")))
     def asSet(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => (r.getLong(0), r.get(1).toString)).toSet
-    val nMd5 = CorpusStats.winnowFingerprintsNative(docs, "doc_id", "text", 5, 8, useMd5 = true)
-    val cMd5 = CorpusStats.winnowFingerprints(docs, "doc_id", "text", 5, 8, hash = md5(_))
-    assert(asSet(nMd5) == asSet(cMd5))
-    val nXx = CorpusStats.winnowFingerprintsNative(docs, "doc_id", "text", 5, 8)
-    val cXx = CorpusStats.winnowFingerprints(docs, "doc_id", "text", 5, 8)
-    assert(asSet(nXx) == asSet(cXx))
-  }
-
-  test("native simhash == composable simhash, incl. empty/blank text") {
-    val docs = df("doc_id bigint, text string")(Seq(
-      Row(1L, "the quick brown fox"),
-      Row(2L, ""),
-      Row(3L, "   "),
-      Row(4L, "one"),
-      Row(5L, "repeat repeat repeat distinct words here")))
-    val n = graft.dedup.Dedup.simhash(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val c = graft.dedup.Dedup.simhashComposable(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(n == c)
-    assert(n(2L) == 0L && n(3L) == 0L)
+    val native = CorpusStats.winnowFingerprintsNative(docs, "doc_id", "text", 5, 8)
+    val composable = CorpusStats.winnowFingerprints(docs, "doc_id", "text", 5, 8)
+    assert(asSet(native) == asSet(composable))
   }
 
   test("hashedBowEmbedding: unit norm, shared-text similarity, empty doc = zeros") {
@@ -106,18 +88,20 @@ class CorpusStatsSpec extends SparkSpec {
       Row(2L, base),                        // identical: hamming 0
       Row(3L, base.replace("tok40", "zzz")), // near-dup: few bits differ
       Row(4L, (1 to 40).map(i => s"other$i").mkString(" "))))
-    val pairs = Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 12, blocks = 13)
+    // blocks must be even on the md5 path (split per 32-bit half)
+    val pairs = Dedup.simhashNearDupsMd5(docs, "doc_id", "text", maxHamming = 12, blocks = 14)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(pairs.contains((1L, 3L)) && pairs.contains((2L, 3L)))
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
     // exact-recall guarantee: banded candidates find ALL pairs within
     // maxHamming — cross-check against the brute-force all-pairs answer
-    val sigs = Dedup.simhash(docs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sigs = Dedup.simhashMd5(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val brute = (for {
       a <- sigs.keys; b <- sigs.keys if a < b
-      if java.lang.Long.bitCount(sigs(a) ^ sigs(b)) <= 12
+      if java.lang.Long.bitCount(sigs(a)._1 ^ sigs(b)._1) +
+        java.lang.Long.bitCount(sigs(a)._2 ^ sigs(b)._2) <= 12
     } yield (a, b)).toSet
     assert(pairs == brute)
   }
@@ -180,29 +164,38 @@ class CorpusStatsSpec extends SparkSpec {
       d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val md5p = pairsOf(Dedup.minhashNearDupsMd5(docs, "doc_id", "text",
       numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
-    val xxp = pairsOf(Dedup.minhashNearDups(docs, "doc_id", "text",
-      numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
     assert(md5p.contains((1L, 2L)))
-    assert(md5p == xxp)
+    // LSH only drops pairs, never invents them: every reported pair is
+    // a true >= 0.5 Jaccard pair of the brute-force baseline
+    val brute = pairsOf(Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 2, threshold = 0.5))
+    assert(md5p.subsetOf(brute))
   }
 
   test("simhash Manku banding: candidate volume grows linearly, not quadratically") {
     import graft.dedup.Dedup
-    // Synthetic 64-bit signatures: random base population plus one
-    // planted near-dup (<= 3 flipped bits) per 10 docs. With 32-bit
-    // combination keys, candidates ~ planted pairs (linear in N);
-    // single-block 8-bit banding would give ~ N^2/2^8 random collisions.
+    // Synthetic 64-bit signatures, carried as (sig_hi, sig_lo) halves:
+    // random base population plus one planted near-dup (<= 3 flipped
+    // bits) per 10 docs. With 32-bit combination keys, candidates ~
+    // planted pairs (linear in N); single-block 8-bit banding would
+    // give ~ N^2/2^8 random collisions.
     val rng = new scala.util.Random(5)
     def sigs(n: Int) = {
       val base = (0 until n).map(i => (i.toLong, rng.nextLong()))
       val planted = base.filter(_._1 % 10 == 0).map { case (i, s) =>
         (i + 1000000L, s ^ (1L << rng.nextInt(64)) ^ (1L << rng.nextInt(64)))
       }
-      df("doc_id bigint, simhash bigint")((base ++ planted).map(p => Row(p._1, p._2)))
+      df("doc_id bigint, sig_hi bigint, sig_lo bigint")((base ++ planted).map {
+        case (id, s) => Row(id, s >>> 32, s & 0xffffffffL)
+      })
     }
-    def cands(n: Int): Long =
-      Dedup.simhashCandidatePairs(sigs(n), "doc_id", maxHamming = 3, blocks = 6)
+    // candidate pairs = distinct id pairs sharing any Manku key
+    def cands(n: Int): Long = {
+      val keys = Dedup.simhashMankuKeysMd5(sigs(n), "doc_id", maxHamming = 3, blocks = 6)
+      keys.select(col("doc_id").as("id1"), col("mkey"))
+        .join(keys.select(col("doc_id").as("id2"), col("mkey")), "mkey")
+        .filter(col("id1") < col("id2"))
         .select("id1", "id2").distinct().count()
+    }
     val c300 = cands(300)
     val c1200 = cands(1200)
     // linear scaling: 4x docs -> ~4x candidates (quadratic would be 16x)
@@ -565,10 +558,6 @@ class CorpusStatsSpec extends SparkSpec {
     val survivors = CorpusPipeline.cleanCorpus(docs, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(survivors == Set(1L))
-    // md5 twin agrees with the xxhash64 production path
-    val md5Survivors = CorpusPipeline.cleanCorpus(docs, "doc_id", "text", useMd5 = true)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(md5Survivors == survivors)
   }
 
   test("winnowing: shared long substring => shared fingerprint; short doc => one") {
@@ -578,7 +567,7 @@ class CorpusStatsSpec extends SparkSpec {
       Row(2L, "XXXX " + shared + " YYYY"),
       Row(3L, "tiny")))
     val fp = CorpusStats.winnowFingerprints(docs, "doc_id", "text", n = 5, w = 8)
-    val byDoc = fp.collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet)
+    val byDoc = fp.collect().groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(1)).toSet)
     // guarantee: any shared substring of length >= n + w - 1 = 12 shares a print
     assert(byDoc(1L).intersect(byDoc(2L)).nonEmpty)
     // 'tiny' has a single (4-char) gram -> exactly one fingerprint

@@ -166,8 +166,6 @@ class CodegenGateSpec extends SparkSpec {
     val d = rddDf("s string")(Row("the quick brown fox jumps over it"))
     assert(gate(d, WinnowFunctions.winnowMd5(col("s"), 4, 3))
       .asInstanceOf[scala.collection.Seq[_]].nonEmpty)
-    assert(gate(d, WinnowFunctions.winnowXx(col("s"), 4, 3))
-      .asInstanceOf[scala.collection.Seq[_]].nonEmpty)
   }
 
   test("codegen gate: Hilbert2") {
@@ -194,11 +192,6 @@ class CodegenGateSpec extends SparkSpec {
       .asInstanceOf[scala.collection.Seq[_]].nonEmpty)
     assert(gate(d, ShingleFunctions.charGrams(col("s"), 3))
       .asInstanceOf[scala.collection.Seq[_]].nonEmpty)
-  }
-
-  test("codegen gate: SimHash64") {
-    gate(rddDf("s string")(Row("some document text for hashing")),
-      SimHashFunctions.simhash64(col("s")))
   }
 
   test("codegen gate: SimHashMd5Packed") {

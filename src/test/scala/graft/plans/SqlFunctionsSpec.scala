@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.functions.{SimHashFunctions, WinnowFunctions}
+import graft.functions.WinnowFunctions
 
 /** The SQL FunctionRegistry bridge: registered functions must be the
   * SAME codegen expressions as the Column API (bit-identical results),
@@ -21,26 +21,15 @@ class SqlFunctionsSpec extends SparkSpec {
     docs.createOrReplaceTempView("sqlspec_docs")
   }
 
-  test("SQL graft_simhash64 == Column-API simhash64 (same expression)") {
-    registered()
-    val viaSql = spark.sql(
-      "SELECT doc_id, graft_simhash64(text) AS s FROM sqlspec_docs")
-      .as[(Long, Long)].collect().toMap
-    val viaCol = docs.select(col("doc_id"),
-      SimHashFunctions.simhash64(col("text")).as("s"))
-      .as[(Long, Long)].collect().toMap
-    assert(viaSql == viaCol)
-  }
-
   test("SQL graft_winnow and graft_dot match the Column API") {
     registered()
     val viaSql = spark.sql(
       "SELECT doc_id, graft_winnow(text, 5, 8) AS fp FROM sqlspec_docs")
       .select(col("doc_id"), explode(col("fp")))
-      .as[(Long, Long)].collect().toSet
+      .as[(Long, String)].collect().toSet
     val viaCol = docs.select(col("doc_id"),
-      explode(WinnowFunctions.winnowXx(col("text"), 5, 8)))
-      .as[(Long, Long)].collect().toSet
+      explode(WinnowFunctions.winnowMd5(col("text"), 5, 8)))
+      .as[(Long, String)].collect().toSet
     assert(viaSql == viaCol)
 
     val dot = spark.sql(
