@@ -5,11 +5,13 @@ import org.apache.spark.sql.types._
 
 /** Explicit schemas for the engine's entities — what the reference never
   * had (SURVEY.md §1.2: every input there is inferred with `as.is=T` or
-  * `select *`, then renamed by hand). Declaring them buys three things at
-  * scale: `spark.read.schema(...)` skips inference passes entirely, a
-  * drifted upstream column becomes a loud analysis error instead of a
-  * silent null cascade, and the case classes below give typed
-  * `Dataset[T]` views where compile-time safety helps.
+  * `select *`, then renamed by hand). Declaring them buys two things at
+  * scale: [[conformance]] turns a drifted upstream column into a loud
+  * report instead of a silent null cascade, and the case classes below
+  * give typed `Dataset[T]` views where compile-time safety helps. Reads
+  * do not take their schema from here: [[Tables.parquet]] resolves each
+  * table's schema from its parquet footer on the driver (no inference
+  * job), so a read always sees what the files hold.
   *
   * Entity shapes follow SURVEY.md §1.4 (ningaloo-etl.Rmd:67-290); table
   * shapes follow the driver's testdata (TESTDATA.md).

@@ -102,14 +102,10 @@ object EventAnalytics {
     // Top-k via orderBy+limit (TakeOrderedAndProject: per-partition
     // heads merged on the driver — distributed top-k, NOT a global
     // window over the whole path tally); the ranking window then runs
-    // over at most k rows.
+    // over at most k rows, so its single partition is bounded at any
+    // corpus scale.
     val top = tallied.orderBy(desc("n_sessions"), col("path")).limit(k)
-    // Constant partition key: the frame is ≤ k rows BY CONSTRUCTION (the
-    // TakeOrderedAndProject above), so the single-partition rank is
-    // bounded at any corpus scale — the explicit key states that and
-    // silences the WindowExec no-partition warning that reads as an
-    // unbounded global sort in the Verify log.
-    val rw = Window.partitionBy(lit(0)).orderBy(desc("n_sessions"), col("path"))
+    val rw = Window.orderBy(desc("n_sessions"), col("path"))
     top.withColumn("rank", row_number().over(rw).cast("long"))
   }
 

@@ -117,11 +117,9 @@ object JoinOps {
   def cbindByOrder(left: DataFrame, right: DataFrame,
                    leftOrder: Seq[String], rightOrder: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, lit, row_number}
-    // Constant partition key: dimension-sized by documented intent (see
-    // scaladoc) — states the bound, silences the no-partition warning.
-    val lw = Window.partitionBy(lit(0)).orderBy(leftOrder.map(col): _*)
-    val rw = Window.partitionBy(lit(0)).orderBy(rightOrder.map(col): _*)
+    import org.apache.spark.sql.functions.{col, row_number}
+    val lw = Window.orderBy(leftOrder.map(col): _*)
+    val rw = Window.orderBy(rightOrder.map(col): _*)
     left.withColumn("_rn", row_number().over(lw))
       .join(right.withColumn("_rn", row_number().over(rw)), Seq("_rn"))
       .drop("_rn")

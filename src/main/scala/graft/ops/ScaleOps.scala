@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Skew and co-location utilities — the two shuffle-shaping patterns a
   * 100 TB deployment leans on that the small-SF queries can't surface on
@@ -212,19 +213,15 @@ object ScaleOps {
     s"keys=${keys.mkString(",")};sort=${sc.mkString(",")};$sizing"
   }
 
-  private def tableProp(spark: SparkSession, table: String,
-                        key: String): Option[String] =
-    // SHOW TBLPROPERTIES is public SQL (no private[sql] catalog access)
-    // and driver-tiny; ensureBucketed runs in prep paths, never hot.
-    spark.sql(s"SHOW TBLPROPERTIES `$table`").collect()
-      .collectFirst { case r if r.getString(0) == key => r.getString(1) }
-
-  private def bucketedFresh(spark: SparkSession, table: String,
+  /** Fresh when the catalog has the table under the same layout
+    * contract and (when one is given) the same source fingerprint. One
+    * catalog lookup ([[GraftShim.tableProperties]]) serves the whole
+    * test; callers reuse `props` for `graft.buckets`. */
+  private def bucketedFresh(props: Option[Map[String, String]],
                             srcFingerprint: String, layout: String): Boolean =
-    spark.catalog.tableExists(table) &&
-      (srcFingerprint.isEmpty || tableProp(spark, table, "graft.src")
-        .contains(srcFingerprint)) &&
-      tableProp(spark, table, "graft.layout").contains(layout)
+    props.exists(p =>
+      (srcFingerprint.isEmpty || p.get("graft.src").contains(srcFingerprint)) &&
+        p.get("graft.layout").contains(layout))
 
   private def recordBucketedProps(spark: SparkSession, table: String,
                                   srcFingerprint: String, layout: String,
@@ -241,7 +238,8 @@ object ScaleOps {
                          sortCols: Seq[String] = Nil): Boolean = {
     val spark = df.sparkSession
     val layout = layoutContract(keys, sortCols, s"n=$numBuckets")
-    val fresh = bucketedFresh(spark, table, srcFingerprint, layout)
+    val fresh = bucketedFresh(GraftShim.tableProperties(spark, table),
+      srcFingerprint, layout)
     if (!fresh) {
       writeBucketedKeys(df, table, keys, numBuckets, sortCols)
       recordBucketedProps(spark, table, srcFingerprint, layout, numBuckets)
@@ -271,15 +269,16 @@ object ScaleOps {
     val (tBytes, tRows, floor) = bucketTargets(spark)
     val layout = layoutContract(keys, sortCols,
       s"derived;tb=$tBytes;tr=$tRows;floor=$floor")
-    if (bucketedFresh(spark, table, srcFingerprint, layout))
-      (false, tableProp(spark, table, "graft.buckets").fold(floor)(_.toInt))
+    val props = GraftShim.tableProperties(spark, table)
+    if (bucketedFresh(props, srcFingerprint, layout))
+      (false, props.flatMap(_.get("graft.buckets")).fold(floor)(_.toInt))
     else {
       val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
       val stage = new java.io.File(wh, table + "__stage").toString
       df.write.mode("overwrite").parquet(stage)
       val (bytes, rows) = parquetStats(spark, stage)
       val n = deriveBucketCount(bytes, rows, tBytes, tRows, floor)
-      writeBucketedKeys(spark.read.parquet(stage), table, keys, n, sortCols)
+      writeBucketedKeys(Tables.parquet(spark, stage), table, keys, n, sortCols)
       recordBucketedProps(spark, table, srcFingerprint, layout, n)
       val (fs, stageP) = hadoopFs(spark, stage)
       fs.delete(stageP, true)
@@ -396,7 +395,7 @@ object ScaleOps {
     if (hit != null) hit.booleanValue()
     else {
       val want = spark.sparkContext.defaultParallelism
-      val v = spark.read.parquet(path).rdd.getNumPartitions * 2 <= want
+      val v = Tables.parquet(spark, path).rdd.getNumPartitions * 2 <= want
       narrowMemo.putIfAbsent(key, java.lang.Boolean.valueOf(v))
       v
     }
@@ -418,7 +417,7 @@ object ScaleOps {
     val hit = statMemo.get(key)
     if (hit != null) hit.longValue()
     else {
-      val v = spark.read.parquet(path).head().getLong(0)
+      val v = Tables.parquet(spark, path).head().getLong(0)
       statMemo.putIfAbsent(key, java.lang.Long.valueOf(v))
       v
     }
@@ -561,7 +560,7 @@ object ScaleOps {
         tfs.delete(tPath, true)
       }
       // sanity: the surviving data must not contain any deleted key
-      require(spark.read.parquet(dst).filter(col(key).isInCollection(keySet)).isEmpty,
+      require(Tables.parquet(spark, dst).filter(col(key).isInCollection(keySet)).isEmpty,
         "surgical delete left deleted keys behind — footer stats lied or rewrite failed")
       writeUtf8(fs, countsFile, s"${touched.size},${untouched.size}")
       // the dir was assembled by hand (copy + rename), so the _SUCCESS
@@ -704,7 +703,7 @@ object ScaleOps {
   def compact(spark: SparkSession, src: String, dst: String,
               targetFiles: Int, srcFingerprint: String = ""): Unit =
     if (!layoutFresh(spark, dst, srcFingerprint)) {
-      spark.read.parquet(src).coalesce(targetFiles)
+      Tables.parquet(spark, src).coalesce(targetFiles)
         .write.mode("overwrite").parquet(dst)
       writeMarker(spark, dst, srcFingerprint)
     }

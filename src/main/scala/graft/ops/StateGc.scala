@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.Tables
 
 /** Warehouse state-generation GC (SURVEY §2.13 operations surface).
   *
@@ -114,12 +115,9 @@ object StateGc {
         .sortBy(_.getPath.getName)
     val rows = entries.map { st =>
       val name = st.getPath.getName
-      val isTable = spark.catalog.tableExists(name)
-      val recorded =
-        if (isTable)
-          spark.sql(s"SHOW TBLPROPERTIES `$name`").collect()
-            .collectFirst { case r if r.getString(0) == "graft.src" => r.getString(1) }
-        else readMarker(f, st.getPath)
+      val props = GraftShim.tableProperties(spark, name)
+      val isTable = props.isDefined
+      val recorded = props.fold(readMarker(f, st.getPath))(_.get("graft.src"))
       val tagHit = liveTags.collectFirst {
         case (t, _) if name.endsWith("_" + t) => t
       }
@@ -217,7 +215,7 @@ object StateGc {
     // Live probe AFTER the destructive pass: the kept generation must
     // still be a readable layout with its marker intact.
     val liveDir = new java.io.File(wh, liveGen).toString
-    require(spark.read.parquet(liveDir).count() == 1L &&
+    require(Tables.parquet(spark, liveDir).count() == 1L &&
       readMarker(f, new org.apache.hadoop.fs.Path(liveDir)).contains(docFp + ":demo=1"),
       "stateGc demo: live generation damaged by GC")
     val out = report.map { r =>

@@ -2196,7 +2196,7 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     Q("s_incremental_assign", kmeansAssignOracleSql(8, 2, 64)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareCentroidState(s, d)
-      val cents = s.read.parquet(centroidStatePath(s, d))
+      val cents = Tables.parquet(s, centroidStatePath(s, d))
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
@@ -2227,7 +2227,7 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     Q("s_embedding_drift", embeddingDriftOracleSql(8, 2, 64)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareCentroidState(s, d)
-      val cents = s.read.parquet(centroidStatePath(s, d))
+      val cents = Tables.parquet(s, centroidStatePath(s, d))
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
@@ -2857,7 +2857,7 @@ FROM bk""") { (s, d) =>
           threshold = 0.5, bandBucketCap = Some(lshDerivedCap(s, d)),
           memoTag = Some(s"pipe-g:$fp")))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
-      val cents = s.read.parquet(centroidStatePath(s, d))
+      val cents = Tables.parquet(s, centroidStatePath(s, d))
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
       val vecs = Tables.embeddings(s, d)
@@ -2911,7 +2911,7 @@ FROM bk""") { (s, d) =>
           threshold = 0.5, bandBucketCap = Some(lshDerivedCap(s, d)),
           memoTag = Some(s"pipe-incr:$fp")))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
-      val cents = s.read.parquet(centroidStatePath(s, d))
+      val cents = Tables.parquet(s, centroidStatePath(s, d))
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
       val vecs = Tables.embeddings(s, d)
@@ -3058,7 +3058,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // probe would drop pairs the full re-cluster keeps.
     Q("dd_incremental_clusters", incrementalClustersOracleSql) { (s, d) =>
       prepareClusterState(s, d); prepareLshState(s, d)
-      val state = s.read.parquet(clusterStatePath(s, d))
+      val state = Tables.parquet(s, clusterStatePath(s, d))
       // Watch registered BEFORE the shared-feed truncation executes the
       // probe as an eager job at plan build.
       graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
@@ -3132,7 +3132,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       graft.plans.PlanChecks.watchFinalPlans(s, pgEdgeStateTable(d), "PageRank edge state")
       graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
       val stateEdges = s.table(pgEdgeStateTable(d))
-      val stateRanks = s.read.parquet(rankStatePath(s, d))
+      val stateRanks = Tables.parquet(s, rankStatePath(s, d))
       // r19: the SHARED uncapped pair feed (one probe+verify execution
       // per session for the whole cluster/graph family; the feed's own
       // layout REQUIREs run inside sharedUncappedIncPairs).
@@ -3168,7 +3168,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
       val stateAdj = s.table(pgEdgeStateTable(d))
       val statePairs = s.table(pgPairStateTable(d))
-      val stateCounts = s.read.parquet(triangleStatePath(s, d))
+      val stateCounts = Tables.parquet(s, triangleStatePath(s, d))
       // r19: same SHARED uncapped pair feed as dd_incremental_clusters
       // and pg_incremental_pagerank — one probe+verify per session.
       val incPairs = sharedUncappedIncPairs(s, d)
@@ -3206,7 +3206,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       "SELECT CAST(ts + INTERVAL 8 HOUR AS DATE) AS obs_date, event_type, " +
         "CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2") { (s, d) =>
       prepareTallyState(s, d)
-      val state = s.read.parquet(tallyStatePath(s, d))
+      val state = Tables.parquet(s, tallyStatePath(s, d))
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3239,7 +3239,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
       prepareMetricsState(s, d)
-      val state = s.read.parquet(metricsStatePath(s, d))
+      val state = Tables.parquet(s, metricsStatePath(s, d))
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3265,7 +3265,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(count(DISTINCT user_id) AS BIGINT) AS n_users " +
         "FROM events GROUP BY 1, 2") { (s, d) =>
       prepareUsersState(s, d)
-      val state = s.read.parquet(usersStatePath(s, d))
+      val state = Tables.parquet(s, usersStatePath(s, d))
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"), col("user_id"))
@@ -3290,7 +3290,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(sum(cents) AS BIGINT) / 100.0 AS total_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
       prepareMetricsState(s, d)
-      val state = s.read.parquet(metricsStatePath(s, d))
+      val state = Tables.parquet(s, metricsStatePath(s, d))
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3323,11 +3323,11 @@ FROM comp GROUP BY 1""") { (s, d) =>
       prepareDqProfState(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
-      val counts = s.read.parquet(dqProfCountsPath(s, d))
+      val counts = Tables.parquet(s, dqProfCountsPath(s, d))
         .unionByName(dqProfCounts(inc))
         .groupBy(col("col_name"))
         .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_nulls")).as("n_nulls"))
-      val regs = s.read.parquet(dqProfRegsPath(s, d))
+      val regs = Tables.parquet(s, dqProfRegsPath(s, d))
         .unionByName(dqProfRegisters(inc))
         .groupBy(col("col_name"), col("bucket"))
         .agg(max(col("r")).as("r"))
@@ -3376,7 +3376,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
       prepareMetricsState(s, d)
-      val state = s.read.parquet(metricsStatePath(s, d))
+      val state = Tables.parquet(s, metricsStatePath(s, d))
       val deltas = Tables.events(s, d)
         .filter(col("event_id") % 3 =!= 2 && col("event_id") % 7 === 3 &&
           col("value").isNotNull)
@@ -3418,7 +3418,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // apply linear counting downstream); no float ever compares.
     Q("ivm_daily_users_hll", hllUsersOracleSql) { (s, d) =>
       prepareHllState(s, d)
-      val state = s.read.parquet(hllStatePath(s, d))
+      val state = Tables.parquet(s, hllStatePath(s, d))
       val incr = hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
         .groupBy(col("obs_date"), col("event_type"), col("bucket"))
@@ -3473,7 +3473,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     Q("ivm_bottomk_sample", bottomkOracleSql) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareBottomkState(s, d)
-      val state = s.read.parquet(bottomkStatePath(s, d))
+      val state = Tables.parquet(s, bottomkStatePath(s, d))
       val incr = bottomkRanked(
         Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val g = Window.partitionBy(col("obs_date"), col("event_type"))
@@ -3516,7 +3516,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "FROM x GROUP BY 1, 2") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareQuantState(s, d)
-      val state = s.read.parquet(quantStatePath(s, d))
+      val state = Tables.parquet(s, quantStatePath(s, d))
       val incr = quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
         .groupBy(col("obs_date"), col("event_type"), col("bucket"))
@@ -3546,7 +3546,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(count(*) AS BIGINT) AS n_items " +
         "FROM orders JOIN lineitem ON l_orderkey = o_orderkey GROUP BY 1") { (s, d) =>
       prepareJoinAggState(s, d)
-      val state = s.read.parquet(joinAggStatePath(s, d))
+      val state = Tables.parquet(s, joinAggStatePath(s, d))
       val o = Tables.orders(s, d); val l = Tables.lineitem(s, d)
       val deltas = Seq(
         joinAggPartial(ordersNew(o), lineitemOld(l)),
@@ -3797,8 +3797,8 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     }
     if (drain.newFiles.nonEmpty || !settledExists) {
       val priorState =
-        if (settledExists) s.read.parquet(settledDir)
-        else s.read.parquet(clusterStatePath(s, d))
+        if (settledExists) Tables.parquet(s, settledDir)
+        else Tables.parquet(s, clusterStatePath(s, d))
       val pairs = Dedup.verifyIncrementPairs(
         drain.newPairs.select(col("state_id").as("id1"), col("inc_id").as("id2")),
         docs.filter(col("doc_id") % 3 === 2),
@@ -3815,7 +3815,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
       graft.ops.ScaleOps.publishDirSwap(s, tmpDir, settledDir)
       drain.advance()
     }
-    s.read.parquet(settledDir)
+    Tables.parquet(s, settledDir)
   }
 
   /** One-time k-means training on the day-1 vectors; persists the k
@@ -4259,12 +4259,10 @@ FROM rw"""
     val hist = sizes.groupBy(col("c")).agg(count(lit(1)).as("f"))
     val tot = hist.agg(coalesce(sum(col("f")), lit(0L)).as("nb"),
       coalesce(sum(col("c") * col("f")), lit(0L)).as("nr"))
-    // Constant partition key: the cumulative frame is the SIZE HISTOGRAM
-    // (distinct bucket sizes), bounded at any scale — see the scaladoc;
-    // the explicit key documents the bound and silences the WindowExec
-    // no-partition warning.
+    // Single-partition window: the cumulative frame is the SIZE
+    // HISTOGRAM (distinct bucket sizes), bounded at any scale.
     val cum = hist.withColumn("cum", sum(col("f")).over(
-      org.apache.spark.sql.expressions.Window.partitionBy(lit(0)).orderBy(col("c"))))
+      org.apache.spark.sql.expressions.Window.orderBy(col("c"))))
     val p99 = cum.crossJoin(tot)
       .filter(col("cum") >= ceil(lit(0.99) * col("nb")).cast("long"))
       .agg(min(col("c")).as("p99"))
@@ -4486,7 +4484,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
       // identical filter is discarded by the second put (idempotent:
       // both deserialize the same checkpoint).
       val v = (graft.functions.BloomFunctions.fromHex(
-          s.read.parquet(key._1).head().getString(0)),
+          Tables.parquet(s, key._1).head().getString(0)),
         contamDerivedCap(s, d))
       bloomMemo.synchronized {
         val raced = bloomMemo.get(key)
@@ -4523,7 +4521,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
           expr("4 * count(1) div count(DISTINCT shingle)")).as("derived_cap")))
     graft.ops.ScaleOps.ensureSortedByLazy(s, contamBloomPath(s, d),
       "bloom_hex", numFiles = 1, srcFingerprint = fp) {
-      val cap = s.read.parquet(contamCapPath(s, d)).head().getLong(0)
+      val cap = Tables.parquet(s, contamCapPath(s, d)).head().getLong(0)
       val keys = s.table(contamStateTable(d))
         .filter(col("df") <= cap).select(col("shingle")).distinct()
       val bf = keys.stat.bloomFilter("shingle", math.max(keys.count(), 1L), 0.01)

@@ -207,7 +207,7 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
       "cluster_id", numFiles = 1,
       srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"))(
       EntityResolution.survivorship(
-        s.read.parquet(erClusterStatePath(s, d))
+        Tables.parquet(s, erClusterStatePath(s, d))
           .join(keyedRecords(s, d).select(col("rid").as("node"), col("name")),
             Seq("node"))
           .select(col("cluster_id"), col("node").as("rid"), col("name")),
@@ -382,7 +382,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       graft.ops.CacheOnce.swapTruncated("er-inc-updated:" +
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          s.read.parquet(erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
+          Tables.parquet(s, erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
           memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -426,7 +426,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       graft.ops.CacheOnce.swapTruncated("er-inc-updated-capped:" +
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          s.read.parquet(erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
+          Tables.parquet(s, erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
           memoTag = ":er-capped:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -484,7 +484,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
   FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""") { (s, d) =>
       prepareErFullClusters(s, d)
       val k = keyedRecords(s, d)
-      val clustered = s.read.parquet(erFullClusterPath(s, d))
+      val clustered = Tables.parquet(s, erFullClusterPath(s, d))
         .join(k.select(col("rid").as("node"), col("name")), Seq("node"))
         .select(col("cluster_id"), col("node").as("rid"), col("name"))
       EntityResolution.survivorship(clustered, "rid", "cluster_id",
@@ -535,7 +535,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       val pairs = EntityResolution.verifyByEditDistance(
         crossCands.unionByName(selfCands).distinct(),
         k, "rid", "norm", Seq("nation"), maxDist = 1)
-      val state = s.read.parquet(erClusterStatePath(s, d))
+      val state = Tables.parquet(s, erClusterStatePath(s, d))
       // shared key with er_incremental_clusters: one merged map per
       // session no matter which of the two queries runs first.
       // TRUNCATED: the merged map is referenced by changed (x1), dirty
@@ -555,7 +555,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
         .union(changed.filter(col("_old").isNotNull)
           .select(col("_old").as("cluster_id")))
         .distinct()
-      val survState = s.read.parquet(erSurvStatePath(s, d))
+      val survState = Tables.parquet(s, erSurvStatePath(s, d))
       val untouched = survState
         .join(broadcast(dirty), Seq("cluster_id"), "left_anti")
       val reElected = EntityResolution.survivorship(

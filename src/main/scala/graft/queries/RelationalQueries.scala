@@ -598,7 +598,7 @@ SELECT CAST(floor(v3.c_acctbal / 100) AS BIGINT) AS bal_band,
 FROM f JOIN v3 ON f.o_custkey = v3.c_custkey
 GROUP BY 1""") { (s, d) =>
       prepareScd2AggState(s, d)
-      val state = s.read.parquet(scd2AggStatePath(s, d))
+      val state = Tables.parquet(s, scd2AggStatePath(s, d))
       val keys = Seq("c_custkey")
       val tracked = Seq("c_acctbal", "c_mktsegment")
       // TRUNCATED (r18): the v1→v2 merge history is referenced by BOTH

@@ -220,7 +220,7 @@ GROUP BY 1""") { (s, d) =>
         "round(sum(value), 2) AS total_value FROM events " +
         "WHERE CAST(ts AS DATE) = DATE '2024-01-15' GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val q = s.read.parquet(partitionedEventsPath(s, d))
+      val q = Tables.parquet(s, partitionedEventsPath(s, d))
         .filter(col("event_date") === lit("2024-01-15").cast("date"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
@@ -252,7 +252,7 @@ GROUP BY 1""") { (s, d) =>
       require(ranges.nonEmpty && overlapping * 3 <= ranges.size,
         s"sorted layout not clustering: $overlapping of ${ranges.size} row groups " +
           "overlap a 20-key range — data skipping regressed")
-      val q = s.read.parquet(path)
+      val q = Tables.parquet(s, path)
         .filter(col("user_id").between(100, 119))
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
@@ -288,7 +288,7 @@ GROUP BY 1""") { (s, d) =>
       require(uRanges.nonEmpty && overlap2d * 2 <= uRanges.size,
         s"z-order not clustering: $overlap2d of ${uRanges.size} row groups " +
           "overlap a 2-D window — multi-key skipping regressed")
-      val q = s.read.parquet(path)
+      val q = Tables.parquet(s, path)
         .filter(col("user_id").between(40, 79) && col("doy").between(8, 14))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
       val scans = q.queryExecution.sparkPlan.collect {
@@ -320,7 +320,7 @@ GROUP BY 1""") { (s, d) =>
       require(uRanges.nonEmpty && overlap2d * 2 <= uRanges.size,
         s"hilbert not clustering: $overlap2d of ${uRanges.size} row groups " +
           "overlap a 2-D window — multi-key skipping regressed")
-      val q = s.read.parquet(path)
+      val q = Tables.parquet(s, path)
         .filter(col("user_id").between(100, 139) && col("doy").between(20, 26))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
       val scans = q.queryExecution.sparkPlan.collect {
@@ -361,7 +361,7 @@ GROUP BY 1""") { (s, d) =>
           "row groups intersect the decomposed intervals on hv's own stats")
       val hvPred = rs.map { case (lo, hi) => col("hv").between(lo, hi) }
         .reduce(_ || _)
-      val q = s.read.parquet(path)
+      val q = Tables.parquet(s, path)
         .filter(hvPred &&
           col("user_id").between(60, 99) && col("doy").between(10, 16))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -401,7 +401,7 @@ GROUP BY 1""") { (s, d) =>
           "row groups intersect the decomposed intervals on hv3's own stats")
       val hvPred = rs.map { case (lo, hi) => col("hv3").between(lo, hi) }
         .reduce(_ || _)
-      val q = s.read.parquet(path)
+      val q = Tables.parquet(s, path)
         .filter(hvPred && col("user_id").between(30, 69) &&
           col("doy").between(12, 18) && col("hod").between(6, 17))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -439,7 +439,7 @@ GROUP BY 1""") { (s, d) =>
         s"surgical delete not surgical: $rewritten of ${rewritten + copied} " +
           "files rewritten for a 20-key contiguous cohort — the clustered " +
           "layout's footer pruning regressed")
-      s.read.parquet(dst)
+      Tables.parquet(s, dst)
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
     },
@@ -464,7 +464,7 @@ GROUP BY 1""") { (s, d) =>
         s"fragmented fixture lost its fragmentation: $nFrag files")
       require(nComp >= 1 && nComp <= 4,
         s"compaction regressed: $nComp part files after rewrite")
-      s.read.parquet(compactedEventsPath(s, d)).groupBy("event_type")
+      Tables.parquet(s, compactedEventsPath(s, d)).groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
     },
 
@@ -480,8 +480,8 @@ GROUP BY 1""") { (s, d) =>
       "SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM events " +
         "WHERE date_part('day', CAST(ts AS DATE)) <= 7 GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val fact = s.read.parquet(partitionedEventsPath(s, d))
-      val dim = s.read.parquet(datesDimPath(s, d))
+      val fact = Tables.parquet(s, partitionedEventsPath(s, d))
+      val dim = Tables.parquet(s, datesDimPath(s, d))
         .filter(col("day_of_month") <= 7)
       val q = fact.join(dim, Seq("event_date"))
         .groupBy("event_type").agg(count(lit(1)).as("n"))

@@ -71,13 +71,13 @@ object CompactedLanding {
   def read(spark: SparkSession, dataDir: String, genDir: String): DataFrame = {
     val fs = coveredMarker(genDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(coveredMarker(genDir))) return spark.read.parquet(dataDir)
+    if (!fs.exists(coveredMarker(genDir))) return Tables.parquet(spark, dataDir)
     val in = fs.open(coveredMarker(genDir))
     val covered =
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSet
       finally in.close()
     val tail = committedFiles(spark, dataDir).filterNot(covered)
-    val gen = spark.read.parquet(genDir)
+    val gen = Tables.parquet(spark, genDir)
     if (tail.isEmpty) gen
     else gen.unionByName(spark.read.parquet(tail: _*))
   }

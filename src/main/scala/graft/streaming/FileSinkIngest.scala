@@ -45,7 +45,7 @@ object FileSinkIngest {
     q.awaitTermination()
     // Batch read of a streaming-sink directory goes through
     // _spark_metadata: only committed files are visible.
-    spark.read.parquet(data)
+    Tables.parquet(spark, data)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
   }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.Tables
 
 /** Streaming SCD2 maintenance — the dimension-feed shape of the
   * reference's timestamped-snapshot habit (ningaloo-etl.Rmd:480-486)
@@ -77,7 +78,7 @@ object ScdApplyStream {
           // under the final name would be skipped forever and seed
           // every later version from truncated history).
           if (v > curVer) {
-            val hist = bs.read.parquet(curDir.toString)
+            val hist = Tables.parquet(bs, curDir.toString)
             val next = graft.ops.ScdOps.scd2Apply(
               hist, batch.filter(col("_ver") === v).drop("_ver"),
               keys, tracked, newVer = v)
@@ -95,6 +96,6 @@ object ScdApplyStream {
       .awaitTermination()
     val (_, finalDir) = latestVersionDir(work)
       .getOrElse(sys.error(s"no history produced under $work"))
-    spark.read.parquet(finalDir.toString)
+    Tables.parquet(spark, finalDir.toString)
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.Tables
 
 /** Idempotent batch reprocessing (SURVEY.md §2.11; tagging-etl.Rmd:116-132):
   * WAMTRAM's `EntryBatchProcess` skips records whose ids were already
@@ -25,7 +26,7 @@ object UpsertSink {
     // surfaces as UNABLE_TO_INFER_SCHEMA, and the sink must still
     // recover, that's its whole contract).
     val existingKeys: Option[DataFrame] =
-      try Some(spark.read.parquet(targetPath).select(key))
+      try Some(Tables.parquet(spark, targetPath).select(key))
       catch { case e: Exception if e.getMessage != null &&
         (e.getMessage.contains("PATH_NOT_FOUND") ||
           e.getMessage.contains("UNABLE_TO_INFER_SCHEMA")) => None }
@@ -72,7 +73,7 @@ object UpsertSink {
       .parquet(staged.toString)
     start(stream, target, "event_id", work.resolve("ckpt").toString)
       .awaitTermination()
-    spark.read.parquet(target)
+    Tables.parquet(spark, target)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
   }

@@ -31,4 +31,16 @@ object GraftShim {
     * `private[spark]`, hence this lives here. */
   def flushListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Properties of `table` in the session catalog, or None when the
+    * catalog has no such table — ONE catalog lookup, where
+    * `spark.catalog.tableExists` plus `SHOW TBLPROPERTIES` statements
+    * would each parse, analyze and run a command. The name resolves
+    * against the current database, as an unqualified name in SQL does.
+    * `sessionState.catalog` is `private[sql]`, hence this lives here. */
+  def tableProperties(spark: SparkSession,
+                      table: String): Option[Map[String, String]] =
+    try Some(spark.asInstanceOf[classic.SparkSession].sessionState.catalog
+      .getTableRawMetadata(catalyst.TableIdentifier(table)).properties)
+    catch { case _: catalyst.analysis.NoSuchTableException => None }
 }

@@ -162,7 +162,7 @@ class CodegenGateSpec extends SparkSpec {
     assert(v == 11.0)
   }
 
-  test("codegen gate: WinnowFingerprints (md5 and xxhash)") {
+  test("codegen gate: WinnowFingerprints (md5)") {
     val d = rddDf("s string")(Row("the quick brown fox jumps over it"))
     assert(gate(d, WinnowFunctions.winnowMd5(col("s"), 4, 3))
       .asInstanceOf[scala.collection.Seq[_]].nonEmpty)
