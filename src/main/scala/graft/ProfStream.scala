@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions._
   * 3.7 s at sf0.1). Per rep, in one hot JVM:
   *
   *   drain    — the AvailableNow micro-batch drain alone (stream start
-  *              → awaitTermination), collisions into the parquet sink
+  *              → awaitTermination), collisions into the gate's lineage
+  *              sink; reps after the first restart on its checkpoint
+  *              and commit no micro-batch
   *   readback — sink re-read + distinct to the settled candidate set
   *   verify   — exact-Jaccard verification of the candidates
   *   merge    — incrementalClusters against the persisted state
@@ -58,13 +60,10 @@ object ProfStream {
     CorpusQueries.prepareLshState(spark, d)
     val docs = Tables.documents(spark, d)
     val state = spark.read.parquet(CorpusQueries.clusterStatePath(spark, d))
-    val staged = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "graft_stp_cands").toString
     (1 to reps).foreach { r =>
       val cands = phase("drain", r) {
         graft.streaming.LshProbe.candidatesOnce(spark, d,
-          CorpusQueries.lshStateTable(d), sinkDir = Some(staged))
+          CorpusQueries.lshStateTable(d))
       }
       val settled = phase("readback", r) {
         val c = cands.select(col("state_id").as("id1"), col("inc_id").as("id2"))

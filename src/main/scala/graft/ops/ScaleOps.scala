@@ -195,11 +195,16 @@ object ScaleOps {
   /** Returns true when the table was (re)built by THIS call — the hook
     * for build-time-only invariant checks (e.g. the pagerank edge
     * state's one-per-fingerprint symmetry assertion), which must run
-    * where the table is written, never on every read-back. */
-  def ensureBucketed(df: DataFrame, table: String, key: String,
+    * where the table is written, never on every read-back.
+    *
+    * The frame is taken BY NAME, with the session passed explicitly (the
+    * [[ensureSortedByLazy]] shape): a fresh table costs one catalog
+    * lookup, and the state frame is neither built nor analyzed. */
+  def ensureBucketed(spark: SparkSession, table: String, key: String,
                      numBuckets: Int, srcFingerprint: String = "",
-                     sortCols: Seq[String] = Nil): Boolean =
-    ensureBucketedKeys(df, table, Seq(key), numBuckets, srcFingerprint, sortCols)
+                     sortCols: Seq[String] = Nil)(df: => DataFrame): Boolean =
+    ensureBucketedKeys(spark, table, Seq(key), numBuckets, srcFingerprint,
+      sortCols)(df)
 
   /** Rendered layout contract of a bucketed table — keys, sort columns
     * and bucket sizing — stored as table property `graft.layout` and
@@ -233,10 +238,9 @@ object ScaleOps {
   }
 
   /** Multi-key [[ensureBucketed]] — see [[writeBucketedKeys]]. */
-  def ensureBucketedKeys(df: DataFrame, table: String, keys: Seq[String],
+  def ensureBucketedKeys(spark: SparkSession, table: String, keys: Seq[String],
                          numBuckets: Int, srcFingerprint: String = "",
-                         sortCols: Seq[String] = Nil): Boolean = {
-    val spark = df.sparkSession
+                         sortCols: Seq[String] = Nil)(df: => DataFrame): Boolean = {
     val layout = layoutContract(keys, sortCols, s"n=$numBuckets")
     val fresh = bucketedFresh(GraftShim.tableProperties(spark, table),
       srcFingerprint, layout)
@@ -261,11 +265,12 @@ object ScaleOps {
     * holds (asserted at the write site), so the sort-free probe
     * contract survives the policy change. Returns (builtByThisCall,
     * bucketCount) — the count read back from `graft.buckets` when the
-    * generation was already fresh. */
-  def ensureBucketedDerived(df: DataFrame, table: String, keys: Seq[String],
+    * generation was already fresh. `df` is by name, as in
+    * [[ensureBucketed]]. */
+  def ensureBucketedDerived(spark: SparkSession, table: String, keys: Seq[String],
                             srcFingerprint: String = "",
-                            sortCols: Seq[String] = Nil): (Boolean, Int) = {
-    val spark = df.sparkSession
+                            sortCols: Seq[String] = Nil)
+                           (df: => DataFrame): (Boolean, Int) = {
     val (tBytes, tRows, floor) = bucketTargets(spark)
     val layout = layoutContract(keys, sortCols,
       s"derived;tb=$tBytes;tr=$tRows;floor=$floor")

@@ -3780,7 +3780,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     val cap = if (capped) Some(lshDerivedCap(s, d)) else None
     val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet") +
       cap.fold("")(c => s"|cap=$c")
-    graft.streaming.LshProbe.resetLineageIfStale(s, base, fp)
+    graft.streaming.GateLineage.resetIfStale(s, base, fp)
     val drain = graft.streaming.LshProbe.candidatesWatermarked(
       s, d, lshStateTable(d), base, bandBucketCap = cap)
     val settledDir = s"$base/settled"
@@ -4285,15 +4285,16 @@ FROM rw"""
     * the derived verdict-path cap ([[lshCapPath]]) from the freshly
     * built table, so cap and state can never drift. */
   def prepareLshState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val state = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-    val sets = state.select(col("doc_id"),
-      explode(graft.dedup.Dedup.distinctShingles(col("text"), 2)).as("shingle"))
     // "|p99": the tail-aware cap formula change must re-derive caps
     // persisted by the mean-only r17 generation.
     val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      graft.dedup.Dedup.bandKeys(sets, "doc_id", 32, 4),
-      lshStateTable(d), Seq("band_key"), srcFingerprint = fp)
+    graft.ops.ScaleOps.ensureBucketedDerived(s, lshStateTable(d),
+      Seq("band_key"), srcFingerprint = fp) {
+      val sets = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
+        .select(col("doc_id"),
+          explode(graft.dedup.Dedup.distinctShingles(col("text"), 2)).as("shingle"))
+      graft.dedup.Dedup.bandKeys(sets, "doc_id", 32, 4)
+    }
     graft.ops.ScaleOps.ensureSortedByLazy(s, lshCapPath(s, d),
       "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
       tailAwareCapDf(stateBucketSizes(s, lshStateTable(d), "band_key"),
@@ -4326,12 +4327,13 @@ FROM rw"""
     * SimHash family: the cap is a layout statistic, computed once at
     * state-build time, so probes stay O(increment)). */
   def prepareSimhashState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val state = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
     val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(
+    graft.ops.ScaleOps.ensureBucketedDerived(s, simhashStateTable(d),
+      Seq("mkey"), srcFingerprint = fp)(
       graft.dedup.Dedup.simhashMankuKeysMd5(
-        graft.dedup.Dedup.simhashMd5(state, "doc_id", "text"), "doc_id"),
-      simhashStateTable(d), Seq("mkey"), srcFingerprint = fp)
+        graft.dedup.Dedup.simhashMd5(
+          Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
+          "doc_id", "text"), "doc_id"))
     graft.ops.ScaleOps.ensureSortedByLazy(s, simhashCapPath(s, d),
       "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
       tailAwareCapDf(stateBucketSizes(s, simhashStateTable(d), "mkey"), 16L))
@@ -4506,14 +4508,14 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * increment's shingles in their scan stage. */
   def prepareContamState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val te = Tables.documents(s, d).filter(col("doc_id") % 2 === 1)
     // "|v2": the df-column schema change must rebuild a v1 index.
     val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet") + "|v2"
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      te.select(col("doc_id").as("test_id"),
-        explode(graft.dedup.Dedup.distinctShingles(col("text"), 3)).as("shingle"))
-        .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle"))),
-      contamStateTable(d), Seq("shingle"), srcFingerprint = fp)
+    graft.ops.ScaleOps.ensureBucketedDerived(s, contamStateTable(d),
+      Seq("shingle"), srcFingerprint = fp)(
+      Tables.documents(s, d).filter(col("doc_id") % 2 === 1)
+        .select(col("doc_id").as("test_id"),
+          explode(graft.dedup.Dedup.distinctShingles(col("text"), 3)).as("shingle"))
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle"))))
     graft.ops.ScaleOps.ensureSortedByLazy(s, contamCapPath(s, d),
       "derived_cap", numFiles = 1, srcFingerprint = fp)(
       s.table(contamStateTable(d))
@@ -4552,11 +4554,12 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * the derived verdict-path bucket cap (the lshCapPath policy applied
     * to the embedding modality). */
   def prepareCosineState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val state = Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2)
     val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      graft.dedup.Dedup.cosineBucketKeys(state, "vec_id", "embedding"),
-      cosineStateTable(d), Seq("tb_key"), srcFingerprint = fp)
+    graft.ops.ScaleOps.ensureBucketedDerived(s, cosineStateTable(d),
+      Seq("tb_key"), srcFingerprint = fp)(
+      graft.dedup.Dedup.cosineBucketKeys(
+        Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
+        "vec_id", "embedding"))
     graft.ops.ScaleOps.ensureSortedByLazy(s, cosineCapPath(s, d),
       "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
       tailAwareCapDf(stateBucketSizes(s, cosineStateTable(d), "tb_key"), 16L))
@@ -4615,9 +4618,9 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     // Bucket count derived from the pair state's own size (the layout
     // contract — keys, sort, sizing policy — rides graft.layout, so the
     // old hand-written "|src,dst" fingerprint bump is retired).
-    graft.ops.ScaleOps.ensureBucketedDerived(
-      s.table(pgEdgeStateTable(d)).filter(col("src") < col("dst")),
-      pgPairStateTable(d), Seq("src", "dst"), srcFingerprint = fp)
+    graft.ops.ScaleOps.ensureBucketedDerived(s, pgPairStateTable(d),
+      Seq("src", "dst"), srcFingerprint = fp)(
+      s.table(pgEdgeStateTable(d)).filter(col("src") < col("dst")))
     // BY-NAME frame: perNodeCounts is lazy, but keep the lazy variant
     // for freshness-check symmetry with the rank state.
     graft.ops.ScaleOps.ensureSortedByLazy(s, triangleStatePath(s, d),
@@ -4636,21 +4639,21 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
   def preparePageRankState(s: org.apache.spark.sql.SparkSession,
                            d: String): Unit = {
     val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    val (built, _) = graft.ops.ScaleOps.ensureBucketedDerived(
+    // Sorted on BOTH keys (r16 advisory): the triangle closes are
+    // sort-merge joins on (src, dst), and a src-only sort spec made
+    // every refresh pay two full-state per-partition sorts. The old
+    // "|src,dst" fingerprint bump is retired — keys/sort/count now
+    // ride the graft.layout property, so ANY layout change rebuilds
+    // (stale generations are ops_state_gc's to collect). The bucket
+    // count is derived from the edge state's own staged size.
+    val (built, _) = graft.ops.ScaleOps.ensureBucketedDerived(s,
+      pgEdgeStateTable(d), Seq("src"), srcFingerprint = fp,
+      sortCols = Seq("src", "dst"))(
       graft.graph.PageRank.symmetrize(
         graft.dedup.Dedup.minhashNearDupsMd5(
           Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
           "doc_id", "text",
-          numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5)),
-      // Sorted on BOTH keys (r16 advisory): the triangle closes are
-      // sort-merge joins on (src, dst), and a src-only sort spec made
-      // every refresh pay two full-state per-partition sorts. The old
-      // "|src,dst" fingerprint bump is retired — keys/sort/count now
-      // ride the graft.layout property, so ANY layout change rebuilds
-      // (stale generations are ops_state_gc's to collect). The bucket
-      // count is derived from the edge state's own staged size.
-      pgEdgeStateTable(d), Seq("src"), srcFingerprint = fp,
-      sortCols = Seq("src", "dst"))
+          numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5)))
     // The `symmetric = true` waiver below rests on "the edge table IS a
     // symmetrize() CTAS" — but every LATER call reads the table back, so
     // the claim is checked ONCE per fingerprint, where the table is
@@ -4686,9 +4689,9 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * anti-join forever"); the query also self-prepares for standalone
     * runs. */
   def prepareDedupState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureBucketedDerived(
+    graft.ops.ScaleOps.ensureBucketedDerived(s, dedupStateTable(d),
+      Seq("content_hash"),
+      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))(
       Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-        .select(md5(col("text")).as("content_hash")).distinct(),
-      dedupStateTable(d), Seq("content_hash"),
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+        .select(md5(col("text")).as("content_hash")).distinct())
 }

@@ -171,7 +171,7 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
       .map(bk => k.select(col("rid"), bk.as("bkey")))
       .reduce(_.unionByName(_))
 
-  private[queries] def erKeyStateTable(d: String): String =
+  private[graft] def erKeyStateTable(d: String): String =
     s"graft_er_keys_${d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
 
   private[queries] def erClusterStatePath(s: SparkSession, d: String): String = {
@@ -250,14 +250,15 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
     * Same idempotent fingerprint convention as the dedup states. */
   def prepareErState(s: SparkSession, d: String): Unit = {
     val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")
-    val stateK = keyedRecords(s, d).filter(!incPred)
+    // Built only when a layout below is stale: fresh states cost lookups.
+    lazy val stateK = keyedRecords(s, d).filter(!incPred)
     // "|v2": the bsz-column schema change must rebuild a v1 key state.
     // Bucket count derived from the key state's own staged size
     // (ScaleOps.ensureBucketedDerived — the verdict-17 layout policy).
-    graft.ops.ScaleOps.ensureBucketedDerived(
+    graft.ops.ScaleOps.ensureBucketedDerived(s, erKeyStateTable(d),
+      Seq("bkey"), srcFingerprint = fp + "|v2")(
       passKeyRows(stateK).withColumn("bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("bkey"))),
-      erKeyStateTable(d), Seq("bkey"), srcFingerprint = fp + "|v2")
+        org.apache.spark.sql.expressions.Window.partitionBy("bkey"))))
     graft.ops.ScaleOps.ensureSortedByLazy(s, erCapPath(s, d),
       "derived_cap", numFiles = 1, srcFingerprint = fp + "|v2")(
       s.table(erKeyStateTable(d))

@@ -573,15 +573,14 @@ GROUP BY 1""") { (s, d) =>
     // force it onto orders, with the count folded into orders' source
     // fingerprint so a lineitem regrowth that moves the derived count
     // rebuilds the orders layout in lockstep.
-    val (_, nb) = ScaleOps.ensureBucketedDerived(
+    val (_, nb) = ScaleOps.ensureBucketedDerived(spark, tLineitem,
+      Seq("o_orderkey"),
+      srcFingerprint = ScaleOps.fileFingerprint(s"$sfDir/lineitem.parquet"))(
       Tables.lineitem(spark, sfDir)
-        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-      tLineitem, Seq("o_orderkey"),
-      srcFingerprint = ScaleOps.fileFingerprint(s"$sfDir/lineitem.parquet"))
-    ScaleOps.ensureBucketed(
-      Tables.orders(spark, sfDir).select("o_orderkey", "o_orderstatus"),
-      tOrders, "o_orderkey", nb,
-      srcFingerprint = ScaleOps.fileFingerprint(s"$sfDir/orders.parquet") + s"|nb=$nb")
+        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")))
+    ScaleOps.ensureBucketed(spark, tOrders, "o_orderkey", nb,
+      srcFingerprint = ScaleOps.fileFingerprint(s"$sfDir/orders.parquet") + s"|nb=$nb")(
+      Tables.orders(spark, sfDir).select("o_orderkey", "o_orderstatus"))
     ScaleOps.ensurePartitioned(
       Tables.events(spark, sfDir)
         .select(col("event_id"), col("event_type"), col("value"),

@@ -43,29 +43,26 @@ object CheckpointIo {
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
       sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
 
-  /** The tuned defaults are measured for LOCAL checkpoints (the gates
-    * all use temp checkpoint locations under java.io.tmpdir). If a
-    * deployment points the session's default checkpoint location at a
-    * remote store (hdfs://, s3a://, ...), the safety trade flips —
-    * FileContext's no-overwrite rename and the checksum sidecars are
-    * worth their cost there — so the defaults only apply when the
-    * location is local; an EXPLICIT env override always wins (the
-    * operator has read the trade). */
-  private def localCheckpoints(ss: SparkSession): Boolean =
-    ss.conf.getOption("spark.sql.streaming.checkpointLocation") match {
-      case None => true // Spark uses a local temp dir
-      case Some(loc) =>
-        val scheme = java.net.URI.create(loc).getScheme
-        scheme == null || scheme == "file"
-    }
+  /** The tuned defaults are measured for LOCAL checkpoints. On a remote
+    * store (hdfs://, s3a://, ...) the safety trade flips — FileContext's
+    * no-overwrite rename and the checksum sidecars are worth their cost
+    * there — so locality is decided from the drain's ACTUAL checkpoint
+    * path (the one it passes as `checkpointLocation`): no scheme or
+    * `file` is local, anything else is not. */
+  def isLocal(checkpointPath: String): Boolean = {
+    val scheme = new org.apache.hadoop.fs.Path(checkpointPath).toUri.getScheme
+    scheme == null || scheme == "file"
+  }
 
-  /** Applies the knobs to a freshly created stream session. Empty env
-    * override = leave Spark's own default for that key. */
-  def tune(ss: SparkSession): SparkSession = {
-    val applyDefaults = localCheckpoints(ss)
+  /** Applies the knobs to a freshly created stream session: the tuned
+    * defaults when its drains checkpoint `local`ly, and on a remote
+    * session only the keys an operator set EXPLICITLY in the environment
+    * (they have read the trade). Empty env override = leave Spark's own
+    * default for that key. */
+  def tune(ss: SparkSession, local: Boolean = true): SparkSession = {
     confs.zip(Seq("SPARK_GRAFT_CKPT_FM", "SPARK_GRAFT_CKPT_CHECKSUM"))
       .foreach { case ((k, v), env) =>
-        if (v.nonEmpty && (applyDefaults || sys.env.contains(env)))
+        if (v.nonEmpty && (local || sys.env.contains(env)))
           ss.conf.set(k, v)
       }
     ss

@@ -91,13 +91,13 @@ object CompactedLanding {
     * (covered file dropped) or duplicated (covered file also read
     * from the tail) breaks the hash. */
   def landCompactLandOnce(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
     val base = java.nio.file.Paths.get(
       s"${System.getProperty("java.io.tmpdir")}/graft_compact_live_${Integer.toHexString(sfDir.hashCode)}")
     graft.ops.ScaleOps.deleteLocal(base.toFile)
     java.nio.file.Files.createDirectories(base)
     val src = s"$base/src"; val data = s"$base/data"
     val ckpt = s"$base/ckpt"; val gen = s"$base/gen"
+    val ss = LshProbe.checkpointSession(spark, ckpt)
     val events = Tables.events(ss, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
     def drain(): Unit = {

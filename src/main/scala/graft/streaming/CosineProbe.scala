@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming embedding gate — the cosine family's streamed front,
   * completing the probe symmetry (MinHash: st_lsh_probe, SimHash:
@@ -23,71 +22,59 @@ object CosineProbe {
     * vectors from `stateVecs`. Returns settled DISTINCT verified pairs
     * (state_id, inc_id, cosine >= threshold). `bucketCap` is the
     * budget-path fixed cap (bounded per-drain cost is the gate's
-    * semantics). FILE sink + distributed read-back per the st_er_probe
-    * incident. */
+    * semantics). Verified pairs land in the gate's [[GateLineage]] sink
+    * (keyed on embeddings.parquet, the state table's generation, the
+    * threshold and the cap; `stateVecs` must derive from the same
+    * embeddings file). A re-run on an unchanged generation commits no
+    * micro-batch. */
   def verifiedOnce(spark: SparkSession, sfDir: String, stateTable: String,
                    stateVecs: DataFrame, threshold: Double,
                    bucketCap: Option[Int] = None): DataFrame = {
     import graft.similarity.Similarity
-    val ss = LshProbe.streamSession(spark)
+    GateLineage.drainDistinct(spark, "cosine_probe", sfDir, "embeddings.parquet",
+      stateTable, s"v1;t=$threshold;cap=${bucketCap.getOrElse("none")}",
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "state_id BIGINT, inc_id BIGINT, cosine DOUBLE")) { ss =>
+      // NO spreadNarrow here (measured negative, r19): the per-row plane
+      // dots are cheap next to the redistribute's embedding shuffle plus
+      // the extra exchange into the state join (warm drain 1.5 -> 2.2 s).
+      val inc = ss.readStream
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(embSchema))
+        .option("pathGlobFilter", "embeddings.parquet")
+        .parquet(sfDir)
+        .filter(col("vec_id") % 3 === 2)
+        .filter(Similarity.l2norm(col("embedding")) > 0)
+      // the stream row carries its own embedding THROUGH the key
+      // explosion (a self-join back to the stream would be a
+      // stream-stream join); keys from the ONE shared builder
+      // (Dedup.cosineTbKeys — same defaults, per-table seeds and packing
+      // as the persisted state), so the probe cannot drift from the
+      // state's sketch parameters.
+      val keyed = inc.select(col("vec_id").as("inc_id"),
+          col("embedding").as("_v2"),
+          Similarity.l2norm(col("embedding")).as("_n2"),
+          explode(graft.dedup.Dedup.cosineTbKeys(col("embedding"))).as("tb_key"))
+        .select(col("inc_id"), col("tb_key"), col("_v2"), col("_n2"))
 
-    // NO spreadNarrow here (measured negative, r19): the per-row plane
-    // dots are cheap next to the redistribute's embedding shuffle plus
-    // the extra exchange into the state join (warm drain 1.5 -> 2.2 s).
-    val inc = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(embSchema))
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(sfDir)
-      .filter(col("vec_id") % 3 === 2)
-      .filter(Similarity.l2norm(col("embedding")) > 0)
-    // the stream row carries its own embedding THROUGH the key
-    // explosion (a self-join back to the stream would be a
-    // stream-stream join); keys from the ONE shared builder
-    // (Dedup.cosineTbKeys — same defaults, per-table seeds and packing
-    // as the persisted state), so the probe cannot drift from the
-    // state's sketch parameters.
-    val keyed = inc.select(col("vec_id").as("inc_id"),
-        col("embedding").as("_v2"),
-        Similarity.l2norm(col("embedding")).as("_n2"),
-        explode(graft.dedup.Dedup.cosineTbKeys(col("embedding"))).as("tb_key"))
-      .select(col("inc_id"), col("tb_key"), col("_v2"), col("_n2"))
-
-    val st = {
-      val base = ss.table(stateTable)
-        .select(col("vec_id").as("state_id"), col("tb_key"))
-      bucketCap.fold(base) { cap =>
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("tb_key")
-        base.withColumn("_bsz", count(lit(1)).over(w))
-          .filter(col("_bsz") <= cap).drop("_bsz")
+      val st = {
+        val base = ss.table(stateTable)
+          .select(col("vec_id").as("state_id"), col("tb_key"))
+        bucketCap.fold(base) { cap =>
+          val w = org.apache.spark.sql.expressions.Window.partitionBy("tb_key")
+          base.withColumn("_bsz", count(lit(1)).over(w))
+            .filter(col("_bsz") <= cap).drop("_bsz")
+        }
       }
+      val sv = stateVecs.select(col("vec_id").as("state_id"),
+        col("embedding").as("_v1"), Similarity.l2norm(col("embedding")).as("_n1"))
+
+      keyed
+        .join(st, Seq("tb_key"))
+        .join(sv, Seq("state_id"))
+        .select(col("state_id"), col("inc_id"),
+          round(Similarity.dot(col("_v1"), col("_v2")) / (col("_n1") * col("_n2")), 4)
+            .as("cosine"))
+        .filter(col("cosine") >= threshold)
     }
-    val sv = stateVecs.select(col("vec_id").as("state_id"),
-      col("embedding").as("_v1"), Similarity.l2norm(col("embedding")).as("_n1"))
-
-    val stream = keyed
-      .join(st, Seq("tb_key"))
-      .join(sv, Seq("state_id"))
-      .select(col("state_id"), col("inc_id"),
-        round(Similarity.dot(col("_v1"), col("_v2")) / (col("_n1") * col("_n2")), 4)
-          .as("cosine"))
-      .filter(col("cosine") >= threshold)
-
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_cosine_probe_sink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_cosine_probe_ckpt").toString
-    val query = stream.writeStream
-      .format("parquet")
-      .option("path", staged)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "state_id BIGINT, inc_id BIGINT, cosine DOUBLE"))
-      .parquet(staged)
-      .distinct()
   }
 }

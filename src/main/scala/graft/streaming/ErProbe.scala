@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming front gate of incremental entity resolution (the
   * [[LshProbe]] shape for STRUCTURED records): arriving customer rows
@@ -42,7 +41,9 @@ object ErProbe {
     * time and the cap read back from its 1-row checkpoint
     * (EntityQueries.erStateCap), so the filter is a scan predicate and
     * nothing state-sized is recomputed per probe. The three cap modes
-    * are mutually exclusive. */
+    * are mutually exclusive. The sink is the gate's [[GateLineage]],
+    * keyed on customer.parquet, the state table's generation and the
+    * cap: a re-run on an unchanged generation commits no micro-batch. */
   def candidatesOnce(spark: SparkSession, sfDir: String,
                      stateTable: String,
                      blockCap: Option[Int] = None,
@@ -50,7 +51,6 @@ object ErProbe {
                      persistedCap: Option[(String, Long)] = None): DataFrame = {
     require(Seq(blockCap, derivedBlockCap, persistedCap).count(_.nonEmpty) <= 1,
       "blockCap, derivedBlockCap and persistedCap are mutually exclusive")
-    val ss = LshProbe.streamSession(spark)
 
     // Dirty-variant surgery and composite pass keys come from the ONE
     // shared builder ([[graft.ops.EntityResolution]]) the batch path
@@ -65,67 +65,49 @@ object ErProbe {
         .compositeBlockKeys(col("c_nationkey"), EntityResolution.nameDigits(nm))
         .map(bk => struct(rid.as("inc_rid"), bk.as("bkey")))
 
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(customerSchema))
-      .option("pathGlobFilter", "customer.parquet")
-      .parquet(sfDir)
-      .filter(col("c_custkey") % 3 === 2)
-      .select(explode(array(
-        keysOf(col("c_custkey") * 2, col("c_name")) ++
-          keysOf(col("c_custkey") * 2 + 1, name2): _*)).as("k"))
-      .select(col("k.inc_rid"), col("k.bkey"))
-      .join({
-        persistedCap match {
-          case Some((bszCol, cap)) =>
-            // Build-time block sizes + checkpointed cap: one pushable
-            // scan predicate, zero per-probe window/aggregate work.
-            ss.table(stateTable)
-              .filter(col(bszCol) <= cap)
-              .select(col("rid").as("state_rid"), col("bkey"))
-          case None =>
-            val st = ss.table(stateTable)
-              .select(col("rid").as("state_rid"), col("bkey"))
-            val w = org.apache.spark.sql.expressions.Window.partitionBy("bkey")
-            val fixed = blockCap.fold(st) { cap =>
-              st.withColumn("_bsz", count(lit(1)).over(w))
-                .filter(col("_bsz") <= cap).drop("_bsz")
-            }
-            derivedBlockCap.fold(fixed) { case (floor, mult) =>
-              val capDf = st.agg(greatest(lit(floor.toLong),
-                expr(s"$mult * count(1) div count(DISTINCT bkey)")).as("_cap"))
-              st.withColumn("_bsz", count(lit(1)).over(w))
-                .crossJoin(broadcast(capDf))
-                .filter(col("_bsz") <= col("_cap")).drop("_bsz", "_cap")
-            }
-        }
-      }, Seq("bkey"))
-      .select(col("state_rid"), col("inc_rid"))
-
-    // FILE sink, not a memory sink: collisions append as distributed
-    // parquet and the settled distinct runs as a distributed read —
-    // the deployment shape (append sink → downstream batch), and the
-    // only shape that survives high-density fixtures (the memory sink
-    // collects every candidate to the driver; at the 30-copy fixture
-    // the derived-cap probe's ~50M-pair candidate set blew
-    // spark.driver.maxResultSize there).
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_er_probe_sink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_er_probe_ckpt").toString
-    val query = stream.writeStream
-      .format("parquet")
-      .option("path", staged)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    // Explicit schema: a zero-collision drain leaves no data files and
-    // schema inference would fail on the empty sink.
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "state_rid BIGINT, inc_rid BIGINT"))
-      .parquet(staged)
-      .distinct()
+    val capMode = (blockCap.map(c => s"fixed=$c") ++
+      derivedBlockCap.map { case (f, m) => s"derived=$f,$m" } ++
+      persistedCap.map { case (c, cap) => s"persisted=$c<=$cap" })
+      .headOption.getOrElse("none")
+    GateLineage.drainDistinct(spark, "er_probe", sfDir, "customer.parquet",
+      stateTable, s"v1;cap=$capMode",
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "state_rid BIGINT, inc_rid BIGINT")) { ss =>
+      ss.readStream
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(customerSchema))
+        .option("pathGlobFilter", "customer.parquet")
+        .parquet(sfDir)
+        .filter(col("c_custkey") % 3 === 2)
+        .select(explode(array(
+          keysOf(col("c_custkey") * 2, col("c_name")) ++
+            keysOf(col("c_custkey") * 2 + 1, name2): _*)).as("k"))
+        .select(col("k.inc_rid"), col("k.bkey"))
+        .join({
+          persistedCap match {
+            case Some((bszCol, cap)) =>
+              // Build-time block sizes + checkpointed cap: one pushable
+              // scan predicate, zero per-probe window/aggregate work.
+              ss.table(stateTable)
+                .filter(col(bszCol) <= cap)
+                .select(col("rid").as("state_rid"), col("bkey"))
+            case None =>
+              val st = ss.table(stateTable)
+                .select(col("rid").as("state_rid"), col("bkey"))
+              val w = org.apache.spark.sql.expressions.Window.partitionBy("bkey")
+              val fixed = blockCap.fold(st) { cap =>
+                st.withColumn("_bsz", count(lit(1)).over(w))
+                  .filter(col("_bsz") <= cap).drop("_bsz")
+              }
+              derivedBlockCap.fold(fixed) { case (floor, mult) =>
+                val capDf = st.agg(greatest(lit(floor.toLong),
+                  expr(s"$mult * count(1) div count(DISTINCT bkey)")).as("_cap"))
+                st.withColumn("_bsz", count(lit(1)).over(w))
+                  .crossJoin(broadcast(capDf))
+                  .filter(col("_bsz") <= col("_cap")).drop("_bsz", "_cap")
+              }
+          }
+        }, Seq("bkey"))
+        .select(col("state_rid"), col("inc_rid"))
+    }
   }
 }

@@ -21,7 +21,6 @@ object FileSinkIngest {
     * The settled aggregate equals the batch aggregate over the raw
     * events — the oracle. */
   def landOnce(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
     val base = java.nio.file.Paths.get(
       s"${System.getProperty("java.io.tmpdir")}/graft_file_sink_${Integer.toHexString(sfDir.hashCode)}")
     // Fresh landing per run: the sink's exactly-once story is the
@@ -32,6 +31,7 @@ object FileSinkIngest {
     java.nio.file.Files.createDirectories(base)
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"
+    val ss = LshProbe.checkpointSession(spark, ckpt)
     val stream = ss.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(Tables.eventsRawSchema))
       .option("pathGlobFilter", "events.parquet")

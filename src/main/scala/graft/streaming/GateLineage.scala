@@ -1,0 +1,105 @@
+package graft.streaming
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
+
+/** Generation-keyed lineages of the stream gates: one directory per
+  * (gate, source dir) under the warehouse, `graft_st_<name>`, holding
+  * the sink, its checkpoint and a `_GRAFT_SRC` fingerprint — the
+  * ensureBucketed staleness convention applied to a stream. While the
+  * fingerprint holds, a drain restarts on its own checkpoint: the file
+  * source has already seen every input file, so an unchanged generation
+  * commits no micro-batch and the settled sink is read back as it
+  * stands. A rolled fingerprint resets sink, checkpoint and everything
+  * else under the directory as one unit (the checkpoint's seen-file log
+  * dedupes by path, so a same-path regen would otherwise never
+  * reprocess). Fingerprints start with the source file's `len:mtime`,
+  * and names end with `StateGc.tagOf(sourceDir)`, so [[graft.ops.StateGc]]
+  * keeps a lineage exactly while its source is live.
+  *
+  * Single-writer per warehouse, like every persisted state: two
+  * concurrent drains of one lineage would race on its checkpoint. */
+object GateLineage {
+
+  /** `<warehouse>/graft_st_<name>` — callers end `name` with the source
+    * dir's [[graft.ops.StateGc.tagOf]]. */
+  def dir(spark: SparkSession, name: String): String =
+    new Path(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
+      s"graft_st_$name").toString
+
+  /** Reset `baseDir` when its recorded `_GRAFT_SRC` differs from
+    * `srcFingerprint`: the directory is emptied and the new fingerprint
+    * recorded. Returns true when it reset (a fresh lineage). */
+  def resetIfStale(spark: SparkSession, baseDir: String,
+                   srcFingerprint: String): Boolean = {
+    val p = new Path(baseDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(p, "_GRAFT_SRC")
+    val fresh = fs.exists(marker) && {
+      val in = fs.open(marker)
+      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+        "UTF-8") == srcFingerprint
+      finally in.close()
+    }
+    if (!fresh) {
+      if (fs.exists(p)) fs.delete(p, true)
+      fs.mkdirs(p)
+      val out = fs.create(marker, true)
+      try out.write(srcFingerprint.getBytes("UTF-8")) finally out.close()
+    }
+    !fresh
+  }
+
+  /** Fingerprint of a probe gate's generation: the streamed source
+    * file's `len:mtime`, then the state table's name, `graft.src` and
+    * `graft.layout`, then `params` (cap and sketch parameters). A state
+    * table that records no `graft.src` has no generation to key on, so
+    * every drain against it starts a fresh lineage. */
+  private[graft] def probeFingerprint(spark: SparkSession, srcPath: String,
+                                      stateTable: String,
+                                      params: String): String = {
+    val props = GraftShim.tableProperties(spark, stateTable).getOrElse(Map.empty)
+    val state = props.get("graft.src") match {
+      case Some(src) =>
+        s"$stateTable;src=$src;layout=${props.getOrElse("graft.layout", "")}"
+      case None => s"$stateTable;unkeyed=${java.util.UUID.randomUUID()}"
+    }
+    s"${graft.ops.ScaleOps.fileFingerprint(srcPath)}|$state|$params"
+  }
+
+  /** The settled-distinct drain every probe gate runs: an AvailableNow
+    * drain of `stream` (built on the session this lineage's checkpoint
+    * calls for — [[LshProbe.checkpointSession]]) into the parquet sink
+    * of lineage `graft_st_<gate>_<tagOf(sfDir)>`, keyed by
+    * [[probeFingerprint]] of `sfDir/srcFile`, `stateTable` and `params`.
+    * Returns the DISTINCT rows the sink has committed, read through its
+    * `_spark_metadata` log with `sinkSchema` (a zero-row drain leaves no
+    * data file to infer from). The frame reads the lineage's files: it
+    * stays valid until a drain of another generation resets the
+    * lineage. A FILE sink, not a memory sink: the memory sink collects
+    * every row to the driver (at a 30-copy-density fixture the ER
+    * gate's ~50M candidate pairs exceeded spark.driver.maxResultSize),
+    * and append sink → downstream batch is the deployment shape. */
+  private[streaming] def drainDistinct(spark: SparkSession, gate: String,
+                                       sfDir: String, srcFile: String,
+                                       stateTable: String, params: String,
+                                       sinkSchema: StructType)
+                                      (stream: SparkSession => DataFrame): DataFrame = {
+    val base = dir(spark, s"${gate}_${graft.ops.StateGc.tagOf(sfDir)}")
+    resetIfStale(spark, base,
+      probeFingerprint(spark, s"$sfDir/$srcFile", stateTable, params))
+    val data = s"$base/data"
+    val ckpt = s"$base/ckpt"
+    stream(LshProbe.checkpointSession(spark, ckpt)).writeStream
+      .format("parquet")
+      .option("path", data)
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    spark.read.schema(sinkSchema).parquet(data).distinct()
+  }
+}

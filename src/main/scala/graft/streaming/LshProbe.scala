@@ -112,19 +112,21 @@ object LshProbe {
       ss
     }
 
-  /** One AvailableNow drain of the increment (doc_id % 3 = 2) against
-    * `stateTable` (written by prepareLshState: (doc_id, band_key)
-    * bucketed on band_key). Returns the settled DISTINCT candidate
-    * pairs (state_id, inc_id).
-    *
-    * `sinkDir`: when set, collisions land in a parquet APPEND sink
-    * there (fresh checkpoint per drain) and the distinct runs as a
-    * distributed read-back — the append-sink → downstream-batch
-    * deployment shape the incremental-cluster queries consume, and the
-    * only shape whose cost does not accumulate across drains in one
-    * JVM: the default memory sink pins every pre-distinct collision
-    * row on the driver until the session is GC'd, which at the
-    * 30x-density fixture grew each successive warm rep by ~40 s. */
+  /** Session selector for a drain that checkpoints at `checkpointPath`:
+    * a local path drains on the shared, tuned stream session; any other
+    * scheme gets a PRIVATE child session without the local-only
+    * checkpoint defaults ([[CheckpointIo.isLocal]] — the choice is a pure
+    * function of the path). Not memoized: remote lineages are a
+    * deployment shape, not the local hot path. */
+  private[streaming] def checkpointSession(spark: SparkSession,
+                                           checkpointPath: String): SparkSession =
+    if (CheckpointIo.isLocal(checkpointPath)) streamSession(spark)
+    else {
+      val ss = spark.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", "8")
+      CheckpointIo.tune(ss, local = false)
+    }
+
   /** Guarded redistribute of a streamed source before heavy PER-ROW
     * narrow work (per-row sketching, quality/lang scoring) — guide §2.5
     * applied to the stream gates: the fixture sources are one parquet
@@ -194,62 +196,39 @@ object LshProbe {
       .select(col("state_id"), col("doc_id").as("inc_id"))
   }
 
+  /** One AvailableNow drain of the increment (doc_id % 3 = 2) against
+    * `stateTable` (written by prepareLshState: (doc_id, band_key)
+    * bucketed on band_key). Returns the settled DISTINCT candidate
+    * pairs (state_id, inc_id). Collisions land in the parquet append
+    * sink of the gate's [[GateLineage]] (keyed on the documents file,
+    * the state table's generation, the sketch parameters and the cap),
+    * and the distinct runs as a distributed read-back — the
+    * append-sink → downstream-batch deployment shape. A re-run on an
+    * unchanged generation commits no micro-batch. */
   def candidatesOnce(spark: SparkSession, sfDir: String,
                      stateTable: String, numHashes: Int = 32,
                      rowsPerBand: Int = 4, shingleN: Int = 2,
-                     bandBucketCap: Option[Int] = None,
-                     sinkDir: Option[String] = None): DataFrame = {
-    val ss = streamSession(spark)
-    val stream = collisionStream(ss, sfDir, stateTable, numHashes,
-      rowsPerBand, shingleN, bandBucketCap)
-
-    sinkDir match {
-      case Some(dir) =>
-        // Overwrite semantics per drain: clear the landing and use a
-        // fresh checkpoint so re-drains (bench warm+timed passes) see
-        // only this drain's collisions.
-        val d = new java.io.File(dir)
-        if (d.exists()) graft.ops.ScaleOps.deleteLocal(d)
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_lsh_probe_ckpt").toString
-        val query = stream.writeStream
-          .format("parquet")
-          .option("path", dir)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        // Explicit schema: a zero-collision drain leaves no data files.
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "state_id BIGINT, inc_id BIGINT"))
-          .parquet(dir)
-          .distinct()
-      case None =>
-        val qname = "graft_stream_lsh_probe"
-        val query = stream.writeStream
-          .format("memory")
-          .queryName(qname)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        ss.table(qname).distinct()
+                     bandBucketCap: Option[Int] = None): DataFrame =
+    GateLineage.drainDistinct(spark, "lsh_probe", sfDir, "documents.parquet",
+      stateTable, s"v1;h=$numHashes;r=$rowsPerBand;n=$shingleN;" +
+        s"cap=${bandBucketCap.getOrElse("none")}",
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "state_id BIGINT, inc_id BIGINT")) { ss =>
+      collisionStream(ss, sfDir, stateTable, numHashes, rowsPerBand,
+        shingleN, bandBucketCap)
     }
-  }
 
   // ---- Watermark-bounded drains (verdict-17 task 3) -----------------
-  // candidatesOnce's per-drain shape clears the landing and re-stages +
-  // re-verifies EVERY collision each drain: over a stream's lifetime the
-  // downstream batch's cost rides TOTAL accumulated sink output, not the
-  // increment. The watermarked shape is the operational fix: the sink
-  // and its checkpoint PERSIST across drains (so the source only ever
-  // processes new arrivals), a verified high-water marker records which
-  // committed sink files the downstream batch has already verified and
-  // merged, and each drain hands back ONLY the files beyond the marker —
-  // per-drain verify cost rides new files alone, an aged warehouse costs
-  // the same as a fresh one (SCALE.md carries the measured pair).
+  // candidatesOnce hands back EVERY settled collision each drain, so a
+  // downstream batch that re-verifies its output pays for the TOTAL
+  // accumulated sink, not the increment. The watermarked shape is the
+  // operational fix: beside the persistent sink and checkpoint (so the
+  // source only ever processes new arrivals), a verified high-water
+  // marker records which committed sink files the downstream batch has
+  // already verified and merged, and each drain hands back ONLY the
+  // files beyond the marker — per-drain verify cost rides new files
+  // alone, an aged warehouse costs the same as a fresh one (SCALE.md
+  // carries the measured pair).
   // Single-writer per baseDir, like every persisted state here.
 
   private def verifiedMarker(base: String) =
@@ -265,34 +244,9 @@ object LshProbe {
                                     newFiles: Seq[String],
                                     advance: () => Unit)
 
-  /** Reset `baseDir` when its recorded source fingerprint differs — the
-    * ensureBucketed staleness convention applied to the sink lineage: a
-    * regenerated documents source must restart the sink, checkpoint,
-    * marker AND settled state as one unit (the checkpoint's file-seen
-    * log dedupes by path, so a same-path regen would otherwise never
-    * reprocess). */
-  private[graft] def resetLineageIfStale(spark: SparkSession, baseDir: String,
-                                         srcFingerprint: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(baseDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(p, "_GRAFT_SRC")
-    val fresh = fs.exists(marker) && {
-      val in = fs.open(marker)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8") == srcFingerprint
-      finally in.close()
-    }
-    if (!fresh) {
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      val out = fs.create(marker, true)
-      try out.write(srcFingerprint.getBytes("UTF-8")) finally out.close()
-    }
-  }
-
   /** One AvailableNow drain of the increment against `stateTable`
     * through the PERSISTENT sink at `baseDir/data` with checkpoint
-    * `baseDir/ckpt` (caller runs [[resetLineageIfStale]] first).
+    * `baseDir/ckpt` (caller runs [[GateLineage.resetIfStale]] first).
     * Committed sink files resolve through the sink's `_spark_metadata`
     * log (CompactedLanding's discipline — a torn in-flight file is
     * invisible); the returned pairs read ONLY files beyond the
@@ -304,7 +258,7 @@ object LshProbe {
                             numHashes: Int = 32, rowsPerBand: Int = 4,
                             shingleN: Int = 2,
                             bandBucketCap: Option[Int] = None): WatermarkedDrain = {
-    val ss = streamSession(spark)
+    val ss = checkpointSession(spark, s"$baseDir/ckpt")
     val dataDir = s"$baseDir/data"
     val query = collisionStream(ss, sfDir, stateTable, numHashes,
       rowsPerBand, shingleN, bandBucketCap)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -29,18 +30,36 @@ import graft.Tables
   */
 object ScdApplyStream {
 
-  private def latestVersionDir(work: java.io.File): Option[(Long, java.io.File)] = {
-    val ds = Option(work.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("hist_"))
-      .flatMap(f => f.getName.stripPrefix("hist_").toLongOption.map(_ -> f))
+  private def latestVersionDir(fs: FileSystem, work: Path): Option[(Long, Path)] = {
+    val ds = fs.listStatus(work).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("hist_"))
+      .flatMap(st => st.getPath.getName.stripPrefix("hist_").toLongOption
+        .map(_ -> st.getPath))
     if (ds.isEmpty) None else Some(ds.maxBy(_._1))
+  }
+
+  /** Writes `df` as `work/hist_<v>` through `work/_tmp_hist_<v>` and a
+    * rename, so a version dir appears ATOMICALLY: a crash mid-write
+    * leaves no hist_<v> at all (a partial dir under the final name would
+    * be skipped forever and seed every later version from truncated
+    * history). */
+  private def publishVersion(fs: FileSystem, work: Path, v: Long,
+                             df: DataFrame): Unit = {
+    val tmp = new Path(work, s"_tmp_hist_$v")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    val dst = new Path(work, s"hist_$v")
+    if (!fs.rename(tmp, dst)) sys.error(s"could not publish $tmp as $dst")
   }
 
   /** Drain `snapshots` (ascending versions, each a full dimension
     * snapshot) through a file-source stream into a versioned SCD2
     * history seeded from `initHistory` (the version-`initVer` open
     * rows), and return the FINAL history. `tag`/`srcFingerprint` key
-    * the staged replay cache (pure function of the source tables). */
+    * the staged replay cache (pure function of the source tables) and
+    * the work directory: the [[GateLineage]] `graft_st_<tag>` holds the
+    * version dirs and the checkpoint. A reset lineage is seeded with
+    * hist_<initVer>; a re-run on an unchanged staging restarts on its
+    * checkpoint, applies no batch and returns the settled history. */
   def applyOnce(spark: SparkSession, tag: String, srcFingerprint: String,
                 initHistory: DataFrame, initVer: Long,
                 snapshots: => Seq[(Long, DataFrame)],
@@ -48,11 +67,15 @@ object ScdApplyStream {
                 snapshotSchemaDdl: String): DataFrame = {
     val staged = LateArrivals.stageBatchesCached(tag, srcFingerprint,
       snapshots.map { case (v, df) => df.withColumn("_ver", lit(v)) })
-    val work = java.nio.file.Files.createTempDirectory("graft-scd2-stream").toFile
-    // Seed: the initial open frontier as hist_<initVer>.
-    initHistory.write.mode("overwrite")
-      .parquet(new java.io.File(work, s"hist_$initVer").toString)
-    val ss = LshProbe.streamSession(spark)
+    val work = new Path(GateLineage.dir(spark, tag))
+    val fs = work.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    GateLineage.resetIfStale(spark, work.toString, srcFingerprint)
+    // Seed: a reset lineage (or one a crash left before its seed
+    // published) holds no version yet.
+    if (latestVersionDir(fs, work).isEmpty)
+      publishVersion(fs, work, initVer, initHistory)
+    val ckpt = new Path(work, "ckpt").toString
+    val ss = LshProbe.checkpointSession(spark, ckpt)
     val stream = ss.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         s"$snapshotSchemaDdl, _ver BIGINT"))
@@ -68,33 +91,23 @@ object ScdApplyStream {
           .collect().map(_.getLong(0)).sorted
         vers.foreach { v =>
           val bs = batch.sparkSession
-          val (curVer, curDir) = latestVersionDir(work)
+          val (curVer, curDir) = latestVersionDir(fs, work)
             .getOrElse(sys.error(s"no seeded history under $work"))
           // A replayed micro-batch re-derives an already-applied
-          // version: skip — hist_<v> already exists and is final. That
-          // skip is only sound because hist_<v> appears ATOMICALLY: the
-          // write lands in a _tmp_ dir and renames into place, so a
-          // crash mid-write leaves no hist_<v> at all (a partial dir
-          // under the final name would be skipped forever and seed
-          // every later version from truncated history).
-          if (v > curVer) {
-            val hist = Tables.parquet(bs, curDir.toString)
-            val next = graft.ops.ScdOps.scd2Apply(
-              hist, batch.filter(col("_ver") === v).drop("_ver"),
-              keys, tracked, newVer = v)
-            val tmp = new java.io.File(work, s"_tmp_hist_$v")
-            next.write.mode("overwrite").parquet(tmp.toString)
-            val dst = new java.io.File(work, s"hist_$v")
-            if (!tmp.renameTo(dst))
-              sys.error(s"could not publish $tmp as $dst")
-          }
+          // version: skip — hist_<v> already exists and is final (and
+          // appeared atomically, see publishVersion).
+          if (v > curVer)
+            publishVersion(fs, work, v, graft.ops.ScdOps.scd2Apply(
+              Tables.parquet(bs, curDir.toString),
+              batch.filter(col("_ver") === v).drop("_ver"),
+              keys, tracked, newVer = v))
         }
       }
-      .option("checkpointLocation", new java.io.File(work, "ckpt").toString)
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-    val (_, finalDir) = latestVersionDir(work)
+    val (_, finalDir) = latestVersionDir(fs, work)
       .getOrElse(sys.error(s"no history produced under $work"))
     Tables.parquet(spark, finalDir.toString)
   }

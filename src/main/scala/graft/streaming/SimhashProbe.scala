@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming SimHash front gate — st_lsh_probe's shape over the Manku
   * key state of dd_incremental_simhash, with the family's structural
@@ -32,62 +31,46 @@ object SimhashProbe {
     * `bucketCap` is the BUDGET-path fixed collision cap (st_lsh_probe's
     * policy: bounded per-drain cost IS the gate's semantics) — state
     * Manku buckets over the cap are dropped once on the static side,
-    * before the stream ever joins. FILE sink + distributed read-back,
-    * per the st_er_probe incident (a memory sink pins every collision
-    * row on the driver). */
+    * before the stream ever joins. Verified pairs land in the gate's
+    * [[GateLineage]] sink (keyed on documents.parquet, the state table's
+    * generation, `maxHamming`, `blocks` and the cap). A re-run on an
+    * unchanged generation commits no micro-batch. */
   def verifiedOnce(spark: SparkSession, sfDir: String, stateTable: String,
                    maxHamming: Int = 3, blocks: Int = 6,
                    bucketCap: Option[Int] = None): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
-
-    // NO spreadNarrow here (measured negative, r19): the native one-pass
-    // SimHashMd5Packed signer is cheap per row, and the redistribute's
-    // text shuffle + extra exchange into the state join cost more than
-    // the single-task signer it relieved (warm drain 1.8 -> 2.2-2.4 s).
-    val sigs = graft.dedup.Dedup.simhashMd5(
-      ss.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(docSchema))
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sfDir)
-        .filter(col("doc_id") % 3 === 2),
-      "doc_id", "text")
-    val stream = graft.dedup.Dedup
-      .simhashMankuKeysMd5(sigs, "doc_id", maxHamming, blocks)
-      .select(col("doc_id").as("inc_id"), col("sig_hi").as("h2"),
-        col("sig_lo").as("l2"), col("mkey"))
-      .join({
-        val st = ss.table(stateTable)
-          .select(col("doc_id").as("state_id"), col("sig_hi").as("h1"),
-            col("sig_lo").as("l1"), col("mkey"))
-        bucketCap.fold(st) { cap =>
-          val w = org.apache.spark.sql.expressions.Window.partitionBy("mkey")
-          st.withColumn("_bsz", count(lit(1)).over(w))
-            .filter(col("_bsz") <= cap).drop("_bsz")
-        }
-      }, Seq("mkey"))
-      .select(col("state_id"), col("inc_id"),
-        graft.dedup.Dedup.hammingHiLo(col("h1"), col("l1"),
-          col("h2"), col("l2")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_simhash_probe_sink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_simhash_probe_ckpt").toString
-    val query = stream.writeStream
-      .format("parquet")
-      .option("path", staged)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    // Explicit schema: a zero-collision drain leaves no data files and
-    // schema inference would fail on the empty sink.
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "state_id BIGINT, inc_id BIGINT, hamming BIGINT"))
-      .parquet(staged)
-      .distinct()
+    GateLineage.drainDistinct(spark, "simhash_probe", sfDir, "documents.parquet",
+      stateTable, s"v1;k=$maxHamming;b=$blocks;cap=${bucketCap.getOrElse("none")}",
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "state_id BIGINT, inc_id BIGINT, hamming BIGINT")) { ss =>
+      // NO spreadNarrow here (measured negative, r19): the native one-pass
+      // SimHashMd5Packed signer is cheap per row, and the redistribute's
+      // text shuffle + extra exchange into the state join cost more than
+      // the single-task signer it relieved (warm drain 1.8 -> 2.2-2.4 s).
+      val sigs = graft.dedup.Dedup.simhashMd5(
+        ss.readStream
+          .schema(org.apache.spark.sql.types.StructType.fromDDL(docSchema))
+          .option("pathGlobFilter", "documents.parquet")
+          .parquet(sfDir)
+          .filter(col("doc_id") % 3 === 2),
+        "doc_id", "text")
+      graft.dedup.Dedup
+        .simhashMankuKeysMd5(sigs, "doc_id", maxHamming, blocks)
+        .select(col("doc_id").as("inc_id"), col("sig_hi").as("h2"),
+          col("sig_lo").as("l2"), col("mkey"))
+        .join({
+          val st = ss.table(stateTable)
+            .select(col("doc_id").as("state_id"), col("sig_hi").as("h1"),
+              col("sig_lo").as("l1"), col("mkey"))
+          bucketCap.fold(st) { cap =>
+            val w = org.apache.spark.sql.expressions.Window.partitionBy("mkey")
+            st.withColumn("_bsz", count(lit(1)).over(w))
+              .filter(col("_bsz") <= cap).drop("_bsz")
+          }
+        }, Seq("mkey"))
+        .select(col("state_id"), col("inc_id"),
+          graft.dedup.Dedup.hammingHiLo(col("h1"), col("l1"),
+            col("h2"), col("l2")).as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+    }
   }
 }

@@ -52,7 +52,12 @@ object UpsertSink {
     * means the settled target equals the plain batch table — every row
     * exactly once despite the overlap — so the batch aggregate is the
     * oracle. Overlap rows are bit-identical on both arrivals, so
-    * first-wins is value-deterministic. */
+    * first-wins is value-deterministic.
+    *
+    * Target and checkpoint live in the [[GateLineage]]
+    * `graft_st_<staging tag>`, keyed on the staged batches' fingerprint:
+    * a re-run on an unchanged staging restarts on its checkpoint, finds
+    * no new batch and reads the settled target back. */
   def upsertOnce(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val ev = graft.Tables.events(spark, sfDir)
@@ -62,16 +67,18 @@ object UpsertSink {
     val (tag, fp) = LateArrivals.eventsTag("upsert_src", sfDir,
       "mod5overlap:2batches:v1")
     val staged = LateArrivals.stageBatchesCached(tag, fp, Seq(b0, b1))
-    val work = java.nio.file.Files.createTempDirectory("graft-upsert")
-    val target = work.resolve("target").toString
-    val ss = LshProbe.streamSession(spark)
+    val work = GateLineage.dir(spark, tag)
+    GateLineage.resetIfStale(spark, work, fp)
+    val target = s"$work/target"
+    val ckpt = s"$work/ckpt"
+    val ss = LshProbe.checkpointSession(spark, ckpt)
     val stream = ss.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "event_id BIGINT, event_type STRING, value DOUBLE"))
       .option("pathGlobFilter", "*.parquet")
       .option("maxFilesPerTrigger", "1")
       .parquet(staged.toString)
-    start(stream, target, "event_id", work.resolve("ckpt").toString)
+    start(stream, target, "event_id", ckpt)
       .awaitTermination()
     Tables.parquet(spark, target)
       .groupBy(col("event_type"))

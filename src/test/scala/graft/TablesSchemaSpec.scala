@@ -45,7 +45,7 @@ class TablesSchemaSpec extends SparkSpec {
       assertSameAsInferred(stage)
       val t = "b_schema_state"
       try {
-        val (built, _) = ScaleOps.ensureBucketedDerived(state, t, Seq("k"), "fp-A")
+        val (built, _) = ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A")(state)
         assert(built)
         assert(spark.table(t).schema.map(f => (f.name, f.dataType)) ==
           state.schema.map(f => (f.name, f.dataType)))

@@ -29,22 +29,21 @@ class ScaleOpsSpec extends SparkSpec {
     val t = "b_fp_state"
     try {
       val v1 = spark.range(5).selectExpr("id AS k", "id * 2 AS v")
-      ScaleOps.ensureBucketed(v1, t, "k", 2, srcFingerprint = "fp-A")
+      ScaleOps.ensureBucketed(spark, t, "k", 2, srcFingerprint = "fp-A")(v1)
       assert(spark.table(t).count() == 5)
       // Same fingerprint: the (different) df must NOT be rewritten —
       // "write once, join forever".
-      ScaleOps.ensureBucketed(
-        spark.range(9).selectExpr("id AS k", "id AS v"), t, "k", 2,
-        srcFingerprint = "fp-A")
+      ScaleOps.ensureBucketed(spark, t, "k", 2, srcFingerprint = "fp-A")(
+        spark.range(9).selectExpr("id AS k", "id AS v"))
       assert(spark.table(t).count() == 5, "matching fingerprint must skip rewrite")
       // Changed fingerprint (source regenerated): MUST drop and rebuild
       // — stale bucketed state is the r9 regen-staleness failure mode.
       val v2 = spark.range(7).selectExpr("id AS k", "id AS v")
-      ScaleOps.ensureBucketed(v2, t, "k", 2, srcFingerprint = "fp-B")
+      ScaleOps.ensureBucketed(spark, t, "k", 2, srcFingerprint = "fp-B")(v2)
       assert(spark.table(t).count() == 7, "changed fingerprint must rebuild")
       // Legacy existence-only contract: empty fingerprint skips while
       // the table exists, even one written WITH a fingerprint.
-      ScaleOps.ensureBucketed(v1, t, "k", 2)
+      ScaleOps.ensureBucketed(spark, t, "k", 2)(v1)
       assert(spark.table(t).count() == 7)
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
@@ -59,7 +58,7 @@ class ScaleOpsSpec extends SparkSpec {
       spark.conf.set("graft.state.bucketTargetRows", "100")
       spark.conf.set("graft.state.bucketFloor", "4")
       val df = spark.range(5000).selectExpr("id AS k", "id * 3 AS v")
-      val (built, n) = ScaleOps.ensureBucketedDerived(df, t, Seq("k"), "fp-A")
+      val (built, n) = ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A")(df)
       assert(built)
       // 5000 rows / 100-row target = 50 -> next power of two = 64.
       assert(n == 64, s"expected derived count 64, got $n")
@@ -71,14 +70,14 @@ class ScaleOpsSpec extends SparkSpec {
       assert(!new java.io.File(wh, t + "__stage").exists(), "staging dir leaked")
       // Fresh call: same policy + fingerprint skips the rebuild and
       // reads the count back from the graft.buckets property.
-      val (built2, n2) = ScaleOps.ensureBucketedDerived(
-        spark.range(9).selectExpr("id AS k", "id AS v"), t, Seq("k"), "fp-A")
+      val (built2, n2) = ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A")(
+        spark.range(9).selectExpr("id AS k", "id AS v"))
       assert(!built2 && n2 == 64)
       assert(spark.table(t).count() == 5000, "fresh derived layout must skip rewrite")
       // Policy change (new target) rolls the layout contract -> rebuild
       // with the new derivation, no hand-written fingerprint bump.
       spark.conf.set("graft.state.bucketTargetRows", "2500")
-      val (built3, n3) = ScaleOps.ensureBucketedDerived(df, t, Seq("k"), "fp-A")
+      val (built3, n3) = ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A")(df)
       assert(built3 && n3 == 4, s"expected floor-bound rebuild at 4, got $n3")
     } finally {
       spark.conf.unset("graft.state.bucketTargetRows")
@@ -92,17 +91,41 @@ class ScaleOpsSpec extends SparkSpec {
     val t = "b_layout_roll"
     try {
       val df = spark.range(50).selectExpr("id AS a", "id % 5 AS b", "id AS v")
-      ScaleOps.ensureBucketedKeys(df, t, Seq("a"), 2, "fp-X")
+      ScaleOps.ensureBucketedKeys(spark, t, Seq("a"), 2, "fp-X")(df)
       assert(spark.table(t).count() == 50)
       // Same fingerprint, different SORT columns: must rebuild — this
       // is exactly the r16 "|src,dst" class of change, now automatic.
-      val built = ScaleOps.ensureBucketedKeys(df, t, Seq("a"), 2, "fp-X",
-        sortCols = Seq("a", "b"))
+      val built = ScaleOps.ensureBucketedKeys(spark, t, Seq("a"), 2, "fp-X",
+        sortCols = Seq("a", "b"))(df)
       assert(built, "sort-column change must roll the layout contract")
       // And the new contract is then fresh.
-      assert(!ScaleOps.ensureBucketedKeys(df, t, Seq("a"), 2, "fp-X",
-        sortCols = Seq("a", "b")))
+      assert(!ScaleOps.ensureBucketedKeys(spark, t, Seq("a"), 2, "fp-X",
+        sortCols = Seq("a", "b"))(df))
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("ensureBucketed*: a fresh table never builds the by-name frame; " +
+    "a stale one does") {
+    val t1 = "b_byname_one"; val t2 = "b_byname_keys"; val t3 = "b_byname_derived"
+    def boom: org.apache.spark.sql.DataFrame =
+      throw new IllegalStateException("state frame built for a fresh table")
+    try {
+      val df = spark.range(20).selectExpr("id AS k", "id % 3 AS v")
+      assert(ScaleOps.ensureBucketed(spark, t1, "k", 2, "fp-A")(df))
+      assert(ScaleOps.ensureBucketedKeys(spark, t2, Seq("k", "v"), 2, "fp-A")(df))
+      val (built, n) = ScaleOps.ensureBucketedDerived(spark, t3, Seq("k"), "fp-A")(df)
+      assert(built)
+      // Fresh: a catalog lookup answers, the frame argument is untouched.
+      assert(!ScaleOps.ensureBucketed(spark, t1, "k", 2, "fp-A")(boom))
+      assert(!ScaleOps.ensureBucketedKeys(spark, t2, Seq("k", "v"), 2, "fp-A")(boom))
+      assert(ScaleOps.ensureBucketedDerived(spark, t3, Seq("k"), "fp-A")(boom) ==
+        ((false, n)))
+      // Stale: the rebuild needs the frame, so it is evaluated.
+      intercept[IllegalStateException](
+        ScaleOps.ensureBucketed(spark, t1, "k", 2, "fp-B")(boom))
+      intercept[IllegalStateException](
+        ScaleOps.ensureBucketedDerived(spark, t3, Seq("k"), "fp-B")(boom))
+    } finally Seq(t1, t2, t3).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("deriveBucketCount: floors, power-of-two rounding, byte and row terms") {

@@ -29,7 +29,7 @@ class StateGcSpec extends SparkSpec {
     val tag = StateGc.tagOf(src.toString)
     val tbl = s"graft_specgc_tbl_$tag"
     val lay = new java.io.File(wh, s"graft_specgc_lay_$tag").toString
-    ScaleOps.ensureBucketed(spark.range(10).toDF("id"), tbl, "id", 2, f1)
+    ScaleOps.ensureBucketed(spark, tbl, "id", 2, f1)(spark.range(10).toDF("id"))
     ScaleOps.ensureSortedBy(spark.range(5).toDF("id"), lay, "id", 1, f1 + ":p=1")
 
     // Dry run against the live source: everything reports keep, nothing
@@ -61,12 +61,46 @@ class StateGcSpec extends SparkSpec {
     // Dead source: rebuild under the new fingerprint, then GC with no
     // live dirs at all — tag_live false, dropped.
     val f2 = ScaleOps.fileFingerprint(fpFile.toString)
-    ScaleOps.ensureBucketed(spark.range(3).toDF("id"), tbl, "id", 2, f2)
+    ScaleOps.ensureBucketed(spark, tbl, "id", 2, f2)(spark.range(3).toDF("id"))
     val dead = StateGc.run(spark, wh, Seq.empty, "graft_specgc_",
       dryRun = false).collect()
     assert(dead.length == 1 && !dead.head.getBoolean(2) &&
       dead.head.getString(5) == "drop")
     assert(!spark.catalog.tableExists(tbl))
+  }
+
+  test("gate lineages (graft_st_<gate>_<tag>, len:mtime|... marker): kept " +
+    "while the source is live, would_drop once it is retired") {
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val live = Files.createTempDirectory("gcgate_live")
+    val gone = Files.createTempDirectory("gcgate_gone")
+    Seq(live, gone).foreach(d => Files.write(d.resolve("documents.parquet"), "docs".getBytes))
+    val tbl = "graft_specgc_gate_state"
+    ScaleOps.ensureBucketed(spark, tbl, "id", 2,
+      ScaleOps.fileFingerprint(live.resolve("documents.parquet").toString))(
+      spark.range(4).toDF("id"))
+    def lineage(src: java.nio.file.Path): String = {
+      val base = graft.streaming.GateLineage.dir(spark,
+        s"specgc_probe_${StateGc.tagOf(src.toString)}")
+      graft.streaming.GateLineage.resetIfStale(spark, base,
+        graft.streaming.GateLineage.probeFingerprint(spark,
+          src.resolve("documents.parquet").toString, tbl, "v1;cap=none"))
+      base
+    }
+    val kept = lineage(live)
+    val retired = lineage(gone)
+    try {
+      ScaleOps.deleteLocal(gone.toFile)
+      val r = StateGc.run(spark, wh, Seq(live.toString), "graft_st_specgc_")
+        .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(5))).toMap
+      val name = (p: String) => new java.io.File(p).getName
+      assert(r == Map(name(kept) -> ("layout", "keep"),
+        name(retired) -> ("layout", "would_drop")), s"gate lineage audit: $r")
+      assert(new java.io.File(retired).isDirectory, "a dry run must not delete")
+    } finally {
+      Seq(kept, retired).foreach(p => ScaleOps.deleteLocal(new java.io.File(p)))
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    }
   }
 
   test("unfingerprinted generation under a live tag is kept (conservative)") {

@@ -20,8 +20,8 @@ class FinalPlanCheckSpec extends SparkSpec {
 
   private def withState[A](f: => A): A =
     try {
-      ScaleOps.ensureBucketed(
-        (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"), table, "k", 4)
+      ScaleOps.ensureBucketed(spark, table, "k", 4)(
+        (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))
       f
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
 
@@ -64,8 +64,8 @@ class FinalPlanCheckSpec extends SparkSpec {
     try {
       spark.conf.set("graft.state.bucketTargetRows", "100")
       val df = (1L to 5000L).map(i => (i, i * 7)).toDF("k", "v")
-      val (_, n) = ScaleOps.ensureBucketedDerived(df, t, Seq("k"),
-        srcFingerprint = "fp-derived-probe")
+      val (_, n) = ScaleOps.ensureBucketedDerived(spark, t, Seq("k"),
+        srcFingerprint = "fp-derived-probe")(df)
       assert(n == 64, s"fixture expects a 64-bucket derivation, got $n")
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

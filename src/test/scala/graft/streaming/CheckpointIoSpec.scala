@@ -28,6 +28,31 @@ class CheckpointIoSpec extends SparkSpec {
       "untouched keys keep the tuned default")
   }
 
+  test("locality is judged from the drain's checkpoint path: an hdfs:// " +
+    "lineage drains on a private session without the local defaults") {
+    val shared = LshProbe.streamSession(spark)
+    assert(CheckpointIo.isLocal("/warehouse/graft_st_x/ckpt"))
+    assert(CheckpointIo.isLocal("file:/warehouse/graft_st_x/ckpt"))
+    assert(!CheckpointIo.isLocal("hdfs://nn:8020/warehouse/graft_st_x/ckpt"))
+    assert(!CheckpointIo.isLocal("s3a://bucket/warehouse/graft_st_x/ckpt"))
+    assert(LshProbe.checkpointSession(spark, "/warehouse/graft_st_x/ckpt") eq shared)
+    val remote = LshProbe.checkpointSession(spark,
+      "hdfs://nn:8020/warehouse/graft_st_x/ckpt")
+    assert(remote ne shared, "a remote lineage must not drain on the tuned session")
+    assert(remote.conf.get("spark.sql.shuffle.partitions") == "8")
+    // No HDFS needed: the choice is a pure function of the path. Only an
+    // explicit environment override may put a knob on a remote session.
+    assert(sys.env.contains("SPARK_GRAFT_CKPT_FM") ||
+      remote.conf.getOption("spark.sql.streaming.checkpointFileManagerClass")
+        .forall(!_.endsWith("FileSystemBasedCheckpointFileManager")))
+    assert(sys.env.contains("SPARK_GRAFT_CKPT_CHECKSUM") ||
+      !remote.conf.getOption("spark.sql.streaming.checkpoint.fileChecksum.enabled")
+        .contains("false"))
+    // and the shared session keeps its tuned contract
+    assert(shared.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled")
+      == "false")
+  }
+
   test("a drain through the tuned manager settles and checkpoints") {
     // End-to-end: the daily tally gate drains on the shared (tuned)
     // session — offset WAL, state store deltas and commit log are all

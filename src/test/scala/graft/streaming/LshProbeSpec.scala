@@ -56,7 +56,7 @@ class LshProbeSpec extends SparkSpec {
     val state = graft.queries.CorpusQueries.lshStateTable(d)
     val base = java.nio.file.Files
       .createTempDirectory("graft_wm_probe").toString + "/lineage"
-    LshProbe.resetLineageIfStale(spark, base, "fp-1")
+    GateLineage.resetIfStale(spark, base, "fp-1")
 
     // Fresh lineage: everything the sink committed is beyond the marker.
     val d1 = LshProbe.candidatesWatermarked(spark, d, state, base)
@@ -82,7 +82,7 @@ class LshProbeSpec extends SparkSpec {
 
     // Rolled fingerprint: lineage (sink, checkpoint, marker) resets as
     // one unit, so the next drain reprocesses from scratch.
-    LshProbe.resetLineageIfStale(spark, base, "fp-2")
+    GateLineage.resetIfStale(spark, base, "fp-2")
     val d3 = LshProbe.candidatesWatermarked(spark, d, state, base)
     assert(d3.newFiles.nonEmpty &&
       d3.newPairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == ref,
