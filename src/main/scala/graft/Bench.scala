@@ -25,8 +25,8 @@ object Bench {
     // Durable-materializer path (Similarity.durableMaterialize): with a
     // checkpoint dir set the IVF queries bench reliable checkpoint() —
     // the configuration a cluster deployment runs — not localCheckpoint.
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(ckptDir.toString)
     // Warmup: drive every query once at the smallest SF so JIT, codegen
     // caches, and the parquet reader are hot before anything is timed —
     // otherwise whichever query happens to run first absorbs multiple
@@ -122,8 +122,8 @@ object Bench {
       if (warmFailed > 0)
         System.err.println(s"[bench] $warmFailed timed-SF warm queries failed — their timings below are cold")
     } else System.err.println("[bench] timed-SF warm pass disabled — timings are first-run")
-    // Job-timeline listener for driver-gap attribution (ProfSkew's
-    // instrument folded into the record): jobId -> (startMs, endMs).
+    // Job-timeline listener for driver-gap attribution (folded into
+    // the record): jobId -> (startMs, endMs).
     // One listener for the whole bench; per-rep gaps are computed
     // OFFLINE from time windows after a single drain sleep, so the
     // per-rep cost is zero (a per-rep drain sleep would add ~8 min
@@ -338,5 +338,6 @@ object Bench {
       }
     println(printed)
     spark.stop()
+    graft.ops.ScaleOps.deleteLocal(ckptDir)
   }
 }

@@ -24,8 +24,8 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     // Same durable-materializer configuration as Bench: IVF candidate
     // sets go through reliable checkpoint(), the cluster-safe default.
-    spark.sparkContext.setCheckpointDir(
-      Files.createTempDirectory("graft-ckpt").toString)
+    val ckptDir = Files.createTempDirectory("graft-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(ckptDir.toString)
     new java.io.File(outDir).mkdirs()
     // One output file keeps the driver-side DuckDB compare simple, but a
     // 1-task final stage serializes multi-10M-row results (the 10x-fixture
@@ -66,5 +66,6 @@ object Verify {
       System.err.println(s"[verify] FINAL-PLAN LAYOUT VIOLATIONS: " +
         vio.map(v => s"${v.what} (${v.fragment})").distinct.mkString("; "))
     spark.stop()
+    graft.ops.ScaleOps.deleteLocal(ckptDir)
   }
 }

@@ -272,7 +272,7 @@ object Dedup {
     // contract. No memoTag (library callers that already truncate their
     // whole output) keeps the old shape.
     val cands = memoTag.fold(cands0)(tag =>
-      graft.ops.CacheOnce.swapTruncated(s"incr-nd-cands:$tag", cands0))
+      graft.ops.CacheOnce.swapTruncated("incr-nd-cands", tag, cands0))
     val stateSets = stateDocs
       .join(cands.select(col("id1").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol), explode(distinctShingles(col(textCol), shingleN)).as("shingle"))
@@ -1038,7 +1038,7 @@ object Dedup {
     // increment-sized by construction (every caller feeds an
     // increment-bounded pair set) and is the designated parquet-
     // checkpoint seam at cluster scale.
-    val pairs = graft.ops.CacheOnce.swapTruncated(s"incr-cluster-pairs$memoTag",
+    val pairs = graft.ops.CacheOnce.swapTruncated("incr-cluster-pairs", memoTag,
       newPairs.select(col(c1).as("a"), col(c2).as("b"))
         .filter(col("a") =!= col("b")))
     val nodes = pairs.select(col("a").as("node"))
@@ -1175,7 +1175,7 @@ object Dedup {
     // (state bucket-size window + key join + distinct) executes once.
     probeCheck(cands0)
     val cands = memoTag.fold(cands0)(tag =>
-      graft.ops.CacheOnce.swapTruncated(s"incr-cos-cands:$tag", cands0))
+      graft.ops.CacheOnce.swapTruncated("incr-cos-cands", tag, cands0))
     val stateV = stateVecs
       .join(cands.select(col("id1").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol).as("id1"), col(vecCol).as("_v1"),

@@ -65,8 +65,8 @@ object PageRank {
     // leaf.
     // memoTag (r19 fingerprint sweep): callers whose edge frame is a
     // fresh plan over tables by name fold a generation fingerprint into
-    // the memo name; LogicalRDD-leaf-fed callers are keyed by the leaf.
-    val e = graft.ops.CacheOnce.swapTruncated(s"pagerank-edges$memoTag", edges)
+    // the memo tag; LogicalRDD-leaf-fed callers are keyed by the leaf.
+    val e = graft.ops.CacheOnce.swapTruncated("pagerank-edges", memoTag, edges)
     // deg is node-cardinality sized and referenced by every superstep's
     // join AND every teleport broadcast (~2*iters references, each its
     // own stage if recomputed) — persist it alongside the edges.
@@ -167,9 +167,9 @@ object PageRank {
     // deduped, but the ANALYZED tree would still ride into each
     // reference and Catalyst analysis of the composed refresh plan
     // dominated the warm runtime (measured ~10 s of a 13 s refresh at
-    // sf0.1; graft.ProfPageRank). After truncation each reference is
+    // sf0.1, SCALE.md). After truncation each reference is
     // one LogicalRDD leaf.
-    val incE = graft.ops.CacheOnce.swapTruncated(s"ipr-inc-edges$memoTag", incEdges)
+    val incE = graft.ops.CacheOnce.swapTruncated("ipr-inc-edges", memoTag, incEdges)
     // Merged out-degrees: the state side's aggregate rides the bucketing
     // (no exchange), and the merge with the increment's degrees is a
     // node-sized full-outer join PINNED sort-merge on the state side —
@@ -246,7 +246,7 @@ object PageRank {
       // group) bounds dead generations across source regenerations —
       // the tag-in-name keying alone would give each generation a
       // singleton name the per-name bound never fires on.
-      val rpd = graft.ops.CacheOnce.swapTruncated(s"ipr-rpd-$i$memoTag",
+      val rpd = graft.ops.CacheOnce.swapTruncated(s"ipr-rpd-$i", memoTag,
         ranks.join(deg, ranks("id") === deg("src"))
           .select(col("src"), (col("r") / col("_deg")).as("_rpd")))
       val msgs = stateEdges.hint("merge").join(rpd, Seq("src"))

@@ -118,7 +118,7 @@ object Triangles {
     // cached plan would embed that chain's analyzed tree seven times
     // in the refresh plan (the cluster family's measured analysis-cost
     // class). Increment-bounded by construction.
-    val dp = graft.ops.CacheOnce.swapTruncated(s"itri-delta$memoTag",
+    val dp = graft.ops.CacheOnce.swapTruncated("itri-delta", memoTag,
       deltaPairs.select(least(col("id1"), col("id2")).as("id1"),
         greatest(col("id1"), col("id2")).as("id2")).distinct())
     // Close-join discipline (r15, replacing r14's broadcast closes): at

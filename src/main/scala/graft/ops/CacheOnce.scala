@@ -25,14 +25,7 @@ import org.apache.spark.storage.StorageLevel
 object CacheOnce {
   val maxPerName = 4
 
-  /** Env-gated memo tracing (`GRAFT_CACHE_DEBUG=1`): hit/miss per
-    * (name, semanticHash) — the instrument that attributes per-rep
-    * re-execution to a memo key that silently changes between reps. */
-  private val debug = sys.env.contains("GRAFT_CACHE_DEBUG")
-  private def trace(kind: String, name: String, hash: Int, hit: Boolean): Unit =
-    if (debug) System.err.println(s"[cacheonce] $kind ${if (hit) "HIT " else "MISS"} $name#$hash")
-
-  /** Separate (higher) bound for the TRUNCATED map: one name there is
+  /** Separate (higher) bound for the TRUNCATED map: one group there is
     * legitimately shared by every member of an operator family — seven
     * incremental-cluster queries feed "incr-cluster-pairs", times two
     * fixture SFs in one bench JVM — and a bound of 4 made the LRU churn
@@ -56,7 +49,6 @@ object CacheOnce {
            level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     synchronized {
       val key = (name, df.queryExecution.analyzed.semanticHash())
-      trace("swap", name, key._2, live.contains(key))
       live.get(key) match {
         case Some(cached) => cached
         case None =>
@@ -78,51 +70,39 @@ object CacheOnce {
     * full analyzed tree, so the driver's Catalyst analysis cost grows
     * as (tree size × references), and a 2-superstep refresh over a
     * deep LSH-verify feed spends 10+ s in plan analysis while its
-    * tasks run ~1 s (measured; graft.ProfPageRank). Here the frame is
+    * tasks run ~1 s (measured at sf0.1, SCALE.md). Here the frame is
     * materialized once ([[Materialize.eagerDurable]] — a LogicalRDD
-    * leaf) and memoized under the same (name, semantic hash) key, so
+    * leaf) and memoized under the (group, tag, semantic hash) key, so
     * repeat calls return the truncated frame without re-executing, and
     * every downstream reference costs the analyzer a single leaf node.
     * EAGER (the data computes at call time, not at the terminal
     * action); eviction frees the checkpoint blocks via
     * [[Materialize.release]].
     *
+    * `group` names the operator family's memo (`"pagerank-edges"`) and
+    * `tag` the generation within it — callers pass the source
+    * fingerprint, so a mid-session source regeneration gets its own
+    * entry. The LRU bound counts entries per GROUP: keyed per tag
+    * alone, every generation would be its own singleton and a
+    * regenerating source would leak every dead generation's checkpoint
+    * until JVM exit. [[release]]`(group)` frees every tag of the group.
+    *
     * CONTRACT, stricter than [[swap]]'s: do not hold a returned frame
-    * across more than `maxPerNameTruncated` later `swapTruncated` calls under
-    * the SAME name. A plain `swap` frame evicted while still referenced
-    * silently degrades to a recompute; a truncated frame has no lineage
-    * left to recompute from, so an action over an evicted one FAILS.
-    * Current callers take one generation per state fingerprint and act
-    * before the next, so the bound is never approached. */
-  /** LRU group of a truncated name: the prefix before the first ':'.
-    * The r19 staleness sweep folds the source-generation fingerprint
-    * into the NAME (`pagerank-edges:<size:mtime>`), which — keyed
-    * as-is — gave every generation its own singleton name and silently
-    * disabled the per-name bound: a mid-session source regeneration
-    * would leak every dead generation's reliable checkpoint until JVM
-    * exit. Eviction therefore groups by the untagged prefix (every
-    * call site appends its tag after a ':'; fingerprints themselves
-    * contain ':' — size:mtime — which is why the FIRST colon splits),
-    * while the exact (name, semanticHash) key keeps lookups
-    * generation-precise. An evicted generation is ≥maxPerNameTruncated
-    * insertions stale within its family — nothing holds it (callers
-    * take one generation per state fingerprint and act before the
-    * next, see the contract above). */
-  private def lruGroup(name: String): String = {
-    val i = name.indexOf(':')
-    if (i < 0) name else name.substring(0, i)
-  }
-
-  def swapTruncated(name: String, df: DataFrame): DataFrame = synchronized {
-    val key = (name, df.queryExecution.analyzed.semanticHash())
-    trace("trunc", name, key._2, liveT.contains(key))
+    * across more than `maxPerNameTruncated` later `swapTruncated` calls
+    * in the SAME group. A plain `swap` frame evicted while still
+    * referenced silently degrades to a recompute; a truncated frame has
+    * no lineage left to recompute from, so an action over an evicted
+    * one FAILS. Current callers take one generation per state
+    * fingerprint and act before the next, so the bound is never
+    * approached. */
+  def swapTruncated(group: String, tag: String, df: DataFrame): DataFrame = synchronized {
+    val key = ((group, tag), df.queryExecution.analyzed.semanticHash())
     liveT.get(key) match {
       case Some(t) => t
       case None =>
         val t = Materialize.eagerDurable(df)
         liveT(key) = t
-        val g = lruGroup(name)
-        val mine = liveT.keys.filter(k => lruGroup(k._1) == g).toSeq
+        val mine = liveT.keys.filter(_._1._1 == group).toSeq
         if (mine.size > maxPerNameTruncated) {
           val victim = mine.head // LinkedHashMap keeps insertion order
           liveT.remove(victim).foreach(Materialize.release)
@@ -131,13 +111,16 @@ object CacheOnce {
     }
   }
 
-  private val liveT = scala.collection.mutable.LinkedHashMap.empty[(String, Int), DataFrame]
+  private val liveT =
+    scala.collection.mutable.LinkedHashMap.empty[((String, String), Int), DataFrame]
 
-  /** Drop and unpersist every cached plan under `name`. */
+  /** Drop and unpersist every cached plan under `name`: the [[swap]]
+    * entries of that name and the [[swapTruncated]] entries of every
+    * tag in that group. */
   def release(name: String): Unit = synchronized {
     live.keys.filter(_._1 == name).toSeq
       .foreach(k => live.remove(k).foreach(_.unpersist()))
-    liveT.keys.filter(_._1 == name).toSeq
+    liveT.keys.filter(_._1._1 == name).toSeq
       .foreach(k => liveT.remove(k).foreach(Materialize.release))
   }
 }
@@ -152,22 +135,7 @@ object CacheOnce {
   * reliable `checkpoint(true)` when a checkpoint dir is set (survives
   * executor loss on a cluster), else `localCheckpoint(true)`. */
 object Materialize {
-  /** Env-gated write-cost instrumentation (`GRAFT_MATERIALIZE_DEBUG=1`):
-    * seconds spent materializing each truncation (persist fill +
-    * checkpoint write) — the number that turns the CacheOnce size
-    * contract (pair-graph-sized artifacts only) into measured evidence
-    * at stress fixtures (SCALE.md r19 rows). */
-  private val debug = sys.env.contains("GRAFT_MATERIALIZE_DEBUG")
-  private def timed[A](what: => String)(body: => A): A =
-    if (!debug) body
-    else {
-      val t0 = System.nanoTime()
-      val out = body
-      System.err.println(f"[materialize] ${(System.nanoTime() - t0) / 1e9}%.2f s  $what")
-      out
-    }
-
-  def eagerDurable(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = timed(s"eagerDurable cols=${df.columns.mkString(",")}") {
+  def eagerDurable(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       // persist before the reliable checkpoint: Spark's checkpoint write
       // is a SECOND job over the full lineage (an iterative operator
@@ -176,14 +144,7 @@ object Materialize {
       // drains it, and — because the checkpoint is EAGER — the blocks
       // can be dropped immediately, leaving only the checkpoint files.
       val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // Debug split: fill the cache with a counted action first, so the
-      // checkpoint job below reads cached blocks and its timing isolates
-      // the WRITE cost (SCALE.md separation). Production path unchanged:
-      // one job computes, caches and writes.
-      if (debug) timed(s"  fill(compute) cols=${df.columns.mkString(",")}")(p.count())
-      val out =
-        if (debug) timed(s"  checkpoint-write cols=${df.columns.mkString(",")}")(p.checkpoint(true))
-        else p.checkpoint(true)
+      val out = p.checkpoint(true)
       p.unpersist(blocking = false)
       out
     } else df.localCheckpoint(true)

@@ -122,8 +122,7 @@ object ScaleOps {
                         numBuckets: Int, sortCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val loc = new java.io.File(wh, table)
+    val loc = new java.io.File(PersistedState.warehouse(spark), table)
     if (loc.exists()) deleteLocal(loc)
     val sc = if (sortCols.nonEmpty) sortCols else keys
     // ONE FILE PER BUCKET, deliberately: Spark trusts a bucketed
@@ -198,7 +197,7 @@ object ScaleOps {
     * where the table is written, never on every read-back.
     *
     * The frame is taken BY NAME, with the session passed explicitly (the
-    * [[ensureSortedByLazy]] shape): a fresh table costs one catalog
+    * [[ensureSortedBy]] shape): a fresh table costs one catalog
     * lookup, and the state frame is neither built nor analyzed. */
   def ensureBucketed(spark: SparkSession, table: String, key: String,
                      numBuckets: Int, srcFingerprint: String = "",
@@ -278,8 +277,8 @@ object ScaleOps {
     if (bucketedFresh(props, srcFingerprint, layout))
       (false, props.flatMap(_.get("graft.buckets")).fold(floor)(_.toInt))
     else {
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      val stage = new java.io.File(wh, table + "__stage").toString
+      val stage = new java.io.File(PersistedState.warehouse(spark),
+        table + "__stage").toString
       df.write.mode("overwrite").parquet(stage)
       val (bytes, rows) = parquetStats(spark, stage)
       val n = deriveBucketCount(bytes, rows, tBytes, tRows, floor)
@@ -348,13 +347,15 @@ object ScaleOps {
     * skipped only when _SUCCESS exists AND the recorded fingerprint
     * matches `srcFingerprint` — a regenerated source re-triggers the
     * write instead of silently serving a stale tree (the same
-    * cross-process staleness writeBucketed guards against). */
-  def ensurePartitioned(df: DataFrame, path: String, partCol: String,
-                        srcFingerprint: String = ""): Unit =
-    if (!layoutFresh(df.sparkSession, path, srcFingerprint)) {
+    * cross-process staleness writeBucketed guards against). The frame
+    * is by name, as in [[ensureSortedBy]]; true when this call wrote. */
+  def ensurePartitioned(spark: SparkSession, path: String, partCol: String,
+                        srcFingerprint: String = "")(df: => DataFrame): Boolean =
+    if (!layoutFresh(spark, path, srcFingerprint)) {
       df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-      writeMarker(df.sparkSession, path, srcFingerprint)
-    }
+      writeMarker(spark, path, srcFingerprint)
+      true
+    } else false
 
   /** Unsplittable-input guard (optimization guide §2.5, "one huge
     * unsplittable file"): parquet scans parallelize by ROW GROUP, so a
@@ -444,10 +445,21 @@ object ScaleOps {
     * for `key` and a key-range query skips almost all of them (row-group
     * a.k.a. data skipping — the intra-file complement of partition
     * pruning, and the poor man's Z-order for a single key). Idempotent
-    * via the same fingerprint marker as [[ensurePartitioned]]. */
-  def ensureSortedBy(df: DataFrame, path: String, key: String, numFiles: Int,
+    * via the same fingerprint marker as [[ensurePartitioned]].
+    *
+    * The frame is taken BY NAME: a fresh layout costs one marker read,
+    * and the frame is neither built nor analyzed — which matters most
+    * for producers that EXECUTE on construction (driver-looped
+    * operators like connectedComponents or k-means run their whole
+    * loop when CALLED). Returns true when the layout was written by
+    * THIS call — the hook for releasing build-scoped caches (a frame
+    * the producer persisted for its own supersteps must not outlive
+    * the build: a cached bare TABLE scan would shadow the table's
+    * bucketed scan in every later probe plan of the session). */
+  def ensureSortedBy(spark: SparkSession, path: String, key: String, numFiles: Int,
                      srcFingerprint: String = "",
-                     writeOptions: Map[String, String] = Map.empty): Unit = {
+                     writeOptions: Map[String, String] = Map.empty)
+                    (df: => DataFrame): Boolean = {
     // Options participate in the freshness fingerprint UNCONDITIONALLY:
     // changing e.g. parquet.block.size must rewrite the layout, not
     // serve the old one — including when no source fingerprint was
@@ -456,34 +468,14 @@ object ScaleOps {
       if (writeOptions.isEmpty) srcFingerprint
       else srcFingerprint + "|" +
         writeOptions.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
-    if (!layoutFresh(df.sparkSession, path, fp)) {
+    if (!layoutFresh(spark, path, fp)) {
       df.repartitionByRange(numFiles, col(key))
         .sortWithinPartitions(key)
         .write.mode("overwrite").options(writeOptions).parquet(path)
-      writeMarker(df.sparkSession, path, fp)
-    }
-  }
-
-  /** [[ensureSortedBy]] with the frame taken BY NAME — for producers
-    * that EXECUTE on construction (driver-looped operators like
-    * connectedComponents or k-means run their whole loop when CALLED,
-    * not when the result is acted on), so a FRESH layout costs one
-    * marker read instead of a full recompute of state that would be
-    * thrown away unread. Returns true when the layout was written by
-    * THIS call — the hook for releasing build-scoped caches (a frame
-    * the producer persisted for its own supersteps must not outlive
-    * the build: a cached bare TABLE scan would shadow the table's
-    * bucketed scan in every later probe plan of the session). */
-  def ensureSortedByLazy(spark: SparkSession, path: String, key: String,
-                         numFiles: Int, srcFingerprint: String = "")
-                        (df: => DataFrame): Boolean =
-    if (!layoutFresh(spark, path, srcFingerprint)) {
-      df.repartitionByRange(numFiles, col(key))
-        .sortWithinPartitions(key)
-        .write.mode("overwrite").parquet(path)
-      writeMarker(spark, path, srcFingerprint)
+      writeMarker(spark, path, fp)
       true
     } else false
+  }
 
   /** Per-FILE [min, max] of an INT64 column from the parquet footers
     * (min/max over the file's row groups) — the granularity a surgical
@@ -688,13 +680,14 @@ object ScaleOps {
 
   /** Write `df` as exactly `numFiles` part files (repartition — the
     * deliberately-fragmented fixture writer for the compaction demo).
-    * Idempotent via the fingerprint marker. */
-  def ensureFragmented(df: DataFrame, path: String, numFiles: Int,
-                       srcFingerprint: String = ""): Unit =
-    if (!layoutFresh(df.sparkSession, path, srcFingerprint)) {
+    * Idempotent via the fingerprint marker; the frame is by name. */
+  def ensureFragmented(spark: SparkSession, path: String, numFiles: Int,
+                       srcFingerprint: String = "")(df: => DataFrame): Boolean =
+    if (!layoutFresh(spark, path, srcFingerprint)) {
       df.repartition(numFiles).write.mode("overwrite").parquet(path)
-      writeMarker(df.sparkSession, path, srcFingerprint)
-    }
+      writeMarker(spark, path, srcFingerprint)
+      true
+    } else false
 
   /** Small-file compaction: rewrite `src`'s parquet tree as
     * `targetFiles` part files at `dst` (idempotent via the same

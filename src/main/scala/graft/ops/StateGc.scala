@@ -6,12 +6,14 @@ import graft.Tables
 
 /** Warehouse state-generation GC (SURVEY §2.13 operations surface).
   *
-  * Every persisted state the engine maintains — bucketed CTAS tables
-  * (ensureBucketed: dedup digests, LSH bands, ER keys, graph edges) and
-  * path layouts / 1-row checkpoints (ensureSortedBy* / ensurePartitioned:
-  * caps, blooms, rank states) — is named `<family>_<sourceTag>` and
-  * freshness-keyed by a source fingerprint (`graft.src` table property
-  * or `_GRAFT_SRC` marker, format `len:mtime[:params|&#124;options]`).
+  * Every persisted state the engine maintains is a [[PersistedState]]
+  * family — bucketed CTAS tables (dedup digests, LSH bands, ER keys,
+  * graph edges), path layouts and 1-row checkpoints (caps, blooms, rank
+  * states), gate lineages and staged stream replays — so it is named
+  * `graft_<family>_<sourceTag>` by the one tag rule
+  * ([[PersistedState.tagOf]]) and freshness-keyed by the descriptor's
+  * fingerprint (`graft.src` table property or `_GRAFT_SRC` marker,
+  * format `len:mtime[|len:mtime][version][:params|&#124;options]`).
   * ensure* REBUILDS in place when the fingerprint rolls, so a live
   * source never leaks — but a source that disappears (a retired crawl
   * directory, a deleted fixture) strands its whole generation forever,
@@ -44,10 +46,6 @@ import graft.Tables
   * deleted. Reclaimed bytes are measured BEFORE deletion.
   */
 object StateGc {
-
-  /** Same rendering every state family uses to tag a source dir. */
-  def tagOf(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
 
   private def fs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -100,11 +98,11 @@ object StateGc {
           prefix: String = "graft_", dryRun: Boolean = true): DataFrame = {
     val (f, rootP) = fs(spark, root)
     // Longest-first so a tag can never claim another tag's suffix.
-    // CONSERVATIVE under tag collisions: tagOf is lossy (distinct dirs
+    // CONSERVATIVE under tag collisions: the tag rule is lossy (distinct dirs
     // can render to one tag), so fingerprints are UNIONED per tag —
     // a generation serving EITHER colliding dir stays live. GC must
     // under-approximate droppability, never a live dir's liveness.
-    val liveTags = liveDirs.groupBy(tagOf).toSeq.sortBy(-_._1.length)
+    val liveTags = liveDirs.groupBy(PersistedState.tagOf).toSeq.sortBy(-_._1.length)
     val fpsByTag = liveTags.map { case (t, ds) =>
       t -> ds.flatMap(d => liveFileFps(spark, d)).toSet
     }.toMap
@@ -155,7 +153,7 @@ object StateGc {
 
   /** One full GC cycle over a scratch `graft_gcdemo_*` family in the
     * real warehouse root: a LIVE generation (current documents
-    * fingerprint, params-suffixed — the eventsTag key shape), a STALE
+    * fingerprint, params-suffixed — the staged-replay key shape), a STALE
     * one (live tag, rolled fingerprint) and a DEAD one (tag of a gone
     * source). GC with `dryRun = false` must drop stale+dead, keep live,
     * and the live generation must still read afterwards (the probe is a
@@ -174,8 +172,8 @@ object StateGc {
     * sessions' demo families older than one hour (a live concurrent
     * audit is seconds old; an hour-old family is a crash leftover). */
   def demoAudit(spark: SparkSession, sfDir: String): DataFrame = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val tag = tagOf(sfDir)
+    val wh = PersistedState.warehouse(spark)
+    val tag = PersistedState.tagOf(sfDir)
     val (f, whP) = fs(spark, wh)
     val sfx = Integer.toHexString(System.identityHashCode(spark))
     val famPrefix = s"graft_gcdemo${sfx}_"

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.ops.PersistedState._
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
 import graft.similarity.Similarity
@@ -40,7 +41,7 @@ object CorpusQueries {
     // (the readStatLong/rowGroupRangesMemo generation-key discipline
     // applied to truncated plans).
     val gen = graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")
-    val exact = graft.ops.CacheOnce.swapTruncated(s"ann-exact-top5:$gen",
+    val exact = graft.ops.CacheOnce.swapTruncated("ann-exact-top5", gen,
       Similarity.cosineTopK(
         emb.filter(col("vec_id") < 200)
           .select(col("vec_id").as("qid"), col("embedding").as("qv")),
@@ -51,7 +52,7 @@ object CorpusQueries {
     // memo bounds live generations per name (LRU-released), where an
     // unreleased per-invocation checkpoint accumulated one reliable-
     // checkpoint copy per rep (review r18).
-    val scoredM = graft.ops.CacheOnce.swapTruncated(s"ann-scored:$gen", scored)
+    val scoredM = graft.ops.CacheOnce.swapTruncated("ann-scored", gen, scored)
     val approxTop = Similarity.topKWindow(scoredM, 5)
       .filter(col("query_id") < 200).select("query_id", "neighbor_id")
     val hits = exact.join(approxTop, Seq("query_id", "neighbor_id"), "left_semi")
@@ -550,7 +551,7 @@ ${crossVerifyCtes(0.5)}"""
     * acceptance gate can have. Since r17 every probe path (verdict AND
     * budget) uses the DERIVED cap greatest(thisFloor, 4 · mean bucket
     * size), persisted at state-build time as a 1-row checkpoint
-    * ([[lshCapPath]]) so probes stay O(increment). At driver SFs the
+    * ([[prepareLshState]]) so probes stay O(increment). At driver SFs the
     * mean is ~1 and this floor binds, so the derived cap IS 16 there. */
   private[queries] val lshBandBucketCap = 16
 
@@ -1465,7 +1466,7 @@ FROM jb GROUP BY 1""") { (s, d) =>
       // Same CacheOnce key/plan as pg_pagerank's edge source: whichever
       // runs first pays the band join + Jaccard verify, the other reads
       // the verified pair set from cache.
-      graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups:" +
+      graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
         graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
@@ -1497,7 +1498,7 @@ ${step("p1", "p2")},
 ${step("p2", "p3")}
 SELECT id AS doc_id, round(r, 6) AS rank FROM p3"""
     }) { (s, d) =>
-      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups:" +
+      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
         graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
@@ -1516,7 +1517,7 @@ SELECT id AS doc_id, round(r, 6) AS rank FROM p3"""
     // enumerates id-ordered a<b<c triples — two different algorithms,
     // one triangle set.
     Q("pg_triangles", trianglesOracleSql) { (s, d) =>
-      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups:" +
+      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
         graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
@@ -1564,7 +1565,7 @@ SELECT query_id, neighbor_id, cosine, CAST(row_number() OVER w AS BIGINT) AS ran
 FROM fl WINDOW w AS (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id)
 QUALIFY row_number() OVER w <= 3""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups:" +
+      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
         graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
@@ -2011,7 +2012,7 @@ FROM m""") { (s, d) =>
       // executed the collision join twice per action). The top-k window
       // is the only per-rep work left.
       val gen = graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")
-      val scored = graft.ops.CacheOnce.swapTruncated(s"ann-scored:$gen",
+      val scored = graft.ops.CacheOnce.swapTruncated("ann-scored", gen,
         Similarity.annScored(Tables.embeddings(s, d), "vec_id", "embedding",
           numPlanes = Some(annPlanes), numTables = annTables,
           bucketCap = Some(annBucketCap), candidateCap = Some(annCap)))
@@ -2059,13 +2060,13 @@ LEFT JOIN best ON best.id2 = i.vec_id""") { (s, d) =>
       // Watch first, then build: the probe-feed truncation inside
       // incrementalCosineNearDups executes the probe eagerly at plan
       // build (same discipline as dd_incremental_neardup, r19).
-      graft.plans.PlanChecks.watchFinalPlans(s, cosineStateTable(d), "cosine LSH state")
+      graft.plans.PlanChecks.watchFinalPlans(s, CosineState.name(d), "cosine LSH state")
       Dedup.incrementalCosineNearDups(
         emb.filter(col("vec_id") % 3 === 2),
         emb.filter(col("vec_id") % 3 =!= 2),
-        s.table(cosineStateTable(d)),
+        CosineState.table(s, d),
         "vec_id", "embedding", threshold = 0.3,
-        bucketCap = Some(cosineDerivedCap(s, d)),
+        bucketCap = Some(CosineCap.readLong(s, d).toInt),
         probeCheck = cands => graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
           cands.queryExecution.executedPlan, "cosine LSH state"),
         memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")))
@@ -2098,9 +2099,9 @@ FROM abkc l JOIN bbk r ON l.tb_key = r.tb_key
 JOIN anv a ON a.vec_id = l.vec_id JOIN bnv b ON b.vec_id = r.vec_id
 WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.nrm), 4) >= 0.3""") { (s, d) =>
       prepareCosineState(s, d)
-      graft.streaming.CosineProbe.verifiedOnce(s, d, cosineStateTable(d),
+      graft.streaming.CosineProbe.verifiedOnce(s, d, CosineState.name(d),
         Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
-        threshold = 0.3, bucketCap = Some(cosineDerivedCap(s, d)))
+        threshold = 0.3, bucketCap = Some(CosineCap.readLong(s, d).toInt))
     },
 
     // Embedding cosine near-dup pairs via multi-table LSH (8 planes x 4
@@ -2196,7 +2197,7 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     Q("s_incremental_assign", kmeansAssignOracleSql(8, 2, 64)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareCentroidState(s, d)
-      val cents = Tables.parquet(s, centroidStatePath(s, d))
+      val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
@@ -2227,7 +2228,7 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     Q("s_embedding_drift", embeddingDriftOracleSql(8, 2, 64)) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareCentroidState(s, d)
-      val cents = Tables.parquet(s, centroidStatePath(s, d))
+      val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
@@ -2337,13 +2338,13 @@ FROM inc i LEFT JOIN best ON best.inc_id = i.doc_id""") { (s, d) =>
       prepareContamState(s, d)
       val out = Dedup.incrementalContamination(
         docs.filter(col("doc_id") % 6 === 2),
-        s.table(contamStateTable(d)),
+        ContamState.table(s, d),
         "doc_id", "text", shingleN = 3, minShared = 3,
-        dfCap = Some(contamDerivedCap(s, d)),
+        dfCap = Some(ContamCap.readLong(s, d).toInt),
         dfCol = Some("df"), bloom = Some(contamStateBloom(s, d)))
       graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
         out.queryExecution.executedPlan, "test-suite shingle index")
-      graft.plans.PlanChecks.watchFinalPlans(s, contamStateTable(d),
+      graft.plans.PlanChecks.watchFinalPlans(s, ContamState.name(d),
         "test-suite shingle index")
       out
     },
@@ -2369,9 +2370,9 @@ SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_shingles,
   CAST((SELECT cap FROM capv) AS BIGINT) AS derived_cap
 FROM df""") { (s, d) =>
       prepareContamState(s, d)
-      val df = s.table(contamStateTable(d))
+      val df = ContamState.table(s, d)
         .groupBy(col("shingle")).agg(count(lit(1)).as("c"))
-      val cap = contamDerivedCap(s, d).toLong
+      val cap = ContamCap.readLong(s, d)
       df.agg(sum(col("c")).as("n_rows"), count(lit(1)).as("n_shingles"),
         max(col("c")).as("max_df"),
         sum(when(col("c") > cap, col("c")).otherwise(lit(0L))).as("n_hot_rows"),
@@ -2557,7 +2558,7 @@ WHERE NOT EXISTS (SELECT 1 FROM d1 WHERE d1.content_hash = w.content_hash)""") {
       // body and measures the steady state, sc1-style.
       prepareDedupState(ss, d)
       val out = Dedup.incrementalDedup(
-        docs.filter(col("doc_id") % 3 === 2), ss.table(dedupStateTable(d)),
+        docs.filter(col("doc_id") % 3 === 2), DedupState.table(ss, d),
         "doc_id", "text")
       val plan = out.queryExecution.executedPlan
       val exchanges = plan.collect {
@@ -2631,9 +2632,9 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
       // Watch registered BEFORE the probe-feed truncation inside
       // incrementalNearDups executes the probe as an EAGER job at plan
       // build (the er_incremental_clusters precedent).
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
+      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
       // VERDICT path → the DERIVED cap (persisted at state-build time,
-      // read back as a 1-row checkpoint — see lshCapPath's policy
+      // read back as a 1-row checkpoint — see prepareLshState's policy
       // note): at driver SFs the floor binds and this IS
       // lshBandBucketCap; at mass-duplication density the cap rides
       // the corpus instead of zeroing the probe and silently marking
@@ -2651,10 +2652,10 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
       Dedup.incrementalNearDups(
         docs.filter(col("doc_id") % 3 === 2),
         docs.filter(col("doc_id") % 3 =!= 2),
-        s.table(lshStateTable(d)),
+        LshState.table(s, d),
         "doc_id", "text", numHashes = 32, rowsPerBand = 4,
         shingleN = 2, threshold = 0.5,
-        bandBucketCap = Some(lshDerivedCap(s, d)),
+        bandBucketCap = Some(LshCap.readLong(s, d).toInt),
         probeCheck = cands => graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
           cands.queryExecution.executedPlan, "LSH state"),
         memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")))
@@ -2681,14 +2682,14 @@ SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_buckets,
   CAST(${tailCapExpr("bnd", lshBandBucketCap.toString)} AS BIGINT) AS derived_cap
 FROM bk""") { (s, d) =>
       prepareLshState(s, d)
-      s.table(lshStateTable(d))
+      LshState.table(s, d)
         .groupBy(col("band_key")).agg(count(lit(1)).as("c"))
         .agg(sum(col("c")).as("n_rows"), count(lit(1)).as("n_buckets"),
           expr("sum(c * (c - 1) div 2)").as("n_candidate_pairs"),
           max(col("c")).as("max_bucket"),
           // The PERSISTED tail-aware cap — the number every probe path
           // actually applies (lockstep with the twin's recomputation).
-          lit(lshDerivedCap(s, d).toLong).as("derived_cap"))
+          lit(LshCap.readLong(s, d)).as("derived_cap"))
     },
 
     // Recall accountability for the BINDING probe cap — since r17 the
@@ -2709,10 +2710,11 @@ FROM bk""") { (s, d) =>
     // candidates — a semi-join, not a second Jaccard pass.
     Q("dd_cap_recall_audit", capRecallAuditSql) { (s, d) =>
       prepareLshState(s, d)
+      val cap = LshCap.readLong(s, d).toInt
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
       val stDocs = docs.filter(col("doc_id") % 3 =!= 2)
-      val stateBands = s.table(lshStateTable(d))
+      val stateBands = LshState.table(s, d)
       // Same CacheOnce keys as the incremental family: the increment
       // sketches once per session no matter which member runs first.
       val incSets = graft.ops.CacheOnce.swap("incr-inc-shingles",
@@ -2720,7 +2722,6 @@ FROM bk""") { (s, d) =>
           explode(Dedup.distinctShingles(col("text"), 2)).as("shingle")))
       val incBands = graft.ops.CacheOnce.swap("incr-inc-bands",
         Dedup.bandKeys(incSets, "doc_id", 32, 4))
-      val cap = lshDerivedCap(s, d)
       // ONE probe join for BOTH feeds (r18: the two-feed shape ran the
       // band probe once per feed and, through the un-materialized
       // aggregate fan-out below, re-executed each feed per consumer —
@@ -2745,7 +2746,7 @@ FROM bk""") { (s, d) =>
       // re-join; the memo's LRU releases superseded checkpoints where a
       // bare per-invocation eagerDurable leaked one per rep.
       val cdm = graft.ops.CacheOnce.swapTruncated(
-        "cap-audit-pairs:" + graft.ops.ScaleOps.fileFingerprint(
+        "cap-audit-pairs", graft.ops.ScaleOps.fileFingerprint(
           s"$d/documents.parquet"), pairsAnn)
       // Cross pairs only, verified ONCE on the uncapped feed (the
       // capped feed is a subset): verifyCrossPairs skips the inc-inc
@@ -2777,9 +2778,9 @@ FROM bk""") { (s, d) =>
       prepareSimhashState(s, d)
       val out = graft.dedup.Dedup.incrementalSimhashNearDups(
         docs.filter(col("doc_id") % 3 === 2),
-        s.table(simhashStateTable(d)),
+        SimhashState.table(s, d),
         "doc_id", "text", maxHamming = 3, blocks = 6,
-        bucketCap = Some(simhashDerivedCap(s, d)))
+        bucketCap = Some(SimhashCap.readLong(s, d).toInt))
       graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
         out.queryExecution.executedPlan, "SimHash state")
       // The probe must not smuggle a full-corpus signature pass: the
@@ -2793,7 +2794,7 @@ FROM bk""") { (s, d) =>
           "a documents scan without the increment split predicate — " +
             "the SimHash probe re-read the corpus")
       }
-      graft.plans.PlanChecks.watchFinalPlans(s, simhashStateTable(d), "SimHash state")
+      graft.plans.PlanChecks.watchFinalPlans(s, SimhashState.name(d), "SimHash state")
       out
     },
 
@@ -2805,8 +2806,8 @@ FROM bk""") { (s, d) =>
     // build — the r17 default for every probe path), cap-aware oracle.
     Q("st_simhash_probe", simhashProbeSql) { (s, d) =>
       prepareSimhashState(s, d)
-      graft.streaming.SimhashProbe.verifiedOnce(s, d, simhashStateTable(d),
-        bucketCap = Some(simhashDerivedCap(s, d)))
+      graft.streaming.SimhashProbe.verifiedOnce(s, d, SimhashState.name(d),
+        bucketCap = Some(SimhashCap.readLong(s, d).toInt))
     },
 
     // The composed daily-crawl pass — the operational shape the three
@@ -2838,26 +2839,26 @@ FROM bk""") { (s, d) =>
       // in-place rebuild — the generation fingerprint in the NAME is
       // what invalidates them.
       val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-      val exactAcc = graft.ops.CacheOnce.swapTruncated(s"pipe-g-exact-acc:$fp",
-        Dedup.incrementalDedup(inc, s.table(dedupStateTable(d)),
+      val exactAcc = graft.ops.CacheOnce.swapTruncated("pipe-g-exact-acc", fp,
+        Dedup.incrementalDedup(inc, DedupState.table(s, d),
           "doc_id", "text").select(col("doc_id")))
-      val contamV = graft.ops.CacheOnce.swapTruncated(s"pipe-g-contam:$fp",
+      val contamV = graft.ops.CacheOnce.swapTruncated("pipe-g-contam", fp,
         Dedup.incrementalContamination(
           inc.join(exactAcc, Seq("doc_id"), "left_semi"),
-          s.table(contamStateTable(d)),
+          ContamState.table(s, d),
           "doc_id", "text", shingleN = 3, minShared = 3,
-          dfCap = Some(contamDerivedCap(s, d)),
+          dfCap = Some(ContamCap.readLong(s, d).toInt),
           dfCol = Some("df"), bloom = Some(contamStateBloom(s, d))))
       val clean = contamV.filter(!col("contaminated")).select(col("doc_id"))
-      val ndVerdicts = graft.ops.CacheOnce.swapTruncated(s"pipe-g-nd-verdicts:$fp",
+      val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-g-nd-verdicts", fp,
         Dedup.incrementalNearDups(
           inc.join(clean, Seq("doc_id"), "left_semi"),
-          docs.filter(col("doc_id") % 3 =!= 2), s.table(lshStateTable(d)),
+          docs.filter(col("doc_id") % 3 =!= 2), LshState.table(s, d),
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
-          threshold = 0.5, bandBucketCap = Some(lshDerivedCap(s, d)),
+          threshold = 0.5, bandBucketCap = Some(LshCap.readLong(s, d).toInt),
           memoTag = Some(s"pipe-g:$fp")))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
-      val cents = Tables.parquet(s, centroidStatePath(s, d))
+      val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
       val vecs = Tables.embeddings(s, d)
@@ -2900,18 +2901,18 @@ FROM bk""") { (s, d) =>
       // r19 fingerprint sweep: generation fingerprint in the memo names
       // (state tables are referenced by NAME — see pipe_crawl_guarded).
       val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-      val exactAcc = graft.ops.CacheOnce.swapTruncated(s"pipe-incr-exact-acc:$fp",
-        Dedup.incrementalDedup(inc, s.table(dedupStateTable(d)),
+      val exactAcc = graft.ops.CacheOnce.swapTruncated("pipe-incr-exact-acc", fp,
+        Dedup.incrementalDedup(inc, DedupState.table(s, d),
           "doc_id", "text").select(col("doc_id")))
-      val ndVerdicts = graft.ops.CacheOnce.swapTruncated(s"pipe-incr-nd-verdicts:$fp",
+      val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-incr-nd-verdicts", fp,
         Dedup.incrementalNearDups(
           inc.join(exactAcc, Seq("doc_id"), "left_semi"),
-          docs.filter(col("doc_id") % 3 =!= 2), s.table(lshStateTable(d)),
+          docs.filter(col("doc_id") % 3 =!= 2), LshState.table(s, d),
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
-          threshold = 0.5, bandBucketCap = Some(lshDerivedCap(s, d)),
+          threshold = 0.5, bandBucketCap = Some(LshCap.readLong(s, d).toInt),
           memoTag = Some(s"pipe-incr:$fp")))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
-      val cents = Tables.parquet(s, centroidStatePath(s, d))
+      val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
         Similarity.l2norm(col("embedding")).as("_cn"))
       val vecs = Tables.embeddings(s, d)
@@ -2948,8 +2949,8 @@ FROM bk""") { (s, d) =>
     // candidate set at any arrival order.
     Q("st_lsh_probe", lshProbeSql) { (s, d) =>
       prepareLshState(s, d)
-      graft.streaming.LshProbe.candidatesOnce(s, d, lshStateTable(d),
-        bandBucketCap = Some(lshDerivedCap(s, d)))
+      graft.streaming.LshProbe.candidatesOnce(s, d, LshState.name(d),
+        bandBucketCap = Some(LshCap.readLong(s, d).toInt))
     },
 
     // Bloom-prefiltered decontamination: test-split shingles collapse
@@ -3029,7 +3030,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // r18 this site free-rode Spark's CacheManager (its fresh pair
       // subtree matched the cached plan); a truncated LogicalRDD is
       // invisible to that substitution, so share the memo explicitly.
-      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups:" +
+      val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
         graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
@@ -3058,10 +3059,10 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // probe would drop pairs the full re-cluster keeps.
     Q("dd_incremental_clusters", incrementalClustersOracleSql) { (s, d) =>
       prepareClusterState(s, d); prepareLshState(s, d)
-      val state = Tables.parquet(s, clusterStatePath(s, d))
+      val state = ClusterState.read(s, d)
       // Watch registered BEFORE the shared-feed truncation executes the
       // probe as an eager job at plan build.
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
+      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
       // The feed is the r19 SHARED truncation — executed once per
       // session for all three family members; its scale REQUIREs run
       // inside sharedUncappedIncPairs for whichever member calls first.
@@ -3129,10 +3130,10 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // bucketed state joins must land inside the AQE-final watch
       // window (only superstep `iters` remains in the terminal plan
       // the REQUIRE below inspects).
-      graft.plans.PlanChecks.watchFinalPlans(s, pgEdgeStateTable(d), "PageRank edge state")
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
-      val stateEdges = s.table(pgEdgeStateTable(d))
-      val stateRanks = Tables.parquet(s, rankStatePath(s, d))
+      graft.plans.PlanChecks.watchFinalPlans(s, PgEdges.name(d), "PageRank edge state")
+      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
+      val stateEdges = PgEdges.table(s, d)
+      val stateRanks = PgRanks.read(s, d)
       // r19: the SHARED uncapped pair feed (one probe+verify execution
       // per session for the whole cluster/graph family; the feed's own
       // layout REQUIREs run inside sharedUncappedIncPairs).
@@ -3163,12 +3164,12 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // executes the LSH pair feed as an EAGER job at plan build, and
       // its bucketed band-state probe must land inside the watch window
       // (the terminal plan only retains the dEE edge-state join).
-      graft.plans.PlanChecks.watchFinalPlans(s, pgEdgeStateTable(d), "triangle edge state")
-      graft.plans.PlanChecks.watchFinalPlans(s, pgPairStateTable(d), "triangle pair state")
-      graft.plans.PlanChecks.watchFinalPlans(s, lshStateTable(d), "LSH state")
-      val stateAdj = s.table(pgEdgeStateTable(d))
-      val statePairs = s.table(pgPairStateTable(d))
-      val stateCounts = Tables.parquet(s, triangleStatePath(s, d))
+      graft.plans.PlanChecks.watchFinalPlans(s, PgEdges.name(d), "triangle edge state")
+      graft.plans.PlanChecks.watchFinalPlans(s, PgPairs.name(d), "triangle pair state")
+      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
+      val stateAdj = PgEdges.table(s, d)
+      val statePairs = PgPairs.table(s, d)
+      val stateCounts = PgTris.read(s, d)
       // r19: same SHARED uncapped pair feed as dd_incremental_clusters
       // and pg_incremental_pagerank — one probe+verify per session.
       val incPairs = sharedUncappedIncPairs(s, d)
@@ -3186,10 +3187,10 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // state-side Exchange may be planned (r16 advisory + the r17
       // composite-key finding).
       graft.plans.PlanChecks.requireSortFreeBucketedScan(
-        out.queryExecution.executedPlan, pgEdgeStateTable(d),
+        out.queryExecution.executedPlan, PgEdges.name(d),
         "triangle edge state")
       graft.plans.PlanChecks.requireSortFreeBucketedScan(
-        out.queryExecution.executedPlan, pgPairStateTable(d),
+        out.queryExecution.executedPlan, PgPairs.name(d),
         "triangle pair state")
       out
     },
@@ -3206,7 +3207,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       "SELECT CAST(ts + INTERVAL 8 HOUR AS DATE) AS obs_date, event_type, " +
         "CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2") { (s, d) =>
       prepareTallyState(s, d)
-      val state = Tables.parquet(s, tallyStatePath(s, d))
+      val state = IvmTally.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3239,7 +3240,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
       prepareMetricsState(s, d)
-      val state = Tables.parquet(s, metricsStatePath(s, d))
+      val state = IvmMetrics.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3265,7 +3266,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(count(DISTINCT user_id) AS BIGINT) AS n_users " +
         "FROM events GROUP BY 1, 2") { (s, d) =>
       prepareUsersState(s, d)
-      val state = Tables.parquet(s, usersStatePath(s, d))
+      val state = IvmUsers.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"), col("user_id"))
@@ -3290,7 +3291,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(sum(cents) AS BIGINT) / 100.0 AS total_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
       prepareMetricsState(s, d)
-      val state = Tables.parquet(s, metricsStatePath(s, d))
+      val state = IvmMetrics.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
@@ -3323,11 +3324,11 @@ FROM comp GROUP BY 1""") { (s, d) =>
       prepareDqProfState(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
-      val counts = Tables.parquet(s, dqProfCountsPath(s, d))
+      val counts = DqProfCounts.read(s, d)
         .unionByName(dqProfCounts(inc))
         .groupBy(col("col_name"))
         .agg(sum(col("n_rows")).as("n_rows"), sum(col("n_nulls")).as("n_nulls"))
-      val regs = Tables.parquet(s, dqProfRegsPath(s, d))
+      val regs = DqProfRegs.read(s, d)
         .unionByName(dqProfRegisters(inc))
         .groupBy(col("col_name"), col("bucket"))
         .agg(max(col("r")).as("r"))
@@ -3376,7 +3377,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
         "FROM c GROUP BY 1, 2") { (s, d) =>
       prepareMetricsState(s, d)
-      val state = Tables.parquet(s, metricsStatePath(s, d))
+      val state = IvmMetrics.read(s, d)
       val deltas = Tables.events(s, d)
         .filter(col("event_id") % 3 =!= 2 && col("event_id") % 7 === 3 &&
           col("value").isNotNull)
@@ -3418,7 +3419,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // apply linear counting downstream); no float ever compares.
     Q("ivm_daily_users_hll", hllUsersOracleSql) { (s, d) =>
       prepareHllState(s, d)
-      val state = Tables.parquet(s, hllStatePath(s, d))
+      val state = IvmHll.read(s, d)
       val incr = hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
         .groupBy(col("obs_date"), col("event_type"), col("bucket"))
@@ -3473,7 +3474,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     Q("ivm_bottomk_sample", bottomkOracleSql) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareBottomkState(s, d)
-      val state = Tables.parquet(s, bottomkStatePath(s, d))
+      val state = IvmBottomk.read(s, d)
       val incr = bottomkRanked(
         Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val g = Window.partitionBy(col("obs_date"), col("event_type"))
@@ -3516,7 +3517,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "FROM x GROUP BY 1, 2") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       prepareQuantState(s, d)
-      val state = Tables.parquet(s, quantStatePath(s, d))
+      val state = IvmQuant.read(s, d)
       val incr = quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
         .groupBy(col("obs_date"), col("event_type"), col("bucket"))
@@ -3546,7 +3547,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "CAST(count(*) AS BIGINT) AS n_items " +
         "FROM orders JOIN lineitem ON l_orderkey = o_orderkey GROUP BY 1") { (s, d) =>
       prepareJoinAggState(s, d)
-      val state = Tables.parquet(s, joinAggStatePath(s, d))
+      val state = IvmJoinAgg.read(s, d)
       val o = Tables.orders(s, d); val l = Tables.lineitem(s, d)
       val deltas = Seq(
         joinAggPartial(ordersNew(o), lineitemOld(l)),
@@ -3670,8 +3671,8 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
       graft.text.CorpusPipeline.keepBestByQuality(Tables.documents(s, d),
         "doc_id", "text", jaccardThreshold = 0.5, shingleN = 2,
         precomputedPairs = Some(graft.ops.CacheOnce.swapTruncated(
-          "minhash-md5-neardups:" +
-            graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
+          "minhash-md5-neardups",
+          graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
           Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
             numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))))
     },
@@ -3695,44 +3696,13 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
         "doc_id", "text", n = 5, w = 8)
     })
 
-  /** dd_incremental's persisted digest-state table, keyed by source dir
-    * (same convention as the sc1 bucket tables). */
-  private[queries] def dedupStateTable(sfDir: String): String =
-    s"graft_dd_state_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  /** s_incremental_assign's persisted centroid-state path (tiny: k
-    * rows), fingerprint-marked via ScaleOps so a regenerated embeddings
-    * source RETRAINS instead of serving stale centroids. */
-  private[queries] def centroidStatePath(s: org.apache.spark.sql.SparkSession,
-                                         d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_km_state_$tag").toString
-  }
-
-  /** dd_incremental_clusters' persisted cluster-state path (one row per
-    * clustered state doc), fingerprint-marked so a regenerated corpus
-    * re-clusters instead of serving stale labels. */
-  private[graft] def clusterStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_cc_state_$tag").toString
-  }
-
   /** One-time clustering of the accepted set's near-dup pair graph;
     * persists (node, cluster_id) sorted by node (cluster once, merge
-    * increments forever). Idempotent per (path, source fingerprint). */
+    * increments forever) — dd_incremental_clusters' cluster state.
+    * Idempotent per documents generation. */
   def prepareClusterState(s: org.apache.spark.sql.SparkSession,
                           d: String): Unit =
-    // BY-NAME frame: connectedComponents runs its whole propagation loop
-    // at call time, so the eager variant re-clustered the state on every
-    // freshness check (~2s per registered-query call at sf0.1, all
-    // thrown away when the marker was fresh).
-    graft.ops.ScaleOps.ensureSortedByLazy(s,
-      clusterStatePath(s, d), "node", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(
-        s"$d/documents.parquet"))(
+    ClusterState.sorted(s, d, "node")(
       graft.dedup.Dedup.connectedComponents(
         graft.dedup.Dedup.minhashNearDupsMd5(
           Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
@@ -3770,19 +3740,16 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
                                         capped: Boolean): org.apache.spark.sql.DataFrame = {
     prepareClusterState(s, d); prepareLshState(s, d)
     val docs = Tables.documents(s, d)
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val family = if (capped) "graft_st_cc_capped_" else "graft_st_cc_cands_"
-    val base = new java.io.File(wh, family + tag).toString
+    val lineage = if (capped) StCcCapped else StCcCands
+    val base = lineage.path(s, d)
     // The cap is part of the lineage: a state rebuild that moves the
     // derived cap must restart the sink (old collisions were gated by
     // the old cap).
-    val cap = if (capped) Some(lshDerivedCap(s, d)) else None
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet") +
-      cap.fold("")(c => s"|cap=$c")
+    val cap = if (capped) Some(LshCap.readLong(s, d).toInt) else None
+    val fp = lineage.fingerprint(d, cap.fold("")(c => s"|cap=$c"))
     graft.streaming.GateLineage.resetIfStale(s, base, fp)
     val drain = graft.streaming.LshProbe.candidatesWatermarked(
-      s, d, lshStateTable(d), base, bandBucketCap = cap)
+      s, d, LshState.name(d), base, bandBucketCap = cap)
     val settledDir = s"$base/settled"
     val tmpDir = s"$base/settled_tmp"
     // Crash recovery BEFORE the existence test: a crash inside the
@@ -3798,7 +3765,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     if (drain.newFiles.nonEmpty || !settledExists) {
       val priorState =
         if (settledExists) Tables.parquet(s, settledDir)
-        else Tables.parquet(s, clusterStatePath(s, d))
+        else ClusterState.read(s, d)
       val pairs = Dedup.verifyIncrementPairs(
         drain.newPairs.select(col("state_id").as("id1"), col("inc_id").as("id2")),
         docs.filter(col("doc_id") % 3 === 2),
@@ -3823,35 +3790,20 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * source fingerprint). */
   def prepareCentroidState(s: org.apache.spark.sql.SparkSession,
                            d: String): Unit =
-    // BY-NAME frame: kmeansCentroids executes its training loop at call
-    // time (driver-looped), same freshness-check trap as
-    // [[prepareClusterState]].
-    graft.ops.ScaleOps.ensureSortedByLazy(s,
-      centroidStatePath(s, d), "vec_id", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(
-        s"$d/embeddings.parquet"))(
+    CentroidState.sorted(s, d, "vec_id")(
       graft.similarity.Similarity.kmeansCentroids(
         Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
         "vec_id", "embedding", k = 8, iters = 2, dim = 64,
         roundMeans = Some(6)))
 
   /** ivm_daily_tally's persisted partial-aggregate state (day-1 daily
-    * tallies), fingerprint-keyed like the other state tables. */
-  private[queries] def tallyStatePath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_tally_$tag").toString
-  }
-
+    * tallies). */
   def prepareTallyState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
+    IvmTally.sorted(s, d, "obs_date")(
       Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
-        .agg(count(lit(1)).as("n")),
-      tallyStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
+        .agg(count(lit(1)).as("n")))
 
   /** ivm_daily_metrics' persisted partial-aggregate state: the
     * commutative-monoid triple (count(*), count(value), sum(cents)) per
@@ -3863,22 +3815,13 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * (observed: 42.90625 → 42.9063 Spark HALF_UP / 42.9062 DuckDB
     * half-even). Integer partials + floor-division presentation are
     * tie-free and bit-identical in both engines. */
-  private[queries] def metricsStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_metrics_$tag").toString
-  }
-
   def prepareMetricsState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
+    IvmMetrics.sorted(s, d, "obs_date")(
       Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
         .agg(count(lit(1)).as("n"), count(col("value")).as("nv"),
-          sum(round(col("value") * 100).cast("long")).as("cents")),
-      metricsStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
+          sum(round(col("value") * 100).cast("long")).as("cents")))
 
   /** ivm_daily_users' persisted SUPPORT relation: count(DISTINCT x) is
     * not a commutative monoid over counts (2 distinct ∪ 3 distinct is
@@ -3886,21 +3829,12 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * distinct (day, type, user) triples themselves — the support — and
     * derives the count at presentation. State size rides the support
     * cardinality (bounded by days × types × users), never raw events. */
-  private[queries] def usersStatePath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_users_$tag").toString
-  }
-
   def prepareUsersState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
+    IvmUsers.sorted(s, d, "obs_date")(
       Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
         .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"), col("user_id"))
-        .distinct(),
-      usersStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
+        .distinct())
 
   // ---- ivm_daily_users_hll: deterministic HLL-register sketch ----
   // 64 buckets (p=6) over the md5-derived 64-bit user hash, carried as
@@ -4039,36 +3973,18 @@ FROM rw"""
       .drop("_rn")
   }
 
-  private[queries] def bottomkStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_bottomk_$tag").toString
-  }
-
   /** ivm_bottomk_sample's persisted state: day-1 events reduced to the
     * 32 rank-smallest per (day, type) — k rows per group forever. */
   def prepareBottomkState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      bottomkRanked(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)),
-      bottomkStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
-
-  private[queries] def hllStatePath(s: org.apache.spark.sql.SparkSession,
-                                    d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_hll_$tag").toString
-  }
+    IvmBottomk.sorted(s, d, "obs_date")(
+      bottomkRanked(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)))
 
   /** ivm_daily_users_hll's persisted REGISTER state: day-1 events
     * reduced to (day, type, bucket, max rank) — O(groups · 64) rows no
     * matter how many events or users day 1 held. */
   def prepareHllState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)),
-      hllStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
+    IvmHll.sorted(s, d, "obs_date")(
+      hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)))
 
   /** ivm_daily_quantiles' persisted SKETCH state: per-(day, type)
     * dollar-bucket histograms of `value` — the mergeable-summary
@@ -4078,13 +3994,6 @@ FROM rw"""
     * sketch-of-all exactly). Bucket = floor(value), domain-bounded
     * (~500 buckets), so state rides days × types × buckets — never raw
     * events. */
-  private[queries] def quantStatePath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_quant_$tag").toString
-  }
-
   private def quantBuckets(df: org.apache.spark.sql.DataFrame) =
     // NULL values are dropped BEFORE bucketing (symmetrically with the
     // oracle's WHERE value IS NOT NULL): a null bucket would otherwise
@@ -4100,23 +4009,16 @@ FROM rw"""
       .agg(count(lit(1)).as("cnt"))
 
   def prepareQuantState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
-      quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)),
-      quantStatePath(s, d), "obs_date", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/events.parquet"))
+    IvmQuant.sorted(s, d, "obs_date")(
+      quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)))
 
   /** ivm_join_agg's persisted day-1 JOIN-aggregate state: the
     * orders ⋈ lineitem daily quantity rollup over the day-1 slices of
     * BOTH tables. The increment merge uses the standard delta-join
     * rule — Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB — so the old⋈old join (the
     * O(history²-ish) term) is never recomputed; each delta term joins
-    * an increment against a base or another increment. */
-  private[queries] def joinAggStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_joinagg_$tag").toString
-  }
+    * an increment against a base or another increment. The state is
+    * keyed on BOTH sources ([[graft.ops.PersistedState.IvmJoinAgg]]). */
 
   /** Old/new split predicates for the two join sides — INDEPENDENT keys
     * (lineitem splits on orderkey + linenumber) so every delta term is
@@ -4140,21 +4042,9 @@ FROM rw"""
       .agg(sum(col("qty")).as("total_qty"), count(lit(1)).as("n_items"))
 
   def prepareJoinAggState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
+    IvmJoinAgg.sorted(s, d, "order_date")(
       joinAggPartial(ordersOld(Tables.orders(s, d)),
-        lineitemOld(Tables.lineitem(s, d))),
-      joinAggStatePath(s, d), "order_date", numFiles = 1,
-      // BOTH source fingerprints: the persisted old⋈old aggregate
-      // derives from orders AND lineitem — a lineitem-only key would
-      // silently serve stale join state after orders alone regenerates
-      // (the exact staleness mode ensureBucketed's docs warn about).
-      srcFingerprint =
-        graft.ops.ScaleOps.fileFingerprint(s"$d/orders.parquet") + "|" +
-          graft.ops.ScaleOps.fileFingerprint(s"$d/lineitem.parquet"))
-
-  /** dd_incremental_neardup's persisted LSH band-bucket state table. */
-  private[graft] def lshStateTable(sfDir: String): String =
-    s"graft_dd_lshstate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
+        lineitemOld(Tables.lineitem(s, d))))
 
   /** The UNCAPPED increment-bounded verified pair feed, truncated ONCE
     * per source generation and shared by its three consumers
@@ -4184,7 +4074,7 @@ FROM rw"""
     val feed = Dedup.incrementalNearDupPairs(
       docs.filter(col("doc_id") % 3 === 2),
       docs.filter(col("doc_id") % 3 =!= 2),
-      s.table(lshStateTable(d)),
+      LshState.table(s, d),
       "doc_id", "text", numHashes = 32, rowsPerBand = 4,
       shingleN = 2, threshold = 0.5, bandBucketCap = None)
     val plan = feed.queryExecution.executedPlan
@@ -4199,48 +4089,8 @@ FROM rw"""
     }
     require(docScans.exists { case (_, path) => PlanChecks.pathHasLeftSemi(path) },
       "state-side text rescan is not collision-pruned (no left-semi above it)")
-    graft.ops.CacheOnce.swapTruncated("incr-nd-pairs-uncapped:" +
+    graft.ops.CacheOnce.swapTruncated("incr-nd-pairs-uncapped",
       graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"), feed)
-  }
-
-  /** The VERDICT-path band cap, persisted at state-build time: cap =
-    * greatest([[lshBandBucketCap]], 4 · mean band-bucket size) over the
-    * persisted band table — the same audit-derived treatment the ER
-    * block cap got (EntityResolution.blockedCandidates derivedCap),
-    * applied to the LSH family. Computed ONCE when the state is built
-    * (a layout statistic, like the fingerprint — probes must stay
-    * O(increment), so they read the 1-row checkpoint instead of
-    * re-scanning the state), reported by dd_band_audit, and consumed by
-    * dd_incremental_neardup. Since r17 this derived cap is the ONE
-    * policy for every probe path — verdict AND budget alike
-    * (st_lsh_probe, st_incremental_clusters_capped, pipe_* and the
-    * SimHash/cosine gates via their own family checkpoints): a fixed
-    * cap inverts at high dup density — every bucket crosses it, the
-    * probe surfaces nothing, and every increment doc is silently
-    * marked unique, the worst failure an acceptance gate can have
-    * (dd_cap_recall_audit measured the retired fixed-16 budget at
-    * pair recall 0.39 at 30× density). Per-drain cost stays bounded:
-    * the cap is a constant of the state GENERATION (4 · mean bucket
-    * size at build time), so a drain's fan-out is capped at a number
-    * fixed before the drain starts — it grows only when the state is
-    * rebuilt denser, which is the accountable trade the audit row
-    * records. */
-  private[queries] def lshCapPath(s: org.apache.spark.sql.SparkSession,
-                                  d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_lshcap_$tag").toString
-  }
-
-  /** Read the persisted derived cap (1 row — driver-small by
-    * construction). */
-  private[queries] def lshDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                     d: String): Int = {
-    prepareLshState(s, d)
-    // Memoized per state generation (ScaleOps.readStatLong): the head()
-    // was a full driver job per cap-consuming query invocation.
-    graft.ops.ScaleOps.readStatLong(s, lshCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")).toInt
   }
 
   /** TAIL-AWARE derived cap over a state's bucket-size distribution —
@@ -4278,65 +4128,60 @@ FROM rw"""
                                table: String, key: String) =
     s.table(table).groupBy(col(key)).agg(count(lit(1)).as("c"))
 
-  /** One-time bucketed CTAS of the accepted set's LSH band buckets
+  /** LSH band state + the VERDICT-path band cap, persisted at state-build time: cap =
+    * greatest([[lshBandBucketCap]], 4 · mean band-bucket size) over the
+    * persisted band table — the same audit-derived treatment the ER
+    * block cap got (EntityResolution.blockedCandidates derivedCap),
+    * applied to the LSH family. Computed ONCE when the state is built
+    * (a layout statistic, like the fingerprint — probes must stay
+    * O(increment), so they read the 1-row checkpoint instead of
+    * re-scanning the state), reported by dd_band_audit, and consumed by
+    * dd_incremental_neardup. Since r17 this derived cap is the ONE
+    * policy for every probe path — verdict AND budget alike
+    * (st_lsh_probe, st_incremental_clusters_capped, pipe_* and the
+    * SimHash/cosine gates via their own family checkpoints): a fixed
+    * cap inverts at high dup density — every bucket crosses it, the
+    * probe surfaces nothing, and every increment doc is silently
+    * marked unique, the worst failure an acceptance gate can have
+    * (dd_cap_recall_audit measured the retired fixed-16 budget at
+    * pair recall 0.39 at 30× density). Per-drain cost stays bounded:
+    * the cap is a constant of the state GENERATION (4 · mean bucket
+    * size at build time), so a drain's fan-out is capped at a number
+    * fixed before the drain starts — it grows only when the state is
+    * rebuilt denser, which is the accountable trade the audit row
+    * records.
+    *
+    * One-time bucketed CTAS of the accepted set's LSH band buckets
     * (doc_id, band_key), bucketed on band_key — the probe-join key — so
-    * every later increment probes it exchange-free. Same idempotent
-    * catalog-keyed convention as [[prepareDedupState]]. Also persists
-    * the derived verdict-path cap ([[lshCapPath]]) from the freshly
-    * built table, so cap and state can never drift. */
+    * every later increment probes it exchange-free, then the derived cap
+    * ([[graft.ops.PersistedState.LshCap]]) from the freshly built table,
+    * so cap and state can never drift. */
   def prepareLshState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    // "|p99": the tail-aware cap formula change must re-derive caps
-    // persisted by the mean-only r17 generation.
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(s, lshStateTable(d),
-      Seq("band_key"), srcFingerprint = fp) {
+    LshState.bucketed(s, d, Seq("band_key")) {
       val sets = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
         .select(col("doc_id"),
           explode(graft.dedup.Dedup.distinctShingles(col("text"), 2)).as("shingle"))
       graft.dedup.Dedup.bandKeys(sets, "doc_id", 32, 4)
     }
-    graft.ops.ScaleOps.ensureSortedByLazy(s, lshCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
-      tailAwareCapDf(stateBucketSizes(s, lshStateTable(d), "band_key"),
+    LshCap.sorted(s, d, "derived_cap")(
+      tailAwareCapDf(stateBucketSizes(s, LshState.name(d), "band_key"),
         lshBandBucketCap.toLong))
-  }
-
-  private[graft] def simhashStateTable(sfDir: String): String =
-    s"graft_dd_simhashstate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  private[queries] def simhashCapPath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_simhashcap_$tag").toString
-  }
-
-  /** Read the persisted derived Manku-bucket cap (1 row — driver-small
-    * by construction). */
-  private[queries] def simhashDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                         d: String): Int = {
-    prepareSimhashState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, simhashCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")).toInt
   }
 
   /** One-time bucketed CTAS of the accepted set's SimHash Manku keys
     * (doc_id, sig_hi, sig_lo, mkey), bucketed on mkey — the probe-join
     * key — plus the derived verdict-path bucket cap persisted from the
-    * freshly built table ([[lshCapPath]]'s policy applied to the
+    * freshly built table ([[prepareLshState]]'s policy applied to the
     * SimHash family: the cap is a layout statistic, computed once at
     * state-build time, so probes stay O(increment)). */
   def prepareSimhashState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(s, simhashStateTable(d),
-      Seq("mkey"), srcFingerprint = fp)(
+    SimhashState.bucketed(s, d, Seq("mkey"))(
       graft.dedup.Dedup.simhashMankuKeysMd5(
         graft.dedup.Dedup.simhashMd5(
           Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
           "doc_id", "text"), "doc_id"))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, simhashCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
-      tailAwareCapDf(stateBucketSizes(s, simhashStateTable(d), "mkey"), 16L))
+    SimhashCap.sorted(s, d, "derived_cap")(
+      tailAwareCapDf(stateBucketSizes(s, SimhashState.name(d), "mkey"), 16L))
   }
 
   // ---- dq_incremental_profile: maintained per-column profile ----
@@ -4373,30 +4218,13 @@ FROM rw"""
       .groupBy(col("col_name"), col("bucket"))
       .agg(max(expr(rhoCaseSql("_w58"))).as("r"))
 
-  private[queries] def dqProfCountsPath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dq_profcnt_$tag").toString
-  }
-
-  private[queries] def dqProfRegsPath(s: org.apache.spark.sql.SparkSession,
-                                      d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dq_profregs_$tag").toString
-  }
-
   /** dq_incremental_profile's persisted state: per-column count
     * partials + per-(column, bucket) HLL registers over day-1 docs —
     * O(cols) + O(cols x 64) rows no matter the corpus size. */
   def prepareDqProfState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val day1 = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-    graft.ops.ScaleOps.ensureSortedBy(dqProfCounts(day1),
-      dqProfCountsPath(s, d), "col_name", numFiles = 1, srcFingerprint = fp)
-    graft.ops.ScaleOps.ensureSortedBy(dqProfRegisters(day1),
-      dqProfRegsPath(s, d), "col_name", numFiles = 1, srcFingerprint = fp)
+    def day1 = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
+    DqProfCounts.sorted(s, d, "col_name")(dqProfCounts(day1))
+    DqProfRegs.sorted(s, d, "col_name")(dqProfRegisters(day1))
   }
 
   /** dq_incremental_profile oracle: the SAME profile recomputed over
@@ -4427,30 +4255,6 @@ SELECT c.col_name, c.n_rows, c.n_nulls,
 FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
   }
 
-  private[graft] def contamStateTable(sfDir: String): String =
-    s"graft_dd_contamstate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  private[queries] def contamCapPath(s: org.apache.spark.sql.SparkSession,
-                                     d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_contamcap_$tag").toString
-  }
-
-  private[queries] def contamDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                        d: String): Int = {
-    prepareContamState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, contamCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")).toInt
-  }
-
-  private[queries] def contamBloomPath(s: org.apache.spark.sql.SparkSession,
-                                       d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_contambloom_$tag").toString
-  }
-
   /** The persisted suite-shingle Bloom filter (built at state-build time
     * over the CAPPED index — see [[prepareContamState]]), deserialized
     * from its 1-row checkpoint and returned WITH the cap it was built at
@@ -4474,8 +4278,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
   private[queries] def contamStateBloom(s: org.apache.spark.sql.SparkSession,
                                         d: String): (org.apache.spark.util.sketch.BloomFilter, Int) = {
     prepareContamState(s, d)
-    val key = (contamBloomPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+    val key = (ContamBloom.path(s, d), ContamBloom.fingerprint(d))
     val hit = bloomMemo.synchronized(bloomMemo.get(key))
     if (hit != null) hit
     else {
@@ -4487,7 +4290,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
       // both deserialize the same checkpoint).
       val v = (graft.functions.BloomFunctions.fromHex(
           Tables.parquet(s, key._1).head().getString(0)),
-        contamDerivedCap(s, d))
+        ContamCap.readLong(s, d).toInt)
       bloomMemo.synchronized {
         val raced = bloomMemo.get(key)
         if (raced != null) raced else { bloomMemo.put(key, v); v }
@@ -4508,23 +4311,18 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * increment's shingles in their scan stage. */
   def prepareContamState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    // "|v2": the df-column schema change must rebuild a v1 index.
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet") + "|v2"
-    graft.ops.ScaleOps.ensureBucketedDerived(s, contamStateTable(d),
-      Seq("shingle"), srcFingerprint = fp)(
+    ContamState.bucketed(s, d, Seq("shingle"))(
       Tables.documents(s, d).filter(col("doc_id") % 2 === 1)
         .select(col("doc_id").as("test_id"),
           explode(graft.dedup.Dedup.distinctShingles(col("text"), 3)).as("shingle"))
         .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle"))))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, contamCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp)(
-      s.table(contamStateTable(d))
+    ContamCap.sorted(s, d, "derived_cap")(
+      ContamState.table(s, d)
         .agg(greatest(lit(8L),
           expr("4 * count(1) div count(DISTINCT shingle)")).as("derived_cap")))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, contamBloomPath(s, d),
-      "bloom_hex", numFiles = 1, srcFingerprint = fp) {
-      val cap = Tables.parquet(s, contamCapPath(s, d)).head().getLong(0)
-      val keys = s.table(contamStateTable(d))
+    ContamBloom.sorted(s, d, "bloom_hex") {
+      val cap = ContamCap.readLong(s, d)
+      val keys = ContamState.table(s, d)
         .filter(col("df") <= cap).select(col("shingle")).distinct()
       val bf = keys.stat.bloomFilter("shingle", math.max(keys.count(), 1L), 0.01)
       import s.implicits._
@@ -4532,85 +4330,33 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     }
   }
 
-  private[graft] def cosineStateTable(sfDir: String): String =
-    s"graft_dd_cosinestate_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  private[queries] def cosineCapPath(s: org.apache.spark.sql.SparkSession,
-                                     d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_dd_cosinecap_$tag").toString
-  }
-
-  private[queries] def cosineDerivedCap(s: org.apache.spark.sql.SparkSession,
-                                        d: String): Int = {
-    prepareCosineState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, cosineCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")).toInt
-  }
-
   /** One-time bucketed CTAS of the accepted set's sign-LSH bucket rows
     * (vec_id, tb_key), bucketed on tb_key — the probe-join key — plus
-    * the derived verdict-path bucket cap (the lshCapPath policy applied
-    * to the embedding modality). */
+    * the derived verdict-path bucket cap (the [[prepareLshState]] policy
+    * applied to the embedding modality). */
   def prepareCosineState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")
-    graft.ops.ScaleOps.ensureBucketedDerived(s, cosineStateTable(d),
-      Seq("tb_key"), srcFingerprint = fp)(
+    CosineState.bucketed(s, d, Seq("tb_key"))(
       graft.dedup.Dedup.cosineBucketKeys(
         Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
         "vec_id", "embedding"))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, cosineCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|p99")(
-      tailAwareCapDf(stateBucketSizes(s, cosineStateTable(d), "tb_key"), 16L))
-  }
-
-  /** pg_incremental_pagerank's persisted EDGE state table: the accepted
-    * corpus's symmetrized near-dup edges, bucketed AND sorted on `src`
-    * — the probe-join column of every PageRank superstep, so the
-    * |E|-sized frame rides its layout through every refresh round with
-    * no exchange. */
-  private[graft] def pgEdgeStateTable(sfDir: String): String =
-    s"graft_pg_edges_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  /** The triangle closes' pair state: the canonical (src < dst) edge
-    * set, bucketed+sorted on the composite (src, dst) close-join key
-    * (the src-bucketed adjacency cannot serve those joins
-    * exchange-free — requireAllClusterKeysForCoPartition). Derived
-    * from [[pgEdgeStateTable]] at prep time; |E| rows. */
-  private[graft] def pgPairStateTable(sfDir: String): String =
-    s"graft_pg_pairs_${sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  /** pg_incremental_pagerank's persisted RANK state path (one row per
-    * state-graph node, the 6-decimal checkpoint the refresh seeds
-    * from). */
-  private[graft] def rankStatePath(s: org.apache.spark.sql.SparkSession,
-                                   d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_pg_ranks_$tag").toString
-  }
-
-  /** pg_incremental_triangles' persisted COUNT state path (one row per
-    * state-graph node in >= 1 triangle — the additive checkpoint the
-    * delta decomposition merges into). */
-  private[queries] def triangleStatePath(s: org.apache.spark.sql.SparkSession,
-                                         d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_pg_tris_$tag").toString
+    CosineCap.sorted(s, d, "derived_cap")(
+      tailAwareCapDf(stateBucketSizes(s, CosineState.name(d), "tb_key"), 16L))
   }
 
   /** One-time triangle-count checkpoint over EXACTLY the persisted edge
     * state ("count once, maintain forever") — computed from the state
     * table itself so checkpoint and edges can never drift. Shares the
     * edge-state CTAS with pg_incremental_pagerank: one graph, two
-    * maintained signals (rank + local clustering). Idempotent per
-    * (path, documents fingerprint). */
+    * maintained signals (rank + local clustering). The checkpoint is one
+    * row per state-graph node in >= 1 triangle — the additive state the
+    * delta decomposition merges into. The closes' pair state is the
+    * canonical (src < dst) edge set, bucketed+sorted on the composite
+    * (src, dst) close-join key (the src-bucketed adjacency cannot serve
+    * those joins exchange-free — requireAllClusterKeysForCoPartition);
+    * |E| rows. Idempotent per documents generation. */
   def prepareTriangleState(s: org.apache.spark.sql.SparkSession,
                            d: String): Unit = {
     preparePageRankState(s, d)
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
     // The closes' pair state: the canonical id-sorted edge set,
     // bucketed AND sorted on the closes' composite join key (src, dst)
     // — see Triangles.incrementalPerNodeCounts' 4-arg doc for why the
@@ -4618,27 +4364,26 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     // Bucket count derived from the pair state's own size (the layout
     // contract — keys, sort, sizing policy — rides graft.layout, so the
     // old hand-written "|src,dst" fingerprint bump is retired).
-    graft.ops.ScaleOps.ensureBucketedDerived(s, pgPairStateTable(d),
-      Seq("src", "dst"), srcFingerprint = fp)(
-      s.table(pgEdgeStateTable(d)).filter(col("src") < col("dst")))
-    // BY-NAME frame: perNodeCounts is lazy, but keep the lazy variant
-    // for freshness-check symmetry with the rank state.
-    graft.ops.ScaleOps.ensureSortedByLazy(s, triangleStatePath(s, d),
-      "id", numFiles = 1, srcFingerprint = fp)(
+    PgPairs.bucketed(s, d, Seq("src", "dst"))(
+      PgEdges.table(s, d).filter(col("src") < col("dst")))
+    PgTris.sorted(s, d, "id")(
       graft.graph.Triangles.perNodeCounts(
-        s.table(pgEdgeStateTable(d)).filter(col("src") < col("dst"))
+        PgEdges.table(s, d).filter(col("src") < col("dst"))
           .select(col("src").as("id1"), col("dst").as("id2"))))
   }
 
   /** One-time edge-state CTAS + from-uniform rank trajectory over it
     * ("rank once, refresh forever"): the edge state is the bucketed
-    * symmetrized near-dup graph of the accepted docs, and the rank
-    * state is pageRank(3 supersteps) over EXACTLY that table — computed
-    * from the persisted frame, so seed and state can never drift.
-    * Idempotent per (table/path, documents fingerprint). */
+    * symmetrized near-dup graph of the accepted docs, bucketed AND
+    * sorted on `src` — the probe-join column of every PageRank
+    * superstep, so the |E|-sized frame rides its layout through every
+    * refresh round with no exchange. The rank state (one row per
+    * state-graph node, the 6-decimal checkpoint the refresh seeds from)
+    * is pageRank(3 supersteps) over EXACTLY that table — computed from
+    * the persisted frame, so seed and state can never drift. Idempotent
+    * per documents generation. */
   def preparePageRankState(s: org.apache.spark.sql.SparkSession,
                            d: String): Unit = {
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
     // Sorted on BOTH keys (r16 advisory): the triangle closes are
     // sort-merge joins on (src, dst), and a src-only sort spec made
     // every refresh pay two full-state per-partition sorts. The old
@@ -4646,8 +4391,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     // ride the graft.layout property, so ANY layout change rebuilds
     // (stale generations are ops_state_gc's to collect). The bucket
     // count is derived from the edge state's own staged size.
-    val (built, _) = graft.ops.ScaleOps.ensureBucketedDerived(s,
-      pgEdgeStateTable(d), Seq("src"), srcFingerprint = fp,
+    val (built, _) = PgEdges.bucketed(s, d, Seq("src"),
       sortCols = Seq("src", "dst"))(
       graft.graph.PageRank.symmetrize(
         graft.dedup.Dedup.minhashNearDupsMd5(
@@ -4659,15 +4403,14 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     // the claim is checked ONCE per fingerprint, where the table is
     // written (see PageRank.assertNoDangles).
     if (built)
-      graft.graph.PageRank.assertNoDangles(s.table(pgEdgeStateTable(d)),
-        s"edge state ${pgEdgeStateTable(d)}")
+      graft.graph.PageRank.assertNoDangles(PgEdges.table(s, d),
+        s"edge state ${PgEdges.name(d)}")
     // symmetric = true: the edge table IS a symmetrize() CTAS (just
     // above, dst ⊆ src asserted at build), so the dangle guard is
     // waived by construction — the same waiver pg_pagerank takes on its
     // inline symmetrize output.
-    val builtRank = graft.ops.ScaleOps.ensureSortedByLazy(s, rankStatePath(s, d),
-      "id", numFiles = 1, srcFingerprint = fp)(
-      graft.graph.PageRank.pageRank(s.table(pgEdgeStateTable(d)),
+    val builtRank = PgRanks.sorted(s, d, "id")(
+      graft.graph.PageRank.pageRank(PgEdges.table(s, d),
         iters = 3, damping = 0.85, roundTo = 6, symmetric = true))
     // pageRank persisted the BARE edge-table scan for its supersteps
     // ("pagerank-edges"). Build-scoped only: left in the CacheManager it
@@ -4689,9 +4432,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * anti-join forever"); the query also self-prepares for standalone
     * runs. */
   def prepareDedupState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureBucketedDerived(s, dedupStateTable(d),
-      Seq("content_hash"),
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))(
+    DedupState.bucketed(s, d, Seq("content_hash"))(
       Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
         .select(md5(col("text")).as("content_hash")).distinct())
 }

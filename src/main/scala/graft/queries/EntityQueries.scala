@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.EntityResolution
+import graft.ops.PersistedState._
 
 /** Entity resolution / record linkage (§2.13): a dirty customer feed —
   * every entity arrives twice, the second copy case-drifted, typo'd or
@@ -171,43 +172,24 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
       .map(bk => k.select(col("rid"), bk.as("bkey")))
       .reduce(_.unionByName(_))
 
-  private[graft] def erKeyStateTable(d: String): String =
-    s"graft_er_keys_${d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")}"
-
-  private[queries] def erClusterStatePath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_cc_$tag").toString
-  }
-
   /** Full-corpus cluster map, persisted once per customer fingerprint
     * ("cluster once, elect forever"): er_survivorship's input — its
     * own surface is the ELECTION window, not the clustering, which
     * er_clusters exercises live and er_incremental_clusters maintains
     * incrementally. */
-  private[queries] def erFullClusterPath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_cc_full_$tag").toString
-  }
+  def prepareErFullClusters(s: SparkSession, d: String): Unit =
+    ErFullClusters.sorted(s, d, "node")(
+      graft.dedup.Dedup.connectedComponents(matches(s, d), ("rid1", "rid2")))
 
   /** er_incremental_survivorship's persisted CANONICAL map over the
     * day-1 cluster state — one (cluster_id, canonical_rid,
     * canonical_name) row per state cluster, elected once at state-build
     * time; increments re-elect only the clusters they dirty. */
-  private[queries] def erSurvStatePath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_surv_$tag").toString
-  }
-
   def prepareErSurvState(s: SparkSession, d: String): Unit = {
     prepareErState(s, d)
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erSurvStatePath(s, d),
-      "cluster_id", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"))(
+    ErSurvivors.sorted(s, d, "cluster_id")(
       EntityResolution.survivorship(
-        Tables.parquet(s, erClusterStatePath(s, d))
+        ErClusters.read(s, d)
           .join(keyedRecords(s, d).select(col("rid").as("node"), col("name")),
             Seq("node"))
           .select(col("cluster_id"), col("node").as("rid"), col("name")),
@@ -217,56 +199,30 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
           col("name").as("canonical_name")))
   }
 
-  def prepareErFullClusters(s: SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erFullClusterPath(s, d),
-      "node", numFiles = 1,
-      srcFingerprint = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"))(
-      graft.dedup.Dedup.connectedComponents(matches(s, d), ("rid1", "rid2")))
-
-  private[queries] def erCapPath(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_er_cap_$tag").toString
-  }
-
-  /** The persisted derived block cap — greatest(floor, mult · mean state
-    * block size), a layout statistic of the key state, computed ONCE at
-    * state-build time and read back O(1) per probe (the LSH/SimHash/
-    * cosine families' cap convention; previously st_er_probe re-derived
-    * it over the whole state per run). */
-  private[queries] def erStateCap(s: SparkSession, d: String): Long = {
-    prepareErState(s, d)
-    graft.ops.ScaleOps.readStatLong(s, erCapPath(s, d),
-      graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"))
-  }
-
   /** One-time bucketed CTAS of the ACCEPTED entities' blocking keys
     * (rid, bkey, bsz — bucketed on bkey, the probe-join column; bsz is
     * the block size, windowed ONCE here so cap filters are scan
     * predicates instead of per-probe windows) and one-time clustering
     * of their match graph; each increment then probes/merges without
     * ever re-blocking or re-clustering the stock. The derived block cap
-    * persists beside the state as a 1-row checkpoint ([[erStateCap]]).
-    * Same idempotent fingerprint convention as the dedup states. */
+    * persists beside the state as a 1-row checkpoint: greatest(floor,
+    * mult · mean state block size), a layout statistic of the key state
+    * read back O(1) per probe (the LSH/SimHash/cosine families' cap
+    * convention). Idempotent per customer generation. */
   def prepareErState(s: SparkSession, d: String): Unit = {
-    val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")
     // Built only when a layout below is stale: fresh states cost lookups.
     lazy val stateK = keyedRecords(s, d).filter(!incPred)
-    // "|v2": the bsz-column schema change must rebuild a v1 key state.
     // Bucket count derived from the key state's own staged size
     // (ScaleOps.ensureBucketedDerived — the verdict-17 layout policy).
-    graft.ops.ScaleOps.ensureBucketedDerived(s, erKeyStateTable(d),
-      Seq("bkey"), srcFingerprint = fp + "|v2")(
+    ErKeys.bucketed(s, d, Seq("bkey"))(
       passKeyRows(stateK).withColumn("bsz", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("bkey"))))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erCapPath(s, d),
-      "derived_cap", numFiles = 1, srcFingerprint = fp + "|v2")(
-      s.table(erKeyStateTable(d))
+    ErCap.sorted(s, d, "derived_cap")(
+      ErKeys.table(s, d)
         .agg(greatest(lit(erBlockCap.toLong),
           expr(s"$erCapMeanMult * count(1) div count(DISTINCT bkey)"))
           .as("derived_cap")))
-    graft.ops.ScaleOps.ensureSortedByLazy(s, erClusterStatePath(s, d),
-      "node", numFiles = 1, srcFingerprint = fp)(
+    ErClusters.sorted(s, d, "node")(
       graft.dedup.Dedup.connectedComponents(
         EntityResolution.verifyByEditDistance(
           EntityResolution.blockedCandidates(stateK, "rid",
@@ -285,7 +241,7 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
     // one-time full-cluster CTAS — each re-ran the blocking join +
     // Levenshtein verify and re-analyzed its tree. One execution per
     // session, every consumer reads a LogicalRDD leaf.
-    graft.ops.CacheOnce.swapTruncated("er-matches-verified:" +
+    graft.ops.CacheOnce.swapTruncated("er-matches-verified",
       graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
       EntityResolution.verifyByEditDistance(cands, k, "rid", "norm",
         exactCols = Seq("nation"), maxDist = 1))
@@ -360,11 +316,11 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // Watch registered BEFORE the truncation below: the er-inc-updated
       // materialization executes the key-state probe as an EAGER job at
       // plan build (survivorship's precedent).
-      graft.plans.PlanChecks.watchFinalPlans(s, erKeyStateTable(d), "ER key state")
+      graft.plans.PlanChecks.watchFinalPlans(s, ErKeys.name(d), "ER key state")
       val k = keyedRecords(s, d)
       val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
         passKeyRows(k.filter(incPred)))
-      val crossCands = s.table(erKeyStateTable(d)).hint("merge")
+      val crossCands = ErKeys.table(s, d).hint("merge")
         .select(col("rid").as("rid1"), col("bkey"))
         .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
         .select("rid1", "rid2").distinct()
@@ -380,10 +336,10 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // Same (name, plan) as er_incremental_survivorship's merged map:
       // one probe + verify + merge per session no matter which of the
       // two runs first, and the returned frame is one LogicalRDD leaf.
-      graft.ops.CacheOnce.swapTruncated("er-inc-updated:" +
+      graft.ops.CacheOnce.swapTruncated("er-inc-updated",
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          Tables.parquet(s, erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
+          ErClusters.read(s, d), pairs, ("rid1", "rid2"),
           memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -405,12 +361,12 @@ FROM comp GROUP BY 1""") { (s, d) =>
       prepareErState(s, d)
       // Watch registered BEFORE the truncation below (survivorship's
       // precedent: the materialization executes the probe eagerly).
-      graft.plans.PlanChecks.watchFinalPlans(s, erKeyStateTable(d), "ER key state")
+      graft.plans.PlanChecks.watchFinalPlans(s, ErKeys.name(d), "ER key state")
       val k = keyedRecords(s, d)
       val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
         passKeyRows(k.filter(incPred)))
-      val crossCands = s.table(erKeyStateTable(d)).hint("merge")
-        .filter(col("bsz") <= erStateCap(s, d))
+      val crossCands = ErKeys.table(s, d).hint("merge")
+        .filter(col("bsz") <= ErCap.readLong(s, d))
         .select(col("rid").as("rid1"), col("bkey"))
         .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
         .select("rid1", "rid2").distinct()
@@ -424,10 +380,10 @@ FROM comp GROUP BY 1""") { (s, d) =>
       graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
         crossCands.queryExecution.executedPlan, "ER key state")
       // Truncated merged map (capped feed — its own memo entry).
-      graft.ops.CacheOnce.swapTruncated("er-inc-updated-capped:" +
+      graft.ops.CacheOnce.swapTruncated("er-inc-updated-capped",
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          Tables.parquet(s, erClusterStatePath(s, d)), pairs, ("rid1", "rid2"),
+          ErClusters.read(s, d), pairs, ("rid1", "rid2"),
           memoTag = ":er-capped:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -468,8 +424,8 @@ FROM stc JOIN inc ON stc.bkey = inc.bkey""") { (s, d) =>
       // Cap read from its state-build checkpoint (O(1)); the block sizes
       // were windowed into the state at CTAS — nothing state-sized is
       // recomputed per probe. Same value the in-plan derivation produced.
-      graft.streaming.ErProbe.candidatesOnce(s, d, erKeyStateTable(d),
-        persistedCap = Some(("bsz", erStateCap(s, d))))
+      graft.streaming.ErProbe.candidatesOnce(s, d, ErKeys.name(d),
+        persistedCap = Some(("bsz", ErCap.readLong(s, d))))
     },
 
     // Survivorship: per entity cluster, elect the canonical record by a
@@ -485,7 +441,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
   FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""") { (s, d) =>
       prepareErFullClusters(s, d)
       val k = keyedRecords(s, d)
-      val clustered = Tables.parquet(s, erFullClusterPath(s, d))
+      val clustered = ErFullClusters.read(s, d)
         .join(k.select(col("rid").as("node"), col("name")), Seq("node"))
         .select(col("cluster_id"), col("node").as("rid"), col("name"))
       EntityResolution.survivorship(clustered, "rid", "cluster_id",
@@ -521,11 +477,11 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       // plan build, so the watch must already be live to cover it
       // (standalone runs don't get er_incremental_clusters' own
       // registration).
-      graft.plans.PlanChecks.watchFinalPlans(s, erKeyStateTable(d), "ER key state")
+      graft.plans.PlanChecks.watchFinalPlans(s, ErKeys.name(d), "ER key state")
       val k = keyedRecords(s, d)
       val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
         passKeyRows(k.filter(incPred)))
-      val crossCands = s.table(erKeyStateTable(d)).hint("merge")
+      val crossCands = ErKeys.table(s, d).hint("merge")
         .select(col("rid").as("rid1"), col("bkey"))
         .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
         .select("rid1", "rid2").distinct()
@@ -536,7 +492,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       val pairs = EntityResolution.verifyByEditDistance(
         crossCands.unionByName(selfCands).distinct(),
         k, "rid", "norm", Seq("nation"), maxDist = 1)
-      val state = Tables.parquet(s, erClusterStatePath(s, d))
+      val state = ErClusters.read(s, d)
       // shared key with er_incremental_clusters: one merged map per
       // session no matter which of the two queries runs first.
       // TRUNCATED: the merged map is referenced by changed (x1), dirty
@@ -545,7 +501,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       // ~6x in the final election plan; the map is state-sized, the
       // same class the merge already writes back as the new state in
       // production.
-      val updated = graft.ops.CacheOnce.swapTruncated("er-inc-updated:" +
+      val updated = graft.ops.CacheOnce.swapTruncated("er-inc-updated",
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(state, pairs, ("rid1", "rid2"),
           memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
@@ -556,7 +512,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
         .union(changed.filter(col("_old").isNotNull)
           .select(col("_old").as("cluster_id")))
         .distinct()
-      val survState = Tables.parquet(s, erSurvStatePath(s, d))
+      val survState = ErSurvivors.read(s, d)
       val untouched = survState
         .join(broadcast(dirty), Seq("cluster_id"), "left_anti")
       val reElected = EntityResolution.survivorship(

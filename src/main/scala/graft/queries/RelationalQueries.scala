@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.ColumnOps
+import graft.ops.PersistedState.IvmScd2
 
 /** Scans, filters, scalar functions and aggregations (SURVEY.md §2.3,
   * §2.4, §2.6, §2.8) exercised over the TPC-H-ish testdata. Query names
@@ -56,13 +57,6 @@ object RelationalQueries {
   c_mktsegment FROM v2 WHERE c_custkey % 19 <> 4
   UNION ALL SELECT c_custkey + 2000000000000, c_acctbal, c_mktsegment FROM v2 WHERE c_custkey % 11 = 6)"""
 
-  private[queries] def scd2AggStatePath(s: org.apache.spark.sql.SparkSession,
-                                        d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_ivm_scd2_$tag").toString
-  }
-
   /** Balance band — the grouping attribute of the composed view. A
     * DERIVED attribute of the TRACKED column c_acctbal, so dimension
     * updates really do MOVE facts between groups (v2's +100 bump always
@@ -91,23 +85,16 @@ object RelationalQueries {
 
   /** ivm_scd2_agg's persisted day-1 state: the composed aggregate over
     * the OLD facts and the v2-era frontier. Fingerprinted on BOTH
-    * sources (the state derives from orders and customer alike). */
+    * sources (the state derives from orders and customer alike) plus a
+    * derivation-format token ([[graft.ops.PersistedState.IvmScd2]]):
+    * without it an old-offset state generation matches the unchanged
+    * source files and serves stale (how the r17 30× re-verify first
+    * caught ivm_scd2_agg mismatching: the r16 sweep's state survived in
+    * the shared warehouse). */
   def prepareScd2AggState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    graft.ops.ScaleOps.ensureSortedBy(
+    IvmScd2.sorted(s, d, "bal_band")(
       scd2AggPartial(factCents(s, d).filter(col("o_orderkey") % 3 =!= 2),
-        frontierBands(h12(s, d))),
-      scd2AggStatePath(s, d), "bal_band", numFiles = 1,
-      // ":synthoff=1e12" is a DERIVATION-format token, not a source
-      // fingerprint: the state aggregates over the v2 frontier, whose
-      // synthetic-insert offsets changed in r17 (collision fix above)
-      // — without the token an old-offset state generation matches the
-      // unchanged source files and serves stale (exactly how the r17
-      // 30× re-verify first caught ivm_scd2_agg mismatching: the r16
-      // sweep's state survived in the shared warehouse).
-      srcFingerprint =
-        graft.ops.ScaleOps.fileFingerprint(s"$d/orders.parquet") + "|" +
-          graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet") +
-          ":synthoff=1e12")
+        frontierBands(h12(s, d))))
 
   private val scd2V12Ctes: String =
     """v1 AS (SELECT c_custkey, c_acctbal, c_mktsegment FROM customer),
@@ -517,17 +504,13 @@ UNION ALL SELECT nk, nb, nm, CAST(2 AS BIGINT), CAST(NULL AS BIGINT), true
     Q("st_scd2_apply", scd2ApplyOracleSql) { (s, d) =>
       val keys = Seq("c_custkey")
       val tracked = Seq("c_acctbal", "c_mktsegment")
-      val tag = "scd2_feed_" + d.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-      // Feed-format version v2 (r17): the v2/v3 snapshot derivations'
-      // synthetic-insert offsets moved to 10^12 (30× key-collision
-      // fix), so histories applied under the old feed must rebuild.
-      val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet") +
-        ":v2v3feed:v2"
       val init = customerV1(s, d)
         .withColumn("valid_from", lit(1L))
         .withColumn("valid_to", lit(null).cast("long"))
         .withColumn("is_current", lit(true))
-      graft.streaming.ScdApplyStream.applyOnce(s, tag, fp, init, initVer = 1L,
+      graft.streaming.ScdApplyStream.applyOnce(s,
+        graft.ops.PersistedState.StageScd2Feed, graft.ops.PersistedState.StScd2Feed,
+        d, init, initVer = 1L,
         Seq(2L -> customerV2(s, d), 3L -> customerV3(s, d)),
         keys, tracked,
         "c_custkey BIGINT, c_acctbal DOUBLE, c_mktsegment STRING")
@@ -598,7 +581,7 @@ SELECT CAST(floor(v3.c_acctbal / 100) AS BIGINT) AS bal_band,
 FROM f JOIN v3 ON f.o_custkey = v3.c_custkey
 GROUP BY 1""") { (s, d) =>
       prepareScd2AggState(s, d)
-      val state = Tables.parquet(s, scd2AggStatePath(s, d))
+      val state = IvmScd2.read(s, d)
       val keys = Seq("c_custkey")
       val tracked = Seq("c_acctbal", "c_mktsegment")
       // TRUNCATED (r18): the v1→v2 merge history is referenced by BOTH
@@ -608,7 +591,7 @@ GROUP BY 1""") { (s, d) =>
       // tasks). One LogicalRDD leaf instead; the REQUIREd 2-join delta
       // shape still sees orders⋈customer through customerV3 (dimNew)
       // and the dimOld⋈dimNew delta, which keep their customer scans.
-      val h = graft.ops.CacheOnce.swapTruncated("ivm-scd2-h12:" +
+      val h = graft.ops.CacheOnce.swapTruncated("ivm-scd2-h12",
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"), h12(s, d))
       val h123 = graft.ops.ScdOps.scd2Apply(h, customerV3(s, d), keys, tracked, newVer = 3L)
       val dimOld = frontierBands(h)

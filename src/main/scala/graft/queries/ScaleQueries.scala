@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.ScaleOps
+import graft.ops.PersistedState._
 
 /** Physical-layout scale patterns registered as bench/oracle queries —
   * the claims SCALE.md makes about shuffle shape, asserted inside the
@@ -194,8 +195,8 @@ GROUP BY 1""") { (s, d) =>
       ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       ss.conf.set("spark.sql.adaptive.enabled", "false")
       prepare(ss, d)
-      val (tOrders, tLineitem) = bucketTables(d)
-      val joined = ScaleOps.bucketedJoin(ss, tOrders, tLineitem, "o_orderkey")
+      val joined = ScaleOps.bucketedJoin(ss, OrdersBuckets.name(d),
+        LineitemBuckets.name(d), "o_orderkey")
       val exchanges = joined.queryExecution.executedPlan.collect {
         case e: ShuffleExchangeLike => e
       }
@@ -220,7 +221,7 @@ GROUP BY 1""") { (s, d) =>
         "round(sum(value), 2) AS total_value FROM events " +
         "WHERE CAST(ts AS DATE) = DATE '2024-01-15' GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val q = Tables.parquet(s, partitionedEventsPath(s, d))
+      val q = EventsPartitioned.read(s, d)
         .filter(col("event_date") === lit("2024-01-15").cast("date"))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
@@ -246,7 +247,7 @@ GROUP BY 1""") { (s, d) =>
         "round(sum(value), 2) AS total_value FROM events " +
         "WHERE user_id BETWEEN 100 AND 119 GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val path = sortedEventsPath(s, d)
+      val path = EventsSorted.path(s, d)
       val ranges = ScaleOps.rowGroupRangesMemo(path, "user_id")
       val overlapping = ranges.count { case (lo, hi) => hi >= 100L && lo <= 119L }
       require(ranges.nonEmpty && overlapping * 3 <= ranges.size,
@@ -279,7 +280,7 @@ GROUP BY 1""") { (s, d) =>
         "FROM events) WHERE user_id BETWEEN 40 AND 79 AND doy BETWEEN 8 AND 14 " +
         "GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val path = zorderedEventsPath(s, d)
+      val path = EventsZOrdered.path(s, d)
       val uRanges = ScaleOps.rowGroupRangesMemo(path, "user_id")
       val dRanges = ScaleOps.rowGroupRangesMemo(path, "doy")
       val overlap2d = uRanges.zip(dRanges).count { case ((ul, uh), (dl, dh)) =>
@@ -311,7 +312,7 @@ GROUP BY 1""") { (s, d) =>
         "FROM events) WHERE user_id BETWEEN 100 AND 139 AND doy BETWEEN 20 AND 26 " +
         "GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val path = hilbertEventsPath(s, d)
+      val path = EventsHilbert.path(s, d)
       val uRanges = ScaleOps.rowGroupRangesMemo(path, "user_id")
       val dRanges = ScaleOps.rowGroupRangesMemo(path, "doy")
       val overlap2d = uRanges.zip(dRanges).count { case ((ul, uh), (dl, dh)) =>
@@ -350,7 +351,7 @@ GROUP BY 1""") { (s, d) =>
         "FROM events) WHERE user_id BETWEEN 60 AND 99 AND doy BETWEEN 10 AND 16 " +
         "GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val path = hilbertEventsPath(s, d)
+      val path = EventsHilbert.path(s, d)
       val rs = graft.functions.HilbertRanges.ranges(
         60, 99, 10, 16, order = 16, maxRanges = 32)
       val hvStats = ScaleOps.rowGroupRangesMemo(path, "hv")
@@ -390,7 +391,7 @@ GROUP BY 1""") { (s, d) =>
         "FROM events) WHERE user_id BETWEEN 30 AND 69 AND doy BETWEEN 12 AND 18 " +
         "AND hod BETWEEN 6 AND 17 GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val path = hilbert3EventsPath(s, d)
+      val path = EventsHilbert3.path(s, d)
       val rs = graft.functions.HilbertRanges.ranges3(
         30, 69, 12, 18, 6, 17, order = 14, maxRanges = 32)
       val hvStats = ScaleOps.rowGroupRangesMemo(path, "hv3")
@@ -429,11 +430,10 @@ GROUP BY 1""") { (s, d) =>
         "round(sum(value), 2) AS total_value FROM events " +
         "WHERE user_id NOT BETWEEN 100 AND 119 GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val src = sortedEventsPath(s, d)
-      val dst = warehousePath(s, d, "sf")
+      val src = EventsSorted.path(s, d)
+      val dst = EventsForgotten.path(s, d)
       val (rewritten, copied) = ScaleOps.ensureSurgicalDelete(
-        s, src, dst, "user_id",
-        srcFingerprint = ScaleOps.fileFingerprint(s"$d/events.parquet"))(
+        s, src, dst, "user_id", srcFingerprint = EventsForgotten.fingerprint(d))(
         (100L to 119L).toSeq)
       require(rewritten > 0 && rewritten * 3 <= rewritten + copied,
         s"surgical delete not surgical: $rewritten of ${rewritten + copied} " +
@@ -458,13 +458,13 @@ GROUP BY 1""") { (s, d) =>
       "SELECT event_type, CAST(count(*) AS BIGINT) AS n, " +
         "round(sum(value), 2) AS total_value FROM events GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val nFrag = ScaleOps.partFileCount(s, fragmentedEventsPath(s, d))
-      val nComp = ScaleOps.partFileCount(s, compactedEventsPath(s, d))
+      val nFrag = ScaleOps.partFileCount(s, EventsFragmented.path(s, d))
+      val nComp = ScaleOps.partFileCount(s, EventsCompacted.path(s, d))
       require(nFrag >= 32,
         s"fragmented fixture lost its fragmentation: $nFrag files")
       require(nComp >= 1 && nComp <= 4,
         s"compaction regressed: $nComp part files after rewrite")
-      Tables.parquet(s, compactedEventsPath(s, d)).groupBy("event_type")
+      EventsCompacted.read(s, d).groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
     },
 
@@ -480,8 +480,8 @@ GROUP BY 1""") { (s, d) =>
       "SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM events " +
         "WHERE date_part('day', CAST(ts AS DATE)) <= 7 GROUP BY 1") { (s, d) =>
       prepare(s, d)
-      val fact = Tables.parquet(s, partitionedEventsPath(s, d))
-      val dim = Tables.parquet(s, datesDimPath(s, d))
+      val fact = EventsPartitioned.read(s, d)
+      val dim = DatesDim.read(s, d)
         .filter(col("day_of_month") <= 7)
       val q = fact.join(dim, Seq("event_date"))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
@@ -520,135 +520,63 @@ GROUP BY 1""") { (s, d) =>
         .agg(count(lit(1)).as("n"), sum(col("payload")).as("total"))
     })
 
-  /** Bucketed-table names, keyed by source dir so a warmup run at one SF
-    * can never satisfy (or poison) the timed run at another. */
-  private def bucketTables(sfDir: String): (String, String) = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    (s"graft_b_orders_$tag", s"graft_b_lineitem_$tag")
-  }
-
-  /** One warehouse-dir layout path per (prefix, sfDir) — keyed by
-    * source dir so a warmup run at one SF can never satisfy (or poison)
-    * the timed run at another. */
-  private def warehousePath(spark: org.apache.spark.sql.SparkSession,
-                            sfDir: String, prefix: String): String = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    new java.io.File(wh, s"graft_${prefix}_events_$tag").toString
-  }
-
-  /** Date-partitioned events layout path for `sfDir`. */
-  private def partitionedEventsPath(spark: org.apache.spark.sql.SparkSession,
-                                    sfDir: String): String =
-    warehousePath(spark, sfDir, "p")
-
-  /** Range-clustered events layout path for `sfDir`. */
-  private def sortedEventsPath(spark: org.apache.spark.sql.SparkSession,
-                               sfDir: String): String =
-    warehousePath(spark, sfDir, "s")
-
-  /** Z-ordered events layout path for `sfDir`. */
-  private def zorderedEventsPath(spark: org.apache.spark.sql.SparkSession,
-                                 sfDir: String): String =
-    warehousePath(spark, sfDir, "z")
-
-  /** Dates-dimension path for `sfDir` (distinct event dates + calendar
-    * attributes — the dim side of the DPP join). */
-  private def datesDimPath(spark: org.apache.spark.sql.SparkSession,
-                           sfDir: String): String =
-    warehousePath(spark, sfDir, "d")
-
   /** One-time physical-layout prep for `sfDir`: write both join sides
     * bucketed+sorted on the key and the date-partitioned events tree
     * (no-ops when they already exist). Bench calls this before timing
-    * so the registered queries measure the steady state, not the CTAS. */
+    * so the registered queries measure the steady state, not the CTAS.
+    * Every layout is a [[graft.ops.PersistedState]] keyed by source dir,
+    * so a warmup run at one SF can never satisfy (or poison) the timed
+    * run at another, and takes its frame by name: when every layout is
+    * fresh this builds no frame. */
   def prepare(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    // One fingerprint lookup for the shared source file (a FileSystem
-    // RPC on remote stores), shared by every events-derived layout.
-    val eventsFp = ScaleOps.fileFingerprint(s"$sfDir/events.parquet")
-    val (tOrders, tLineitem) = bucketTables(sfDir)
     // Co-located join pair: BOTH sides must carry the SAME bucket
     // count or the exchange-free bucketedJoin degrades to a one-sided
     // shuffle. Derive ONE count from the LARGER side (lineitem) and
     // force it onto orders, with the count folded into orders' source
     // fingerprint so a lineitem regrowth that moves the derived count
     // rebuilds the orders layout in lockstep.
-    val (_, nb) = ScaleOps.ensureBucketedDerived(spark, tLineitem,
-      Seq("o_orderkey"),
-      srcFingerprint = ScaleOps.fileFingerprint(s"$sfDir/lineitem.parquet"))(
+    val (_, nb) = LineitemBuckets.bucketed(spark, sfDir, Seq("o_orderkey"))(
       Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")))
-    ScaleOps.ensureBucketed(spark, tOrders, "o_orderkey", nb,
-      srcFingerprint = ScaleOps.fileFingerprint(s"$sfDir/orders.parquet") + s"|nb=$nb")(
+    ScaleOps.ensureBucketed(spark, OrdersBuckets.name(sfDir), "o_orderkey", nb,
+      srcFingerprint = OrdersBuckets.fingerprint(sfDir, s"|nb=$nb"))(
       Tables.orders(spark, sfDir).select("o_orderkey", "o_orderstatus"))
-    ScaleOps.ensurePartitioned(
+    EventsPartitioned.partitioned(spark, sfDir, "event_date")(
       Tables.events(spark, sfDir)
         .select(col("event_id"), col("event_type"), col("value"),
-          to_date(col("ts")).as("event_date")),
-      partitionedEventsPath(spark, sfDir), "event_date", eventsFp)
-    ScaleOps.ensureSortedBy(
-      Tables.events(spark, sfDir).select("user_id", "event_type", "value"),
-      sortedEventsPath(spark, sfDir), "user_id", numFiles = 8,
-      srcFingerprint = eventsFp)
-    ScaleOps.ensureSortedBy(
+          to_date(col("ts")).as("event_date")))
+    EventsSorted.sorted(spark, sfDir, "user_id", numFiles = 8)(
+      Tables.events(spark, sfDir).select("user_id", "event_type", "value"))
+    DatesDim.sorted(spark, sfDir, "event_date")(
       Tables.events(spark, sfDir)
         .select(to_date(col("ts")).as("event_date")).distinct()
-        .withColumn("day_of_month", dayofmonth(col("event_date"))),
-      datesDimPath(spark, sfDir), "event_date", numFiles = 1,
-      srcFingerprint = eventsFp)
-    ScaleOps.ensureSortedBy(
+        .withColumn("day_of_month", dayofmonth(col("event_date"))))
+    EventsZOrdered.sorted(spark, sfDir, "zv", numFiles = 8)(
       Tables.events(spark, sfDir).select(
         col("user_id"), dayofyear(col("ts")).cast("long").as("doy"),
         col("event_type"), col("value"))
-        .withColumn("zv", graft.functions.ZOrderFunctions.morton2(col("user_id"), col("doy"))),
-      zorderedEventsPath(spark, sfDir), "zv", numFiles = 8,
-      srcFingerprint = eventsFp)
-    ScaleOps.ensureSortedBy(
+        .withColumn("zv", graft.functions.ZOrderFunctions.morton2(col("user_id"), col("doy"))))
+    // Small parquet block size so the sf-sized fixture has
+    // production-like row-group MULTIPLICITY (a 100 TB table has
+    // thousands of 128 MB groups; 8 one-group files would make every
+    // skipping claim granularity-bound rather than layout-bound).
+    val smallGroups = Map("parquet.block.size" -> "16384")
+    EventsHilbert.sorted(spark, sfDir, "hv", numFiles = 8, smallGroups)(
       Tables.events(spark, sfDir).select(
         col("user_id"), dayofyear(col("ts")).cast("long").as("doy"),
         col("event_type"), col("value"))
-        .withColumn("hv", graft.functions.HilbertFunctions.hilbert2(col("user_id"), col("doy"))),
-      hilbertEventsPath(spark, sfDir), "hv", numFiles = 8,
-      srcFingerprint = eventsFp,
-      // Small parquet block size so the sf-sized fixture has
-      // production-like row-group MULTIPLICITY (a 100 TB table has
-      // thousands of 128 MB groups; 8 one-group files would make every
-      // skipping claim granularity-bound rather than layout-bound).
-      writeOptions = Map("parquet.block.size" -> "16384"))
-    ScaleOps.ensureSortedBy(
+        .withColumn("hv", graft.functions.HilbertFunctions.hilbert2(col("user_id"), col("doy"))))
+    EventsHilbert3.sorted(spark, sfDir, "hv3", numFiles = 8, smallGroups)(
       Tables.events(spark, sfDir).select(
         col("user_id"), dayofyear(col("ts")).cast("long").as("doy"),
         hour(col("ts")).cast("long").as("hod"),
         col("event_type"), col("value"))
         .withColumn("hv3", graft.functions.HilbertFunctions.hilbert3(
-          col("user_id"), col("doy"), col("hod"))),
-      hilbert3EventsPath(spark, sfDir), "hv3", numFiles = 8,
-      srcFingerprint = eventsFp,
-      writeOptions = Map("parquet.block.size" -> "16384"))
-    ScaleOps.ensureFragmented(
-      Tables.events(spark, sfDir).select("event_id", "event_type", "value"),
-      fragmentedEventsPath(spark, sfDir), 64, eventsFp)
-    ScaleOps.compact(spark, fragmentedEventsPath(spark, sfDir),
-      compactedEventsPath(spark, sfDir), targetFiles = 4, eventsFp)
+          col("user_id"), col("doy"), col("hod"))))
+    EventsFragmented.fragmented(spark, sfDir, 64)(
+      Tables.events(spark, sfDir).select("event_id", "event_type", "value"))
+    ScaleOps.compact(spark, EventsFragmented.path(spark, sfDir),
+      EventsCompacted.path(spark, sfDir), targetFiles = 4,
+      EventsCompacted.fingerprint(sfDir))
   }
-
-  /** Hilbert-ordered events layout path for `sfDir`. */
-  private def hilbertEventsPath(spark: org.apache.spark.sql.SparkSession,
-                                sfDir: String): String =
-    warehousePath(spark, sfDir, "h")
-
-  /** 3-D Hilbert-ordered events layout path for `sfDir`. */
-  private def hilbert3EventsPath(spark: org.apache.spark.sql.SparkSession,
-                                 sfDir: String): String =
-    warehousePath(spark, sfDir, "h3")
-
-  /** Deliberately-fragmented events copy (the sc8 "before"). */
-  private def fragmentedEventsPath(spark: org.apache.spark.sql.SparkSession,
-                                   sfDir: String): String =
-    warehousePath(spark, sfDir, "f")
-
-  /** Compacted rewrite of the fragmented copy (the sc8 "after"). */
-  private def compactedEventsPath(spark: org.apache.spark.sql.SparkSession,
-                                  sfDir: String): String =
-    warehousePath(spark, sfDir, "c")
 }

@@ -37,7 +37,7 @@ import dev.ludovic.netlib.lapack.LAPACK
   * kernel (VectorBLAS under `--add-modules=jdk.incubator.vector`, the
   * SIMD tier Spark itself uses on JDK 16+; Java11BLAS otherwise), so
   * thread-level and SIMD-level parallelism compose. Measured on this
-  * host via [[EigBench]]: the 9,366-point PCNM eigendecomposition drops
+  * host: the 9,366-point PCNM eigendecomposition drops
   * from ~25 min (breeze/F2J dsyev) to well inside the reference's 2x
   * target — SCALE.md records the parity run.
   */

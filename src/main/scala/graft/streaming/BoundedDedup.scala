@@ -55,10 +55,9 @@ object BoundedDedup {
     val latest = ev.withColumn("_rn", row_number().over(desc))
       .filter(col("_rn") === 1).drop("_rn")
     val spacer = ev.filter(lit(false))
-    val (tag, fp) = LateArrivals.eventsTag("bounded_dedup", sfDir,
-      s"$delay:vb50:3batches:v1")
-    val staged = LateArrivals.stageBatchesCached(tag, fp,
-      Seq(earliest, spacer, latest))
+    val staged = LateArrivals.stageBatchesCached(spark,
+      graft.ops.PersistedState.StageBoundedDedup, sfDir,
+      s":$delay:vb50:3batches:v1")(Seq(earliest, spacer, latest))
 
     val ss = LshProbe.streamSession(spark)
     val stream = ss.readStream

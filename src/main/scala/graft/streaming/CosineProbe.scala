@@ -31,7 +31,7 @@ object CosineProbe {
                    stateVecs: DataFrame, threshold: Double,
                    bucketCap: Option[Int] = None): DataFrame = {
     import graft.similarity.Similarity
-    GateLineage.drainDistinct(spark, "cosine_probe", sfDir, "embeddings.parquet",
+    GateLineage.drainDistinct(spark, graft.ops.PersistedState.StCosineProbe, sfDir,
       stateTable, s"v1;t=$threshold;cap=${bucketCap.getOrElse("none")}",
       org.apache.spark.sql.types.StructType.fromDDL(
         "state_id BIGINT, inc_id BIGINT, cosine DOUBLE")) { ss =>

@@ -39,7 +39,7 @@ object ErProbe {
     * capped. `persistedCap` = (bszCol, cap) is the O(1) shape of the
     * same bound: the block size was windowed INTO the state at build
     * time and the cap read back from its 1-row checkpoint
-    * (EntityQueries.erStateCap), so the filter is a scan predicate and
+    * (PersistedState.ErCap), so the filter is a scan predicate and
     * nothing state-sized is recomputed per probe. The three cap modes
     * are mutually exclusive. The sink is the gate's [[GateLineage]],
     * keyed on customer.parquet, the state table's generation and the
@@ -69,7 +69,7 @@ object ErProbe {
       derivedBlockCap.map { case (f, m) => s"derived=$f,$m" } ++
       persistedCap.map { case (c, cap) => s"persisted=$c<=$cap" })
       .headOption.getOrElse("none")
-    GateLineage.drainDistinct(spark, "er_probe", sfDir, "customer.parquet",
+    GateLineage.drainDistinct(spark, graft.ops.PersistedState.StErProbe, sfDir,
       stateTable, s"v1;cap=$capMode",
       org.apache.spark.sql.types.StructType.fromDDL(
         "state_rid BIGINT, inc_rid BIGINT")) { ss =>

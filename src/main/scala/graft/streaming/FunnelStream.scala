@@ -133,9 +133,9 @@ object FunnelStream {
     // The sentinel timestamp is a function of watermarkMin/flushSlackMin,
     // so both knobs belong in the staging fingerprint — retuning them
     // must re-stage, not silently replay a stale sentinel.
-    val (tag, fp) = LateArrivals.eventsTag("funnel", sfDir,
-      s"${stages.mkString("|")}:wm$watermarkMin:slack$flushSlackMin:2split:v1")
-    val staged = LateArrivals.stageBatchesCached(tag, fp, {
+    val staged = LateArrivals.stageBatchesCached(spark,
+        graft.ops.PersistedState.StageFunnel, sfDir,
+        s":${stages.mkString("|")}:wm$watermarkMin:slack$flushSlackMin:2split:v1") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
@@ -147,7 +147,7 @@ object FunnelStream {
         org.apache.spark.sql.types.StructType.fromDDL(
           "user_id BIGINT, event_id BIGINT, ts TIMESTAMP, event_type STRING"))
       Seq(ev.filter(col("event_id") % 2 === 1), ev.filter(col("event_id") % 2 === 0), flush)
-    })
+    }
 
     val ss = LshProbe.streamSession(spark)
     implicit val evEnc = Encoders.product[Ev]

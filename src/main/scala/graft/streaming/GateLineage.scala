@@ -15,19 +15,15 @@ import org.apache.spark.sql.types.StructType
   * stands. A rolled fingerprint resets sink, checkpoint and everything
   * else under the directory as one unit (the checkpoint's seen-file log
   * dedupes by path, so a same-path regen would otherwise never
-  * reprocess). Fingerprints start with the source file's `len:mtime`,
-  * and names end with `StateGc.tagOf(sourceDir)`, so [[graft.ops.StateGc]]
-  * keeps a lineage exactly while its source is live.
+  * reprocess). Each lineage is a [[graft.ops.PersistedState]] family
+  * (`st_<gate>`), so its name ends with the source dir's tag and its
+  * fingerprint starts with the source file's `len:mtime`:
+  * [[graft.ops.StateGc]] keeps a lineage exactly while its source is
+  * live.
   *
   * Single-writer per warehouse, like every persisted state: two
   * concurrent drains of one lineage would race on its checkpoint. */
 object GateLineage {
-
-  /** `<warehouse>/graft_st_<name>` — callers end `name` with the source
-    * dir's [[graft.ops.StateGc.tagOf]]. */
-  def dir(spark: SparkSession, name: String): String =
-    new Path(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      s"graft_st_$name").toString
 
   /** Reset `baseDir` when its recorded `_GRAFT_SRC` differs from
     * `srcFingerprint`: the directory is emptied and the new fingerprint
@@ -72,8 +68,8 @@ object GateLineage {
   /** The settled-distinct drain every probe gate runs: an AvailableNow
     * drain of `stream` (built on the session this lineage's checkpoint
     * calls for — [[LshProbe.checkpointSession]]) into the parquet sink
-    * of lineage `graft_st_<gate>_<tagOf(sfDir)>`, keyed by
-    * [[probeFingerprint]] of `sfDir/srcFile`, `stateTable` and `params`.
+    * of `lineage` over `sfDir`, keyed by [[probeFingerprint]] of the
+    * lineage's source file, `stateTable` and `params`.
     * Returns the DISTINCT rows the sink has committed, read through its
     * `_spark_metadata` log with `sinkSchema` (a zero-row drain leaves no
     * data file to infer from). The frame reads the lineage's files: it
@@ -82,14 +78,15 @@ object GateLineage {
     * every row to the driver (at a 30-copy-density fixture the ER
     * gate's ~50M candidate pairs exceeded spark.driver.maxResultSize),
     * and append sink → downstream batch is the deployment shape. */
-  private[streaming] def drainDistinct(spark: SparkSession, gate: String,
-                                       sfDir: String, srcFile: String,
+  private[streaming] def drainDistinct(spark: SparkSession,
+                                       lineage: graft.ops.PersistedState,
+                                       sfDir: String,
                                        stateTable: String, params: String,
                                        sinkSchema: StructType)
                                       (stream: SparkSession => DataFrame): DataFrame = {
-    val base = dir(spark, s"${gate}_${graft.ops.StateGc.tagOf(sfDir)}")
+    val base = lineage.path(spark, sfDir)
     resetIfStale(spark, base,
-      probeFingerprint(spark, s"$sfDir/$srcFile", stateTable, params))
+      probeFingerprint(spark, s"$sfDir/${lineage.sources.head}", stateTable, params))
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"
     stream(LshProbe.checkpointSession(spark, ckpt)).writeStream

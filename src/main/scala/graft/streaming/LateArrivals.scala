@@ -68,20 +68,28 @@ object LateArrivals {
 
   /** [[stageBatches]] with a cross-JVM cache: the staged replay of a
     * registered query is a pure function of (query, source data), so it
-    * is written once under a tagged tmp dir and reused while the
-    * `srcFingerprint` (source length+mtime, plus the batch count)
-    * matches — the bench then times the stream, not re-staging, the
-    * same steady-state discipline as the bucketed/partitioned layouts.
-    * `batches` is by-name: a cache hit never builds the DataFrames. */
-  def stageBatchesCached(tag: String, srcFingerprint: String,
-                         batches: => Seq[DataFrame]): Path = {
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft-stage-$tag")
+    * is written once as the persisted state `stage` of `sfDir` (under
+    * the warehouse, where [[graft.ops.StateGc]] keeps it while the
+    * source is live) and reused while its fingerprint matches — the
+    * bench then times the stream, not re-staging, the same
+    * steady-state discipline as the bucketed/partitioned layouts.
+    * `params` is appended to the fingerprint and must name EVERYTHING
+    * that shapes the staged content beyond the source data — timezone,
+    * gap/delay/bucket knobs, batch count, and a version literal to bump
+    * when the batch-construction code changes — or a parameter change
+    * would silently replay a stale staging. `batches` is by-name: a
+    * cache hit never builds the DataFrames. */
+  def stageBatchesCached(spark: SparkSession, stage: graft.ops.PersistedState,
+                         sfDir: String, params: String)
+                        (batches: => Seq[DataFrame]): Path = {
+    val dir = java.nio.file.Paths.get(stage.path(spark, sfDir))
+    val srcFingerprint = stage.fingerprint(sfDir, params)
     val marker = dir.resolve("_GRAFT_SRC")
     // Cross-process file lock around check+stage: two JVMs racing the
     // same tag must not rm/re-stage the dir under each other (the
     // second comer re-checks the marker under the lock and reuses).
     val lockPath = dir.resolveSibling(dir.getFileName.toString + ".lock")
+    Files.createDirectories(dir.getParent)
     val ch = java.nio.channels.FileChannel.open(lockPath,
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.WRITE)
@@ -97,19 +105,6 @@ object LateArrivals {
         }
       } finally lock.release()
     } finally ch.close()
-  }
-
-  /** Staging cache key material for a query over `sfDir`'s events.
-    * `params` must name EVERYTHING that shapes the staged content
-    * beyond the source data — timezone, gap/delay/bucket knobs, batch
-    * count, and a version literal to bump when the batch-construction
-    * code changes — or a parameter change would silently replay a
-    * stale staging. */
-  private[streaming] def eventsTag(name: String, sfDir: String,
-                                   params: String): (String, String) = {
-    val tag = sfDir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    (s"${name}_$tag",
-      graft.ops.ScaleOps.fileFingerprint(s"$sfDir/events.parquet") + ":" + params)
   }
 
   /** Append-mode watermarked day tally over a staged directory, drained
@@ -160,8 +155,8 @@ object LateArrivals {
     * split. */
   def lateTallyOnce(spark: SparkSession, sfDir: String,
                     tz: String = "Australia/Perth"): DataFrame = {
-    val (tag, fp) = eventsTag("late_tally", sfDir, s"$tz:1day:4batches:v1")
-    val staged = stageBatchesCached(tag, fp, {
+    val staged = stageBatchesCached(spark, graft.ops.PersistedState.StageLateTally,
+        sfDir, s":$tz:1day:4batches:v1") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("event_type"),
           from_utc_timestamp(col("ts"), tz).as("ts_local"))
@@ -177,7 +172,7 @@ object LateArrivals {
         org.apache.spark.sql.types.StructType.fromDDL(
           "event_id BIGINT, event_type STRING, ts_local TIMESTAMP"))
       Seq(even, spacer, odd, flush)
-    })
+    }
     appendDailyTally(spark, staged.toString, "1 day")
   }
 }

@@ -209,7 +209,7 @@ object LshProbe {
                      stateTable: String, numHashes: Int = 32,
                      rowsPerBand: Int = 4, shingleN: Int = 2,
                      bandBucketCap: Option[Int] = None): DataFrame =
-    GateLineage.drainDistinct(spark, "lsh_probe", sfDir, "documents.parquet",
+    GateLineage.drainDistinct(spark, graft.ops.PersistedState.StLshProbe, sfDir,
       stateTable, s"v1;h=$numHashes;r=$rowsPerBand;n=$shingleN;" +
         s"cap=${bandBucketCap.getOrElse("none")}",
       org.apache.spark.sql.types.StructType.fromDDL(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
+import graft.ops.PersistedState
 
 /** Streaming SCD2 maintenance — the dimension-feed shape of the
   * reference's timestamped-snapshot habit (ningaloo-etl.Rmd:480-486)
@@ -54,22 +55,27 @@ object ScdApplyStream {
   /** Drain `snapshots` (ascending versions, each a full dimension
     * snapshot) through a file-source stream into a versioned SCD2
     * history seeded from `initHistory` (the version-`initVer` open
-    * rows), and return the FINAL history. `tag`/`srcFingerprint` key
-    * the staged replay cache (pure function of the source tables) and
-    * the work directory: the [[GateLineage]] `graft_st_<tag>` holds the
-    * version dirs and the checkpoint. A reset lineage is seeded with
-    * hist_<initVer>; a re-run on an unchanged staging restarts on its
-    * checkpoint, applies no batch and returns the settled history. */
-  def applyOnce(spark: SparkSession, tag: String, srcFingerprint: String,
+    * rows), and return the FINAL history. `stage` is the staged replay
+    * cache of `sfDir` (a pure function of the source tables) and
+    * `lineage` the work directory holding the version dirs and the
+    * checkpoint, reset when its fingerprint rolls. A reset lineage is
+    * seeded with hist_<initVer>; a re-run on an unchanged staging
+    * restarts on its checkpoint, applies no batch and returns the
+    * settled history. */
+  def applyOnce(spark: SparkSession, stage: PersistedState,
+                lineage: PersistedState, sfDir: String,
                 initHistory: DataFrame, initVer: Long,
                 snapshots: => Seq[(Long, DataFrame)],
                 keys: Seq[String], tracked: Seq[String],
                 snapshotSchemaDdl: String): DataFrame = {
-    val staged = LateArrivals.stageBatchesCached(tag, srcFingerprint,
+    val staged = LateArrivals.stageBatchesCached(spark, stage, sfDir, "")(
       snapshots.map { case (v, df) => df.withColumn("_ver", lit(v)) })
-    val work = new Path(GateLineage.dir(spark, tag))
+    val work = new Path(lineage.path(spark, sfDir))
     val fs = work.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GateLineage.resetIfStale(spark, work.toString, srcFingerprint)
+    // Keyed on the staged dir too: the checkpoint's file source records
+    // its path, so a staging that moves must reset the lineage.
+    GateLineage.resetIfStale(spark, work.toString,
+      lineage.fingerprint(sfDir, s"|staged=$staged"))
     // Seed: a reset lineage (or one a crash left before its seed
     // published) holds no version yet.
     if (latestVersionDir(fs, work).isEmpty)

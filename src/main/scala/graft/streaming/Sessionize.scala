@@ -91,9 +91,8 @@ object Sessionize {
   def sessionsOnce(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                    gapMinutes: Int = 30): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val (tag, fp) = LateArrivals.eventsTag("sessions", sfDir,
-      s"gap$gapMinutes:2batches:v1")
-    val staged = LateArrivals.stageBatchesCached(tag, fp, {
+    val staged = LateArrivals.stageBatchesCached(spark,
+        graft.ops.PersistedState.StageSessions, sfDir, s":gap$gapMinutes:2batches:v1") {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_id"), col("ts"))
       // Flush placement needs one max() scan — inside the by-name
@@ -107,7 +106,7 @@ object Sessionize {
         org.apache.spark.sql.types.StructType.fromDDL(
           "user_id BIGINT, event_id BIGINT, ts TIMESTAMP"))
       Seq(ev, flush)
-    })
+    }
 
     val ss = LshProbe.streamSession(spark)
     implicit val evEnc = Encoders.product[Ev]

@@ -38,7 +38,7 @@ object SimhashProbe {
   def verifiedOnce(spark: SparkSession, sfDir: String, stateTable: String,
                    maxHamming: Int = 3, blocks: Int = 6,
                    bucketCap: Option[Int] = None): DataFrame = {
-    GateLineage.drainDistinct(spark, "simhash_probe", sfDir, "documents.parquet",
+    GateLineage.drainDistinct(spark, graft.ops.PersistedState.StSimhashProbe, sfDir,
       stateTable, s"v1;k=$maxHamming;b=$blocks;cap=${bucketCap.getOrElse("none")}",
       org.apache.spark.sql.types.StructType.fromDDL(
         "state_id BIGINT, inc_id BIGINT, hamming BIGINT")) { ss =>

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.ops.PersistedState
 
 /** Stream-stream inner join (§2.11 at scale): click→purchase
   * attribution within a time horizon, as a streaming symmetric hash
@@ -70,10 +71,10 @@ object StreamJoin {
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_user_id"),
         col("ts").as("purchase_ts"))
-    val (ctag, cfp) = LateArrivals.eventsTag("sj_clicks", sfDir, "1batch:v1")
-    val (ptag, pfp) = LateArrivals.eventsTag("sj_purchases", sfDir, "1batch:v1")
-    val cd = LateArrivals.stageBatchesCached(ctag, cfp, Seq(clicks))
-    val pd = LateArrivals.stageBatchesCached(ptag, pfp, Seq(purchases))
+    val cd = LateArrivals.stageBatchesCached(spark, PersistedState.StageClicks,
+      sfDir, ":1batch:v1")(Seq(clicks))
+    val pd = LateArrivals.stageBatchesCached(spark, PersistedState.StagePurchases,
+      sfDir, ":1batch:v1")(Seq(purchases))
     joinStaged(spark, cd.toString, pd.toString, horizonMinutes)
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.Tables
+import graft.ops.PersistedState
 
 /** Idempotent batch reprocessing (SURVEY.md §2.11; tagging-etl.Rmd:116-132):
   * WAMTRAM's `EntryBatchProcess` skips records whose ids were already
@@ -64,11 +65,14 @@ object UpsertSink {
       .select(col("event_id"), col("event_type"), col("value"))
     val b0 = ev.filter(pmod(col("event_id"), lit(5L)) < 3)
     val b1 = ev.filter(pmod(col("event_id"), lit(5L)) >= 2)
-    val (tag, fp) = LateArrivals.eventsTag("upsert_src", sfDir,
-      "mod5overlap:2batches:v1")
-    val staged = LateArrivals.stageBatchesCached(tag, fp, Seq(b0, b1))
-    val work = GateLineage.dir(spark, tag)
-    GateLineage.resetIfStale(spark, work, fp)
+    val params = ":mod5overlap:2batches:v1"
+    val staged = LateArrivals.stageBatchesCached(spark, PersistedState.StageUpsert,
+      sfDir, params)(Seq(b0, b1))
+    val work = PersistedState.StUpsert.path(spark, sfDir)
+    // The checkpoint's file source records the staged dir's path, so the
+    // lineage is keyed on it too: a staging that moves resets the lineage.
+    GateLineage.resetIfStale(spark, work,
+      PersistedState.StUpsert.fingerprint(sfDir, s"$params|staged=$staged"))
     val target = s"$work/target"
     val ckpt = s"$work/ckpt"
     val ss = LshProbe.checkpointSession(spark, ckpt)

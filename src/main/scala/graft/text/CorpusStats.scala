@@ -369,7 +369,7 @@ object CorpusStats {
     // (train_id, test_id, tpos, qpos) and the old 5-column distinct was
     // a full exchange + hash-dedup of the biggest intermediate that
     // removed zero rows (checked at sf0.01 and sf0.1: count == distinct
-    // count; graft.DevCheck). The islands window below re-keys on
+    // count). The islands window below re-keys on
     // (pair, diag) regardless.
     val matches = capped(shingles(train))
       .select(col(idCol).as("train_id"), col("pos").as("tpos"), col("shingle"))

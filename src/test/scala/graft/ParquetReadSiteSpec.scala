@@ -15,10 +15,6 @@ class ParquetReadSiteSpec extends AnyFunSuite {
     "ScaleOps.scala" -> "ensureSurgicalDelete reads the touched files",
     "CompactedLanding.scala" -> "compaction reads the covered and tail files")
 
-  /** One-off `Dev*`/`Prof*` mains: diagnostics, not query paths. */
-  private def isDevMain(name: String): Boolean =
-    name.startsWith("Dev") || name.startsWith("Prof")
-
   test("read.parquet( appears in src/main only in Tables and the named exceptions") {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
@@ -29,7 +25,7 @@ class ParquetReadSiteSpec extends AnyFunSuite {
     val offending = for {
       f <- files
       name = f.getFileName.toString
-      if name != "Tables.scala" && !isDevMain(name)
+      if name != "Tables.scala"
       (line, i) <- java.nio.file.Files.readAllLines(f,
         java.nio.charset.StandardCharsets.ISO_8859_1).asScala.zipWithIndex
       if line.contains("read.parquet(")

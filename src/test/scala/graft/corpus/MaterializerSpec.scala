@@ -29,6 +29,9 @@ class MaterializerSpec extends SparkSpec {
     }
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-spec")
     spark.sparkContext.setCheckpointDir(dir.toString)
+    // The shared session keeps this checkpoint dir until it stops, so
+    // the dir goes when the JVM does.
+    sys.addShutdownHook(graft.ops.ScaleOps.deleteLocal(dir.toFile))
     assert(Similarity.materializerChoice(d) == "reliable")
     // checkpoint() must actually write into the configured dir.
     val ck = Similarity.durableMaterialize(d)

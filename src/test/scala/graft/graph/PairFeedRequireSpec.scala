@@ -39,7 +39,7 @@ class PairFeedRequireSpec extends SparkSpec {
       // bucketing under the same freshness properties, so the query's
       // own prepareLshState accepts it as current.
       CorpusQueries.prepareLshState(spark, dir)
-      val table = CorpusQueries.lshStateTable(dir)
+      val table = graft.ops.PersistedState.LshState.name(dir)
       val props = spark.sql(s"SHOW TBLPROPERTIES `$table`").collect()
         .map(r => r.getString(0) -> r.getString(1))
         .filter(_._1.startsWith("graft."))

@@ -42,34 +42,47 @@ class CacheOnceSpec extends SparkSpec {
   }
 
   test("swapTruncated: tagged generations share one LRU group and stay bounded") {
-    // r19: fingerprints live in the NAME (spec-gen:<fp>); eviction must
-    // group on the prefix before ':' or every generation is a singleton
-    // name the per-name bound never fires on (dead-generation leak on
-    // mid-session source regeneration).
+    // Fingerprints are the TAG (spec-gen, <fp>); eviction must count per
+    // group or every generation is a singleton the per-group bound never
+    // fires on (dead-generation leak on mid-session source regeneration).
     val frames = (0 to CacheOnce.maxPerNameTruncated).map { i =>
-      CacheOnce.swapTruncated(s"spec-gen:123$i:456$i", Seq(i).toDF("x"))
+      CacheOnce.swapTruncated("spec-gen", s"123$i:456$i", Seq(i).toDF("x"))
     }
     // oldest generation evicted (its memo entry gone: a fresh request
     // under the same tagged name re-materializes a NEW frame) ...
-    val again = CacheOnce.swapTruncated("spec-gen:1230:4560", Seq(0).toDF("x"))
+    val again = CacheOnce.swapTruncated("spec-gen", "1230:4560", Seq(0).toDF("x"))
     assert(!(again eq frames.head), "oldest tagged generation not evicted")
     // ... while the newest generations memo-hit.
-    val newest = CacheOnce.swapTruncated(
-      s"spec-gen:123${CacheOnce.maxPerNameTruncated}:456${CacheOnce.maxPerNameTruncated}",
+    val newest = CacheOnce.swapTruncated("spec-gen",
+      s"123${CacheOnce.maxPerNameTruncated}:456${CacheOnce.maxPerNameTruncated}",
       Seq(CacheOnce.maxPerNameTruncated).toDF("x"))
     assert(newest eq frames.last)
-    // untagged names (no ':') are their own group — untouched by the sweep
-    val solo = CacheOnce.swapTruncated("spec-gen-untagged", Seq(99).toDF("x"))
-    assert(CacheOnce.swapTruncated("spec-gen-untagged", Seq(99).toDF("x")) eq solo)
-    (0 to CacheOnce.maxPerNameTruncated).foreach(i =>
-      CacheOnce.release(s"spec-gen:123$i:456$i"))
-    CacheOnce.release("spec-gen:1230:4560")
+    // another group is untouched by the sweep
+    val solo = CacheOnce.swapTruncated("spec-gen-untagged", "", Seq(99).toDF("x"))
+    assert(CacheOnce.swapTruncated("spec-gen-untagged", "", Seq(99).toDF("x")) eq solo)
+    CacheOnce.release("spec-gen")
     CacheOnce.release("spec-gen-untagged")
+  }
+
+  test("release(group) frees every tag of a truncated group") {
+    def a = Seq(1, 2).toDF("x")
+    def b = Seq(3, 4).toDF("x")
+    val ta = CacheOnce.swapTruncated("spec-rel", "gen-a", a)
+    val tb = CacheOnce.swapTruncated("spec-rel", "gen-b", b)
+    assert(CacheOnce.swapTruncated("spec-rel", "gen-a", a) eq ta)
+    assert(CacheOnce.swapTruncated("spec-rel", "gen-b", b) eq tb)
+    CacheOnce.release("spec-rel")
+    // both generations left the memo: a fresh request re-materializes
+    val ra = CacheOnce.swapTruncated("spec-rel", "gen-a", a)
+    val rb = CacheOnce.swapTruncated("spec-rel", "gen-b", b)
+    assert(!(ra eq ta), "release(group) kept the first tag")
+    assert(!(rb eq tb), "release(group) kept the second tag")
+    CacheOnce.release("spec-rel")
   }
 
   test("swapTruncated: leaf plan, memo hit on re-request, eager data") {
     val deep = Seq(1, 2, 3).toDF("x").filter($"x" > 1).select(($"x" * 2).as("y"))
-    val t = CacheOnce.swapTruncated("spec-trunc", deep)
+    val t = CacheOnce.swapTruncated("spec-trunc", "", deep)
     // the WHOLE logical plan is one LogicalRDD leaf — the property every
     // downstream reference's analysis cost rides on
     assert(t.queryExecution.logical
@@ -77,13 +90,13 @@ class CacheOnceSpec extends SparkSpec {
     assert(t.queryExecution.logical.children.isEmpty)
     // same (name, plan) re-requested returns the SAME truncated frame
     // without re-materializing
-    val t2 = CacheOnce.swapTruncated("spec-trunc",
+    val t2 = CacheOnce.swapTruncated("spec-trunc", "",
       Seq(1, 2, 3).toDF("x").filter($"x" > 1).select(($"x" * 2).as("y")))
     assert(t2 eq t)
     assert(t.as[Long].collect().sorted.toSeq == Seq(4L, 6L))
     CacheOnce.release("spec-trunc")
     // released: a fresh request re-materializes a NEW frame
-    val t3 = CacheOnce.swapTruncated("spec-trunc", deep)
+    val t3 = CacheOnce.swapTruncated("spec-trunc", "", deep)
     assert(!(t3 eq t))
     CacheOnce.release("spec-trunc")
   }

@@ -18,7 +18,7 @@ class PartitionPruningSpec extends SparkSpec {
       (1 to 30).map(i => Row(i.toLong, i * 1.5,
         java.sql.Date.valueOf(f"2024-01-${i % 3 + 1}%02d"))))
     val path = Files.createTempDirectory("graft-prune").toString + "/events"
-    ScaleOps.ensurePartitioned(d, path, "event_date")
+    ScaleOps.ensurePartitioned(spark, path, "event_date")(d)
 
     val q = spark.read.parquet(path)
       .filter(col("event_date") === lit("2024-01-02").cast("date"))
@@ -41,7 +41,7 @@ class PartitionPruningSpec extends SparkSpec {
       s"pruned scan read $filesRead of $allFiles files — pruning did not happen")
 
     // Idempotence: a second ensurePartitioned is a no-op (same files).
-    ScaleOps.ensurePartitioned(d.limit(1), path, "event_date")
+    ScaleOps.ensurePartitioned(spark, path, "event_date")(d.limit(1))
     assert(spark.read.parquet(path).count() == 30)
   }
 
@@ -51,13 +51,13 @@ class PartitionPruningSpec extends SparkSpec {
     val d2 = df("id BIGINT, event_date DATE")(
       (1 to 9).map(i => Row(i.toLong, java.sql.Date.valueOf("2024-02-01"))))
     val path = Files.createTempDirectory("graft-prune-fp").toString + "/t"
-    ScaleOps.ensurePartitioned(d1, path, "event_date", "src-v1")
+    ScaleOps.ensurePartitioned(spark, path, "event_date", "src-v1")(d1)
     assert(spark.read.parquet(path).count() == 6)
     // Same fingerprint: the (different) frame must NOT be written.
-    ScaleOps.ensurePartitioned(d2, path, "event_date", "src-v1")
+    ScaleOps.ensurePartitioned(spark, path, "event_date", "src-v1")(d2)
     assert(spark.read.parquet(path).count() == 6)
     // Source regenerated (new fingerprint): the stale tree is replaced.
-    ScaleOps.ensurePartitioned(d2, path, "event_date", "src-v2")
+    ScaleOps.ensurePartitioned(spark, path, "event_date", "src-v2")(d2)
     assert(spark.read.parquet(path).count() == 9)
   }
 

@@ -126,6 +126,28 @@ class ScaleOpsSpec extends SparkSpec {
       intercept[IllegalStateException](
         ScaleOps.ensureBucketedDerived(spark, t3, Seq("k"), "fp-B")(boom))
     } finally Seq(t1, t2, t3).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
+    // The path layouts (sorted, partitioned, fragmented) keep the same
+    // contract through their `_GRAFT_SRC` marker.
+    val root = java.nio.file.Files.createTempDirectory("graft-byname").toFile
+    try {
+      val df = spark.range(20).selectExpr("id AS k", "id % 3 AS v")
+      val sorted = new java.io.File(root, "sorted").toString
+      val parted = new java.io.File(root, "parted").toString
+      val frag = new java.io.File(root, "frag").toString
+      assert(ScaleOps.ensureSortedBy(spark, sorted, "k", 2, "fp-A")(df))
+      assert(ScaleOps.ensurePartitioned(spark, parted, "v", "fp-A")(df))
+      assert(ScaleOps.ensureFragmented(spark, frag, 3, "fp-A")(df))
+      assert(!ScaleOps.ensureSortedBy(spark, sorted, "k", 2, "fp-A")(boom))
+      assert(!ScaleOps.ensurePartitioned(spark, parted, "v", "fp-A")(boom))
+      assert(!ScaleOps.ensureFragmented(spark, frag, 3, "fp-A")(boom))
+      intercept[IllegalStateException](
+        ScaleOps.ensureSortedBy(spark, sorted, "k", 2, "fp-B")(boom))
+      intercept[IllegalStateException](
+        ScaleOps.ensurePartitioned(spark, parted, "v", "fp-B")(boom))
+      intercept[IllegalStateException](
+        ScaleOps.ensureFragmented(spark, frag, 3, "fp-B")(boom))
+    } finally ScaleOps.deleteLocal(root)
   }
 
   test("deriveBucketCount: floors, power-of-two rounding, byte and row terms") {

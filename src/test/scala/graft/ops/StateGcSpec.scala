@@ -13,7 +13,7 @@ class StateGcSpec extends SparkSpec {
   test("fingerprint key matching accepts exact/params/options forms only") {
     val fps = Set("10:111", "20:222")
     assert(StateGc.fpMatches("10:111", fps))
-    assert(StateGc.fpMatches("10:111:tz=AWST,v=3", fps))      // eventsTag form
+    assert(StateGc.fpMatches("10:111:tz=AWST,v=3", fps))      // staging params form
     assert(StateGc.fpMatches("20:222|parquet.block.size=1048576", fps)) // options form
     assert(!StateGc.fpMatches("10:112", fps))                 // rolled mtime
     assert(!StateGc.fpMatches("10:1110", fps))                // no bare-prefix match
@@ -26,11 +26,11 @@ class StateGcSpec extends SparkSpec {
     val fpFile = src.resolve("state.bin")
     Files.write(fpFile, "v1".getBytes)
     val f1 = ScaleOps.fileFingerprint(fpFile.toString)
-    val tag = StateGc.tagOf(src.toString)
+    val tag = PersistedState.tagOf(src.toString)
     val tbl = s"graft_specgc_tbl_$tag"
     val lay = new java.io.File(wh, s"graft_specgc_lay_$tag").toString
     ScaleOps.ensureBucketed(spark, tbl, "id", 2, f1)(spark.range(10).toDF("id"))
-    ScaleOps.ensureSortedBy(spark.range(5).toDF("id"), lay, "id", 1, f1 + ":p=1")
+    ScaleOps.ensureSortedBy(spark, lay, "id", 1, f1 + ":p=1")(spark.range(5).toDF("id"))
 
     // Dry run against the live source: everything reports keep, nothing
     // is touched.
@@ -80,8 +80,8 @@ class StateGcSpec extends SparkSpec {
       ScaleOps.fileFingerprint(live.resolve("documents.parquet").toString))(
       spark.range(4).toDF("id"))
     def lineage(src: java.nio.file.Path): String = {
-      val base = graft.streaming.GateLineage.dir(spark,
-        s"specgc_probe_${StateGc.tagOf(src.toString)}")
+      val base = PersistedState("st_specgc_probe", Seq("documents.parquet"))
+        .path(spark, src.toString)
       graft.streaming.GateLineage.resetIfStale(spark, base,
         graft.streaming.GateLineage.probeFingerprint(spark,
           src.resolve("documents.parquet").toString, tbl, "v1;cap=none"))
@@ -103,11 +103,56 @@ class StateGcSpec extends SparkSpec {
     }
   }
 
+  test("a generation built through each PersistedState descriptor is kept " +
+    "while its source is live and would_drop once the source is rewritten") {
+    val wh = PersistedState.warehouse(spark)
+    val src = Files.createTempDirectory("gcdesc")
+    val files = PersistedState.all.flatMap(_.sources).distinct
+    files.foreach(f => Files.write(src.resolve(f), "v1".getBytes))
+    val d = src.toString
+    val tag = PersistedState.tagOf(d)
+    val bucketed = Set(PersistedState.DedupState, PersistedState.LshState,
+      PersistedState.ErKeys, PersistedState.LineitemBuckets)
+    def frame = spark.range(4).selectExpr("id", "id % 2 AS part")
+    def audit(): Map[String, String] =
+      StateGc.run(spark, wh, Seq(d), "graft_").collect()
+        .filter(_.getString(0).endsWith("_" + tag))
+        .map(r => r.getString(0) -> r.getString(5)).toMap
+    try {
+      PersistedState.all.foreach {
+        case st if bucketed(st) => st.bucketed(spark, d, Seq("id"))(frame)
+        case st if st == PersistedState.EventsPartitioned =>
+          st.partitioned(spark, d, "part")(frame)
+        case st if st == PersistedState.EventsFragmented =>
+          st.fragmented(spark, d, 2)(frame)
+        case st => st.sorted(spark, d, "id")(frame)
+      }
+      val names = PersistedState.all.map(_.name(d)).toSet
+      val live = audit()
+      assert(live.keySet == names, s"generations missing from the audit: ${names -- live.keySet}")
+      assert(live.values.forall(_ == "keep"), s"live generations not kept: $live")
+      // Rewrite every source (new length and mtime): every generation is
+      // now stale under its still-live tag.
+      Thread.sleep(5)
+      files.foreach(f => Files.write(src.resolve(f), "v2-longer".getBytes))
+      val rolled = audit()
+      assert(rolled.keySet == names && rolled.values.forall(_ == "would_drop"),
+        s"stale generations not reported droppable: $rolled")
+    } finally {
+      PersistedState.all.foreach { st =>
+        spark.sql(s"DROP TABLE IF EXISTS `${st.name(d)}`")
+        val p = new java.io.File(st.path(spark, d))
+        if (p.exists()) ScaleOps.deleteLocal(p)
+      }
+      ScaleOps.deleteLocal(src.toFile)
+    }
+  }
+
   test("unfingerprinted generation under a live tag is kept (conservative)") {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val src = Files.createTempDirectory("gcsrc2")
     Files.write(src.resolve("x.bin"), "x".getBytes)
-    val tag = StateGc.tagOf(src.toString)
+    val tag = PersistedState.tagOf(src.toString)
     val dir = new java.io.File(wh, s"graft_specgc_nofp_$tag").toString
     spark.range(2).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
     val r = StateGc.run(spark, wh, Seq(src.toString), "graft_specgc_",
@@ -121,7 +166,7 @@ class StateGcSpec extends SparkSpec {
 
   test("colliding lossy tags: a generation serving the SHADOWED dir " +
     "survives a destructive pass (fingerprints union per tag)") {
-    // tagOf is lossy: "<base>/gc a" and "<base>/gc_a" both render to
+    // The tag rule is lossy: "<base>/gc a" and "<base>/gc_a" both render to
     // tag "..._gc_a". Before r17 liveDirs.toMap kept ONE dir's
     // fingerprints per tag, so a live generation keyed to the shadowed
     // dir's fingerprint was dropped as stale — GC deleting a
@@ -133,14 +178,14 @@ class StateGcSpec extends SparkSpec {
     Files.write(dirA.resolve("a.bin"), "aaaa".getBytes)
     Thread.sleep(5) // distinct mtimes → distinct fingerprints
     Files.write(dirB.resolve("b.bin"), "bb-longer".getBytes)
-    val tagA = StateGc.tagOf(dirA.toString)
-    assert(tagA == StateGc.tagOf(dirB.toString), "fixture must collide")
+    val tagA = PersistedState.tagOf(dirA.toString)
+    assert(tagA == PersistedState.tagOf(dirB.toString), "fixture must collide")
     val fpB = ScaleOps.fileFingerprint(dirB.resolve("b.bin").toString)
     val gen = new java.io.File(wh, s"graft_specgc_collide_$tagA").toString
     try {
       // Generation keyed to dir B's fingerprint; both dirs declared live
       // (dir A listed FIRST, the order that used to shadow B's fps).
-      ScaleOps.ensureSortedBy(spark.range(4).toDF("id"), gen, "id", 1, fpB)
+      ScaleOps.ensureSortedBy(spark, gen, "id", 1, fpB)(spark.range(4).toDF("id"))
       val r = StateGc.run(spark, wh, Seq(dirA.toString, dirB.toString),
         "graft_specgc_", dryRun = false).collect()
       assert(r.length == 1 && r.head.getString(5) == "keep",

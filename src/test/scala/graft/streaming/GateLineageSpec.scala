@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.SparkSpec
 import graft.dedup.Dedup
-import graft.ops.{EntityResolution, ScaleOps, StateGc}
+import graft.ops.{EntityResolution, PersistedState, ScaleOps}
 import graft.queries.{CorpusQueries, EntityQueries}
 import graft.similarity.Similarity
 
@@ -66,7 +66,7 @@ class GateLineageSpec extends SparkSpec {
     Files.list(java.nio.file.Paths.get(fixture)).forEach { f =>
       Files.copy(f, root.resolve("sf").resolve(f.getFileName)); ()
     }
-    val tag = StateGc.tagOf(d)
+    val tag = PersistedState.tagOf(d)
     try {
       CorpusQueries.prepareLshState(spark, d)
       CorpusQueries.prepareSimhashState(spark, d)
@@ -132,15 +132,15 @@ class GateLineageSpec extends SparkSpec {
       type Gate = Option[Int] => DataFrame
       val gates: Seq[(String, String, Gate, DataFrame)] = Seq(
         ("lsh_probe", "documents.parquet", cap => LshProbe.candidatesOnce(
-          spark, d, CorpusQueries.lshStateTable(d), bandBucketCap = cap), lshRef),
+          spark, d, PersistedState.LshState.name(d), bandBucketCap = cap), lshRef),
         ("simhash_probe", "documents.parquet", cap => SimhashProbe.verifiedOnce(
-          spark, d, CorpusQueries.simhashStateTable(d), bucketCap = cap), simhashRef),
+          spark, d, PersistedState.SimhashState.name(d), bucketCap = cap), simhashRef),
         ("cosine_probe", "embeddings.parquet", cap => CosineProbe.verifiedOnce(
-          spark, d, CorpusQueries.cosineStateTable(d),
+          spark, d, PersistedState.CosineState.name(d),
           emb.filter(col("vec_id") % 3 =!= 2), threshold = 0.3, bucketCap = cap),
           cosineRef),
         ("er_probe", "customer.parquet", cap => ErProbe.candidatesOnce(
-          spark, d, EntityQueries.erKeyStateTable(d), blockCap = cap), erRef))
+          spark, d, PersistedState.ErKeys.name(d), blockCap = cap), erRef))
 
       val tmpBefore = tmpEntries
       gates.foreach { case (name, src, gate, refDf) =>
@@ -169,7 +169,7 @@ class GateLineageSpec extends SparkSpec {
         val (rolled, b4) = drain(gate(Some(Int.MaxValue)))
         assert(b4 > 0, s"$name: a rewritten source must reset the lineage")
         assert(rolled == ref, s"$name: rolled source != batch join")
-        assert(new java.io.File(GateLineage.dir(spark, s"${name}_$tag")).isDirectory,
+        assert(new java.io.File(PersistedState(s"st_$name", Nil).path(spark, d)).isDirectory,
           s"$name: lineage not under the warehouse")
       }
       val leaked = tmpEntries -- tmpBefore
@@ -191,8 +191,7 @@ class GateLineageSpec extends SparkSpec {
   test("st_upsert and st_scd2_apply keep their work dirs in one lineage: " +
     "a re-run applies no micro-batch, returns the same rows, leaks nothing") {
     val d = fixture
-    val tag = StateGc.tagOf(d)
-    Seq("st_upsert" -> s"upsert_src_$tag", "st_scd2_apply" -> s"scd2_feed_$tag")
+    Seq("st_upsert" -> PersistedState.StUpsert, "st_scd2_apply" -> PersistedState.StScd2Feed)
       .foreach { case (q, lineage) =>
         val run = graft.SparkEntry.queries(q)
         // The first call may build the lineage (and its cached staging).
@@ -203,7 +202,7 @@ class GateLineageSpec extends SparkSpec {
         assert(b == 0, s"$q: unchanged staging committed $b micro-batch(es)")
         assert(second == first, s"$q: re-run changed the result")
         assert(tmpEntries == tmpBefore, s"$q: re-run left entries in java.io.tmpdir")
-        assert(new java.io.File(GateLineage.dir(spark, lineage), "ckpt").isDirectory,
+        assert(new java.io.File(lineage.path(spark, d), "ckpt").isDirectory,
           s"$q: work dir is not the lineage $lineage")
       }
   }

@@ -15,7 +15,7 @@ class LshProbeSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     graft.queries.CorpusQueries.prepareLshState(spark, d)
     val got = LshProbe.candidatesOnce(
-        spark, d, graft.queries.CorpusQueries.lshStateTable(d))
+        spark, d, graft.ops.PersistedState.LshState.name(d))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     val docs = graft.Tables.documents(spark, d)
@@ -38,11 +38,11 @@ class LshProbeSpec extends SparkSpec {
     // side: a zero cap drops every bucket (no candidates at all), a
     // huge cap equals the uncapped set.
     val cap0 = LshProbe.candidatesOnce(
-      spark, d, graft.queries.CorpusQueries.lshStateTable(d),
+      spark, d, graft.ops.PersistedState.LshState.name(d),
       bandBucketCap = Some(0))
     assert(cap0.isEmpty)
     val capBig = LshProbe.candidatesOnce(
-        spark, d, graft.queries.CorpusQueries.lshStateTable(d),
+        spark, d, graft.ops.PersistedState.LshState.name(d),
         bandBucketCap = Some(Int.MaxValue))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capBig == ref)
@@ -53,7 +53,7 @@ class LshProbeSpec extends SparkSpec {
     "the marker, and a rolled source fingerprint resets the lineage") {
     val d = "/root/testdata/sf0.001"
     graft.queries.CorpusQueries.prepareLshState(spark, d)
-    val state = graft.queries.CorpusQueries.lshStateTable(d)
+    val state = graft.ops.PersistedState.LshState.name(d)
     val base = java.nio.file.Files
       .createTempDirectory("graft_wm_probe").toString + "/lineage"
     GateLineage.resetIfStale(spark, base, "fp-1")
