@@ -245,11 +245,7 @@ object Dedup {
     // banded-LSH practice). The size is a windowed count keyed on
     // band_key, so a state table bucketed on band_key computes it
     // WITHOUT an exchange — the probe path stays shuffle-free.
-    val cappedState = bandBucketCap.fold(stateBands) { cap =>
-      val w = Window.partitionBy("band_key")
-      stateBands.withColumn("_bsz", count(lit(1)).over(w))
-        .filter(col("_bsz") <= cap).drop("_bsz")
-    }
+    val cappedState = graft.ops.ScaleOps.capBuckets(stateBands, "band_key", bandBucketCap)
     // merge-hinted probe: the bucketed state side stays exchange-free
     // without having to disable broadcast session-wide (which would
     // also force the small downstream verify joins onto SMJ shuffles).
@@ -320,7 +316,6 @@ object Dedup {
                               rowsPerBand: Int = 4, shingleN: Int = 3,
                               threshold: Double = 0.8,
                               bandBucketCap: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // The increment's shingle set feeds the band keys AND three verify
     // legs (cross setsB, self setsA/setsB + sizes); the band keys feed
     // the state probe AND both sides of the self-join — both are
@@ -333,11 +328,7 @@ object Dedup {
         explode(distinctShingles(col(textCol), shingleN)).as("shingle")))
     val incBands = graft.ops.CacheOnce.swap("incr-inc-bands",
       bandKeys(incSets, idCol, numHashes, rowsPerBand))
-    val cappedState = bandBucketCap.fold(stateBands) { cap =>
-      val w = Window.partitionBy("band_key")
-      stateBands.withColumn("_bsz", count(lit(1)).over(w))
-        .filter(col("_bsz") <= cap).drop("_bsz")
-    }
+    val cappedState = graft.ops.ScaleOps.capBuckets(stateBands, "band_key", bandBucketCap)
     // The probe join is pinned to sort-merge so the bucketed state side
     // enters it riding its bucketing (exchange-free) even when the
     // session would otherwise broadcast the increment bands — while the
@@ -828,11 +819,7 @@ object Dedup {
     val incKeys = simhashMankuKeysMd5(incSigs, idCol, maxHamming, blocks)
       .select(col(idCol).as("id2"), col("sig_hi").as("h2"),
         col("sig_lo").as("l2"), col("mkey"))
-    val cappedState = bucketCap.fold(stateKeys) { cap =>
-      val w = Window.partitionBy("mkey")
-      stateKeys.withColumn("_bsz", count(lit(1)).over(w))
-        .filter(col("_bsz") <= cap).drop("_bsz")
-    }
+    val cappedState = graft.ops.ScaleOps.capBuckets(stateKeys, "mkey", bucketCap)
     // merge-hinted probe, same policy as the MinHash incremental path:
     // the bucketed state side stays exchange-free without a session-wide
     // broadcast disable.
@@ -1159,11 +1146,7 @@ object Dedup {
     val incKeys = graft.ops.CacheOnce.swap("incr-inc-cosbuckets",
       cosineBucketKeys(incBase, idCol, vecCol, numPlanes, numTables, dim, seed)
         .withColumnRenamed(idCol, "id2"))
-    val capped = bucketCap.fold(stateBuckets) { cap =>
-      val w = Window.partitionBy("tb_key")
-      stateBuckets.withColumn("_bsz", count(lit(1)).over(w))
-        .filter(col("_bsz") <= cap).drop("_bsz")
-    }
+    val capped = graft.ops.ScaleOps.capBuckets(stateBuckets, "tb_key", bucketCap)
     val cands0 = capped.hint("merge")
       .select(col(idCol).as("id1"), col("tb_key"))
       .join(incKeys, Seq("tb_key"))

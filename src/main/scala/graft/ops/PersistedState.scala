@@ -185,6 +185,12 @@ object PersistedState {
   val StSimhashProbe = PersistedState("st_simhash_probe", Docs)
   val StCosineProbe = PersistedState("st_cosine_probe", Emb)
   val StErProbe = PersistedState("st_er_probe", Cust)
+  /** Landing lineages emptied on every run ([[graft.streaming.FileSinkIngest]],
+    * [[graft.streaming.CompactedLanding]]): the fresh landing is each
+    * query's contract; the descriptor puts them where [[StateGc]] sees
+    * them. */
+  val StFileSink = PersistedState("st_file_sink", Events)
+  val StCompactLive = PersistedState("st_compact_live", Events)
 
   /** Every registered family. */
   val all: Seq[PersistedState] = Seq(
@@ -198,5 +204,5 @@ object PersistedState {
     EventsFragmented, EventsCompacted, EventsForgotten, StageLateTally, StageSessions,
     StageBoundedDedup, StageFunnel, StageClicks, StagePurchases, StageUpsert,
     StUpsert, StageScd2Feed, StScd2Feed, StLshProbe, StSimhashProbe,
-    StCosineProbe, StErProbe)
+    StCosineProbe, StErProbe, StFileSink, StCompactLive)
 }

@@ -22,6 +22,18 @@ import graft.Tables
   */
 object ScaleOps {
 
+  /** Collision-budget cap of a probe's static side: drops every `key`
+    * bucket holding more than `cap` rows — a degenerate bucket
+    * (boilerplate, mass duplication) would fan every arriving row out
+    * cap+-fold. The size is a windowed count keyed on `key`, so a table
+    * bucketed on `key` computes it WITHOUT an exchange. */
+  def capBuckets(df: DataFrame, key: String, cap: Option[Int]): DataFrame =
+    cap.fold(df) { c =>
+      df.withColumn("_bsz", count(lit(1))
+          .over(org.apache.spark.sql.expressions.Window.partitionBy(key)))
+        .filter(col("_bsz") <= c).drop("_bsz")
+    }
+
   /** `groupBy(keys).count()` in two phases: partial count per
     * (keys, salt), then sum of partials per keys. Identical output to
     * the direct tally; bounded per-task input even when one key

@@ -39,7 +39,8 @@ import graft.Tables
   * assembly above it ever drifts), drops catalog tables through the
   * catalog (`DROP TABLE` reclaims the managed dir) and path layouts
   * through the Hadoop FileSystem API — hdfs:// and s3a:// roots work
-  * the same as file://.
+  * the same as file://. A generation's sibling `<name>.lock` (a staged
+  * replay's) is dropped with it.
   *
   * `dryRun = true` (the default, and what the registered audit reports
   * against the demo family) only reports `would_drop`; nothing is
@@ -122,7 +123,12 @@ object StateGc {
       val fpLive = recorded.isEmpty ||
         tagHit.exists(t => fpMatches(recorded.get, fpsByTag(t)))
       val keep = tagHit.isDefined && fpLive
-      val bytes = f.getContentSummary(st.getPath).getLength
+      // A staged replay's `.lock` sits beside its dir
+      // ([[graft.streaming.LateArrivals.stageBatchesCached]]): it belongs
+      // to the generation, so it is counted and dropped in the same row.
+      val lock = new org.apache.hadoop.fs.Path(rootP, name + ".lock")
+      val lockLen = if (f.exists(lock)) Some(f.getFileStatus(lock).getLen) else None
+      val bytes = f.getContentSummary(st.getPath).getLength + lockLen.getOrElse(0L)
       val action =
         if (keep) "keep"
         else if (dryRun) "would_drop"
@@ -133,6 +139,7 @@ object StateGc {
             s"stateGc attempted to drop live generation $name")
           if (isTable) spark.sql(s"DROP TABLE `$name`")
           else f.delete(st.getPath, true)
+          if (lockLen.isDefined) f.delete(lock, false)
           "drop"
         }
       Row(name, if (isTable) "table" else "layout",

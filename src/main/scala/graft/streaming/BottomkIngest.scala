@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import graft.Tables
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Streaming maintenance of the bottom-k sample behind
   * ivm_bottomk_sample — the sampling family's streaming end, and a
@@ -28,44 +27,25 @@ object BottomkIngest {
                           n_seen: Long, rks: Seq[String], ids: Seq[Long])
 
   def sampleOnce(spark: SparkSession, sfDir: String, k: Int = 32): DataFrame = {
-    val ss = spark.newSession()
-    // 8-wide DELIBERATELY, and measured (r18 arbitration of the r17
-    // bench doubling): this gate's wall is dominated by per-PARTITION
-    // state-store machinery in the mapGroupsWithState stage, not by
-    // per-event work — widening to 32 partitions QUADRUPLED s-cpu
-    // (23-37 s → 94-347 s at sf0.1) and made wall worse, so the cost
-    // scales with partition count and 8 is the right width for a
-    // hundreds-of-keys state. There is no sink or persisted state here
-    // to accumulate (memory sink, fresh session per call): bench-line
-    // movement on this query is machinery variance, not growth.
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    CheckpointIo.tune(ss)
-    val raw = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(Tables.eventsRawSchema))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .withColumn("ts", expr(Tables.eventsTsExpr(ss, sfDir)))
-    drain(ss, raw, k, "graft_stream_bottomk")
+    // The 8-partition width of the stream session is measured on this
+    // gate ([[Gate.session]]). There is no sink or persisted state here
+    // to accumulate (memory sink): bench-line movement on this query is
+    // machinery variance, not growth.
+    val ss = Gate.session(spark)
+    drain(ss, Gate.events(ss, sfDir), k, "graft_stream_bottomk")
   }
 
   /** Multi-micro-batch variant for the spec: pre-converted staged files,
     * one per trigger — the k-list's cross-batch sort-and-truncate merge
-    * exercised on real partial states. `extraConf` lands on the cloned
+    * exercised on real partial states. `extraConf` lands on a private
     * stream session only (the state-store-provider swap hook, same
     * contract as LateArrivals.appendDailyTally). */
   private[graft] def sampleOnceStaged(spark: SparkSession, stagedDir: String,
                                       k: Int = 32,
                                       extraConf: Map[String, String] = Map.empty): DataFrame = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    CheckpointIo.tune(ss) // before extraConf: a spec's overlay wins
-    extraConf.foreach { case (kk, v) => ss.conf.set(kk, v) }
-    val raw = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "ts TIMESTAMP, event_type STRING, event_id BIGINT"))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
-    drain(ss, raw, k, "graft_stream_bottomk_staged")
+    val ss = Gate.session(spark, extraConf = extraConf)
+    drain(ss, Gate.staged(ss, stagedDir, "ts TIMESTAMP, event_type STRING, event_id BIGINT"),
+      k, "graft_stream_bottomk_staged")
   }
 
   private def drain(ss: SparkSession, raw: DataFrame, k: Int,
@@ -95,19 +75,12 @@ object BottomkIngest {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fn)(
         Encoders.product[BkState], Encoders.product[BkEmit])
 
-    val query = stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
     // settle: the per-key emission with the largest monotone n_seen is
     // the final state; explode it in rank order.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("obs_date"), col("event_type"))
       .orderBy(desc("n_seen"))
-    ss.table(qname)
+    Gate.settle(stream, qname, "update")
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
       .select(col("obs_date"), col("event_type"),
         posexplode(col("ids")).as(Seq("_pos", "event_id")))

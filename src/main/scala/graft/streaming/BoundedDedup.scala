@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Bounded-state streaming dedup (SURVEY §2.11 at 100 TB): plain
   * `dropDuplicates` keeps one state entry per key FOREVER — on an
@@ -59,24 +58,11 @@ object BoundedDedup {
       graft.ops.PersistedState.StageBoundedDedup, sfDir,
       s":$delay:vb50:3batches:v1")(Seq(earliest, spacer, latest))
 
-    val ss = LshProbe.streamSession(spark)
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, vb BIGINT, event_id BIGINT, event_type STRING, ts_local TIMESTAMP"))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString)
+    val stream = Gate.staged(Gate.session(spark), staged.toString,
+        "user_id BIGINT, vb BIGINT, event_id BIGINT, event_type STRING, ts_local TIMESTAMP")
       .withWatermark("ts_local", delay)
       .dropDuplicatesWithinWatermark("user_id", "vb")
-    val qname = "graft_stream_bounded_dedup"
-    stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    ss.table(qname)
+    Gate.settle(stream, "graft_stream_bounded_dedup", "append")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
   }

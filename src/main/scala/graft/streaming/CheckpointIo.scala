@@ -16,8 +16,7 @@ import org.apache.spark.sql.SparkSession
   *     `FileSystemBasedCheckpointFileManager`; drain wall 1.14 s → 0.68 s.
   *     On a local fs the FileSystem manager's rename IS atomic, so
   *     nothing is given up. On HDFS leave the default (FileContext
-  *     rename has the stronger no-overwrite guarantee) — override via
-  *     `SPARK_GRAFT_CKPT_FM` (set to empty to keep Spark's default).
+  *     rename has the stronger no-overwrite guarantee).
   *
   *  2. `spark.sql.streaming.checkpoint.fileChecksum.enabled` (new in
   *     4.x, default on) writes a checksum sidecar per checkpoint file
@@ -25,8 +24,12 @@ import org.apache.spark.sql.SparkSession
   *     harness measured commitTimeMs min 1281 ms → 795 ms from this
   *     flag alone. The sidecars guard against storage-level corruption
   *     of checkpoint files — a real concern on object stores, none on
-  *     ephemeral local drains; `SPARK_GRAFT_CKPT_CHECKSUM=true` turns
-  *     them back on for deployments that want the integrity check.
+  *     ephemeral local drains.
+  *
+  * Both are applied only to sessions whose drains checkpoint on a local
+  * path; locality is decided from the checkpoint path alone
+  * ([[isLocal]], [[Gate.session]]), and a remote checkpoint keeps
+  * Spark's defaults. There is no environment override.
   *
   * Results are unaffected either way: both knobs change only how
   * checkpoint files are written, not what any micro-batch computes —
@@ -35,13 +38,11 @@ import org.apache.spark.sql.SparkSession
   * optimization rather than a semantics change.
   */
 object CheckpointIo {
-  val confs: Seq[(String, String)] = Seq(
+  private val confs: Seq[(String, String)] = Seq(
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager"),
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager"),
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
 
   /** The tuned defaults are measured for LOCAL checkpoints. On a remote
     * store (hdfs://, s3a://, ...) the safety trade flips — FileContext's
@@ -54,17 +55,10 @@ object CheckpointIo {
     scheme == null || scheme == "file"
   }
 
-  /** Applies the knobs to a freshly created stream session: the tuned
-    * defaults when its drains checkpoint `local`ly, and on a remote
-    * session only the keys an operator set EXPLICITLY in the environment
-    * (they have read the trade). Empty env override = leave Spark's own
-    * default for that key. */
-  def tune(ss: SparkSession, local: Boolean = true): SparkSession = {
-    confs.zip(Seq("SPARK_GRAFT_CKPT_FM", "SPARK_GRAFT_CKPT_CHECKSUM"))
-      .foreach { case ((k, v), env) =>
-        if (v.nonEmpty && (local || sys.env.contains(env)))
-          ss.conf.set(k, v)
-      }
+  /** Applies the tuned defaults to a fresh stream session whose drains
+    * checkpoint locally. */
+  def tune(ss: SparkSession): SparkSession = {
+    confs.foreach { case (k, v) => ss.conf.set(k, v) }
     ss
   }
 }

@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Small-file compaction of a LIVE streaming file sink — the
@@ -91,24 +89,18 @@ object CompactedLanding {
     * (covered file dropped) or duplicated (covered file also read
     * from the tail) breaks the hash. */
   def landCompactLandOnce(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_compact_live_${Integer.toHexString(sfDir.hashCode)}")
-    graft.ops.ScaleOps.deleteLocal(base.toFile)
-    java.nio.file.Files.createDirectories(base)
+    // The gate's lineage under the warehouse, emptied first: every run
+    // lands into a fresh source, sink and checkpoint.
+    val lineage = graft.ops.PersistedState.StCompactLive
+    val base = lineage.path(spark, sfDir)
+    GateLineage.reset(spark, base, lineage.fingerprint(sfDir))
     val src = s"$base/src"; val data = s"$base/data"
     val ckpt = s"$base/ckpt"; val gen = s"$base/gen"
-    val ss = LshProbe.checkpointSession(spark, ckpt)
+    val ss = Gate.session(spark, Some(ckpt))
     val events = Tables.events(ss, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    def drain(): Unit = {
-      val q = ss.readStream
-        .schema(StructType.fromDDL("event_id BIGINT, event_type STRING, value DOUBLE"))
-        .parquet(src)
-        .writeStream.format("parquet")
-        .option("path", data).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    def drain(): Unit = Gate.land(Gate.file(ss, src, "*.parquet",
+      "event_id BIGINT, event_type STRING, value DOUBLE"), data, ckpt)
     events.filter(col("event_id") % 2 === 0).write.mode("append").parquet(src)
     drain()
     val covered = compactGeneration(ss, data, gen, targetFiles = 2)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.text.TextFunctions
 
 /** Streaming training-data ingest (SURVEY §2.11 x LLM-pipeline): the
@@ -28,20 +27,15 @@ object CorpusIngest {
     // dedup state — see RocksDbStateSpec): non-empty extraConf lands on
     // a PRIVATE child session; the shared stream session is never
     // mutated (its conf is a cross-gate contract).
-    val ss = LshProbe.sessionFor(spark, extraConf)
-    val schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    val ss = Gate.session(spark, extraConf = extraConf)
     // Unsplittable-input guard before the quality/lang gate — the
     // stream's heaviest narrow work ran on a single scan task of a
     // 32-core micro-batch (measured: 1.7 s of a 2.2 s warm drain); see
-    // LshProbe.spreadNarrow for the guard + observe-barrier rationale.
+    // Gate.spreadNarrow for the guard + observe-barrier rationale.
     // Stateful operators sit above the round-robin exchange, so dedup
     // state and the settled aggregate are untouched.
-    val stream = LshProbe.spreadNarrow(spark, s"$sfDir/documents.parquet",
-        "graft_ingest_rows",
-        ss.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(sfDir))
+    val stream = Gate.spreadNarrow(spark, s"$sfDir/documents.parquet",
+        "graft_ingest_rows", Gate.documents(ss, sfDir))
       // lang is computed ONCE as a column and the gate filters on it —
       // repeating the marker-count expression in filter and select would
       // double the most expensive narrow work of the stream.
@@ -74,14 +68,6 @@ object CorpusIngest {
     val maxKeys = TextFunctions.langMarkers.size + 1 // + "und"
     require(maxKeys <= 64,
       s"complete-mode memory sink needs a bounded key space; $maxKeys langs is past the contract")
-    val qname = "graft_stream_corpus_ingest"
-    val query = stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    ss.table(qname)
+    Gate.settle(stream, "graft_stream_corpus_ingest", "complete")
   }
 }

@@ -38,10 +38,7 @@ object CosineProbe {
       // NO spreadNarrow here (measured negative, r19): the per-row plane
       // dots are cheap next to the redistribute's embedding shuffle plus
       // the extra exchange into the state join (warm drain 1.5 -> 2.2 s).
-      val inc = ss.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(embSchema))
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sfDir)
+      val inc = Gate.file(ss, sfDir, "embeddings.parquet", embSchema)
         .filter(col("vec_id") % 3 === 2)
         .filter(Similarity.l2norm(col("embedding")) > 0)
       // the stream row carries its own embedding THROUGH the key
@@ -56,15 +53,8 @@ object CosineProbe {
           explode(graft.dedup.Dedup.cosineTbKeys(col("embedding"))).as("tb_key"))
         .select(col("inc_id"), col("tb_key"), col("_v2"), col("_n2"))
 
-      val st = {
-        val base = ss.table(stateTable)
-          .select(col("vec_id").as("state_id"), col("tb_key"))
-        bucketCap.fold(base) { cap =>
-          val w = org.apache.spark.sql.expressions.Window.partitionBy("tb_key")
-          base.withColumn("_bsz", count(lit(1)).over(w))
-            .filter(col("_bsz") <= cap).drop("_bsz")
-        }
-      }
+      val st = graft.ops.ScaleOps.capBuckets(ss.table(stateTable)
+        .select(col("vec_id").as("state_id"), col("tb_key")), "tb_key", bucketCap)
       val sv = stateVecs.select(col("vec_id").as("state_id"),
         col("embedding").as("_v1"), Similarity.l2norm(col("embedding")).as("_n1"))
 

@@ -73,10 +73,7 @@ object ErProbe {
       stateTable, s"v1;cap=$capMode",
       org.apache.spark.sql.types.StructType.fromDDL(
         "state_rid BIGINT, inc_rid BIGINT")) { ss =>
-      ss.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(customerSchema))
-        .option("pathGlobFilter", "customer.parquet")
-        .parquet(sfDir)
+      Gate.file(ss, sfDir, "customer.parquet", customerSchema)
         .filter(col("c_custkey") % 3 === 2)
         .select(explode(array(
           keysOf(col("c_custkey") * 2, col("c_name")) ++
@@ -93,17 +90,14 @@ object ErProbe {
             case None =>
               val st = ss.table(stateTable)
                 .select(col("rid").as("state_rid"), col("bkey"))
-              val w = org.apache.spark.sql.expressions.Window.partitionBy("bkey")
-              val fixed = blockCap.fold(st) { cap =>
-                st.withColumn("_bsz", count(lit(1)).over(w))
-                  .filter(col("_bsz") <= cap).drop("_bsz")
-              }
-              derivedBlockCap.fold(fixed) { case (floor, mult) =>
-                val capDf = st.agg(greatest(lit(floor.toLong),
-                  expr(s"$mult * count(1) div count(DISTINCT bkey)")).as("_cap"))
-                st.withColumn("_bsz", count(lit(1)).over(w))
-                  .crossJoin(broadcast(capDf))
-                  .filter(col("_bsz") <= col("_cap")).drop("_bsz", "_cap")
+              derivedBlockCap.fold(graft.ops.ScaleOps.capBuckets(st, "bkey", blockCap)) {
+                case (floor, mult) =>
+                  val capDf = st.agg(greatest(lit(floor.toLong),
+                    expr(s"$mult * count(1) div count(DISTINCT bkey)")).as("_cap"))
+                  st.withColumn("_bsz", count(lit(1))
+                      .over(org.apache.spark.sql.expressions.Window.partitionBy("bkey")))
+                    .crossJoin(broadcast(capDf))
+                    .filter(col("_bsz") <= col("_cap")).drop("_bsz", "_cap")
               }
           }
         }, Seq("bkey"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 
 /** §2.11 streaming FILE sink — the bronze-landing shape of a lakehouse
@@ -21,28 +20,18 @@ object FileSinkIngest {
     * The settled aggregate equals the batch aggregate over the raw
     * events — the oracle. */
   def landOnce(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_file_sink_${Integer.toHexString(sfDir.hashCode)}")
-    // Fresh landing per run: the sink's exactly-once story is the
-    // checkpoint + log PAIR; reusing one against a deleted other is
-    // the classic operational mistake, so the fixture recreates both
-    // together.
-    graft.ops.ScaleOps.deleteLocal(base.toFile)
-    java.nio.file.Files.createDirectories(base)
+    // Fresh landing per run, in the gate's lineage under the warehouse:
+    // the sink's exactly-once story is the checkpoint + log PAIR; reusing
+    // one against a deleted other is the classic operational mistake, so
+    // the fixture recreates both together.
+    val lineage = graft.ops.PersistedState.StFileSink
+    val base = lineage.path(spark, sfDir)
+    GateLineage.reset(spark, base, lineage.fingerprint(sfDir))
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"
-    val ss = LshProbe.checkpointSession(spark, ckpt)
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(Tables.eventsRawSchema))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .select(col("event_id"), col("event_type"), col("value"))
-    val q = stream.writeStream.format("parquet")
-      .option("path", data)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Gate.land(Gate.file(Gate.session(spark, Some(ckpt)), sfDir, "events.parquet",
+        Tables.eventsRawSchema)
+      .select(col("event_id"), col("event_type"), col("value")), data, ckpt)
     // Batch read of a streaming-sink directory goes through
     // _spark_metadata: only committed files are visible.
     Tables.parquet(spark, data)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming ordered-funnel (the stateful sibling of
   * [[graft.ops.EventAnalytics.funnel]]): per entity, buffer the
@@ -149,29 +149,15 @@ object FunnelStream {
       Seq(ev.filter(col("event_id") % 2 === 1), ev.filter(col("event_id") % 2 === 0), flush)
     }
 
-    val ss = LshProbe.streamSession(spark)
     implicit val evEnc = Encoders.product[Ev]
     val stream = reaches(
-      ss.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, event_id BIGINT, ts TIMESTAMP, event_type STRING"))
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-        .as[Ev],
+      Gate.staged(Gate.session(spark), staged.toString,
+        "user_id BIGINT, event_id BIGINT, ts TIMESTAMP, event_type STRING").as[Ev],
       stages, watermarkMin, flushSlackMin)
-    val qname = "graft_stream_funnel"
-    stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
     // Settled per-user reaches -> the batch funnel summary (the same
     // per-stage 1-row-aggregate union as EventAnalytics.funnel, so the
     // zero-reach stage still yields its count-0 row).
-    val reach = ss.table(qname)
+    val reach = Gate.settle(stream, "graft_stream_funnel", "append")
     stages.zipWithIndex.map { case (st, i) =>
       reach.filter(col("stage_no") === (i + 1))
         .agg(count(lit(1)).as("n_users"),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Generation-keyed lineages of the stream gates: one directory per
@@ -39,13 +38,19 @@ object GateLineage {
         "UTF-8") == srcFingerprint
       finally in.close()
     }
-    if (!fresh) {
-      if (fs.exists(p)) fs.delete(p, true)
-      fs.mkdirs(p)
-      val out = fs.create(marker, true)
-      try out.write(srcFingerprint.getBytes("UTF-8")) finally out.close()
-    }
+    if (!fresh) reset(spark, baseDir, srcFingerprint)
     !fresh
+  }
+
+  /** Empties `baseDir` and records `srcFingerprint` as its `_GRAFT_SRC`:
+    * a fresh lineage whatever the directory held. */
+  def reset(spark: SparkSession, baseDir: String, srcFingerprint: String): Unit = {
+    val p = new Path(baseDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+    fs.mkdirs(p)
+    val out = fs.create(new Path(p, "_GRAFT_SRC"), true)
+    try out.write(srcFingerprint.getBytes("UTF-8")) finally out.close()
   }
 
   /** Fingerprint of a probe gate's generation: the streamed source
@@ -67,7 +72,7 @@ object GateLineage {
 
   /** The settled-distinct drain every probe gate runs: an AvailableNow
     * drain of `stream` (built on the session this lineage's checkpoint
-    * calls for — [[LshProbe.checkpointSession]]) into the parquet sink
+    * calls for — [[Gate.session]]) into the parquet sink
     * of `lineage` over `sfDir`, keyed by [[probeFingerprint]] of the
     * lineage's source file, `stateTable` and `params`.
     * Returns the DISTINCT rows the sink has committed, read through its
@@ -89,14 +94,7 @@ object GateLineage {
       probeFingerprint(spark, s"$sfDir/${lineage.sources.head}", stateTable, params))
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"
-    stream(LshProbe.checkpointSession(spark, ckpt)).writeStream
-      .format("parquet")
-      .option("path", data)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    Gate.land(stream(Gate.session(spark, Some(ckpt))), data, ckpt)
     spark.read.schema(sinkSchema).parquet(data).distinct()
   }
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.Tables
 
 /** Streaming maintenance of the HLL register sketch behind
   * ivm_daily_users_hll — the sketch-IVM family's streaming end: events
@@ -24,26 +22,12 @@ object HllIngest {
     * with the SAME fixed-point estimate stage the batch query uses.
     * Cloned session per the streaming-isolation convention. */
   def usersOnce(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
-
     val stream = graft.queries.CorpusQueries.hllRowRanks(
-        ss.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(Tables.eventsRawSchema))
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(sfDir)
-          .withColumn("ts", expr(Tables.eventsTsExpr(ss, sfDir))))
+        Gate.events(Gate.session(spark), sfDir))
       .groupBy(col("obs_date"), col("event_type"), col("bucket"))
       .agg(max(col("rho")).as("r"))
-
-    val qname = "graft_stream_hll_ingest"
-    val query = stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.queries.CorpusQueries.hllPresent(ss.table(qname))
+    graft.queries.CorpusQueries.hllPresent(
+      Gate.settle(stream, "graft_stream_hll_ingest", "complete"))
   }
 
   /** Multi-micro-batch variant for the spec: drains a STAGED directory
@@ -53,23 +37,12 @@ object HllIngest {
     * arrival-order independence (max commutes) asserted, not argued. */
   private[graft] def usersOnceStaged(spark: SparkSession,
                                      stagedDir: String): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
     val stream = graft.queries.CorpusQueries.hllRowRanks(
-        ss.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "ts TIMESTAMP, event_type STRING, user_id BIGINT"))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stagedDir))
+        Gate.staged(Gate.session(spark), stagedDir,
+          "ts TIMESTAMP, event_type STRING, user_id BIGINT"))
       .groupBy(col("obs_date"), col("event_type"), col("bucket"))
       .agg(max(col("rho")).as("r"))
-    val qname = "graft_stream_hll_ingest_staged"
-    val query = stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    graft.queries.CorpusQueries.hllPresent(ss.table(qname))
+    graft.queries.CorpusQueries.hllPresent(
+      Gate.settle(stream, "graft_stream_hll_ingest_staged", "complete"))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -119,27 +118,14 @@ object LateArrivals {
     // production-sized state (see RocksDbStateSpec). Non-empty extraConf
     // gets a PRIVATE child session; the shared stream session's conf is
     // a cross-gate contract and is never mutated here.
-    val ss = LshProbe.sessionFor(spark, extraConf)
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id BIGINT, event_type STRING, ts_local TIMESTAMP"))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stagedDir)
+    val stream = Gate.staged(Gate.session(spark, extraConf = extraConf), stagedDir,
+        "event_id BIGINT, event_type STRING, ts_local TIMESTAMP")
       .withWatermark("ts_local", delay)
       .groupBy(window(col("ts_local"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(to_date(col("window.start")).as("obs_date"), col("event_type"),
         col("n"))
-    val qname = "graft_stream_late_tally"
-    stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    ss.table(qname)
+    Gate.settle(stream, "graft_stream_late_tally", "append")
   }
 
   /** Registered query: the events table split by id parity into an

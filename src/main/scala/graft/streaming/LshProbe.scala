@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming decontamination front gate (SURVEY §2.11 × the incremental
   * LSH state of dd_incremental_neardup): the documents increment
@@ -26,124 +25,6 @@ import org.apache.spark.sql.streaming.Trigger
   * downstream batch job — the stream's job is only to surface
   * collisions as documents arrive. */
 object LshProbe {
-
-  private val docSchema =
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-
-  /** One child session per base session, shared across drains (and with
-    * the other probe gates): a fresh `newSession()` per drain re-created
-    * the conf + catalog, so every drain re-resolved the state table
-    * (footer reads, relation cache cold) — a fixed per-drain driver cost
-    * the decomposition profiler attributed ~0.2-0.4 s of the sf0.1
-    * drain to. The child session exists only to pin the stream-side
-    * shuffle width without touching the caller's conf; sharing it is
-    * safe because that conf never varies. */
-  private val streamSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession] // weak keys: a
-  // test harness creates many short-lived base sessions in one JVM, and
-  // a strong-keyed memo would pin every one (plus its child) for the
-  // JVM lifetime. The map is safe ONLY because the child session holds
-  // no reference to its base SESSION OBJECT — newSession() shares the
-  // SparkContext and SharedState, never the parent SparkSession (its
-  // parentSessionState is None) — so the value never reaches the key.
-  // If a future change made the child carry a base-session handle, the
-  // value→key strong reference would pin every entry forever (the
-  // documented WeakHashMap caveat); assertNoBaseRef guards that at
-  // construction.
-
-  /** Guards the WeakHashMap invariant above: no field of the child
-    * session object may reference the base session. Shallow walk is the
-    * right depth — the caveat is a DIRECT value→key reference; anything
-    * deeper (context, shared state) is shared infrastructure that both
-    * sessions reference and never points back at a session object. */
-  private[streaming] def assertNoBaseRef(base: SparkSession,
-                                         child: SparkSession): Unit = {
-    var cls: Class[_] = child.getClass
-    while (cls != null && cls != classOf[Object]) {
-      cls.getDeclaredFields.foreach { f =>
-        if (!f.getType.isPrimitive) {
-          f.setAccessible(true)
-          require(f.get(child).asInstanceOf[AnyRef] ne base,
-            s"child stream session field ${f.getName} references its base " +
-              "session — this would pin the WeakHashMap entry forever")
-        }
-      }
-      cls = cls.getSuperclass
-    }
-  }
-
-  private[streaming] def streamSession(spark: SparkSession): SparkSession =
-    streamSessions.synchronized {
-      val hit = streamSessions.get(spark)
-      if (hit != null) {
-        // The shared conf is a cross-gate CONTRACT: a gate that needs
-        // different conf must keep its own session (BottomkIngest's
-        // extraConf precedent) — mutating this one would silently
-        // change every other gate's streams, so drift fails loudly.
-        require(hit.conf.get("spark.sql.shuffle.partitions") == "8",
-          "shared stream session conf was mutated — a gate needing " +
-            "non-default conf must use its own newSession() " +
-            "(see BottomkIngest), never the shared one")
-        hit
-      } else {
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "8")
-        CheckpointIo.tune(ss)
-        assertNoBaseRef(spark, ss)
-        streamSessions.put(spark, ss)
-        ss
-      }
-    }
-
-  /** Session selector for gates that take caller `extraConf`: the shared
-    * session's conf is a cross-gate contract (see streamSession), so any
-    * non-empty extraConf gets a PRIVATE child session instead — the
-    * BottomkIngest precedent — and the shared one is never mutated. The
-    * private child is not memoized: extraConf callers are spec seams
-    * (state-store-provider swaps), not per-drain hot paths. */
-  private[streaming] def sessionFor(spark: SparkSession,
-                                    extraConf: Map[String, String]): SparkSession =
-    if (extraConf.isEmpty) streamSession(spark)
-    else {
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      CheckpointIo.tune(ss) // before extraConf: a spec's overlay wins
-      extraConf.foreach { case (k, v) => ss.conf.set(k, v) }
-      ss
-    }
-
-  /** Session selector for a drain that checkpoints at `checkpointPath`:
-    * a local path drains on the shared, tuned stream session; any other
-    * scheme gets a PRIVATE child session without the local-only
-    * checkpoint defaults ([[CheckpointIo.isLocal]] — the choice is a pure
-    * function of the path). Not memoized: remote lineages are a
-    * deployment shape, not the local hot path. */
-  private[streaming] def checkpointSession(spark: SparkSession,
-                                           checkpointPath: String): SparkSession =
-    if (CheckpointIo.isLocal(checkpointPath)) streamSession(spark)
-    else {
-      val ss = spark.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      CheckpointIo.tune(ss, local = false)
-    }
-
-  /** Guarded redistribute of a streamed source before heavy PER-ROW
-    * narrow work (per-row sketching, quality/lang scoring) — guide §2.5
-    * applied to the stream gates: the fixture sources are one parquet
-    * file with one row group, so the sketch ran on a single task of a
-    * 32-core micro-batch. Identity on any multi-file landing directory
-    * ([[graft.ops.ScaleOps.narrowScanAt]]'s guard). The observe() node
-    * is an optimizer BARRIER as well as a free row-count metric:
-    * deterministic filters/projections otherwise push back through the
-    * Repartition (PushPredicateThroughNonJoin) onto the single scan
-    * task; CollectMetrics is not in the push-through set. `name` must
-    * be unique per query (observe contract). */
-  private[streaming] def spreadNarrow(base: SparkSession, path: String,
-                                      name: String, src: DataFrame): DataFrame =
-    if (graft.ops.ScaleOps.narrowScanAt(base, path))
-      src.repartition(base.sparkContext.defaultParallelism)
-        .observe(name, count(lit(1)).as("n"))
-    else src
 
   /** The streamed collision pipeline (shared by every sink shape):
     * per-row narrow minhash banding of the increment, stream-static
@@ -169,30 +50,19 @@ object LshProbe {
         (b * rowsPerBand until (b + 1) * rowsPerBand).map(sig): _*))
     }
 
-    spreadNarrow(ss, s"$sfDir/documents.parquet", "graft_lsh_probe_rows",
-      ss.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(docSchema))
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sfDir)
-        .filter(col("doc_id") % 3 === 2))
+    Gate.spreadNarrow(ss, s"$sfDir/documents.parquet", "graft_lsh_probe_rows",
+      Gate.documents(ss, sfDir).filter(col("doc_id") % 3 === 2))
       .withColumn("_ws", ws)
       .select(col("doc_id"),
         explode(array(bandCols: _*)).as("band_key"))
-      .join({
-        // Same collision-budget cap as the batch probe
-        // ([[graft.dedup.Dedup.incrementalNearDups]]): oversized state
-        // band buckets are degenerate and would fan every arriving doc
-        // out cap+-fold — the static side drops them once, before the
-        // stream ever joins. Windowed count keyed on band_key rides the
-        // state table's bucketing.
-        val st = ss.table(stateTable)
-          .select(col("doc_id").as("state_id"), col("band_key"))
-        bandBucketCap.fold(st) { cap =>
-          val w = org.apache.spark.sql.expressions.Window.partitionBy("band_key")
-          st.withColumn("_bsz", count(lit(1)).over(w))
-            .filter(col("_bsz") <= cap).drop("_bsz")
-        }
-      }, Seq("band_key"))
+      // Same collision-budget cap as the batch probe
+      // ([[graft.dedup.Dedup.incrementalNearDups]]): oversized state
+      // band buckets are degenerate and would fan every arriving doc
+      // out cap+-fold — the static side drops them once, before the
+      // stream ever joins.
+      .join(graft.ops.ScaleOps.capBuckets(ss.table(stateTable)
+        .select(col("doc_id").as("state_id"), col("band_key")),
+        "band_key", bandBucketCap), Seq("band_key"))
       .select(col("state_id"), col("doc_id").as("inc_id"))
   }
 
@@ -258,18 +128,10 @@ object LshProbe {
                             numHashes: Int = 32, rowsPerBand: Int = 4,
                             shingleN: Int = 2,
                             bandBucketCap: Option[Int] = None): WatermarkedDrain = {
-    val ss = checkpointSession(spark, s"$baseDir/ckpt")
+    val ckpt = s"$baseDir/ckpt"
     val dataDir = s"$baseDir/data"
-    val query = collisionStream(ss, sfDir, stateTable, numHashes,
-      rowsPerBand, shingleN, bandBucketCap)
-      .writeStream
-      .format("parquet")
-      .option("path", dataDir)
-      .option("checkpointLocation", s"$baseDir/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    Gate.land(collisionStream(Gate.session(spark, Some(ckpt)), sfDir, stateTable,
+      numHashes, rowsPerBand, shingleN, bandBucketCap), dataDir, ckpt)
     val fs = new org.apache.hadoop.fs.Path(baseDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // No metadata log at all ⇒ the drain had nothing to commit ever

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 import graft.ops.PersistedState
 
@@ -81,38 +80,28 @@ object ScdApplyStream {
     if (latestVersionDir(fs, work).isEmpty)
       publishVersion(fs, work, initVer, initHistory)
     val ckpt = new Path(work, "ckpt").toString
-    val ss = LshProbe.checkpointSession(spark, ckpt)
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        s"$snapshotSchemaDdl, _ver BIGINT"))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Version count is the number of staged snapshots — driver-small
-        // by construction (a dimension feed delivers a handful of
-        // versions per drain, not rows).
-        val vers = batch.select(col("_ver")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        vers.foreach { v =>
-          val bs = batch.sparkSession
-          val (curVer, curDir) = latestVersionDir(fs, work)
-            .getOrElse(sys.error(s"no seeded history under $work"))
-          // A replayed micro-batch re-derives an already-applied
-          // version: skip — hist_<v> already exists and is final (and
-          // appeared atomically, see publishVersion).
-          if (v > curVer)
-            publishVersion(fs, work, v, graft.ops.ScdOps.scd2Apply(
-              Tables.parquet(bs, curDir.toString),
-              batch.filter(col("_ver") === v).drop("_ver"),
-              keys, tracked, newVer = v))
-        }
+    val stream = Gate.staged(Gate.session(spark, Some(ckpt)), staged.toString,
+      s"$snapshotSchemaDdl, _ver BIGINT")
+    Gate.eachBatch(stream, ckpt) { (batch, _) =>
+      // Version count is the number of staged snapshots — driver-small
+      // by construction (a dimension feed delivers a handful of
+      // versions per drain, not rows).
+      val vers = batch.select(col("_ver")).distinct()
+        .collect().map(_.getLong(0)).sorted
+      vers.foreach { v =>
+        val bs = batch.sparkSession
+        val (curVer, curDir) = latestVersionDir(fs, work)
+          .getOrElse(sys.error(s"no seeded history under $work"))
+        // A replayed micro-batch re-derives an already-applied
+        // version: skip — hist_<v> already exists and is final (and
+        // appeared atomically, see publishVersion).
+        if (v > curVer)
+          publishVersion(fs, work, v, graft.ops.ScdOps.scd2Apply(
+            Tables.parquet(bs, curDir.toString),
+            batch.filter(col("_ver") === v).drop("_ver"),
+            keys, tracked, newVer = v))
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
+    }.awaitTermination()
     val (_, finalDir) = latestVersionDir(fs, work)
       .getOrElse(sys.error(s"no history produced under $work"))
     Tables.parquet(spark, finalDir.toString)

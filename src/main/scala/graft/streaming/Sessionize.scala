@@ -108,25 +108,11 @@ object Sessionize {
       Seq(ev, flush)
     }
 
-    val ss = LshProbe.streamSession(spark)
     implicit val evEnc = Encoders.product[Ev]
     val stream = sessions(
-      ss.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, event_id BIGINT, ts TIMESTAMP"))
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged.toString)
-        .as[Ev],
+      Gate.staged(Gate.session(spark), staged.toString,
+        "user_id BIGINT, event_id BIGINT, ts TIMESTAMP").as[Ev],
       gapMinutes)
-    val qname = "graft_stream_sessions"
-    stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    ss.table(qname)
+    Gate.settle(stream, "graft_stream_sessions", "append")
   }
 }

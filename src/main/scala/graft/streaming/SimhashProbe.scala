@@ -20,9 +20,6 @@ import org.apache.spark.sql.functions._
   * built with — sketch parameters are one unit, never mixed. */
 object SimhashProbe {
 
-  private val docSchema =
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-
   /** One AvailableNow drain of the increment (doc_id % 3 = 2) against
     * `stateTable` (written by prepareSimhashState: (doc_id, sig_hi,
     * sig_lo, mkey) bucketed on mkey). Returns the settled DISTINCT
@@ -47,26 +44,15 @@ object SimhashProbe {
       // text shuffle + extra exchange into the state join cost more than
       // the single-task signer it relieved (warm drain 1.8 -> 2.2-2.4 s).
       val sigs = graft.dedup.Dedup.simhashMd5(
-        ss.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(docSchema))
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(sfDir)
-          .filter(col("doc_id") % 3 === 2),
+        Gate.documents(ss, sfDir).filter(col("doc_id") % 3 === 2),
         "doc_id", "text")
       graft.dedup.Dedup
         .simhashMankuKeysMd5(sigs, "doc_id", maxHamming, blocks)
         .select(col("doc_id").as("inc_id"), col("sig_hi").as("h2"),
           col("sig_lo").as("l2"), col("mkey"))
-        .join({
-          val st = ss.table(stateTable)
-            .select(col("doc_id").as("state_id"), col("sig_hi").as("h1"),
-              col("sig_lo").as("l1"), col("mkey"))
-          bucketCap.fold(st) { cap =>
-            val w = org.apache.spark.sql.expressions.Window.partitionBy("mkey")
-            st.withColumn("_bsz", count(lit(1)).over(w))
-              .filter(col("_bsz") <= cap).drop("_bsz")
-          }
-        }, Seq("mkey"))
+        .join(graft.ops.ScaleOps.capBuckets(ss.table(stateTable)
+          .select(col("doc_id").as("state_id"), col("sig_hi").as("h1"),
+            col("sig_lo").as("l1"), col("mkey")), "mkey", bucketCap), Seq("mkey"))
         .select(col("state_id"), col("inc_id"),
           graft.dedup.Dedup.hammingHiLo(col("h1"), col("l1"),
             col("h2"), col("l2")).as("hamming"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 
 /** §2.11 stream–STATIC join — the enrichment shape every other st_*
@@ -29,27 +28,15 @@ object StaticEnrich {
     * (category, event_type). Complete-mode AvailableNow drain on a
     * cloned session, same as the other streaming tallies. */
   def enrichedTallyOnce(spark: SparkSession, sfDir: String): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
+    val ss = Gate.session(spark)
     import ss.implicits._
     val dimDf = dim.toDF("event_type", "category", "weight")
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(Tables.eventsRawSchema))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
+    val stream = Gate.file(ss, sfDir, "events.parquet", Tables.eventsRawSchema)
       .select(col("event_type"), col("value"))
       .join(broadcast(dimDf), Seq("event_type"), "left")
       .groupBy(col("category"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("value") * col("weight")), 2).as("weighted_value"))
-
-    val qname = "graft_stream_static_enrich"
-    val query = stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    ss.table(qname)
+    Gate.settle(stream, "graft_stream_static_enrich", "complete")
   }
 }

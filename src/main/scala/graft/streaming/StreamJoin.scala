@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ops.PersistedState
 
 /** Stream-stream inner join (§2.11 at scale): click→purchase
@@ -28,34 +27,18 @@ object StreamJoin {
     * Returns the settled (click_id, purchase_id, user_id) pairs. */
   def joinStaged(spark: SparkSession, clicksDir: String, purchasesDir: String,
                  horizonMinutes: Int, delay: String = "1 hour"): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
-    val clicks = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "click_id BIGINT, user_id BIGINT, click_ts TIMESTAMP"))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(clicksDir)
+    val ss = Gate.session(spark)
+    val clicks = Gate.staged(ss, clicksDir,
+        "click_id BIGINT, user_id BIGINT, click_ts TIMESTAMP")
       .withWatermark("click_ts", delay)
-    val purchases = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "purchase_id BIGINT, p_user_id BIGINT, purchase_ts TIMESTAMP"))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(purchasesDir)
+    val purchases = Gate.staged(ss, purchasesDir,
+        "purchase_id BIGINT, p_user_id BIGINT, purchase_ts TIMESTAMP")
       .withWatermark("purchase_ts", delay)
     val joined = clicks.join(purchases,
       expr(s"user_id = p_user_id AND purchase_ts >= click_ts " +
         s"AND purchase_ts <= click_ts + interval $horizonMinutes minutes"))
       .select(col("click_id"), col("purchase_id"), col("user_id"))
-    val qname = "graft_stream_join"
-    joined.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-      .awaitTermination()
-    ss.table(qname)
+    Gate.settle(joined, "graft_stream_join", "append")
   }
 
   /** Registered query: clicks and purchases from the events table, one

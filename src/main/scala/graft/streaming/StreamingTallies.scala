@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.Tables
 
 /** Streaming/incremental semantics (SURVEY.md §2.11): the reference
   * approximates a stream with full re-pull micro-batches of a live feed
@@ -11,7 +9,7 @@ import graft.Tables
   * Structured Streaming job: file source over the events parquet,
   * dropDuplicates on the feed id (the GFT duplicate-row risk,
   * turtle-tracks.Rmd:178-182), event-time tumbling day window in local
-  * time, `Trigger.AvailableNow` to drain and stop.
+  * time, an AvailableNow drain that stops once the input is read.
   *
   * At scale the same plan runs unchanged against a directory that keeps
   * receiving files (or a Kafka source): dropDuplicates + window state
@@ -36,35 +34,14 @@ object StreamingTallies {
     * (asserted by StreamingIsolationSpec). */
   def dailyTallyOnce(spark: SparkSession, sfDir: String,
                      tz: String = "Australia/Perth"): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
-
-    // The file stream source requires a directory; glob-filter the events
-    // file out of the shared sf directory. The explicit raw schema
-    // (ts BIGINT) reads the raw INT64 timestamp column without any legacy
-    // session conf — same per-read fix as Tables.events.
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(Tables.eventsRawSchema))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .withColumn("ts", expr(Tables.eventsTsExpr(ss, sfDir)))
+    val stream = Gate.events(Gate.session(spark), sfDir)
       .withColumn("ts_local", from_utc_timestamp(col("ts"), tz))
       .withWatermark("ts_local", "2 days")
       .dropDuplicates("event_id")
       .groupBy(window(col("ts_local"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(to_date(col("window.start")).as("obs_date"), col("event_type"), col("n"))
-
-    val qname = "graft_stream_daily_tally"
-    val query = stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    // The memory sink registers its view in the session that started the
-    // query — hand back that session's table (same SparkContext).
-    ss.table(qname)
+    Gate.settle(stream, "graft_stream_daily_tally", "complete")
   }
 
   /** SLIDING event-time windows (1-day window every 6 hours): each event
@@ -75,25 +52,11 @@ object StreamingTallies {
     * the 4 covering window starts per event arithmetically. */
   def slidingTallyOnce(spark: SparkSession, sfDir: String,
                        tz: String = "Australia/Perth"): DataFrame = {
-    val ss = LshProbe.streamSession(spark)
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(Tables.eventsRawSchema))
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .withColumn("ts", expr(Tables.eventsTsExpr(ss, sfDir)))
+    val stream = Gate.events(Gate.session(spark), sfDir)
       .withColumn("ts_local", from_utc_timestamp(col("ts"), tz))
       .groupBy(window(col("ts_local"), "1 day", "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("w_start"), col("event_type"), col("n"))
-
-    val qname = "graft_stream_sliding_tally"
-    val query = stream.writeStream
-      .format("memory")
-      .queryName(qname)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    ss.table(qname)
+    Gate.settle(stream, "graft_stream_sliding_tally", "complete")
   }
 }

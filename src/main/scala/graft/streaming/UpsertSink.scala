@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
 import graft.ops.PersistedState
 
@@ -39,12 +39,8 @@ object UpsertSink {
   /** Wire a streaming Dataset into the upsert sink. */
   def start[T](stream: Dataset[T], targetPath: String, key: String,
                checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .foreachBatch((batch: Dataset[T], _: Long) =>
-        upsertBatch(batch.toDF(), targetPath, key))
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Gate.eachBatch(stream, checkpoint)((batch, _) =>
+      upsertBatch(batch.toDF(), targetPath, key))
 
   /** Registered query: events replayed as two OVERLAPPING micro-batches
     * (ids ≡ 0..2 mod 5, then ids ≡ 2..4 mod 5 — the 20% overlap is the
@@ -75,13 +71,8 @@ object UpsertSink {
       PersistedState.StUpsert.fingerprint(sfDir, s"$params|staged=$staged"))
     val target = s"$work/target"
     val ckpt = s"$work/ckpt"
-    val ss = LshProbe.checkpointSession(spark, ckpt)
-    val stream = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "event_id BIGINT, event_type STRING, value DOUBLE"))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(staged.toString)
+    val stream = Gate.staged(Gate.session(spark, Some(ckpt)), staged.toString,
+      "event_id BIGINT, event_type STRING, value DOUBLE")
     start(stream, target, "event_id", ckpt)
       .awaitTermination()
     Tables.parquet(spark, target)

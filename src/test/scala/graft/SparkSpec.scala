@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +20,21 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private val temps = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  private lazy val deleteAtExit: Unit = {
+    sys.addShutdownHook(temps.forEach(p => graft.ops.ScaleOps.deleteLocal(p.toFile)))
+    ()
+  }
+  private def atExit(p: Path): Path = { deleteAtExit; temps.add(p); p }
+
+  /** A new directory under java.io.tmpdir, deleted with everything in it
+    * when the test JVM exits: no spec leaves a temp entry behind. */
+  def tempDir(prefix: String): Path = atExit(Files.createTempDirectory(prefix))
+
+  /** A new file under java.io.tmpdir, deleted when the test JVM exits. */
+  def tempFile(prefix: String, suffix: String): Path =
+    atExit(Files.createTempFile(prefix, suffix))
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -14,7 +14,7 @@ class TablesSchemaSpec extends SparkSpec {
   private val sf = "perfbench/data/sf0.01"
 
   private def tmpDir(tag: String): java.io.File =
-    java.nio.file.Files.createTempDirectory(s"graft-tables-$tag").toFile
+    SparkSpec.tempDir(s"graft-tables-$tag").toFile
 
   private def shape(d: DataFrame) =
     d.queryExecution.analyzed.output.map(a => (a.name, a.dataType, a.nullable))

@@ -79,7 +79,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val sc = spark.sparkContext
     // A 10-node chain runs ~9 label rounds; without per-round cleanup
     // the checkpoint dir accumulates one rdd-* subdir per round.
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+    val ckptDir = SparkSpec.tempDir("graft_cc_ckpt")
     val hadCkpt = sc.getCheckpointDir
     sc.setCheckpointDir(ckptDir.toString)
     try {

@@ -27,11 +27,10 @@ class MaterializerSpec extends SparkSpec {
         numCells = 4, nprobe = 2)
       assert(local.count() > 0)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-spec")
+    val dir = SparkSpec.tempDir("graft-ckpt-spec")
     spark.sparkContext.setCheckpointDir(dir.toString)
     // The shared session keeps this checkpoint dir until it stops, so
-    // the dir goes when the JVM does.
-    sys.addShutdownHook(graft.ops.ScaleOps.deleteLocal(dir.toFile))
+    // the dir goes when the JVM does (SparkSpec.tempDir).
     assert(Similarity.materializerChoice(d) == "reliable")
     // checkpoint() must actually write into the configured dir.
     val ck = Similarity.durableMaterialize(d)

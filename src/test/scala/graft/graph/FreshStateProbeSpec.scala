@@ -24,7 +24,7 @@ class FreshStateProbeSpec extends SparkSpec {
   test("fresh-built graph state + probe in ONE session stays exchange-free") {
     val src = new java.io.File("/root/testdata/sf0.001/documents.parquet")
     assume(src.isFile, "driver testdata not present")
-    val d = java.nio.file.Files.createTempDirectory("graft-fresh-tri")
+    val d = SparkSpec.tempDir("graft-fresh-tri")
     java.nio.file.Files.copy(src.toPath, d.resolve("documents.parquet"))
     try {
       // The Q body REQUIREs the executed probe plan exchange-free on the

@@ -20,7 +20,7 @@ class PairFeedRequireSpec extends SparkSpec {
   import spark.implicits._
 
   test("pair-feed REQUIREs fire when pg_incremental_pagerank builds the feed first") {
-    val d = java.nio.file.Files.createTempDirectory("graft-pairfeed")
+    val d = SparkSpec.tempDir("graft-pairfeed")
     val tag = d.toString.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
     try {
       // 15 groups of 4 near-duplicates (30 shared words, one distinct

@@ -36,7 +36,7 @@ class CkanUploadSpec extends AnyFunSuite {
   }
 
   test("resource_update POSTs a multipart body with id field and file part") {
-    val file = Files.createTempFile("graft-ckan", ".csv")
+    val file = graft.SparkSpec.tempFile("graft-ckan", ".csv")
     val content = "site,count\nA,3\nB,5\n"
     Files.writeString(file, content)
     withServer(200, """{"success": true, "result": {"id": "rid-1"}}""") { (url, cap) =>
@@ -61,7 +61,7 @@ class CkanUploadSpec extends AnyFunSuite {
   }
 
   test("resource_update surfaces CKAN errors as exceptions with the body") {
-    val file = Files.createTempFile("graft-ckan-err", ".csv")
+    val file = graft.SparkSpec.tempFile("graft-ckan-err", ".csv")
     Files.writeString(file, "x\n1\n")
     withServer(409, """{"success": false, "error": {"message": "Conflict"}}""") { (url, _) =>
       val e = intercept[java.io.IOException](

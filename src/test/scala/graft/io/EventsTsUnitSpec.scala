@@ -54,8 +54,7 @@ class EventsTsUnitSpec extends SparkSpec {
       (LogicalTypeAnnotation.TimeUnit.MICROS, micros, "MICROS"),
       (LogicalTypeAnnotation.TimeUnit.MILLIS, micros.map(_ / 1000L), "MILLIS"))
     cases.foreach { case (unit, raw, name) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft-tsunit-$name").toFile
+      val dir = SparkSpec.tempDir(s"graft-tsunit-$name").toFile
       try {
         writeEvents(dir, unit, raw)
         assert(graft.Tables.eventsTsUnit(spark, dir.toString) == name)
@@ -74,7 +73,7 @@ class EventsTsUnitSpec extends SparkSpec {
     // a partition subdirectory holds the part file, _SUCCESS and a
     // _spark_metadata-style underscore entry must be skipped, and the
     // unit must come from the nested footer.
-    val root = java.nio.file.Files.createTempDirectory("graft-tsunit-dir").toFile
+    val root = SparkSpec.tempDir("graft-tsunit-dir").toFile
     try {
       val tree = new java.io.File(root, "events.parquet/day=2024-01-15")
       java.nio.file.Files.createDirectories(tree.toPath)
@@ -82,7 +81,7 @@ class EventsTsUnitSpec extends SparkSpec {
         new java.io.File(root, "events.parquet/_SUCCESS").toPath)
       val micros = Seq(1705312800000000L)
       // write the part file via the same writer, then move it into the tree
-      val scratch = java.nio.file.Files.createTempDirectory("graft-tsunit-scratch").toFile
+      val scratch = SparkSpec.tempDir("graft-tsunit-scratch").toFile
       writeEvents(scratch, LogicalTypeAnnotation.TimeUnit.MICROS, micros)
       java.nio.file.Files.move(
         new java.io.File(scratch, "events.parquet").toPath,
@@ -115,7 +114,7 @@ class EventsTsUnitSpec extends SparkSpec {
     // all-null row group has stats with hasNonNullValue=false, so
     // genericGetMax is null — the sniffer must surface the 'cannot
     // determine the time unit' IllegalStateException.
-    val dir = java.nio.file.Files.createTempDirectory("graft-tsnull").toFile
+    val dir = SparkSpec.tempDir("graft-tsnull").toFile
     try {
       val schema = Types.buildMessage()
         .addField(Types.optional(PrimitiveTypeName.INT64).named("event_id"))

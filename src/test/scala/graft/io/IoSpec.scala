@@ -10,7 +10,7 @@ class IoSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeCsv round-trips with header (K1)") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = SparkSpec.tempDir("graft_csv").toString
     val d = Seq((1, "a"), (2, "b")).toDF("id", "name")
     Sinks.writeCsv(d, s"$dir/out")
     val back = spark.read.option("header", true).option("inferSchema", true)
@@ -19,7 +19,7 @@ class IoSpec extends SparkSpec {
   }
 
   test("writeCsvTimestamped sanitizes the timestamp into the path (K2)") {
-    val dir = Files.createTempDirectory("graft_csv_ts").toString
+    val dir = SparkSpec.tempDir("graft_csv_ts").toString
     val path = Sinks.writeCsvTimestamped(Seq(Tuple1(1)).toDF("x"), dir, "snap",
       java.time.Instant.parse("2017-03-22T09:00:00Z"))
     assert(path.endsWith("snap_2017-03-22T09-00-00Z"))
@@ -29,7 +29,7 @@ class IoSpec extends SparkSpec {
   test("writeGeoJson emits a valid FeatureCollection with ring + properties (K3)") {
     val d = Seq(("s1", 1.0, 2.0, 3.0, 4.0)).toDF("name", "x0", "y0", "x1", "y1")
       .withColumn("ring", Spatial.bboxRing(col("x0"), col("y0"), col("x1"), col("y1")))
-    val path = Files.createTempDirectory("graft_geo").toString + "/sites.geojson"
+    val path = SparkSpec.tempDir("graft_geo").toString + "/sites.geojson"
     Sinks.writeGeoJson(d, "ring", Seq("name"), path)
     val doc = new String(Files.readAllBytes(Paths.get(path)), "UTF-8")
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(doc)

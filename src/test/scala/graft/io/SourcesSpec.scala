@@ -9,14 +9,14 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv source round-trips a written product (S6/S7 + K1)") {
-    val dir = Files.createTempDirectory("graft_src_csv").toString
+    val dir = SparkSpec.tempDir("graft_src_csv").toString
     Sinks.writeCsv(Seq((1, "a"), (2, "b")).toDF("id", "v"), s"$dir/p")
     val back = Sources.csv(spark, s"$dir/p")
     assert(rows(back.orderBy("id")) == Seq(Seq(1, "a"), Seq(2, "b")))
   }
 
   test("jdbc source reads an embedded Derby table, plain and partitioned (S3)") {
-    val dbDir = Files.createTempDirectory("graft_derby").toString
+    val dbDir = SparkSpec.tempDir("graft_derby").toString
     val url = s"jdbc:derby:$dbDir/db;create=true"
     val con = DriverManager.getConnection(url)
     con.createStatement().execute(
@@ -49,7 +49,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("stageZip extracts entries and rejects path escapes (S2)") {
-    val tmp = Files.createTempDirectory("graft_zip")
+    val tmp = SparkSpec.tempDir("graft_zip")
     val zipPath = tmp.resolve("snap.zip").toString
     val zout = new ZipOutputStream(new java.io.FileOutputStream(zipPath))
     zout.putNextEntry(new ZipEntry("data/part.csv"))

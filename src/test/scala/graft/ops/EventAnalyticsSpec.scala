@@ -71,7 +71,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("funnel reach frames persist: one filtered events scan per stage in the plan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel_scan").toString
+    val dir = SparkSpec.tempDir("graft_funnel_scan").toString
     ev.write.mode("overwrite").parquet(dir)
     val pev = spark.read.parquet(dir)
     val out = EventAnalytics.funnel(pev, "user_id", "ts", "event_type",

@@ -17,7 +17,7 @@ class PartitionPruningSpec extends SparkSpec {
     val d = df("id BIGINT, v DOUBLE, event_date DATE")(
       (1 to 30).map(i => Row(i.toLong, i * 1.5,
         java.sql.Date.valueOf(f"2024-01-${i % 3 + 1}%02d"))))
-    val path = Files.createTempDirectory("graft-prune").toString + "/events"
+    val path = SparkSpec.tempDir("graft-prune").toString + "/events"
     ScaleOps.ensurePartitioned(spark, path, "event_date")(d)
 
     val q = spark.read.parquet(path)
@@ -50,7 +50,7 @@ class PartitionPruningSpec extends SparkSpec {
       (1 to 6).map(i => Row(i.toLong, java.sql.Date.valueOf("2024-02-01"))))
     val d2 = df("id BIGINT, event_date DATE")(
       (1 to 9).map(i => Row(i.toLong, java.sql.Date.valueOf("2024-02-01"))))
-    val path = Files.createTempDirectory("graft-prune-fp").toString + "/t"
+    val path = SparkSpec.tempDir("graft-prune-fp").toString + "/t"
     ScaleOps.ensurePartitioned(spark, path, "event_date", "src-v1")(d1)
     assert(spark.read.parquet(path).count() == 6)
     // Same fingerprint: the (different) frame must NOT be written.

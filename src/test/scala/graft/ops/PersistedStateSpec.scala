@@ -13,7 +13,7 @@ class PersistedStateSpec extends SparkSpec {
 
   private def copyFixture(): Path = {
     val src = java.nio.file.Paths.get("perfbench/data/sf0.01")
-    val dst = Files.createTempDirectory("graft-ps-sf")
+    val dst = SparkSpec.tempDir("graft-ps-sf")
     val ls = Files.list(src)
     try ls.iterator().forEachRemaining { f =>
       if (Files.isRegularFile(f)) Files.copy(f, dst.resolve(f.getFileName))
@@ -94,7 +94,9 @@ class PersistedStateSpec extends SparkSpec {
         "graft_st_lsh_probe_" -> docs,
         "graft_st_simhash_probe_" -> docs,
         "graft_st_cosine_probe_" -> emb,
-        "graft_st_er_probe_" -> cust)
+        "graft_st_er_probe_" -> cust,
+        "graft_st_file_sink_" -> events,
+        "graft_st_compact_live_" -> events)
       val got = PersistedState.all.map(st => st.name(d) -> st.fingerprint(d)).toMap
       assert(PersistedState.all.map(_.family).distinct.size == PersistedState.all.size,
         "two descriptors share a family")

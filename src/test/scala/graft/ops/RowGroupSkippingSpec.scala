@@ -32,7 +32,7 @@ class RowGroupSkippingSpec extends SparkSpec {
     val d = df("k BIGINT, v DOUBLE")(
       scala.util.Random.shuffle((1 to n).toList)
         .map(i => Row(i.toLong, i * 0.5)))
-    val base = Files.createTempDirectory("graft-rg").toString
+    val base = SparkSpec.tempDir("graft-rg").toString
     val sorted = s"$base/sorted"
     val shuffled = s"$base/shuffled"
     val conf = "parquet.block.size"
@@ -53,7 +53,7 @@ class RowGroupSkippingSpec extends SparkSpec {
 
   test("rowGroupRanges reads tight disjoint footer stats from a sorted write") {
     val d = df("k BIGINT")((1 to 4000).map(i => Row(i.toLong)))
-    val path = Files.createTempDirectory("graft-rg2").toString + "/t"
+    val path = SparkSpec.tempDir("graft-rg2").toString + "/t"
     ScaleOps.ensureSortedBy(spark, path, "k", 4)(d)
     val ranges = ScaleOps.rowGroupRanges(path, "k")
     assert(ranges.size >= 4)

@@ -129,7 +129,7 @@ class ScaleOpsSpec extends SparkSpec {
 
     // The path layouts (sorted, partitioned, fragmented) keep the same
     // contract through their `_GRAFT_SRC` marker.
-    val root = java.nio.file.Files.createTempDirectory("graft-byname").toFile
+    val root = SparkSpec.tempDir("graft-byname").toFile
     try {
       val df = spark.range(20).selectExpr("id AS k", "id % 3 AS v")
       val sorted = new java.io.File(root, "sorted").toString
@@ -197,7 +197,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("ensureSurgicalDelete: untouched files byte-identical, cohort gone, idempotent") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_surgical").toString
+    val base = SparkSpec.tempDir("graft_surgical").toString
     val src = s"$base/src"; val dst = s"$base/dst"
     // 4 files range-clustered on k: cohort 25..29 lives in one file
     spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v")
@@ -236,7 +236,7 @@ class ScaleOpsSpec extends SparkSpec {
   test("ensureSurgicalDelete: a footer-stats-less file ALWAYS rewrites " +
     "(it can hide any key, so it is never trusted)") {
     import java.nio.file.Files
-    val base = Files.createTempDirectory("graft_surgical_nostat").toString
+    val base = SparkSpec.tempDir("graft_surgical_nostat").toString
     val src = s"$base/src"
     // Two range-clustered files WITH stats: keys 0..49 and 50..99.
     spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v")

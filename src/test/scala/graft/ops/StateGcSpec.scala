@@ -22,7 +22,7 @@ class StateGcSpec extends SparkSpec {
 
   test("GC keeps live generations, drops stale (second fingerprint) and dead ones") {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val src = Files.createTempDirectory("gcsrc")
+    val src = SparkSpec.tempDir("gcsrc")
     val fpFile = src.resolve("state.bin")
     Files.write(fpFile, "v1".getBytes)
     val f1 = ScaleOps.fileFingerprint(fpFile.toString)
@@ -72,8 +72,8 @@ class StateGcSpec extends SparkSpec {
   test("gate lineages (graft_st_<gate>_<tag>, len:mtime|... marker): kept " +
     "while the source is live, would_drop once it is retired") {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val live = Files.createTempDirectory("gcgate_live")
-    val gone = Files.createTempDirectory("gcgate_gone")
+    val live = SparkSpec.tempDir("gcgate_live")
+    val gone = SparkSpec.tempDir("gcgate_gone")
     Seq(live, gone).foreach(d => Files.write(d.resolve("documents.parquet"), "docs".getBytes))
     val tbl = "graft_specgc_gate_state"
     ScaleOps.ensureBucketed(spark, tbl, "id", 2,
@@ -103,10 +103,34 @@ class StateGcSpec extends SparkSpec {
     }
   }
 
+  test("a staging dropped because its source was rewritten leaves no .lock") {
+    val wh = PersistedState.warehouse(spark)
+    val src = SparkSpec.tempDir("gcstage")
+    Files.write(src.resolve("events.parquet"), "v1".getBytes)
+    val d = src.toString
+    val stage = PersistedState("stage_specgc_lock", Seq("events.parquet"))
+    val dir = graft.streaming.LateArrivals.stageBatchesCached(spark, stage, d, ":p")(
+      Seq(spark.range(3).toDF("id")))
+    val lock = dir.resolveSibling(dir.getFileName.toString + ".lock")
+    try {
+      assert(Files.exists(lock), s"the staging keeps no lock at $lock")
+      Thread.sleep(5)
+      Files.write(src.resolve("events.parquet"), "v2-longer".getBytes)
+      val r = StateGc.run(spark, wh, Seq(d), "graft_stage_specgc_", dryRun = false)
+        .collect().map(r => r.getString(0) -> r.getString(5)).toSeq
+      assert(r == Seq(stage.name(d) -> "drop"), s"staging audit: $r")
+      assert(!Files.exists(dir), "the stale staging was not dropped")
+      assert(!Files.exists(lock), s"the dropped staging left $lock")
+    } finally {
+      ScaleOps.deleteLocal(dir.toFile)
+      Files.deleteIfExists(lock)
+    }
+  }
+
   test("a generation built through each PersistedState descriptor is kept " +
     "while its source is live and would_drop once the source is rewritten") {
     val wh = PersistedState.warehouse(spark)
-    val src = Files.createTempDirectory("gcdesc")
+    val src = SparkSpec.tempDir("gcdesc")
     val files = PersistedState.all.flatMap(_.sources).distinct
     files.foreach(f => Files.write(src.resolve(f), "v1".getBytes))
     val d = src.toString
@@ -150,7 +174,7 @@ class StateGcSpec extends SparkSpec {
 
   test("unfingerprinted generation under a live tag is kept (conservative)") {
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val src = Files.createTempDirectory("gcsrc2")
+    val src = SparkSpec.tempDir("gcsrc2")
     Files.write(src.resolve("x.bin"), "x".getBytes)
     val tag = PersistedState.tagOf(src.toString)
     val dir = new java.io.File(wh, s"graft_specgc_nofp_$tag").toString
@@ -172,7 +196,7 @@ class StateGcSpec extends SparkSpec {
     // dir's fingerprint was dropped as stale — GC deleting a
     // live-serving generation, the one failure it must never have.
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val base = Files.createTempDirectory("gccollide")
+    val base = SparkSpec.tempDir("gccollide")
     val dirA = base.resolve("gc a"); Files.createDirectory(dirA)
     val dirB = base.resolve("gc_a"); Files.createDirectory(dirB)
     Files.write(dirA.resolve("a.bin"), "aaaa".getBytes)

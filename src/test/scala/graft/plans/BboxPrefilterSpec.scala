@@ -13,7 +13,7 @@ class BboxPrefilterSpec extends SparkSpec {
     (4.0, 10.0), (0.0, 10.0), (0.0, 0.0)))
 
   private lazy val parquetDir = {
-    val dir = Files.createTempDirectory("graft_bbox").toString + "/pts"
+    val dir = SparkSpec.tempDir("graft_bbox").toString + "/pts"
     (-5 until 15).flatMap(x => (-5 until 15).map(y => (x.toDouble, y.toDouble)))
       .toDF("lon", "lat").write.parquet(dir)
     dir

@@ -69,7 +69,7 @@ class GeoJsonFuzzSpec extends SparkSpec {
     MultiPoly(rings.filter(_.size >= 3))
 
   test("fuzz: rings, bbox, and even-odd containment match the generated geometry") {
-    val dir = Files.createTempDirectory("geojson_fuzz").toString
+    val dir = SparkSpec.tempDir("geojson_fuzz").toString
     val features = (0 until 60).map { fid =>
       val polys = sample(multiGen, 1000L + fid)
       val asPolygon = fid % 3 == 0
@@ -121,7 +121,7 @@ class GeoJsonFuzzSpec extends SparkSpec {
   test("fuzz: sink -> source composition round-trips arbitrary MultiPolygons") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("geojson_fuzz_sink").toString
+    val dir = SparkSpec.tempDir("geojson_fuzz_sink").toString
     val path = s"$dir/mp.geojson"
     val polysType = ArrayType(ArrayType(ArrayType(StructType(Seq(
       StructField("lon", DoubleType), StructField("lat", DoubleType))))))
@@ -162,8 +162,8 @@ class GeoJsonFuzzSpec extends SparkSpec {
   }
 
   test("fuzz: JSON-level ring rotation + winding reversal never changes the read") {
-    val dir1 = Files.createTempDirectory("geojson_fuzz_a").toString
-    val dir2 = Files.createTempDirectory("geojson_fuzz_b").toString
+    val dir1 = SparkSpec.tempDir("geojson_fuzz_a").toString
+    val dir2 = SparkSpec.tempDir("geojson_fuzz_b").toString
     val base = (0 until 30).map { fid =>
       (fid, sample(multiGen, 5000L + fid))
     }

@@ -18,7 +18,7 @@ class GeoJsonSourceSpec extends SparkSpec {
     Row("b", 20L, Seq(Row(5.0, 5.0), Row(6.0, 5.0), Row(6.0, 6.0), Row(5.0, 5.0)))))
 
   private def writeTmp(): String = {
-    val dir = Files.createTempDirectory("geojson_spec").toString
+    val dir = SparkSpec.tempDir("geojson_spec").toString
     val path = s"$dir/sites.geojson"
     Sinks.writeGeoJson(sitesDf, "ring", Seq("site", "pop"), path)
     path
@@ -48,7 +48,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("unsupported geometry types fail loudly instead of parsing as zeros") {
-    val dir = Files.createTempDirectory("geojson_bad").toString
+    val dir = SparkSpec.tempDir("geojson_bad").toString
     val path = s"$dir/bad.geojson"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       """{"type":"FeatureCollection","features":[{"type":"Feature",
@@ -63,7 +63,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("MultiPolygon with a hole: all rings surface; ring stays the first outer") {
-    val dir = Files.createTempDirectory("geojson_mp").toString
+    val dir = SparkSpec.tempDir("geojson_mp").toString
     val path = s"$dir/mp.geojson"
     // Two polygons: a 0..4 square with a 1..3 hole, and a 10..12 square.
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
@@ -94,7 +94,7 @@ class GeoJsonSourceSpec extends SparkSpec {
 
   test("writeGeoJsonMulti -> source round trip: holed MultiPolygon, header bbox") {
     import graft.spatial.Spatial
-    val dir = Files.createTempDirectory("geojson_mpsink").toString
+    val dir = SparkSpec.tempDir("geojson_mpsink").toString
     val path = s"$dir/mp.geojson"
     // One feature: square [0,4]^2 with hole [1,3]^2, plus [10,12]x[0,2].
     val d = Seq(("m", 7L)).toDF("site", "pop").select(
@@ -121,7 +121,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("empty coordinate arrays: zero rings, null bbox (no min/max crash)") {
-    val dir = Files.createTempDirectory("geojson_empty").toString
+    val dir = SparkSpec.tempDir("geojson_empty").toString
     val path = s"$dir/e.geojson"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
       """{"type":"FeatureCollection","features":[
@@ -144,7 +144,7 @@ class GeoJsonSourceSpec extends SparkSpec {
       Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
     // A scalar where a Polygon ring belongs: the garbage ring must not
     // be silently dropped (the hole would be promoted to the outer).
-    val dir = Files.createTempDirectory("geojson_malformed").toString
+    val dir = SparkSpec.tempDir("geojson_malformed").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/badring.geojson"),
       """{"type":"FeatureCollection","features":[
         |{"type":"Feature","geometry":{"type":"Polygon",
@@ -168,7 +168,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("a property named like a reserved geometry column fails inference loudly") {
-    val dir = Files.createTempDirectory("geojson_clash").toString
+    val dir = SparkSpec.tempDir("geojson_clash").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/c.geojson"),
       """{"type":"FeatureCollection","features":[
         |{"type":"Feature","geometry":{"type":"Point","coordinates":[0,0]},
@@ -196,7 +196,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("a directory of feature files reads as one table, one partition per file") {
-    val dir = Files.createTempDirectory("geojson_dir").toString
+    val dir = SparkSpec.tempDir("geojson_dir").toString
     Sinks.writeGeoJson(sitesDf.filter($"site" === "a"), "ring", Seq("site", "pop"),
       s"$dir/part1.geojson")
     Sinks.writeGeoJson(sitesDf.filter($"site" === "b"), "ring", Seq("site", "pop"),
@@ -207,7 +207,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("bbox filter pushdown skips whole files by their header bbox") {
-    val dir = Files.createTempDirectory("geojson_prune").toString
+    val dir = SparkSpec.tempDir("geojson_prune").toString
     Sinks.writeGeoJson(sitesDf.filter($"site" === "a"), "ring", Seq("site", "pop"),
       s"$dir/a.geojson") // bbox [0,0,1,1]
     Sinks.writeGeoJson(sitesDf.filter($"site" === "b"), "ring", Seq("site", "pop"),
@@ -233,7 +233,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("files WITHOUT a header bbox are never pruned (no false skips)") {
-    val dir = Files.createTempDirectory("geojson_nobbox").toString
+    val dir = SparkSpec.tempDir("geojson_nobbox").toString
     Sinks.writeGeoJson(sitesDf.filter($"site" === "a"), "ring", Seq("site", "pop"),
       s"$dir/a.geojson") // has bbox [0,0,1,1]
     // Hand-written file with NO bbox member: conservatively always read.
@@ -249,7 +249,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("schema inference samples all features and files; long+double widens") {
-    val dir = Files.createTempDirectory("geojson_widen").toString
+    val dir = SparkSpec.tempDir("geojson_widen").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/f1.geojson"),
       """{"type":"FeatureCollection","features":[
         |{"type":"Feature","geometry":{"type":"Point","coordinates":[0,0]},
@@ -266,7 +266,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("irreconcilable property types fail inference loudly") {
-    val dir = Files.createTempDirectory("geojson_conflict").toString
+    val dir = SparkSpec.tempDir("geojson_conflict").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/f1.geojson"),
       """{"type":"FeatureCollection","features":[
         |{"type":"Feature","geometry":{"type":"Point","coordinates":[0,0]},
@@ -280,7 +280,7 @@ class GeoJsonSourceSpec extends SparkSpec {
   }
 
   test("null geometry errors descriptively when geometry columns are read") {
-    val dir = Files.createTempDirectory("geojson_nullgeom").toString
+    val dir = SparkSpec.tempDir("geojson_nullgeom").toString
     val path = s"$dir/n.geojson"
     Files.writeString(java.nio.file.Paths.get(path),
       """{"type":"FeatureCollection","features":[

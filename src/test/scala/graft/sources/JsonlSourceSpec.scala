@@ -15,7 +15,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("inference: types, long+double widening, nested-as-text, null rows") {
-    val dir = Files.createTempDirectory("graft_jsonl_inf").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_inf").toString
     writeLines(dir, "a.jsonl", Seq(
       """{"k": 1, "s": "x", "d": 2, "b": true, "nested": {"y": 1}}""",
       """{"k": 2, "s": null, "d": 2.5, "b": false, "nested": [1, 2]}"""))
@@ -29,7 +29,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("inference: a non-widenable type conflict fails loudly") {
-    val dir = Files.createTempDirectory("graft_jsonl_conflict").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_conflict").toString
     writeLines(dir, "a.jsonl", Seq("""{"k": 1}""", """{"k": "one"}"""))
     val e = intercept[IllegalArgumentException] {
       spark.read.format("graft-jsonl").load(dir).schema
@@ -38,7 +38,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("explicit schema: INT narrowing works; a lying cell fails loudly") {
-    val dir = Files.createTempDirectory("graft_jsonl_explicit").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_explicit").toString
     writeLines(dir, "a.jsonl", Seq("""{"k": 7, "s": "x"}"""))
     val df = spark.read.format("graft-jsonl")
       .schema(StructType.fromDDL("k INT, s STRING")).load(dir)
@@ -51,7 +51,7 @@ class JsonlSourceSpec extends SparkSpec {
 
   test("filter pushdown: accepted filters reach the scan and skip rows " +
     "at the source; missing fields compare as SQL NULL") {
-    val dir = Files.createTempDirectory("graft_jsonl_pd").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_pd").toString
     writeLines(dir, "a.jsonl", Seq(
       """{"k": 1, "v": 10}""",
       """{"k": 2}""",
@@ -74,7 +74,7 @@ class JsonlSourceSpec extends SparkSpec {
     // filter that compared through doubleValue() would skip matching
     // rows AT THE SOURCE, where Spark's residual re-check cannot
     // resurrect them. The compare must stay integral.
-    val dir = Files.createTempDirectory("graft_jsonl_bigint").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_bigint").toString
     val p53 = 9007199254740992L // 2^53: (double)(2^53) == (double)(2^53+1)
     writeLines(dir, "a.jsonl", Seq(
       s"""{"k": 1, "v": $p53}""",
@@ -97,7 +97,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("explicit INT/BIGINT schema over an out-of-range integral fails loudly") {
-    val dir = Files.createTempDirectory("graft_jsonl_ovf").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_ovf").toString
     writeLines(dir, "a.jsonl", Seq(s"""{"k": ${Int.MaxValue.toLong + 1}}"""))
     val bad = spark.read.format("graft-jsonl")
       .schema(StructType.fromDDL("k INT")).load(dir)
@@ -112,7 +112,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("column pruning reaches the scan (ReadSchema drops unused fields)") {
-    val dir = Files.createTempDirectory("graft_jsonl_prune").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_prune").toString
     writeLines(dir, "a.jsonl", Seq("""{"k": 1, "s": "x", "unused": 9}"""))
     val q = spark.read.format("graft-jsonl")
       .schema(StructType.fromDDL("k BIGINT, s STRING, unused BIGINT")).load(dir)
@@ -123,7 +123,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("a directory of shards reads as one table, one partition per shard") {
-    val dir = Files.createTempDirectory("graft_jsonl_shards").toString
+    val dir = SparkSpec.tempDir("graft_jsonl_shards").toString
     writeLines(dir, "s0.jsonl", Seq("""{"k": 1}"""))
     writeLines(dir, "s1.jsonl", Seq("""{"k": 2}""", """{"k": 3}"""))
     writeLines(dir, "_meta.json", Seq("""{"ignored": true}""")) // _-prefixed skipped

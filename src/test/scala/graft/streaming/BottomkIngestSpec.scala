@@ -16,8 +16,7 @@ class BottomkIngestSpec extends SparkSpec {
     // exceed k and cross-batch EVICTION genuinely happens
     val ev = graft.Tables.events(spark, d)
       .select(col("ts"), lit("all").as("event_type"), col("event_id"))
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_bk_stage").toString
+    val staged = SparkSpec.tempDir("graft_bk_stage").toString
     ev.repartition(4).write.mode("overwrite").parquet(staged)
 
     val got = BottomkIngest.sampleOnceStaged(spark, staged)

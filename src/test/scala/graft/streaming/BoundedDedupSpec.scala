@@ -47,7 +47,7 @@ class BoundedDedupSpec extends SparkSpec {
     val b5 = df(schema)(Seq(
       Row(8L, "X", ts("2024-02-15 12:00:00")))) // wmAfter(3) = 01-05 12:00 > X expiry -> RE-emitted
     val staged = LateArrivals.stageBatches(Seq(b0, spacer, b2, b3, b4, b5),
-      Files.createTempDirectory("graft-bdd-spec"))
+      SparkSpec.tempDir("graft-bdd-spec"))
     val ss = spark.newSession()
     val stream = ss.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))

@@ -26,7 +26,7 @@ class CompactedLandingSpec extends SparkSpec {
   }
 
   test("generation ∪ tail is exact; the landing log is never mutated") {
-    val base = Files.createTempDirectory("compact_live").toString
+    val base = SparkSpec.tempDir("compact_live").toString
     val src = s"$base/src"; val data = s"$base/data"
     val ckpt = s"$base/ckpt"; val gen = s"$base/gen"
 
@@ -70,7 +70,7 @@ class CompactedLandingSpec extends SparkSpec {
   }
 
   test("committed files come from the log: a torn orphan parquet stays invisible") {
-    val base = Files.createTempDirectory("compact_torn").toString
+    val base = SparkSpec.tempDir("compact_torn").toString
     val src = s"$base/src"; val data = s"$base/data"; val ckpt = s"$base/ckpt"
     (0L until 20L).map(i => (i, 1.0)).toDF("id", "v")
       .coalesce(1).write.mode("append").parquet(src)

@@ -32,7 +32,7 @@ class GateLineageSpec extends SparkSpec {
   private val batches = new AtomicInteger
   private val terminated = new AtomicInteger
   private lazy val listening: Unit =
-    LshProbe.streamSession(spark).streams.addListener(new StreamingQueryListener {
+    Gate.session(spark).streams.addListener(new StreamingQueryListener {
       def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
         batches.incrementAndGet(); ()
@@ -60,7 +60,7 @@ class GateLineageSpec extends SparkSpec {
 
   test("probe gates: a re-run commits no micro-batch and equals the batch " +
     "join; a rolled source or cap resets the lineage; no temp dir leaks") {
-    val root = Files.createTempDirectory("gate_lineage")
+    val root = SparkSpec.tempDir("gate_lineage")
     val d = root.resolve("sf").toString
     Files.createDirectory(root.resolve("sf"))
     Files.list(java.nio.file.Paths.get(fixture)).forEach { f =>

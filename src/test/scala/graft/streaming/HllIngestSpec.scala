@@ -13,8 +13,7 @@ class HllIngestSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val ev = graft.Tables.events(spark, d)
       .select(col("ts"), col("event_type"), col("user_id"))
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_hll_stage").toString
+    val staged = SparkSpec.tempDir("graft_hll_stage").toString
     // 3 files -> 3 micro-batches under maxFilesPerTrigger=1
     ev.repartition(3).write.mode("overwrite").parquet(staged)
 

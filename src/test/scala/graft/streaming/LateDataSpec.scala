@@ -30,7 +30,7 @@ class LateDataSpec extends SparkSpec {
     val b2 = df(schema)(Seq(Row(99L, "z", ts("2024-01-10 00:30:00"))))
 
     val staged = LateArrivals.stageBatches(Seq(b0, spacer, b1, b2),
-      Files.createTempDirectory("graft-late-spec"))
+      SparkSpec.tempDir("graft-late-spec"))
     val out = LateArrivals.appendDailyTally(spark, staged.toString, "1 day")
       .collect().map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2)))
       .sortBy(_._1)

@@ -54,8 +54,7 @@ class LshProbeSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     graft.queries.CorpusQueries.prepareLshState(spark, d)
     val state = graft.ops.PersistedState.LshState.name(d)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_wm_probe").toString + "/lineage"
+    val base = SparkSpec.tempDir("graft_wm_probe").toString + "/lineage"
     GateLineage.resetIfStale(spark, base, "fp-1")
 
     // Fresh lineage: everything the sink committed is beyond the marker.

@@ -28,8 +28,7 @@ class RocksDbCustomStateSpec extends SparkSpec {
     // BottomkIngestSpec).
     val ev = graft.Tables.events(spark, d)
       .select(col("ts"), lit("all").as("event_type"), col("event_id"))
-    val staged = java.nio.file.Files
-      .createTempDirectory("graft_bk_rocks_stage").toString
+    val staged = SparkSpec.tempDir("graft_bk_rocks_stage").toString
     ev.repartition(4).write.mode("overwrite").parquet(staged)
 
     def settle(df: org.apache.spark.sql.DataFrame) =

@@ -26,7 +26,7 @@ class RocksDbStateSpec extends SparkSpec {
       Row(4L, "a", ts("2024-01-02 12:00:00"))))
     val b2 = df(schema)(Seq(Row(99L, "z", ts("2024-01-10 00:30:00"))))
     val staged = LateArrivals.stageBatches(Seq(b0, spacer, b1, b2),
-      Files.createTempDirectory("graft-rocksdb-spec")).toString
+      SparkSpec.tempDir("graft-rocksdb-spec")).toString
 
     val default = LateArrivals.appendDailyTally(spark, staged)
     val rocks = LateArrivals.appendDailyTally(spark, staged,

@@ -31,9 +31,9 @@ class StreamJoinSpec extends SparkSpec {
     val c4 = df(cSchema)(Seq())
     val p4 = df(pSchema)(Seq(Row(101L, 1L, ts("2024-01-01 10:45:00"))))
     val cd = LateArrivals.stageBatches(Seq(c0, c1, c2, c3, c4),
-      Files.createTempDirectory("graft-sj-spec-c"))
+      SparkSpec.tempDir("graft-sj-spec-c"))
     val pd = LateArrivals.stageBatches(Seq(p0, p1, p2, p3, p4),
-      Files.createTempDirectory("graft-sj-spec-p"))
+      SparkSpec.tempDir("graft-sj-spec-p"))
     val out = StreamJoin.joinStaged(spark, cd.toString, pd.toString, 60)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(out == Seq((1L, 100L)))

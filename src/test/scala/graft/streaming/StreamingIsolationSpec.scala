@@ -39,15 +39,15 @@ class StreamingIsolationSpec extends SparkSpec {
   }
 
   test("extraConf gets a private session; the shared stream session is never mutated") {
-    val shared = LshProbe.streamSession(spark)
+    val shared = Gate.session(spark)
     // empty extraConf → the shared session itself (the memoized fast path)
-    assert(LshProbe.sessionFor(spark, Map.empty) eq shared)
+    assert(Gate.session(spark, extraConf = Map.empty) eq shared)
     // non-empty extraConf → a DIFFERENT session carrying the conf, while
     // the shared session's contract conf is untouched (the r15 bug:
     // ingestOnce applied RocksDbStateSpec's provider conf to the shared
     // session and silently switched every later gate in the JVM).
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val priv = LshProbe.sessionFor(spark,
+    val priv = Gate.session(spark, extraConf =
       Map(key -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
           "spark.sql.shuffle.partitions" -> "5"))
     assert(priv ne shared)
@@ -57,14 +57,14 @@ class StreamingIsolationSpec extends SparkSpec {
       shared.conf.get(key) != priv.conf.get(key),
       "extraConf leaked onto the shared stream session")
     // and the shared session still passes its own drift contract
-    assert(LshProbe.streamSession(spark) eq shared)
+    assert(Gate.session(spark) eq shared)
   }
 
   test("child stream session holds no field reference to its base session") {
-    // The WeakHashMap memo in LshProbe is leak-free ONLY under this
+    // The WeakHashMap memo in Gate is leak-free ONLY under this
     // invariant (value→key would pin entries forever); assertNoBaseRef
     // runs at construction, and this pins it against Spark upgrades
     // changing newSession()'s internals.
-    LshProbe.assertNoBaseRef(spark, spark.newSession())
+    Gate.assertNoBaseRef(spark, spark.newSession())
   }
 }

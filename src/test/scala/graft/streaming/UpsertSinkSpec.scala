@@ -11,7 +11,7 @@ class UpsertSinkSpec extends SparkSpec {
   test("foreachBatch upsert lands overlapping batches exactly once") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_upsert")
+    val dir = SparkSpec.tempDir("graft_upsert")
     val target = dir.resolve("target").toString
 
     val input = MemoryStream[Rec]
@@ -37,7 +37,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("upsertBatch recovers when the target dir exists but holds no parquet") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_upsert_empty")
+    val dir = SparkSpec.tempDir("graft_upsert_empty")
     val target = dir.resolve("target")
     // Simulate a crashed first write: directory created, no data committed.
     Files.createDirectories(target.resolve("_temporary"))
