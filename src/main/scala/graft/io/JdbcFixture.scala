@@ -30,9 +30,10 @@ object JdbcFixture {
     * `synchronized` so parallel test suites don't race the DDL. The
     * collect is 25 dimension rows — fixture loading, not a data path. */
   def loadNation(spark: SparkSession, sfDir: String): String = synchronized {
-    // Keep Derby's log chatter out of the repo working directory.
-    System.setProperty("derby.stream.error.file",
-      s"${System.getProperty("java.io.tmpdir")}/graft-derby.log")
+    // Keep Derby's log chatter out of the working directory: in Derby's
+    // own home when one is set, else under java.io.tmpdir.
+    System.setProperty("derby.stream.error.file", s"${System.getProperty(
+      "derby.system.home", System.getProperty("java.io.tmpdir"))}/graft-derby.log")
     val rows = Tables.nation(spark, sfDir)
       .select("n_nationkey", "n_name", "n_regionkey").collect()
     val conn = DriverManager.getConnection(url)

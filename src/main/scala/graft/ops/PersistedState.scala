@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One persisted-state family: the products the engine writes once per
   * source generation and reads back on every later call (bucketed
-  * state tables, sorted/partitioned layouts, 1-row derived caps, gate
-  * lineages, staged stream replays).
+  * state tables, sorted/partitioned layouts, 1-row checkpoints, gate
+  * lineages, staged stream replays, round-trip fixture files).
   *
   * The descriptor is the only place that decides, for every family:
   *  - the NAME, `graft_<family>_<tag>`, where `tag` renders the source
@@ -23,10 +23,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    generation costs one marker read or catalog lookup and never
   *    builds (or analyzes) the frame.
   *
-  * `version` carries the hand-bumped derivation tokens (`|p99` on the
-  * tail-aware caps, `|v2` on schema changes, `:synthoff=1e12` on the
-  * SCD2 composition): change one and that family rebuilds, nothing
-  * else does. */
+  * `version` carries the hand-bumped derivation tokens (`|v2` on schema
+  * changes, `:synthoff=1e12` on the SCD2 composition): change one and
+  * that family rebuilds, nothing else does. A bucketed state's derived
+  * cap is no family of its own: it is published with the state as
+  * `graft.stat` ([[bucketed]], [[stat]]). */
 final case class PersistedState(family: String, sources: Seq[String],
                                 version: String = "") {
 
@@ -49,11 +50,31 @@ final case class PersistedState(family: String, sources: Seq[String],
       version + suffix
 
   /** Bucketed state table, bucket count derived from its staged size
-    * ([[ScaleOps.ensureBucketedDerived]]). */
+    * ([[ScaleOps.ensureBucketedDerived]]); with a `cap`, the state's
+    * derived per-key cap is published with it ([[stat]]). */
   def bucketed(spark: SparkSession, sfDir: String, keys: Seq[String],
-               sortCols: Seq[String] = Nil)(df: => DataFrame): (Boolean, Int) =
+               sortCols: Seq[String] = Nil, cap: Option[KeyCap] = None)
+              (df: => DataFrame): (Boolean, Int) =
     ScaleOps.ensureBucketedDerived(spark, name(sfDir), keys,
-      fingerprint(sfDir), sortCols)(df)
+      fingerprint(sfDir), sortCols, cap)(df)
+
+  /** The derived cap a capped [[bucketed]] build published as
+    * `graft.stat`: one catalog lookup, the one freshness makes, and no
+    * job. Call after the build. */
+  def stat(spark: SparkSession, sfDir: String): Long =
+    org.apache.spark.sql.GraftShim.tableProperties(spark, name(sfDir))
+      .flatMap(_.get("graft.stat")).fold(throw new IllegalStateException(
+        s"${name(sfDir)} has no published graft.stat — build it capped first"))(_.toLong)
+
+  /** An empty directory for this call: the family's path, emptied and
+    * stamped with the current fingerprint as `_GRAFT_SRC` ([[StateGc]]
+    * keeps it while the source is live). For products rewritten on
+    * every call (landings, round-trip fixture files). */
+  def emptied(spark: SparkSession, sfDir: String): String = {
+    val p = path(spark, sfDir)
+    graft.streaming.GateLineage.reset(spark, p, fingerprint(sfDir))
+    p
+  }
 
   /** Range-clustered layout ([[ScaleOps.ensureSortedBy]]); true when
     * this call wrote it. */
@@ -73,10 +94,6 @@ final case class PersistedState(family: String, sources: Seq[String],
     ScaleOps.ensureFragmented(spark, path(spark, sfDir), numFiles,
       fingerprint(sfDir))(df)
 
-  /** The 1-row BIGINT statistic of a [[sorted]] cap layout, memoized
-    * per generation ([[ScaleOps.readStatLong]]). */
-  def readLong(spark: SparkSession, sfDir: String): Long =
-    ScaleOps.readStatLong(spark, path(spark, sfDir), fingerprint(sfDir))
 }
 
 object PersistedState {
@@ -100,17 +117,11 @@ object PersistedState {
   val CentroidState = PersistedState("km_state", Emb)
   val ClusterState = PersistedState("cc_state", Docs)
   val LshState = PersistedState("dd_lshstate", Docs)
-  /** "|p99": the tail-aware cap formula must re-derive caps persisted
-    * by the mean-only generation (also on the SimHash and cosine caps). */
-  val LshCap = PersistedState("dd_lshcap", Docs, "|p99")
   val SimhashState = PersistedState("dd_simhashstate", Docs)
-  val SimhashCap = PersistedState("dd_simhashcap", Docs, "|p99")
   /** "|v2": the df-column schema change must rebuild a v1 index. */
   val ContamState = PersistedState("dd_contamstate", Docs, "|v2")
-  val ContamCap = PersistedState("dd_contamcap", Docs, "|v2")
   val ContamBloom = PersistedState("dd_contambloom", Docs, "|v2")
   val CosineState = PersistedState("dd_cosinestate", Emb)
-  val CosineCap = PersistedState("dd_cosinecap", Emb, "|p99")
   val DqProfCounts = PersistedState("dq_profcnt", Docs)
   val DqProfRegs = PersistedState("dq_profregs", Docs)
   val PgEdges = PersistedState("pg_edges", Docs)
@@ -142,7 +153,6 @@ object PersistedState {
   // ---- entity resolution (EntityQueries)
   /** "|v2": the bsz-column schema change must rebuild a v1 key state. */
   val ErKeys = PersistedState("er_keys", Cust, "|v2")
-  val ErCap = PersistedState("er_cap", Cust, "|v2")
   val ErClusters = PersistedState("er_cc", Cust)
   val ErFullClusters = PersistedState("er_cc_full", Cust)
   val ErSurvivors = PersistedState("er_surv", Cust)
@@ -192,17 +202,30 @@ object PersistedState {
   val StFileSink = PersistedState("st_file_sink", Events)
   val StCompactLive = PersistedState("st_compact_live", Events)
 
+  // ---- round-trip fixture files (SpatialQueries, SourceQueries),
+  // keyed on the table each is derived from and rewritten on every call.
+  /** The per-event-type bbox rings written to and read back as GeoJSON. */
+  val GeoJsonRings = PersistedState("geojson_rt", Events)
+  /** The constant holed-MultiPolygon regions the synthetic events
+    * geocode against. */
+  val GeoJsonMultiPoly = PersistedState("geojson_mp", Events)
+  /** The nation rectangles as five bbox-headed band files. */
+  val GeoJsonBands = PersistedState("geojson_bands", Seq("nation.parquet"))
+  /** The nation table's CSV/ORC/JSONL/schema-evolution round trips. */
+  val SourceRoundTrips = PersistedState("src_rt", Seq("nation.parquet"))
+
   /** Every registered family. */
   val all: Seq[PersistedState] = Seq(
-    DedupState, CentroidState, ClusterState, LshState, LshCap, SimhashState,
-    SimhashCap, ContamState, ContamCap, ContamBloom, CosineState, CosineCap,
+    DedupState, CentroidState, ClusterState, LshState, SimhashState,
+    ContamState, ContamBloom, CosineState,
     DqProfCounts, DqProfRegs, PgEdges, PgPairs, PgRanks, PgTris, StCcCapped,
     StCcCands, IvmTally, IvmMetrics, IvmUsers, IvmBottomk, IvmHll, IvmQuant,
-    IvmJoinAgg, IvmScd2, ErKeys, ErCap, ErClusters, ErFullClusters,
+    IvmJoinAgg, IvmScd2, ErKeys, ErClusters, ErFullClusters,
     ErSurvivors, OrdersBuckets, LineitemBuckets, EventsPartitioned,
     EventsSorted, EventsZOrdered, EventsHilbert, EventsHilbert3, DatesDim,
     EventsFragmented, EventsCompacted, EventsForgotten, StageLateTally, StageSessions,
     StageBoundedDedup, StageFunnel, StageClicks, StagePurchases, StageUpsert,
     StUpsert, StageScd2Feed, StScd2Feed, StLshProbe, StSimhashProbe,
-    StCosineProbe, StErProbe, StFileSink, StCompactLive)
+    StCosineProbe, StErProbe, StFileSink, StCompactLive, GeoJsonRings,
+    GeoJsonMultiPoly, GeoJsonBands, SourceRoundTrips)
 }

@@ -77,13 +77,27 @@ object ScaleOps {
 
   /** (targetBytesPerBucket, targetRowsPerBucket, floor). Defaults:
     * 128 MiB / 8M rows per bucket — bucket files a scan task handles in
-    * one read, small enough that a retry is cheap; floor 32 keeps the
-    * local-harness parallelism and the historic layout for states the
-    * fixtures keep small. */
+    * one read, small enough that a retry is cheap. The floor follows the
+    * session ([[sessionFloor]] of `defaultParallelism`): a state the
+    * targets keep small is written and scanned in one wave of the
+    * session's cores, not in 32 / cores waves of tiny tasks (at
+    * `local[4]` the literal 32 ran every state write and probe scan as
+    * eight waves). `graft.state.bucketFloor` overrides it. The floor
+    * rides `graft.layout`, so a session of another width rebuilds a
+    * state once. */
   private[graft] def bucketTargets(spark: SparkSession): (Long, Long, Int) = (
     spark.conf.get("graft.state.bucketTargetBytes", (128L << 20).toString).toLong,
     spark.conf.get("graft.state.bucketTargetRows", (8L * 1000 * 1000).toString).toLong,
-    spark.conf.get("graft.state.bucketFloor", "32").toInt)
+    spark.conf.getOption("graft.state.bucketFloor").fold(
+      sessionFloor(spark.sparkContext.defaultParallelism))(_.toInt))
+
+  /** The smallest power of two >= `parallelism`, capped at 32 (the
+    * historic floor: at 32 or more cores nothing changes). */
+  private[graft] def sessionFloor(parallelism: Int): Int = {
+    var n = 1
+    while (n < parallelism && n < 32) n <<= 1
+    n
+  }
 
   /** Bucket count for a state of `bytes`/`rows`: enough buckets that
     * each stays under BOTH targets, rounded UP to a power of two (>=
@@ -239,13 +253,19 @@ object ScaleOps {
       (srcFingerprint.isEmpty || p.get("graft.src").contains(srcFingerprint)) &&
         p.get("graft.layout").contains(layout))
 
+  /** The one publish of a bucketed state: fingerprint, layout contract,
+    * bucket count and (when the state has one) its derived stat, in ONE
+    * `ALTER TABLE`. Until it runs the CTAS'd table carries none of them,
+    * so a crash anywhere before it leaves a table the next call finds
+    * stale and rebuilds. */
   private def recordBucketedProps(spark: SparkSession, table: String,
                                   srcFingerprint: String, layout: String,
-                                  numBuckets: Int): Unit = {
+                                  numBuckets: Int, stat: Option[Long] = None): Unit = {
     val fpProp =
       if (srcFingerprint.nonEmpty) s"'graft.src' = '$srcFingerprint', " else ""
+    val statProp = stat.fold("")(v => s", 'graft.stat' = '$v'")
     spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES (" +
-      fpProp + s"'graft.layout' = '$layout', 'graft.buckets' = '$numBuckets')")
+      fpProp + s"'graft.layout' = '$layout', 'graft.buckets' = '$numBuckets'$statProp)")
   }
 
   /** Multi-key [[ensureBucketed]] — see [[writeBucketedKeys]]. */
@@ -274,19 +294,32 @@ object ScaleOps {
     * write+read of state-sized data, paid once per generation at build
     * time, never on a probe path. One file per DERIVED bucket still
     * holds (asserted at the write site), so the sort-free probe
-    * contract survives the policy change. Returns (builtByThisCall,
-    * bucketCount) — the count read back from `graft.buckets` when the
-    * generation was already fresh. `df` is by name, as in
-    * [[ensureBucketed]]. */
+    * contract survives the policy change.
+    *
+    * With a `cap`, the state's derived per-key cap ([[KeyCap]]) is
+    * computed from the new table ([[keySizeHistogram]]: one
+    * exchange-free per-key count, one driver-sized histogram) and
+    * published as table property `graft.stat` in the SAME `ALTER TABLE`
+    * as `graft.src`/`graft.layout`/`graft.buckets` — the single publish
+    * point of the generation ([[recordBucketedProps]]). The cap's
+    * definition joins the layout contract, so a formula change rebuilds,
+    * and a table without `graft.stat` is never fresh for a capped call.
+    * Read it back with [[PersistedState.stat]].
+    *
+    * Returns (builtByThisCall, bucketCount) — the count read back from
+    * `graft.buckets` when the generation was already fresh. `df` is by
+    * name, as in [[ensureBucketed]]. */
   def ensureBucketedDerived(spark: SparkSession, table: String, keys: Seq[String],
                             srcFingerprint: String = "",
-                            sortCols: Seq[String] = Nil)
+                            sortCols: Seq[String] = Nil,
+                            cap: Option[KeyCap] = None)
                            (df: => DataFrame): (Boolean, Int) = {
     val (tBytes, tRows, floor) = bucketTargets(spark)
     val layout = layoutContract(keys, sortCols,
-      s"derived;tb=$tBytes;tr=$tRows;floor=$floor")
+      s"derived;tb=$tBytes;tr=$tRows;floor=$floor" + cap.fold("")(c => s";${c.render}"))
     val props = GraftShim.tableProperties(spark, table)
-    if (bucketedFresh(props, srcFingerprint, layout))
+    if (bucketedFresh(props, srcFingerprint, layout) &&
+        (cap.isEmpty || props.exists(_.contains("graft.stat"))))
       (false, props.flatMap(_.get("graft.buckets")).fold(floor)(_.toInt))
     else {
       val stage = new java.io.File(PersistedState.warehouse(spark),
@@ -295,12 +328,26 @@ object ScaleOps {
       val (bytes, rows) = parquetStats(spark, stage)
       val n = deriveBucketCount(bytes, rows, tBytes, tRows, floor)
       writeBucketedKeys(Tables.parquet(spark, stage), table, keys, n, sortCols)
-      recordBucketedProps(spark, table, srcFingerprint, layout, n)
+      val stat = cap.map(_.of(keySizeHistogram(spark.table(table), keys)))
+      recordBucketedProps(spark, table, srcFingerprint, layout, n, stat)
       val (fs, stageP) = hadoopFs(spark, stage)
       fs.delete(stageP, true)
       (true, n)
     }
   }
+
+  /** Key-size histogram of a state: (rows per key group, the group's
+    * key is null, number of such groups). Over a table bucketed on
+    * `keys` the per-key count rides the bucketing (no exchange); the
+    * histogram has one row per distinct (size, nullness) — tiny at any
+    * scale — and is collected to the driver, where [[KeyCap.of]] folds
+    * it. */
+  private[graft] def keySizeHistogram(state: DataFrame,
+                                      keys: Seq[String]): Seq[(Long, Boolean, Long)] =
+    state.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_c"))
+      .groupBy(col("_c"), keys.map(k => col(k).isNull).reduce(_ || _).as("_null"))
+      .agg(count(lit(1)).as("_f"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2)))
 
   // ---- Hadoop FS plumbing: layout prep must work on hdfs://, s3a://
   // and file:// alike, so every existence check, marker file and listing
@@ -415,28 +462,6 @@ object ScaleOps {
       val want = spark.sparkContext.defaultParallelism
       val v = Tables.parquet(spark, path).rdd.getNumPartitions * 2 <= want
       narrowMemo.putIfAbsent(key, java.lang.Boolean.valueOf(v))
-      v
-    }
-  }
-
-  /** 1-row layout-statistic checkpoints (the derived probe caps): each
-    * parquet `head()` is a full driver job (~0.1-0.2 s) paid by EVERY
-    * cap-consuming query invocation, but the value is a constant of the
-    * state GENERATION — memoized per (path, source fingerprint), the
-    * bloomMemo precedent in CorpusQueries. A state rebuild changes the
-    * fingerprint and re-reads; racing readers of one key both compute
-    * the same value and the second put is a no-op. */
-  private val statMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]
-
-  def readStatLong(spark: SparkSession, path: String,
-                   srcFingerprint: String): Long = {
-    val key = (path, srcFingerprint)
-    val hit = statMemo.get(key)
-    if (hit != null) hit.longValue()
-    else {
-      val v = Tables.parquet(spark, path).head().getLong(0)
-      statMemo.putIfAbsent(key, java.lang.Long.valueOf(v))
       v
     }
   }
@@ -717,4 +742,44 @@ object ScaleOps {
         .write.mode("overwrite").parquet(dst)
       writeMarker(spark, dst, srcFingerprint)
     }
+}
+
+/** A state's derived per-key cap — the collision budget its probes
+  * apply ([[ScaleOps.capBuckets]], or a scan predicate on a windowed
+  * size column) — published with the state as `graft.stat`
+  * ([[ScaleOps.ensureBucketedDerived]]). Over the state's key groups:
+  *
+  *   greatest(floor, mult · rows div groups, p99 group size when `tail`)
+  *
+  * in integer arithmetic. `rows` counts every row, null keys included.
+  * A `tail` cap (LSH, SimHash, cosine) counts a null-key group as a
+  * group, as `groupBy` does, and adds the rank-based p99 of group sizes
+  * (the smallest size whose cumulative group count reaches
+  * ceil(0.99 · groups)); a mean cap (contamination, ER) leaves the
+  * null-key group out of `groups`, as `count(DISTINCT key)` does. No
+  * group at all degrades to the floor. */
+final case class KeyCap(floor: Long, mult: Long, tail: Boolean) {
+
+  /** The cap's definition in the layout contract: a formula change
+    * rolls `graft.layout` and rebuilds the state. `p99` is the old
+    * `|p99` token of the tail-aware caps. */
+  def render: String = s"stat=keycap,$floor,$mult,${if (tail) "p99" else "mean"}"
+
+  /** The cap of a key-size histogram ([[ScaleOps.keySizeHistogram]]). */
+  def of(hist: Seq[(Long, Boolean, Long)]): Long = {
+    val rows = hist.map { case (c, _, f) => c * f }.sum
+    val groups = hist.collect { case (_, isNull, f) if tail || !isNull => f }.sum
+    if (groups == 0) floor
+    else {
+      val p99 =
+        if (!tail) None
+        else {
+          val sizes = hist.groupMapReduce(_._1)(_._3)(_ + _).toSeq.sortBy(_._1)
+          val need = math.ceil(0.99 * groups).toLong
+          sizes.map(_._1).zip(sizes.scanLeft(0L)(_ + _._2).tail)
+            .collectFirst { case (c, cum) if cum >= need => c }
+        }
+      (Seq(floor, mult * rows / groups) ++ p99).max
+    }
+  }
 }

@@ -8,7 +8,7 @@ import graft.Tables
   *
   * Every persisted state the engine maintains is a [[PersistedState]]
   * family — bucketed CTAS tables (dedup digests, LSH bands, ER keys,
-  * graph edges), path layouts and 1-row checkpoints (caps, blooms, rank
+  * graph edges), path layouts and 1-row checkpoints (blooms, rank
   * states), gate lineages and staged stream replays — so it is named
   * `graft_<family>_<sourceTag>` by the one tag rule
   * ([[PersistedState.tagOf]]) and freshness-keyed by the descriptor's

@@ -205,7 +205,7 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
     * predicates instead of per-probe windows) and one-time clustering
     * of their match graph; each increment then probes/merges without
     * ever re-blocking or re-clustering the stock. The derived block cap
-    * persists beside the state as a 1-row checkpoint: greatest(floor,
+    * is published with the state as `graft.stat`: greatest(floor,
     * mult · mean state block size), a layout statistic of the key state
     * read back O(1) per probe (the LSH/SimHash/cosine families' cap
     * convention). Idempotent per customer generation. */
@@ -214,14 +214,10 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
     lazy val stateK = keyedRecords(s, d).filter(!incPred)
     // Bucket count derived from the key state's own staged size
     // (ScaleOps.ensureBucketedDerived — the verdict-17 layout policy).
-    ErKeys.bucketed(s, d, Seq("bkey"))(
+    ErKeys.bucketed(s, d, Seq("bkey"),
+      cap = Some(graft.ops.KeyCap(erBlockCap.toLong, erCapMeanMult.toLong, tail = false)))(
       passKeyRows(stateK).withColumn("bsz", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("bkey"))))
-    ErCap.sorted(s, d, "derived_cap")(
-      ErKeys.table(s, d)
-        .agg(greatest(lit(erBlockCap.toLong),
-          expr(s"$erCapMeanMult * count(1) div count(DISTINCT bkey)"))
-          .as("derived_cap")))
     ErClusters.sorted(s, d, "node")(
       graft.dedup.Dedup.connectedComponents(
         EntityResolution.verifyByEditDistance(
@@ -366,7 +362,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
         passKeyRows(k.filter(incPred)))
       val crossCands = ErKeys.table(s, d).hint("merge")
-        .filter(col("bsz") <= ErCap.readLong(s, d))
+        .filter(col("bsz") <= ErKeys.stat(s, d))
         .select(col("rid").as("rid1"), col("bkey"))
         .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
         .select("rid1", "rid2").distinct()
@@ -421,11 +417,11 @@ inc AS (SELECT rid, bkey FROM p WHERE (rid // 2) % 3 = 2)
 SELECT DISTINCT stc.rid AS state_rid, inc.rid AS inc_rid
 FROM stc JOIN inc ON stc.bkey = inc.bkey""") { (s, d) =>
       prepareErState(s, d)
-      // Cap read from its state-build checkpoint (O(1)); the block sizes
-      // were windowed into the state at CTAS — nothing state-sized is
+      // Cap read from the state's published graft.stat (O(1)); the block
+      // sizes were windowed into the state at CTAS — nothing state-sized is
       // recomputed per probe. Same value the in-plan derivation produced.
       graft.streaming.ErProbe.candidatesOnce(s, d, ErKeys.name(d),
-        persistedCap = Some(("bsz", ErCap.readLong(s, d))))
+        persistedCap = Some(("bsz", ErKeys.stat(s, d))))
     },
 
     // Survivorship: per entity cluster, elect the canonical record by a

@@ -58,7 +58,7 @@ object SourceQueries {
     // inference pass) must equal the original dimension table.
     Q("src_csv_roundtrip",
       "SELECT n_nationkey, n_name, n_regionkey FROM nation") { (s, d) =>
-      val path = s"${tmpDir(d)}/nation_csv"
+      val path = s"${rtDir(s, d)}/nation_csv"
       Sinks.writeCsv(Tables.nation(s, d)
         .select("n_nationkey", "n_name", "n_regionkey"), path)
       Sources.csv(s, path, Some(StructType.fromDDL(
@@ -72,7 +72,7 @@ object SourceQueries {
     // fails.
     Q("src_zip_staging",
       "SELECT n_nationkey, n_name, n_regionkey FROM nation") { (s, d) =>
-      val base = tmpDir(d)
+      val base = rtDir(s, d)
       val csvDir = s"$base/nation_zip_src"
       Sinks.writeCsv(Tables.nation(s, d)
         .select("n_nationkey", "n_name", "n_regionkey"), csvDir)
@@ -111,7 +111,7 @@ object SourceQueries {
     // hash.
     Q("src_orc_roundtrip",
       "SELECT n_nationkey, n_name, n_regionkey FROM nation") { (s, d) =>
-      val path = s"${tmpDir(d)}/nation_orc"
+      val path = s"${rtDir(s, d)}/nation_orc"
       Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
         .write.mode("overwrite").orc(path)
       s.read.orc(path)
@@ -128,7 +128,7 @@ object SourceQueries {
     // the plain-reader registration it replaces.
     Q("src_jsonl_roundtrip",
       "SELECT n_nationkey, n_name, n_regionkey FROM nation") { (s, d) =>
-      val path = s"${tmpDir(d)}/nation_jsonl"
+      val path = s"${rtDir(s, d)}/nation_jsonl"
       Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
         .write.mode("overwrite").json(path)
       s.read.format("graft-jsonl").schema(StructType.fromDDL(
@@ -144,7 +144,7 @@ object SourceQueries {
     Q("src_jsonl_pushdown",
       "SELECT n_nationkey, n_name FROM nation WHERE n_regionkey >= 2 " +
         "AND n_nationkey < 20") { (s, d) =>
-      val path = s"${tmpDir(d)}/nation_jsonl_pd"
+      val path = s"${rtDir(s, d)}/nation_jsonl_pd"
       Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey")
         .write.mode("overwrite").json(path)
       val out = s.read.format("graft-jsonl").schema(StructType.fromDDL(
@@ -171,7 +171,7 @@ object SourceQueries {
         "FROM nation WHERE n_nationkey % 2 = 0 " +
         "UNION ALL SELECT n_nationkey, n_name, n_regionkey FROM nation " +
         "WHERE n_nationkey % 2 = 1") { (s, d) =>
-      val base = tmpDir(d)
+      val base = rtDir(s, d)
       val v1 = s"$base/nation_v1"
       val v2 = s"$base/nation_v2"
       Tables.nation(s, d).filter(col("n_nationkey") % 2 === 0)
@@ -184,8 +184,14 @@ object SourceQueries {
         .select("n_nationkey", "n_name", "n_regionkey")
     })
 
-  private def tmpDir(sfDir: String): String =
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_src_rt_${Integer.toHexString(sfDir.hashCode)}"))
-      .toString
+  /** The nation round trips' directory, under the warehouse as a
+    * [[graft.ops.PersistedState.SourceRoundTrips]] generation (emptied
+    * when nation.parquet rolls); each query overwrites its own
+    * subdirectory on every call. */
+  private def rtDir(s: org.apache.spark.sql.SparkSession, sfDir: String): String = {
+    val rt = graft.ops.PersistedState.SourceRoundTrips
+    val base = rt.path(s, sfDir)
+    graft.streaming.GateLineage.resetIfStale(s, base, rt.fingerprint(sfDir))
+    base
+  }
 }

@@ -141,9 +141,7 @@ object SpatialQueries {
           max("lon").as("x_max"), max("lat").as("y_max"))
         .select(col("event_type"), Spatial.bboxRing(
           col("x_min"), col("y_min"), col("x_max"), col("y_max")).as("ring"))
-      val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
-        s"${System.getProperty("java.io.tmpdir")}/graft_geojson_rt_${Integer.toHexString(d.hashCode)}"))
-      val path = s"$dir/rings.geojson"
+      val path = s"${graft.ops.PersistedState.GeoJsonRings.emptied(s, d)}/rings.geojson"
       graft.io.Sinks.writeGeoJson(rings, "ring", Seq("event_type"), path)
       s.read.format("graft-geojson").load(path)
         .select(col("event_type"), posexplode(col("ring")))
@@ -181,7 +179,7 @@ object SpatialQueries {
     // 'none'; the oracle re-derives everything from interval logic on
     // the rectangle bounds.
     Q("src_geojson_multipoly", multiPolySql) { (s, d) =>
-      val path = multiPolyGeoJson(d)
+      val path = multiPolyGeoJson(s, d)
       val feats = s.read.format("graft-geojson").load(path)
         .select(col("region"), col("rings")).collect()
       val regions: Seq[(String, Region)] = feats.map { r =>
@@ -219,10 +217,8 @@ object SpatialQueries {
     * rings; this fixture exercises the SOURCE'S multi-ring parse).
     * Outer rings wind CCW and holes CW per RFC 7946 — though the
     * even-odd consumer is winding-agnostic by construction. */
-  def multiPolyGeoJson(d: String): String = {
-    val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_geojson_mp_${Integer.toHexString(d.hashCode)}"))
-    val path = s"$dir/regions.geojson"
+  def multiPolyGeoJson(s: SparkSession, d: String): String = {
+    val path = s"${graft.ops.PersistedState.GeoJsonMultiPoly.emptied(s, d)}/regions.geojson"
     def ring(x0: Double, y0: Double, x1: Double, y1: Double, cw: Boolean): String = {
       val ccw = Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
       (if (cw) ccw.reverse else ccw)
@@ -242,11 +238,12 @@ object SpatialQueries {
   }
 
   /** Writes the 25 nation rectangles as 5 band files (nation keys
-    * 0-4, 5-9, ...) with file-level bboxes; returns the directory.
-    * Shared by the src_geojson_bbox query and the pruning spec. */
+    * 0-4, 5-9, ...) with file-level bboxes into the warehouse's
+    * [[graft.ops.PersistedState.GeoJsonBands]] directory, rewritten on
+    * every call; returns the directory. Shared by the src_geojson_bbox
+    * query and the pruning spec. */
   def bandedNationGeoJson(s: SparkSession, d: String): String = {
-    val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
-      s"${System.getProperty("java.io.tmpdir")}/graft_geojson_bands_${Integer.toHexString(d.hashCode)}"))
+    val dir = graft.ops.PersistedState.GeoJsonBands.emptied(s, d)
     val nat = Tables.nation(s, d).select(
       col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
       (col("n_nationkey") * 7.0).as("x_min"),
@@ -260,6 +257,6 @@ object SpatialQueries {
         nat.filter(col("n_nationkey") >= g * 5 && col("n_nationkey") < (g + 1) * 5),
         "ring", Seq("n_nationkey", "n_name"), s"$dir/band_$g.geojson")
     }
-    dir.toString
+    dir
   }
 }

@@ -91,9 +91,7 @@ object CompactedLanding {
   def landCompactLandOnce(spark: SparkSession, sfDir: String): DataFrame = {
     // The gate's lineage under the warehouse, emptied first: every run
     // lands into a fresh source, sink and checkpoint.
-    val lineage = graft.ops.PersistedState.StCompactLive
-    val base = lineage.path(spark, sfDir)
-    GateLineage.reset(spark, base, lineage.fingerprint(sfDir))
+    val base = graft.ops.PersistedState.StCompactLive.emptied(spark, sfDir)
     val src = s"$base/src"; val data = s"$base/data"
     val ckpt = s"$base/ckpt"; val gen = s"$base/gen"
     val ss = Gate.session(spark, Some(ckpt))

@@ -38,8 +38,8 @@ object ErProbe {
     * the probe, while a degenerate key far above mult × the mean stays
     * capped. `persistedCap` = (bszCol, cap) is the O(1) shape of the
     * same bound: the block size was windowed INTO the state at build
-    * time and the cap read back from its 1-row checkpoint
-    * (PersistedState.ErCap), so the filter is a scan predicate and
+    * time and the cap read back from the state's published `graft.stat`
+    * (PersistedState.stat), so the filter is a scan predicate and
     * nothing state-sized is recomputed per probe. The three cap modes
     * are mutually exclusive. The sink is the gate's [[GateLineage]],
     * keyed on customer.parquet, the state table's generation and the

@@ -24,9 +24,7 @@ object FileSinkIngest {
     // the sink's exactly-once story is the checkpoint + log PAIR; reusing
     // one against a deleted other is the classic operational mistake, so
     // the fixture recreates both together.
-    val lineage = graft.ops.PersistedState.StFileSink
-    val base = lineage.path(spark, sfDir)
-    GateLineage.reset(spark, base, lineage.fingerprint(sfDir))
+    val base = graft.ops.PersistedState.StFileSink.emptied(spark, sfDir)
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"
     Gate.land(Gate.file(Gate.session(spark, Some(ckpt)), sfDir, "events.parquet",

@@ -13,22 +13,53 @@ class PersistedStateSiteSpec extends AnyFunSuite {
     "replaceAll(\"[^A-Za-z0-9]+\", \"_\")",
     "conf.get(\"spark.sql.warehouse.dir\")")
 
-  test("the tag rule and the warehouse lookup appear only in PersistedState") {
+  private def mainLines: List[(java.nio.file.Path, String, Int)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
     import scala.jdk.CollectionConverters._
     val walk = java.nio.file.Files.walk(root)
     val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    val offending = for {
+    for {
       f <- files
-      if f.getFileName.toString != "PersistedState.scala"
       (line, i) <- java.nio.file.Files.readAllLines(f,
-        java.nio.charset.StandardCharsets.ISO_8859_1).asScala.zipWithIndex
+        java.nio.charset.StandardCharsets.ISO_8859_1).asScala.toList.zipWithIndex
+    } yield (f, line, i + 1)
+  }
+
+  test("the tag rule and the warehouse lookup appear only in PersistedState") {
+    val offending = for {
+      (f, line, n) <- mainLines
+      if f.getFileName.toString != "PersistedState.scala"
       if forbidden.exists(line.contains)
-    } yield s"$f:${i + 1}: ${line.trim}"
+    } yield s"$f:$n: ${line.trim}"
     assert(offending.isEmpty,
       "state names and warehouse paths must go through PersistedState:\n" +
         offending.mkString("\n"))
+  }
+
+  /** A derived cap is published with its state as `graft.stat`
+    * (`PersistedState.bucketed` with a `KeyCap`, read by
+    * `PersistedState.stat`): a cap written as a layout of its own, a
+    * `*Cap` family or the parquet read-back would be a second publish
+    * point that can drift from its state. A literal shuffle-partition
+    * count under `queries/` assumes a bucket count the session decides. */
+  private val capForbidden = Seq(
+    "a cap layout keyed on derived_cap" -> """\.sorted\([^)]*"derived_cap"""".r,
+    "readStatLong" -> """\breadStatLong\b""".r,
+    "a *Cap family" -> """\b[A-Z][A-Za-z]*Cap\s*=\s*PersistedState\(|PersistedState\("[a-z_]*cap"|\b[A-Z][A-Za-z]*Cap\.(sorted|readLong|read|path|name|fingerprint|bucketed|stat)\b""".r)
+  private val literalPartitions =
+    """"spark\.sql\.shuffle\.partitions"\s*,\s*"?\d""".r
+
+  test("derived caps are published only with their state; no literal shuffle " +
+    "partition count under queries/") {
+    val offending = for {
+      (f, line, n) <- mainLines
+      why <- capForbidden.collect { case (w, re) if re.findFirstIn(line).nonEmpty => w } ++
+        (if (f.toString.contains("/queries/") &&
+          literalPartitions.findFirstIn(line).nonEmpty) Seq("a literal partition count")
+        else Nil)
+    } yield s"$f:$n: $why: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 }

@@ -36,19 +36,16 @@ class PersistedStateSpec extends SparkSpec {
       val cust = fp("customer.parquet")
       val orders = fp("orders.parquet")
       val lineitem = fp("lineitem.parquet")
+      val nation = fp("nation.parquet")
       val expected: Map[String, String] = Map(
         "graft_dd_state_" -> docs,
         "graft_km_state_" -> emb,
         "graft_cc_state_" -> docs,
         "graft_dd_lshstate_" -> docs,
-        "graft_dd_lshcap_" -> s"$docs|p99",
         "graft_dd_simhashstate_" -> docs,
-        "graft_dd_simhashcap_" -> s"$docs|p99",
         "graft_dd_contamstate_" -> s"$docs|v2",
-        "graft_dd_contamcap_" -> s"$docs|v2",
         "graft_dd_contambloom_" -> s"$docs|v2",
         "graft_dd_cosinestate_" -> emb,
-        "graft_dd_cosinecap_" -> s"$emb|p99",
         "graft_dq_profcnt_" -> docs,
         "graft_dq_profregs_" -> docs,
         "graft_pg_edges_" -> docs,
@@ -66,7 +63,6 @@ class PersistedStateSpec extends SparkSpec {
         "graft_ivm_joinagg_" -> s"$orders|$lineitem",
         "graft_ivm_scd2_" -> s"$orders|$cust:synthoff=1e12",
         "graft_er_keys_" -> s"$cust|v2",
-        "graft_er_cap_" -> s"$cust|v2",
         "graft_er_cc_" -> cust,
         "graft_er_cc_full_" -> cust,
         "graft_er_surv_" -> cust,
@@ -96,7 +92,11 @@ class PersistedStateSpec extends SparkSpec {
         "graft_st_cosine_probe_" -> emb,
         "graft_st_er_probe_" -> cust,
         "graft_st_file_sink_" -> events,
-        "graft_st_compact_live_" -> events)
+        "graft_st_compact_live_" -> events,
+        "graft_geojson_rt_" -> events,
+        "graft_geojson_mp_" -> events,
+        "graft_geojson_bands_" -> nation,
+        "graft_src_rt_" -> nation)
       val got = PersistedState.all.map(st => st.name(d) -> st.fingerprint(d)).toMap
       assert(PersistedState.all.map(_.family).distinct.size == PersistedState.all.size,
         "two descriptors share a family")

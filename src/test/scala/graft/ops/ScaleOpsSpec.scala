@@ -86,6 +86,60 @@ class ScaleOpsSpec extends SparkSpec {
     }
   }
 
+  test("bucketTargets: the floor follows the session's parallelism, rounded up " +
+    "to a power of two and capped at 32; graft.state.bucketFloor overrides it") {
+    // The spec session is local[4].
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(ScaleOps.bucketTargets(spark)._3 == 4)
+    try {
+      spark.conf.set("graft.state.bucketFloor", "16")
+      assert(ScaleOps.bucketTargets(spark)._3 == 16, "the conf override must win")
+    } finally spark.conf.unset("graft.state.bucketFloor")
+    assert(ScaleOps.sessionFloor(6) == 8)
+    assert(ScaleOps.sessionFloor(1) == 1)
+    assert(ScaleOps.sessionFloor(32) == 32)
+    assert(ScaleOps.sessionFloor(48) == 32)
+    assert(ScaleOps.sessionFloor(256) == 32)
+  }
+
+  test("ensureBucketedDerived: a crash between the CTAS and the publish, or a " +
+    "table without graft.stat, rebuilds to identical rows and graft.stat") {
+    val t = "b_publish_crash"
+    val cap = Some(KeyCap(2L, 4L, tail = true))
+    val df = spark.range(300).selectExpr("id % 37 AS k", "id AS v")
+    def props = org.apache.spark.sql.GraftShim.tableProperties(spark, t).get
+    def contents = spark.table(t).collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    try {
+      val (built, n) = ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A",
+        cap = cap)(df)
+      assert(built)
+      val rows = contents
+      val stat = props("graft.stat")
+      // 37 keys of 8 or 9 rows: 4 · 300 div 37 = 32 binds.
+      assert(stat == "32")
+      // The crash window: the bucketed CTAS ran, the one ALTER TABLE that
+      // publishes graft.src/layout/buckets/stat did not.
+      ScaleOps.writeBucketedKeys(df, t, Seq("k"), n)
+      assert(!props.contains("graft.src") && !props.contains("graft.stat"))
+      val (rebuilt, n2) = ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A",
+        cap = cap)(df)
+      assert(rebuilt && n2 == n, "a table the publish never reached must rebuild")
+      assert(contents == rows && props("graft.stat") == stat)
+      // A published table that carries no graft.stat (a layout written
+      // before caps were published with their state) never serves one.
+      spark.sql(s"ALTER TABLE $t UNSET TBLPROPERTIES ('graft.stat')")
+      assert(ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A", cap = cap)(df)._1)
+      assert(contents == rows && props("graft.stat") == stat)
+      // An uncapped layout of the same state is a different contract.
+      assert(ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A")(df)._1)
+      assert(!props.contains("graft.stat"))
+      assert(ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A", cap = cap)(df)._1)
+      assert(contents == rows && props("graft.stat") == stat)
+      // Fresh: no rebuild, the stat stays.
+      assert(!ScaleOps.ensureBucketedDerived(spark, t, Seq("k"), "fp-A", cap = cap)(df)._1)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
   test("ensureBucketedKeys: a keys/sort layout change alone rebuilds " +
     "(graft.layout freshness, no fingerprint bump needed)") {
     val t = "b_layout_roll"
