@@ -21,6 +21,11 @@ import graft.text.TextFunctions
   *  - n-gram Jaccard: exact verification for candidate pairs (or small
   *    corpora) via distinct-token self-join — the brute-force baseline the
   *    sketches approximate.
+  *  - Incremental (`incremental*`): each increment sketches only itself
+  *    and probes the accepted set's persisted key state through
+  *    [[StateProbe]] (cap, exchange-free join, layout check, self-pairs,
+  *    best-witness verdict); only the keys and the verify step are
+  *    per family.
   */
 object Dedup {
 
@@ -203,6 +208,12 @@ object Dedup {
       .select(col("id1").as("train_id"), col("id2").as("test_id"), col("jaccard"))
   }
 
+  // ---- increments against persisted key state ----------------------
+  //
+  // Every `incremental*` family below (and the probe gates under
+  // graft.streaming) probes its state through [[StateProbe]]; a family
+  // supplies only its increment's keys and its verify step.
+
   /** Incremental NEAR-dup dedup against persisted LSH state — the
     * [[incrementalDedup]] shape for near-duplicates: a corpus grows by
     * crawl increments, and re-sketching + self-joining the whole corpus
@@ -220,13 +231,11 @@ object Dedup {
     * the best witness chosen deterministically (jaccard desc, state id
     * asc); accepted docs carry nulls. */
   def incrementalNearDups(incDocs: DataFrame, stateDocs: DataFrame,
-                          stateBands: DataFrame, idCol: String, textCol: String,
+                          stateBands: StateProbe.State, idCol: String, textCol: String,
                           numHashes: Int = 32, rowsPerBand: Int = 4,
                           shingleN: Int = 3, threshold: Double = 0.8,
                           bandBucketCap: Option[Int] = None,
-                          probeCheck: DataFrame => Unit = _ => (),
                           memoTag: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Shared-key CacheOnce with [[incrementalNearDupPairs]]: the same
     // increment over the same corpus sketches ONCE per session no matter
     // which incremental-family query runs first (the verdict query, the
@@ -237,34 +246,20 @@ object Dedup {
     val incBands = graft.ops.CacheOnce.swap("incr-inc-bands",
         bandKeys(incSets, idCol, numHashes, rowsPerBand))
       .withColumnRenamed(idCol, "id2")
-    // Collision-budget cap (the ANN bucketCap analogue): a state band
-    // bucket holding more than `cap` docs is degenerate — boilerplate
-    // or mass duplication — and every increment doc landing in it fans
-    // out `cap+`-fold before verification. Skipping oversized buckets
-    // bounds per-probe verify work at ANY duplication density (standard
-    // banded-LSH practice). The size is a windowed count keyed on
-    // band_key, so a state table bucketed on band_key computes it
-    // WITHOUT an exchange — the probe path stays shuffle-free.
-    val cappedState = graft.ops.ScaleOps.capBuckets(stateBands, "band_key", bandBucketCap)
-    // merge-hinted probe: the bucketed state side stays exchange-free
-    // without having to disable broadcast session-wide (which would
-    // also force the small downstream verify joins onto SMJ shuffles).
-    val cands0 = cappedState.hint("merge")
-      .select(col(idCol).as("id1"), col("band_key"))
-      .join(incBands, Seq("band_key"))
-      .select("id1", "id2").distinct()
-    // Caller plan REQUIREs (exchange-free bucketed probe etc.) run on
-    // the probe's OWN plan, BEFORE the truncation below erases it from
-    // every downstream plan — the er_incremental_clusters precedent.
-    probeCheck(cands0)
+    // Collision-budget cap (the ANN bucketCap analogue): skipping
+    // oversized band buckets bounds per-probe verify work at ANY
+    // duplication density (standard banded-LSH practice).
+    val cands0 = StateProbe(stateBands, "band_key", StateProbe.windowed(bandBucketCap))
+      .pairs(incBands, col(idCol).as("id1"))(_.select("id1", "id2").distinct())
     // TRUNCATED (r19, VERDICT item 1): the candidate set feeds BOTH the
     // state-side left-semi text prune and the verify join, so the probe
     // chain (state bucket-size window + band join + distinct) executed
     // TWICE per action and re-executed per invocation — ~30 of the
     // query's measured ~40 s-cpu per warm rep at sf0.1. One eager
     // materialization per (memoTag = state/source generation), every
-    // consumer reads a LogicalRDD leaf. Collision-bounded by the cap,
-    // so increment-pair-graph-sized — inside the CacheOnce size
+    // consumer reads a LogicalRDD leaf; the probe checked its own plan
+    // above, before the truncation erases it. Collision-bounded by the
+    // cap, so increment-pair-graph-sized — inside the CacheOnce size
     // contract. No memoTag (library callers that already truncate their
     // whole output) keeps the old shape.
     val cands = memoTag.fold(cands0)(tag =>
@@ -272,16 +267,10 @@ object Dedup {
     val stateSets = stateDocs
       .join(cands.select(col("id1").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol), explode(distinctShingles(col(textCol), shingleN)).as("shingle"))
-    val verified = verifyJaccardCross(cands, stateSets, incSets, idCol, threshold)
-    val w = Window.partitionBy(col("id2")).orderBy(desc("jaccard"), col("id1"))
-    val best = verified.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col("id2").as(idCol), col("id1").as("best_state_id"),
-        col("jaccard").as("best_jaccard"))
-    incDocs.select(col(idCol))
-      .join(best, Seq(idCol), "left")
-      .select(col(idCol), col("best_state_id").isNull.as("accepted"),
-        col("best_state_id"), col("best_jaccard"))
+    StateProbe.verdict(incDocs, idCol,
+      verifyJaccardCross(cands, stateSets, incSets, idCol, threshold),
+      ("id2", "id1"), "jaccard", descending = true,
+      ("accepted", "best_state_id", "best_jaccard"), flagWitnessed = false)
   }
 
   /** Verified near-dup PAIRS touching an increment, fed from the SAME
@@ -311,7 +300,7 @@ object Dedup {
     * Returns (id1, id2, jaccard); cross pairs carry the state doc as
     * id1 and the increment doc as id2. */
   def incrementalNearDupPairs(incDocs: DataFrame, stateDocs: DataFrame,
-                              stateBands: DataFrame, idCol: String,
+                              stateBands: StateProbe.State, idCol: String,
                               textCol: String, numHashes: Int = 32,
                               rowsPerBand: Int = 4, shingleN: Int = 3,
                               threshold: Double = 0.8,
@@ -328,16 +317,9 @@ object Dedup {
         explode(distinctShingles(col(textCol), shingleN)).as("shingle")))
     val incBands = graft.ops.CacheOnce.swap("incr-inc-bands",
       bandKeys(incSets, idCol, numHashes, rowsPerBand))
-    val cappedState = graft.ops.ScaleOps.capBuckets(stateBands, "band_key", bandBucketCap)
-    // The probe join is pinned to sort-merge so the bucketed state side
-    // enters it riding its bucketing (exchange-free) even when the
-    // session would otherwise broadcast the increment bands — while the
-    // small downstream verify joins stay free to broadcast (forcing SMJ
-    // session-wide costs ~40% of the whole feed in needless shuffles).
-    val crossCands = cappedState.hint("merge")
-      .select(col(idCol).as("id1"), col("band_key"))
-      .join(incBands.select(col(idCol).as("id2"), col("band_key")), Seq("band_key"))
-      .select("id1", "id2").distinct()
+    val crossCands = StateProbe(stateBands, "band_key", StateProbe.windowed(bandBucketCap))
+      .pairs(incBands.select(col(idCol).as("id2"), col("band_key")), col(idCol).as("id1"))(
+        _.select("id1", "id2").distinct())
     verifyIncrementPairs(crossCands, incDocs, stateDocs, idCol, textCol,
       numHashes, rowsPerBand, shingleN, threshold)
   }
@@ -364,11 +346,9 @@ object Dedup {
       bandKeys(incSets, idCol, numHashes, rowsPerBand))
     val crossVerified = verifyCrossPairs(crossCands, stateDocs, incSets,
       idCol, textCol, shingleN, threshold)
-    val selfCands = incBands.select(col(idCol).as("id1"), col("band_key"))
-      .join(incBands.select(col(idCol).as("id2"), col("band_key")), Seq("band_key"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    val selfVerified = verifyJaccard(selfCands, incSets, idCol, threshold)
+    val selfVerified = verifyJaccard(
+      StateProbe.selfPairs(incBands, idCol, "band_key", ("id1", "id2")),
+      incSets, idCol, threshold)
     crossVerified.unionByName(selfVerified)
   }
 
@@ -560,38 +540,37 @@ object Dedup {
     * wasted work. The suite's distinct shingles persist ONCE as
     * (test_id, shingle) bucketed on `shingle` — the probe-join key —
     * and each increment explodes only ITSELF and probes the index
-    * exchange-free. `dfCap` drops state shingles whose test-side doc
+    * exchange-free. `cap` drops state shingles whose test-side doc
     * frequency exceeds it (stopword runs and boilerplate are
-    * non-discriminative and only fan the probe out); with `dfCol` the
-    * per-shingle doc frequency was persisted INTO the index at build
-    * time and the cap is a scan predicate, otherwise a windowed count
-    * (keyed on shingle, so the bucketed index computes it without an
-    * exchange — but it rescans |state| per refresh). `bloom`, built over
+    * non-discriminative and only fan the probe out): a
+    * [[StateProbe.SizeColumn]] on the `df` column the index build
+    * persisted makes it a scan predicate, a [[StateProbe.Windowed]] cap
+    * recounts it per refresh (keyed on shingle, so the bucketed index
+    * computes it without an exchange — but it rescans |state|). `bloom`, built over
     * the capped index at state-build time, cuts the increment's shingles
     * in their scan stage — same verdict either way (no false negatives).
     * The filter travels WITH the cap it was built at — `(filter,
     * bloomCap)`, `Int.MaxValue` for an uncapped build — and the probe
-    * REQUIREs `dfCap <= bloomCap`: a bloom built over a tighter index
+    * REQUIREs `cap <= bloomCap`: a bloom built over a tighter index
     * than the probe's cap has already dropped shingles the looser cap
     * would keep joinable, which silently turns the "no false negatives"
     * guarantee into MISSED CONTAMINATION. Enforced here, not by caller
     * convention. One verdict row per increment doc: (idCol,
     * contaminated, best_test_id, n_shared), best witness deterministic
     * (shared count desc, test id asc). */
-  def incrementalContamination(incDocs: DataFrame, stateShingles: DataFrame,
+  def incrementalContamination(incDocs: DataFrame, stateShingles: StateProbe.State,
                                idCol: String, textCol: String,
                                shingleN: Int = 3, minShared: Int = 3,
-                               dfCap: Option[Int] = None,
-                               dfCol: Option[String] = None,
+                               cap: Option[StateProbe.Cap] = None,
                                bloom: Option[(org.apache.spark.util.sketch.BloomFilter, Int)] = None): DataFrame = {
     bloom.foreach { case (_, bloomCap) =>
-      val probeCap = dfCap.getOrElse(Int.MaxValue)
+      val probeCap = cap.fold(Int.MaxValue.toLong)(_.max)
       require(probeCap <= bloomCap,
         s"incrementalContamination: bloom was built over the index capped at " +
           s"df <= $bloomCap but the probe caps at df <= $probeCap — shingles " +
           s"with df in ($bloomCap, $probeCap] are joinable yet bloom-dropped, " +
           "producing FALSE NEGATIVES (missed contamination); rebuild the bloom " +
-          "at the probe's cap or tighten dfCap")
+          "at the probe's cap or tighten its cap")
     }
     // Bloom prefilter (the bloomContamination machinery composed into the
     // incremental probe): the filter is built ONCE at state-build time
@@ -606,34 +585,12 @@ object Dedup {
     val incSh = bloom.fold(incShAll) { case (b, _) =>
       incShAll.filter(graft.functions.BloomFunctions.mightContainString(b, col("shingle")))
     }
-    val capped = dfCap.fold(dfCol.fold(stateShingles)(c => stateShingles.drop(c))) { cap =>
-      dfCol match {
-        // df persisted as a state column at build time: the cap becomes a
-        // scan-level predicate (parquet row-group skippable) instead of an
-        // |state|-sized window recomputed per refresh — the dominant 30x
-        // cost term of the windowed shape (SCALE.md round-13: 29.6 s).
-        case Some(c) => stateShingles.filter(col(c) <= cap).drop(c)
-        case None =>
-          val w = Window.partitionBy("shingle")
-          stateShingles.withColumn("_df", count(lit(1)).over(w))
-            .filter(col("_df") <= cap).drop("_df")
-      }
-    }
-    val pairs = capped.hint("merge")
-      .join(incSh, Seq("shingle"))
-      .groupBy(col("inc_id"), col("test_id"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-    val w = Window.partitionBy(col("inc_id"))
-      .orderBy(desc("n_shared"), col("test_id"))
-    val best = pairs.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col("inc_id").as(idCol), col("test_id").as("best_test_id"),
-        col("n_shared"))
-    incDocs.select(col(idCol))
-      .join(best, Seq(idCol), "left")
-      .select(col(idCol), col("best_test_id").isNotNull.as("contaminated"),
-        col("best_test_id"), col("n_shared"))
+    val pairs = StateProbe(stateShingles, "shingle", cap).pairs(incSh, col("test_id"))(
+      _.groupBy(col("inc_id"), col("test_id"))
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared))
+    StateProbe.verdict(incDocs, idCol, pairs, ("inc_id", "test_id"), "n_shared",
+      descending = true, ("contaminated", "best_test_id", "n_shared"), flagWitnessed = true)
   }
 
   /** MinHash+LSH near-duplicate pairs with exact Jaccard verification of
@@ -809,37 +766,23 @@ object Dedup {
     * windowed count keys on mkey, so the bucketed state computes it
     * without an exchange. Returns (idCol, accepted, best_state_id,
     * best_hamming). */
-  def incrementalSimhashNearDups(incDocs: DataFrame, stateKeys: DataFrame,
+  def incrementalSimhashNearDups(incDocs: DataFrame, stateKeys: StateProbe.State,
                                  idCol: String, textCol: String,
                                  maxHamming: Int = 3, blocks: Int = 6,
                                  bucketCap: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val incSigs = graft.ops.CacheOnce.swap("incr-inc-simhash",
       simhashMd5(incDocs, idCol, textCol))
     val incKeys = simhashMankuKeysMd5(incSigs, idCol, maxHamming, blocks)
       .select(col(idCol).as("id2"), col("sig_hi").as("h2"),
         col("sig_lo").as("l2"), col("mkey"))
-    val cappedState = graft.ops.ScaleOps.capBuckets(stateKeys, "mkey", bucketCap)
-    // merge-hinted probe, same policy as the MinHash incremental path:
-    // the bucketed state side stays exchange-free without a session-wide
-    // broadcast disable.
-    val verified = cappedState.hint("merge")
-      .select(col(idCol).as("id1"), col("sig_hi").as("h1"),
-        col("sig_lo").as("l1"), col("mkey"))
-      .join(incKeys, Seq("mkey"))
-      .select(col("id1"), col("id2"),
-        hammingHiLo(col("h1"), col("l1"), col("h2"), col("l2")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    val w = Window.partitionBy(col("id2")).orderBy(col("hamming"), col("id1"))
-    val best = verified.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col("id2").as(idCol), col("id1").as("best_state_id"),
-        col("hamming").as("best_hamming"))
-    incDocs.select(col(idCol))
-      .join(best, Seq(idCol), "left")
-      .select(col(idCol), col("best_state_id").isNull.as("accepted"),
-        col("best_state_id"), col("best_hamming"))
+    val verified = StateProbe(stateKeys, "mkey", StateProbe.windowed(bucketCap))
+      .pairs(incKeys, col(idCol).as("id1"), col("sig_hi").as("h1"), col("sig_lo").as("l1"))(
+        _.select(col("id1"), col("id2"),
+          hammingHiLo(col("h1"), col("l1"), col("h2"), col("l2")).as("hamming"))
+          .filter(col("hamming") <= maxHamming)
+          .distinct())
+    StateProbe.verdict(incDocs, idCol, verified, ("id2", "id1"), "hamming",
+      descending = false, ("accepted", "best_state_id", "best_hamming"), flagWitnessed = false)
   }
 
   /** Connected components over a near-duplicate pair graph — the
@@ -1130,15 +1073,13 @@ object Dedup {
     * best_cosine), best witness deterministic (cosine desc, state id
     * asc). */
   def incrementalCosineNearDups(incVecs: DataFrame, stateVecs: DataFrame,
-                                stateBuckets: DataFrame, idCol: String,
+                                stateBuckets: StateProbe.State, idCol: String,
                                 vecCol: String, threshold: Double,
                                 numPlanes: Int = 8, numTables: Int = 4,
                                 dim: Int = 64, seed: Long = 42L,
                                 bucketCap: Option[Int] = None,
-                                probeCheck: DataFrame => Unit = _ => (),
                                 memoTag: Option[String] = None): DataFrame = {
     import graft.similarity.Similarity
-    import org.apache.spark.sql.expressions.Window
     val incBase = graft.ops.CacheOnce.swap("incr-inc-cosvecs",
       incVecs.filter(Similarity.l2norm(col(vecCol)) > 0)
         .select(col(idCol), col(vecCol),
@@ -1146,17 +1087,13 @@ object Dedup {
     val incKeys = graft.ops.CacheOnce.swap("incr-inc-cosbuckets",
       cosineBucketKeys(incBase, idCol, vecCol, numPlanes, numTables, dim, seed)
         .withColumnRenamed(idCol, "id2"))
-    val capped = graft.ops.ScaleOps.capBuckets(stateBuckets, "tb_key", bucketCap)
-    val cands0 = capped.hint("merge")
-      .select(col(idCol).as("id1"), col("tb_key"))
-      .join(incKeys, Seq("tb_key"))
-      .select("id1", "id2").distinct()
-    // Same probe-check-then-truncate discipline as incrementalNearDups
+    val cands0 = StateProbe(stateBuckets, "tb_key", StateProbe.windowed(bucketCap))
+      .pairs(incKeys, col(idCol).as("id1"))(_.select("id1", "id2").distinct())
+    // Same probe-then-truncate discipline as incrementalNearDups
     // (VERDICT r18 item 1): the candidate set feeds the state-vector
     // left-semi prune AND the verify join — truncated once per
     // generation, both consumers read a LogicalRDD leaf and the probe
     // (state bucket-size window + key join + distinct) executes once.
-    probeCheck(cands0)
     val cands = memoTag.fold(cands0)(tag =>
       graft.ops.CacheOnce.swapTruncated("incr-cos-cands", tag, cands0))
     val stateV = stateVecs
@@ -1170,14 +1107,7 @@ object Dedup {
       .withColumn("cosine",
         round(Similarity.dot(col("_v1"), col("_v2")) / (col("_n1") * col("_n2")), 4))
       .filter(col("cosine") >= threshold)
-    val w = Window.partitionBy(col("id2")).orderBy(desc("cosine"), col("id1"))
-    val best = verified.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col("id2").as(idCol), col("id1").as("best_state_id"),
-        col("cosine").as("best_cosine"))
-    incVecs.select(col(idCol))
-      .join(best, Seq(idCol), "left")
-      .select(col(idCol), col("best_state_id").isNull.as("accepted"),
-        col("best_state_id"), col("best_cosine"))
+    StateProbe.verdict(incVecs, idCol, verified, ("id2", "id1"), "cosine",
+      descending = true, ("accepted", "best_state_id", "best_cosine"), flagWitnessed = false)
   }
 }

@@ -22,18 +22,6 @@ import graft.Tables
   */
 object ScaleOps {
 
-  /** Collision-budget cap of a probe's static side: drops every `key`
-    * bucket holding more than `cap` rows — a degenerate bucket
-    * (boilerplate, mass duplication) would fan every arriving row out
-    * cap+-fold. The size is a windowed count keyed on `key`, so a table
-    * bucketed on `key` computes it WITHOUT an exchange. */
-  def capBuckets(df: DataFrame, key: String, cap: Option[Int]): DataFrame =
-    cap.fold(df) { c =>
-      df.withColumn("_bsz", count(lit(1))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy(key)))
-        .filter(col("_bsz") <= c).drop("_bsz")
-    }
-
   /** `groupBy(keys).count()` in two phases: partial count per
     * (keys, salt), then sum of partials per keys. Identical output to
     * the direct tally; bounded per-task input even when one key
@@ -366,15 +354,19 @@ object ScaleOps {
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  private def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
-                       p: org.apache.hadoop.fs.Path): String = {
+  /** A marker file's whole content as UTF-8 (the one reader of the
+    * `_GRAFT_*` markers). */
+  private[graft] def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
+                              p: org.apache.hadoop.fs.Path): String = {
     val in = fs.open(p)
     try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
     finally in.close()
   }
 
-  private def writeUtf8(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path, s: String): Unit = {
+  /** Writes `s` as a marker file's whole content, UTF-8, replacing any
+    * previous one (the one writer of the `_GRAFT_*` markers). */
+  private[graft] def writeUtf8(fs: org.apache.hadoop.fs.FileSystem,
+                               p: org.apache.hadoop.fs.Path, s: String): Unit = {
     val out = fs.create(p, true)
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
@@ -745,8 +737,8 @@ object ScaleOps {
 }
 
 /** A state's derived per-key cap — the collision budget its probes
-  * apply ([[ScaleOps.capBuckets]], or a scan predicate on a windowed
-  * size column) — published with the state as `graft.stat`
+  * apply ([[graft.dedup.StateProbe.Cap]]: a windowed count, or a scan
+  * predicate on a size column written at build time) — published with the state as `graft.stat`
   * ([[ScaleOps.ensureBucketedDerived]]). Over the state's key groups:
   *
   *   greatest(floor, mult · rows div groups, p99 group size when `tail`)

@@ -66,13 +66,7 @@ object StateGc {
   private def readMarker(f: org.apache.hadoop.fs.FileSystem,
                          gen: org.apache.hadoop.fs.Path): Option[String] = {
     val m = new org.apache.hadoop.fs.Path(gen, "_GRAFT_SRC")
-    if (!f.exists(m)) None
-    else {
-      val in = f.open(m)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-      finally in.close()
-    }
+    if (!f.exists(m)) None else Some(ScaleOps.readUtf8(f, m))
   }
 
   /** A recorded generation key matches a current file fingerprint when
@@ -152,12 +146,6 @@ object StateGc {
 
   // ---- Registered demo audit: a deterministic, oracle-twinned GC cycle.
 
-  private def writeUtf8(f: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path, s: String): Unit = {
-    val out = f.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
   /** One full GC cycle over a scratch `graft_gcdemo_*` family in the
     * real warehouse root: a LIVE generation (current documents
     * fingerprint, params-suffixed — the staged-replay key shape), a STALE
@@ -209,7 +197,7 @@ object StateGc {
     def build(name: String, marker: String): Unit = {
       val dir = new java.io.File(wh, name).toString
       spark.range(1).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
-      writeUtf8(f, new org.apache.hadoop.fs.Path(dir, "_GRAFT_SRC"), marker)
+      ScaleOps.writeUtf8(f, new org.apache.hadoop.fs.Path(dir, "_GRAFT_SRC"), marker)
     }
     val liveGen = s"${famPrefix}live_$tag"
     build(liveGen, docFp + ":demo=1")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ops.PersistedState._
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, StateProbe}
 import graft.multimodal.Multimodal
 import graft.similarity.Similarity
 import graft.text.TextFunctions
@@ -2057,18 +2057,12 @@ FROM (SELECT vec_id FROM embeddings WHERE vec_id % 3 = 2) i
 LEFT JOIN best ON best.id2 = i.vec_id""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
       prepareCosineState(s, d)
-      // Watch first, then build: the probe-feed truncation inside
-      // incrementalCosineNearDups executes the probe eagerly at plan
-      // build (same discipline as dd_incremental_neardup, r19).
-      graft.plans.PlanChecks.watchFinalPlans(s, CosineState.name(d), "cosine LSH state")
       Dedup.incrementalCosineNearDups(
         emb.filter(col("vec_id") % 3 === 2),
         emb.filter(col("vec_id") % 3 =!= 2),
-        CosineState.table(s, d),
+        StateProbe.Persisted(s, d, CosineState, "cosine LSH state"),
         "vec_id", "embedding", threshold = 0.3,
         bucketCap = Some(CosineState.stat(s, d).toInt),
-        probeCheck = cands => graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
-          cands.queryExecution.executedPlan, "cosine LSH state"),
         memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")))
     },
 
@@ -2336,17 +2330,10 @@ SELECT i.doc_id, best.test_id IS NOT NULL AS contaminated,
 FROM inc i LEFT JOIN best ON best.inc_id = i.doc_id""") { (s, d) =>
       val docs = Tables.documents(s, d)
       prepareContamState(s, d)
-      val out = Dedup.incrementalContamination(
-        docs.filter(col("doc_id") % 6 === 2),
-        ContamState.table(s, d),
+      Dedup.incrementalContamination(
+        docs.filter(col("doc_id") % 6 === 2), contamProbeState(s, d),
         "doc_id", "text", shingleN = 3, minShared = 3,
-        dfCap = Some(ContamState.stat(s, d).toInt),
-        dfCol = Some("df"), bloom = Some(contamStateBloom(s, d)))
-      graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
-        out.queryExecution.executedPlan, "test-suite shingle index")
-      graft.plans.PlanChecks.watchFinalPlans(s, ContamState.name(d),
-        "test-suite shingle index")
-      out
+        cap = contamCap(s, d), bloom = Some(contamStateBloom(s, d)))
     },
 
     // Index-quality audit for the contamination family — dd_band_audit's
@@ -2629,10 +2616,6 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
       // broadcast — forcing SMJ everywhere cost ~40% of the query.
       val docs = Tables.documents(s, d)
       prepareLshState(s, d)
-      // Watch registered BEFORE the probe-feed truncation inside
-      // incrementalNearDups executes the probe as an EAGER job at plan
-      // build (the er_incremental_clusters precedent).
-      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
       // VERDICT path → the DERIVED cap (published at state-build time,
       // read back as the state's graft.stat — see prepareLshState's policy
       // note): at driver SFs the floor binds and this IS
@@ -2643,21 +2626,19 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
       // r19 (VERDICT item 1): the probe candidate feed is TRUNCATED
       // inside incrementalNearDups (memoTag = source generation), so
       // the probe executes ONCE per session instead of twice per action
-      // per rep; the layout REQUIRE runs on the probe's own executed
-      // plan BEFORE truncation, where the bucketed scan is still
-      // visible. Downstream stages (Jaccard verify, witness window)
-      // shuffle legitimately ABOVE the probe join — the claim is only
-      // that no exchange sits between the probe join and the bucketed
-      // state scan.
+      // per rep; StateProbe checks the layout on the probe's own plan
+      // BEFORE truncation, where the bucketed scan is still visible.
+      // Downstream stages (Jaccard verify, witness window) shuffle
+      // legitimately ABOVE the probe join — the claim is only that no
+      // exchange sits between the probe join and the bucketed state
+      // scan.
       Dedup.incrementalNearDups(
         docs.filter(col("doc_id") % 3 === 2),
         docs.filter(col("doc_id") % 3 =!= 2),
-        LshState.table(s, d),
+        lshProbeState(s, d),
         "doc_id", "text", numHashes = 32, rowsPerBand = 4,
         shingleN = 2, threshold = 0.5,
         bandBucketCap = Some(LshState.stat(s, d).toInt),
-        probeCheck = cands => graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
-          cands.queryExecution.executedPlan, "LSH state"),
         memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")))
     },
 
@@ -2778,11 +2759,9 @@ FROM bk""") { (s, d) =>
       prepareSimhashState(s, d)
       val out = graft.dedup.Dedup.incrementalSimhashNearDups(
         docs.filter(col("doc_id") % 3 === 2),
-        SimhashState.table(s, d),
+        StateProbe.Persisted(s, d, SimhashState, "SimHash state"),
         "doc_id", "text", maxHamming = 3, blocks = 6,
         bucketCap = Some(SimhashState.stat(s, d).toInt))
-      graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
-        out.queryExecution.executedPlan, "SimHash state")
       // The probe must not smuggle a full-corpus signature pass: the
       // only documents scan allowed is the increment's own (% 3)
       // split — SimHash's no-text-rescan claim, asserted from the plan.
@@ -2794,7 +2773,6 @@ FROM bk""") { (s, d) =>
           "a documents scan without the increment split predicate — " +
             "the SimHash probe re-read the corpus")
       }
-      graft.plans.PlanChecks.watchFinalPlans(s, SimhashState.name(d), "SimHash state")
       out
     },
 
@@ -2844,16 +2822,14 @@ FROM bk""") { (s, d) =>
           "doc_id", "text").select(col("doc_id")))
       val contamV = graft.ops.CacheOnce.swapTruncated("pipe-g-contam", fp,
         Dedup.incrementalContamination(
-          inc.join(exactAcc, Seq("doc_id"), "left_semi"),
-          ContamState.table(s, d),
+          inc.join(exactAcc, Seq("doc_id"), "left_semi"), contamProbeState(s, d),
           "doc_id", "text", shingleN = 3, minShared = 3,
-          dfCap = Some(ContamState.stat(s, d).toInt),
-          dfCol = Some("df"), bloom = Some(contamStateBloom(s, d))))
+          cap = contamCap(s, d), bloom = Some(contamStateBloom(s, d))))
       val clean = contamV.filter(!col("contaminated")).select(col("doc_id"))
       val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-g-nd-verdicts", fp,
         Dedup.incrementalNearDups(
           inc.join(clean, Seq("doc_id"), "left_semi"),
-          docs.filter(col("doc_id") % 3 =!= 2), LshState.table(s, d),
+          docs.filter(col("doc_id") % 3 =!= 2), lshProbeState(s, d),
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
           threshold = 0.5, bandBucketCap = Some(LshState.stat(s, d).toInt),
           memoTag = Some(s"pipe-g:$fp")))
@@ -2907,7 +2883,7 @@ FROM bk""") { (s, d) =>
       val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-incr-nd-verdicts", fp,
         Dedup.incrementalNearDups(
           inc.join(exactAcc, Seq("doc_id"), "left_semi"),
-          docs.filter(col("doc_id") % 3 =!= 2), LshState.table(s, d),
+          docs.filter(col("doc_id") % 3 =!= 2), lshProbeState(s, d),
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
           threshold = 0.5, bandBucketCap = Some(LshState.stat(s, d).toInt),
           memoTag = Some(s"pipe-incr:$fp")))
@@ -3060,12 +3036,9 @@ FROM comp GROUP BY 1""") { (s, d) =>
     Q("dd_incremental_clusters", incrementalClustersOracleSql) { (s, d) =>
       prepareClusterState(s, d); prepareLshState(s, d)
       val state = ClusterState.read(s, d)
-      // Watch registered BEFORE the shared-feed truncation executes the
-      // probe as an eager job at plan build.
-      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
       // The feed is the r19 SHARED truncation — executed once per
-      // session for all three family members; its scale REQUIREs run
-      // inside sharedUncappedIncPairs for whichever member calls first.
+      // session for all three family members; its watch and scale
+      // REQUIREs run inside sharedUncappedIncPairs on every call.
       val incPairs = sharedUncappedIncPairs(s, d)
       Dedup.incrementalClusters(state, incPairs,
         memoTag = ":" + graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
@@ -3124,14 +3097,13 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // bit-identical teleport constants.
     Q("pg_incremental_pagerank", incrementalPageRankOracleSql) { (s, d) =>
       preparePageRankState(s, d); prepareLshState(s, d)
-      // Watches registered BEFORE the refresh is built: the pair-feed
-      // and per-superstep truncations execute the LSH probe and
-      // supersteps 1..iters-1 as EAGER jobs at plan build, and their
-      // bucketed state joins must land inside the AQE-final watch
-      // window (only superstep `iters` remains in the terminal plan
-      // the REQUIRE below inspects).
+      // Watch registered BEFORE the refresh is built: the per-superstep
+      // truncations execute supersteps 1..iters-1 as EAGER jobs at plan
+      // build, and their bucketed edge-state joins must land inside the
+      // AQE-final watch window (only superstep `iters` remains in the
+      // terminal plan the REQUIRE below inspects). The pair feed watches
+      // the LSH state itself (sharedUncappedIncPairs).
       graft.plans.PlanChecks.watchFinalPlans(s, PgEdges.name(d), "PageRank edge state")
-      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
       val stateEdges = PgEdges.table(s, d)
       val stateRanks = PgRanks.read(s, d)
       // r19: the SHARED uncapped pair feed (one probe+verify execution
@@ -3161,12 +3133,12 @@ FROM comp GROUP BY 1""") { (s, d) =>
     Q("pg_incremental_triangles", trianglesOracleSql) { (s, d) =>
       prepareTriangleState(s, d); prepareLshState(s, d)
       // Registered BEFORE the refresh builds: the delta truncation
-      // executes the LSH pair feed as an EAGER job at plan build, and
-      // its bucketed band-state probe must land inside the watch window
-      // (the terminal plan only retains the dEE edge-state join).
+      // executes as an EAGER job at plan build, and its bucketed
+      // graph-state joins must land inside the watch window (the
+      // terminal plan only retains the dEE edge-state join). The pair
+      // feed watches the LSH state itself (sharedUncappedIncPairs).
       graft.plans.PlanChecks.watchFinalPlans(s, PgEdges.name(d), "triangle edge state")
       graft.plans.PlanChecks.watchFinalPlans(s, PgPairs.name(d), "triangle pair state")
-      graft.plans.PlanChecks.watchFinalPlans(s, LshState.name(d), "LSH state")
       val stateAdj = PgEdges.table(s, d)
       val statePairs = PgPairs.table(s, d)
       val stateCounts = PgTris.read(s, d)
@@ -4059,14 +4031,14 @@ FROM rw"""
     * leaf, which changes with the generation — staleness rides the
     * fingerprint in THIS name.
     *
-    * The feed's three scale claims are REQUIREd here, on every call and
-    * so for whichever family member builds the feed first, from the
-    * feed's own un-truncated plan (PlanChecks descends into the
-    * CacheOnce'd stages): (1) the bucketed LSH state enters its probe
-    * join exchange-free; (2) no documents scan is the unfiltered corpus
-    * — every one carries the increment/state modulo split; (3) the
-    * state-side text rescan is collision-pruned (a left-semi sits above
-    * it). */
+    * The feed's scale claims are REQUIREd on every call and so for
+    * whichever family member builds the feed first: the bucketed LSH
+    * state enters its probe join exchange-free (StateProbe, on the
+    * probe's own plan), and, from the feed's own un-truncated plan
+    * (PlanChecks descends into the CacheOnce'd stages), no documents
+    * scan is the unfiltered corpus — every one carries the
+    * increment/state modulo split — and the state-side text rescan is
+    * collision-pruned (a left-semi sits above it). */
   private def sharedUncappedIncPairs(s: org.apache.spark.sql.SparkSession,
                                      d: String): org.apache.spark.sql.DataFrame = {
     import graft.plans.PlanChecks
@@ -4074,11 +4046,10 @@ FROM rw"""
     val feed = Dedup.incrementalNearDupPairs(
       docs.filter(col("doc_id") % 3 === 2),
       docs.filter(col("doc_id") % 3 =!= 2),
-      LshState.table(s, d),
+      lshProbeState(s, d),
       "doc_id", "text", numHashes = 32, rowsPerBand = 4,
       shingleN = 2, threshold = 0.5, bandBucketCap = None)
     val plan = feed.queryExecution.executedPlan
-    PlanChecks.requireExchangeFreeBucketedProbe(plan, "LSH state")
     val docScans = PlanChecks.fileScanPaths(plan, "documents")
     require(docScans.nonEmpty,
       "no documents scan found in the incremental pair feed plan")
@@ -4128,6 +4099,10 @@ FROM rw"""
           explode(graft.dedup.Dedup.distinctShingles(col("text"), 2)).as("shingle"))
       graft.dedup.Dedup.bandKeys(sets, "doc_id", 32, 4)
     }
+
+  /** The LSH band state as its probes read it: checked under "LSH state". */
+  private def lshProbeState(s: org.apache.spark.sql.SparkSession, d: String) =
+    StateProbe.Persisted(s, d, LshState, "LSH state")
 
   /** The tail-aware derived cap of the LSH, SimHash and cosine states:
     * greatest([[lshBandBucketCap]], 4 · mean bucket size, p99 bucket
@@ -4290,6 +4265,13 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
       Seq(graft.functions.BloomFunctions.toHex(bf)).toDF("bloom_hex")
     }
   }
+
+  /** The test-suite shingle index as its probes read it, and its df cap
+    * as a scan predicate on the build-time `df` column. */
+  private def contamProbeState(s: org.apache.spark.sql.SparkSession, d: String) =
+    StateProbe.Persisted(s, d, ContamState, "test-suite shingle index")
+  private def contamCap(s: org.apache.spark.sql.SparkSession, d: String) =
+    Some(StateProbe.SizeColumn("df", ContamState.stat(s, d)))
 
   /** One-time bucketed CTAS of the accepted set's sign-LSH bucket rows
     * (vec_id, tb_key), bucketed on tb_key — the probe-join key — plus

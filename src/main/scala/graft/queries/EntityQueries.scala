@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.dedup.StateProbe
 import graft.ops.EntityResolution
 import graft.ops.PersistedState._
 
@@ -243,6 +244,25 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
         exactCols = Seq("nation"), maxDist = 1))
   }
 
+  /** The increment's verified match pairs (rid1, rid2): its blocking
+    * keys probe the persisted key state — with `capped`, under the
+    * state's published block cap on its build-time `bsz` column — and
+    * self-join for increment-vs-increment pairs; both legs verify in
+    * one threshold-Levenshtein pass. */
+  private def incrementPairs(s: SparkSession, d: String, capped: Boolean): DataFrame = {
+    val k = keyedRecords(s, d)
+    val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
+      passKeyRows(k.filter(incPred)))
+    val crossCands = StateProbe(StateProbe.Persisted(s, d, ErKeys, "ER key state"), "bkey",
+        if (capped) Some(StateProbe.SizeColumn("bsz", ErKeys.stat(s, d))) else None)
+      .pairs(incKeys.select(col("rid").as("rid2"), col("bkey")), col("rid").as("rid1"))(
+        _.select("rid1", "rid2").distinct())
+    EntityResolution.verifyByEditDistance(
+      crossCands.unionByName(StateProbe.selfPairs(incKeys, "rid", "bkey", ("rid1", "rid2")))
+        .distinct(),
+      k, "rid", "norm", Seq("nation"), maxDist = 1)
+  }
+
   val defs: Seq[Q] = Seq(
 
     // Blocked + fuzzy-verified match pairs: the linkage step alone.
@@ -309,33 +329,13 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // FULL re-cluster over the complete match graph.
     Q("er_incremental_clusters", erIncClustersOracleSql) { (s, d) =>
       prepareErState(s, d)
-      // Watch registered BEFORE the truncation below: the er-inc-updated
-      // materialization executes the key-state probe as an EAGER job at
-      // plan build (survivorship's precedent).
-      graft.plans.PlanChecks.watchFinalPlans(s, ErKeys.name(d), "ER key state")
-      val k = keyedRecords(s, d)
-      val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
-        passKeyRows(k.filter(incPred)))
-      val crossCands = ErKeys.table(s, d).hint("merge")
-        .select(col("rid").as("rid1"), col("bkey"))
-        .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
-        .select("rid1", "rid2").distinct()
-      val selfCands = incKeys.select(col("rid").as("rid1"), col("bkey"))
-        .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
-        .filter(col("rid1") < col("rid2"))
-        .select("rid1", "rid2").distinct()
-      val pairs = EntityResolution.verifyByEditDistance(
-        crossCands.unionByName(selfCands).distinct(),
-        k, "rid", "norm", Seq("nation"), maxDist = 1)
-      graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
-        crossCands.queryExecution.executedPlan, "ER key state")
       // Same (name, plan) as er_incremental_survivorship's merged map:
       // one probe + verify + merge per session no matter which of the
       // two runs first, and the returned frame is one LogicalRDD leaf.
       graft.ops.CacheOnce.swapTruncated("er-inc-updated",
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          ErClusters.read(s, d), pairs, ("rid1", "rid2"),
+          ErClusters.read(s, d), incrementPairs(s, d, capped = false), ("rid1", "rid2"),
           memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -355,31 +355,11 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // cap and the uncapped volume per pass.
     Q("er_incremental_clusters_capped", erIncClustersCappedOracleSql) { (s, d) =>
       prepareErState(s, d)
-      // Watch registered BEFORE the truncation below (survivorship's
-      // precedent: the materialization executes the probe eagerly).
-      graft.plans.PlanChecks.watchFinalPlans(s, ErKeys.name(d), "ER key state")
-      val k = keyedRecords(s, d)
-      val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
-        passKeyRows(k.filter(incPred)))
-      val crossCands = ErKeys.table(s, d).hint("merge")
-        .filter(col("bsz") <= ErKeys.stat(s, d))
-        .select(col("rid").as("rid1"), col("bkey"))
-        .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
-        .select("rid1", "rid2").distinct()
-      val selfCands = incKeys.select(col("rid").as("rid1"), col("bkey"))
-        .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
-        .filter(col("rid1") < col("rid2"))
-        .select("rid1", "rid2").distinct()
-      val pairs = EntityResolution.verifyByEditDistance(
-        crossCands.unionByName(selfCands).distinct(),
-        k, "rid", "norm", Seq("nation"), maxDist = 1)
-      graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
-        crossCands.queryExecution.executedPlan, "ER key state")
       // Truncated merged map (capped feed — its own memo entry).
       graft.ops.CacheOnce.swapTruncated("er-inc-updated-capped",
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          ErClusters.read(s, d), pairs, ("rid1", "rid2"),
+          ErClusters.read(s, d), incrementPairs(s, d, capped = true), ("rid1", "rid2"),
           memoTag = ":er-capped:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
     },
 
@@ -421,7 +401,7 @@ FROM stc JOIN inc ON stc.bkey = inc.bkey""") { (s, d) =>
       // sizes were windowed into the state at CTAS — nothing state-sized is
       // recomputed per probe. Same value the in-plan derivation produced.
       graft.streaming.ErProbe.candidatesOnce(s, d, ErKeys.name(d),
-        persistedCap = Some(("bsz", ErKeys.stat(s, d))))
+        cap = Some(StateProbe.SizeColumn("bsz", ErKeys.stat(s, d))))
     },
 
     // Survivorship: per entity cluster, elect the canonical record by a
@@ -468,26 +448,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       k.rid) AS rn
   FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""") { (s, d) =>
       prepareErState(s, d); prepareErSurvState(s, d)
-      // Registered BEFORE the merge builds: the er-inc-updated
-      // truncation executes the key-state probe as an EAGER job at
-      // plan build, so the watch must already be live to cover it
-      // (standalone runs don't get er_incremental_clusters' own
-      // registration).
-      graft.plans.PlanChecks.watchFinalPlans(s, ErKeys.name(d), "ER key state")
       val k = keyedRecords(s, d)
-      val incKeys = graft.ops.CacheOnce.swap("er-inc-keys",
-        passKeyRows(k.filter(incPred)))
-      val crossCands = ErKeys.table(s, d).hint("merge")
-        .select(col("rid").as("rid1"), col("bkey"))
-        .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
-        .select("rid1", "rid2").distinct()
-      val selfCands = incKeys.select(col("rid").as("rid1"), col("bkey"))
-        .join(incKeys.select(col("rid").as("rid2"), col("bkey")), Seq("bkey"))
-        .filter(col("rid1") < col("rid2"))
-        .select("rid1", "rid2").distinct()
-      val pairs = EntityResolution.verifyByEditDistance(
-        crossCands.unionByName(selfCands).distinct(),
-        k, "rid", "norm", Seq("nation"), maxDist = 1)
       val state = ErClusters.read(s, d)
       // shared key with er_incremental_clusters: one merged map per
       // session no matter which of the two queries runs first.
@@ -499,7 +460,8 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       // production.
       val updated = graft.ops.CacheOnce.swapTruncated("er-inc-updated",
         graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
-        graft.dedup.Dedup.incrementalClusters(state, pairs, ("rid1", "rid2"),
+        graft.dedup.Dedup.incrementalClusters(state, incrementPairs(s, d, capped = false),
+          ("rid1", "rid2"),
           memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
       val changed = updated
         .join(state.withColumnRenamed("cluster_id", "_old"), Seq("node"), "left")

@@ -57,9 +57,7 @@ object CompactedLanding {
     // marker, and the composed read falls back to the plain log read.
     val fs = coveredMarker(genDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(coveredMarker(genDir), true)
-    try out.write(covered.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    graft.ops.ScaleOps.writeUtf8(fs, coveredMarker(genDir), covered.sorted.mkString("\n"))
     covered
   }
 
@@ -70,10 +68,7 @@ object CompactedLanding {
     val fs = coveredMarker(genDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(coveredMarker(genDir))) return Tables.parquet(spark, dataDir)
-    val in = fs.open(coveredMarker(genDir))
-    val covered =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSet
-      finally in.close()
+    val covered = graft.ops.ScaleOps.readUtf8(fs, coveredMarker(genDir)).linesIterator.toSet
     val tail = committedFiles(spark, dataDir).filterNot(covered)
     val gen = Tables.parquet(spark, genDir)
     if (tail.isEmpty) gen

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.dedup.StateProbe
 
 /** Streaming embedding gate — the cosine family's streamed front,
   * completing the probe symmetry (MinHash: st_lsh_probe, SimHash:
@@ -53,18 +54,17 @@ object CosineProbe {
           explode(graft.dedup.Dedup.cosineTbKeys(col("embedding"))).as("tb_key"))
         .select(col("inc_id"), col("tb_key"), col("_v2"), col("_n2"))
 
-      val st = graft.ops.ScaleOps.capBuckets(ss.table(stateTable)
-        .select(col("vec_id").as("state_id"), col("tb_key")), "tb_key", bucketCap)
       val sv = stateVecs.select(col("vec_id").as("state_id"),
         col("embedding").as("_v1"), Similarity.l2norm(col("embedding")).as("_n1"))
 
-      keyed
-        .join(st, Seq("tb_key"))
-        .join(sv, Seq("state_id"))
-        .select(col("state_id"), col("inc_id"),
-          round(Similarity.dot(col("_v1"), col("_v2")) / (col("_n1") * col("_n2")), 4)
-            .as("cosine"))
-        .filter(col("cosine") >= threshold)
+      StateProbe(StateProbe.Frame(ss.table(stateTable)), "tb_key",
+        StateProbe.windowed(bucketCap))
+        .pairs(keyed, col("vec_id").as("state_id"))(
+          _.join(sv, Seq("state_id"))
+            .select(col("state_id"), col("inc_id"),
+              round(Similarity.dot(col("_v1"), col("_v2")) / (col("_n1") * col("_n2")), 4)
+                .as("cosine"))
+            .filter(col("cosine") >= threshold))
     }
   }
 }

@@ -32,12 +32,8 @@ object GateLineage {
     val p = new Path(baseDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new Path(p, "_GRAFT_SRC")
-    val fresh = fs.exists(marker) && {
-      val in = fs.open(marker)
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8") == srcFingerprint
-      finally in.close()
-    }
+    val fresh = fs.exists(marker) &&
+      graft.ops.ScaleOps.readUtf8(fs, marker) == srcFingerprint
     if (!fresh) reset(spark, baseDir, srcFingerprint)
     !fresh
   }
@@ -49,8 +45,7 @@ object GateLineage {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
     fs.mkdirs(p)
-    val out = fs.create(new Path(p, "_GRAFT_SRC"), true)
-    try out.write(srcFingerprint.getBytes("UTF-8")) finally out.close()
+    graft.ops.ScaleOps.writeUtf8(fs, new Path(p, "_GRAFT_SRC"), srcFingerprint)
   }
 
   /** Fingerprint of a probe gate's generation: the streamed source

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.dedup.StateProbe
 
 /** Streaming decontamination front gate (SURVEY §2.11 × the incremental
   * LSH state of dd_incremental_neardup): the documents increment
@@ -50,20 +51,18 @@ object LshProbe {
         (b * rowsPerBand until (b + 1) * rowsPerBand).map(sig): _*))
     }
 
-    Gate.spreadNarrow(ss, s"$sfDir/documents.parquet", "graft_lsh_probe_rows",
+    val incKeys = Gate.spreadNarrow(ss, s"$sfDir/documents.parquet", "graft_lsh_probe_rows",
       Gate.documents(ss, sfDir).filter(col("doc_id") % 3 === 2))
       .withColumn("_ws", ws)
       .select(col("doc_id"),
         explode(array(bandCols: _*)).as("band_key"))
-      // Same collision-budget cap as the batch probe
-      // ([[graft.dedup.Dedup.incrementalNearDups]]): oversized state
-      // band buckets are degenerate and would fan every arriving doc
-      // out cap+-fold — the static side drops them once, before the
-      // stream ever joins.
-      .join(graft.ops.ScaleOps.capBuckets(ss.table(stateTable)
-        .select(col("doc_id").as("state_id"), col("band_key")),
-        "band_key", bandBucketCap), Seq("band_key"))
-      .select(col("state_id"), col("doc_id").as("inc_id"))
+    // Same collision-budget cap as the batch probe: oversized state band
+    // buckets are dropped once on the static side, before the stream
+    // ever joins.
+    StateProbe(StateProbe.Frame(ss.table(stateTable)), "band_key",
+      StateProbe.windowed(bandBucketCap))
+      .pairs(incKeys, col("doc_id").as("state_id"))(
+        _.select(col("state_id"), col("doc_id").as("inc_id")))
   }
 
   /** One AvailableNow drain of the increment (doc_id % 3 = 2) against
@@ -143,12 +142,7 @@ object LshProbe {
     val marker = verifiedMarker(baseDir)
     val verified: Set[String] =
       if (!fs.exists(marker)) Set.empty
-      else {
-        val in = fs.open(marker)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).toSet
-        finally in.close()
-      }
+      else graft.ops.ScaleOps.readUtf8(fs, marker).linesIterator.filter(_.nonEmpty).toSet
     val newFiles = committed.filterNot(verified)
     val pairs =
       if (newFiles.isEmpty)
@@ -161,10 +155,7 @@ object LshProbe {
           "state_id BIGINT, inc_id BIGINT"))
         .parquet(newFiles: _*)
         .distinct()
-    WatermarkedDrain(pairs, newFiles, () => {
-      val out = fs.create(marker, true)
-      try out.write(committed.sorted.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    })
+    WatermarkedDrain(pairs, newFiles, () =>
+      graft.ops.ScaleOps.writeUtf8(fs, marker, committed.sorted.mkString("\n")))
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.dedup.StateProbe
 
 /** Streaming SimHash front gate — st_lsh_probe's shape over the Manku
   * key state of dd_incremental_simhash, with the family's structural
@@ -46,17 +47,18 @@ object SimhashProbe {
       val sigs = graft.dedup.Dedup.simhashMd5(
         Gate.documents(ss, sfDir).filter(col("doc_id") % 3 === 2),
         "doc_id", "text")
-      graft.dedup.Dedup
+      val incKeys = graft.dedup.Dedup
         .simhashMankuKeysMd5(sigs, "doc_id", maxHamming, blocks)
         .select(col("doc_id").as("inc_id"), col("sig_hi").as("h2"),
           col("sig_lo").as("l2"), col("mkey"))
-        .join(graft.ops.ScaleOps.capBuckets(ss.table(stateTable)
-          .select(col("doc_id").as("state_id"), col("sig_hi").as("h1"),
-            col("sig_lo").as("l1"), col("mkey")), "mkey", bucketCap), Seq("mkey"))
-        .select(col("state_id"), col("inc_id"),
-          graft.dedup.Dedup.hammingHiLo(col("h1"), col("l1"),
-            col("h2"), col("l2")).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
+      StateProbe(StateProbe.Frame(ss.table(stateTable)), "mkey",
+        StateProbe.windowed(bucketCap))
+        .pairs(incKeys, col("doc_id").as("state_id"), col("sig_hi").as("h1"),
+          col("sig_lo").as("l1"))(
+          _.select(col("state_id"), col("inc_id"),
+            graft.dedup.Dedup.hammingHiLo(col("h1"), col("l1"),
+              col("h2"), col("l2")).as("hamming"))
+            .filter(col("hamming") <= maxHamming))
     }
   }
 }

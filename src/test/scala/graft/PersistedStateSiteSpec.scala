@@ -62,4 +62,46 @@ class PersistedStateSiteSpec extends AnyFunSuite {
     } yield s"$f:$n: $why: ${line.trim}"
     assert(offending.isEmpty, offending.mkString("\n"))
   }
+
+  /** A persisted key state is probed only through
+    * `graft.dedup.StateProbe`, which caps its keys, joins it
+    * exchange-free and REQUIREs and watches that layout: a cap, a
+    * caller-supplied probe check or a key-state REQUIRE written anywhere
+    * else is a probe that can leave its layout check out. Exempt: the
+    * graph edge-state checks of pg_incremental_pagerank and
+    * pg_incremental_triangles (CorpusQueries), which REQUIRE their
+    * bucketed edge and pair states, not a key state. */
+  private val probeForbidden = Seq(
+    "capBuckets(" -> """\bcapBuckets\(""".r,
+    "a probeCheck parameter" -> """\bprobeCheck\s*[:=]""".r)
+  private val edgeStateRequires = Set(
+    "CorpusQueries.scala" -> "PageRank edge/LSH state",
+    "CorpusQueries.scala" -> "triangle edge/pair/LSH state")
+  private val requireCall = "requireExchangeFreeBucketedProbe("
+
+  test("key states are capped, probed and checked only in StateProbe") {
+    val code = mainLines.filterNot { case (_, line, _) =>
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/**")
+    }
+    val byFile = code.groupBy(_._1)
+    val offending = for {
+      (f, line, n) <- code
+      if f.getFileName.toString != "StateProbe.scala"
+      why <- probeForbidden.collect { case (w, re) if re.findFirstIn(line).nonEmpty => w } ++ {
+        if (!line.contains(requireCall) || line.contains("def " + requireCall)) Nil
+        else {
+          // The label is the call's first string literal (on this line
+          // or the next two).
+          val call = byFile(f).dropWhile(_._3 < n).take(3).map(_._2).mkString(" ")
+          val label = "\"([^\"]*)\"".r.findFirstMatchIn(call.drop(call.indexOf(requireCall)))
+            .map(_.group(1)).getOrElse("")
+          if (edgeStateRequires((f.getFileName.toString, label))) Nil
+          else Seq(s"a key-state REQUIRE ($label)")
+        }
+      }
+    } yield s"$f:$n: $why: ${line.trim}"
+    assert(offending.isEmpty,
+      "probe key states through graft.dedup.StateProbe:\n" + offending.mkString("\n"))
+  }
 }

@@ -271,7 +271,7 @@ class CorpusStatsSpec extends SparkSpec {
       state.select(col("doc_id"),
         explode(Dedup.distinctShingles(col("text"), 2)).as("shingle")),
       "doc_id", 32, 4)
-    val got = Dedup.incrementalNearDups(inc, state, stateBands, "doc_id", "text",
+    val got = Dedup.incrementalNearDups(inc, state, graft.dedup.StateProbe.Frame(stateBands), "doc_id", "text",
         numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5)
       .collect().map(r => r.getLong(0) ->
         ((r.getBoolean(1), Option(r.get(2)), Option(r.get(3))))).toMap
@@ -293,7 +293,7 @@ class CorpusStatsSpec extends SparkSpec {
       state.select(col("doc_id"),
         explode(Dedup.distinctShingles(col("text"), 2)).as("shingle")),
       "doc_id", 32, 4)
-    def run(cap: Int) = Dedup.incrementalNearDups(inc, state, stateBands,
+    def run(cap: Int) = Dedup.incrementalNearDups(inc, state, graft.dedup.StateProbe.Frame(stateBands),
         "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
         threshold = 0.5, bandBucketCap = Some(cap))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
@@ -323,7 +323,7 @@ class CorpusStatsSpec extends SparkSpec {
       state.select(col("doc_id"),
         explode(Dedup.distinctShingles(col("text"), 2)).as("shingle")),
       "doc_id", 32, 4)
-    val mine = Dedup.incrementalNearDupPairs(inc, state, stateBands,
+    val mine = Dedup.incrementalNearDupPairs(inc, state, graft.dedup.StateProbe.Frame(stateBands),
         "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
         threshold = 0.5)
       .collect()

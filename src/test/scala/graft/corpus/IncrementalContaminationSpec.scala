@@ -1,7 +1,7 @@
 package graft.corpus
 
 import graft.SparkSpec
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, StateProbe}
 import org.apache.spark.sql.functions._
 
 /** Incremental decontamination against a persisted test-suite shingle
@@ -24,7 +24,7 @@ class IncrementalContaminationSpec extends SparkSpec {
     explode(Dedup.distinctShingles(col("text"), 3)).as("shingle"))
 
   test("verdicts agree with the stateless bloom pair set (cap unbound)") {
-    val got = Dedup.incrementalContamination(incDocs, index, "doc_id", "text")
+    val got = Dedup.incrementalContamination(incDocs, StateProbe.Frame(index), "doc_id", "text")
       .as[(Long, Boolean, Option[Long], Option[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
 
@@ -54,13 +54,13 @@ class IncrementalContaminationSpec extends SparkSpec {
         explode(Dedup.distinctShingles(col("text"), 3)).as("shingle"))
     // 'alpha beta gamma' has df 4; the per-doc tails have df 1
     val inc = Seq((20L, "alpha beta gamma one")).toDF("doc_id", "text")
-    val capped = Dedup.incrementalContamination(inc, hot, "doc_id", "text",
-        minShared = 2, dfCap = Some(1))
+    val capped = Dedup.incrementalContamination(inc, StateProbe.Frame(hot), "doc_id", "text",
+        minShared = 2, cap = Some(StateProbe.Windowed(1)))
       .as[(Long, Boolean, Option[Long], Option[Long])].collect()
     // with the hot shingle dropped only 'beta gamma one'/'gamma one'-
     // class df-1 shingles remain -> fewer shared than uncapped
-    val uncapped = Dedup.incrementalContamination(inc, hot, "doc_id", "text",
-        minShared = 2, dfCap = None)
+    val uncapped = Dedup.incrementalContamination(inc, StateProbe.Frame(hot), "doc_id", "text",
+        minShared = 2, cap = None)
       .as[(Long, Boolean, Option[Long], Option[Long])].collect()
     assert(uncapped.head._2, "uncapped must flag the exact copy")
     assert(capped.head._4.getOrElse(0L) <= uncapped.head._4.getOrElse(0L),
@@ -78,11 +78,11 @@ class IncrementalContaminationSpec extends SparkSpec {
     for (cap <- Seq(1, 2, 100)) {
       val keys = idxDf.filter(col("df") <= cap).select("shingle").distinct()
       val bf = keys.stat.bloomFilter("shingle", math.max(keys.count(), 1L), 0.01)
-      val viaState = Dedup.incrementalContamination(incDocs, idxDf, "doc_id",
-          "text", dfCap = Some(cap), dfCol = Some("df"), bloom = Some((bf, cap)))
+      val viaState = Dedup.incrementalContamination(incDocs, StateProbe.Frame(idxDf), "doc_id",
+          "text", cap = Some(StateProbe.SizeColumn("df", cap)), bloom = Some((bf, cap)))
         .as[(Long, Boolean, Option[Long], Option[Long])].collect().sortBy(_._1).toSeq
-      val viaWindow = Dedup.incrementalContamination(incDocs, index, "doc_id",
-          "text", dfCap = Some(cap))
+      val viaWindow = Dedup.incrementalContamination(incDocs, StateProbe.Frame(index), "doc_id",
+          "text", cap = Some(StateProbe.Windowed(cap)))
         .as[(Long, Boolean, Option[Long], Option[Long])].collect().sortBy(_._1).toSeq
       assert(viaState == viaWindow, s"divergence at cap=$cap")
     }
@@ -98,17 +98,17 @@ class IncrementalContaminationSpec extends SparkSpec {
     val keys = idxDf.filter(col("df") <= 1).select("shingle").distinct()
     val bf = keys.stat.bloomFilter("shingle", math.max(keys.count(), 1L), 0.01)
     val e1 = intercept[IllegalArgumentException] {
-      Dedup.incrementalContamination(incDocs, idxDf, "doc_id", "text",
-        dfCap = Some(2), dfCol = Some("df"), bloom = Some((bf, 1)))
+      Dedup.incrementalContamination(incDocs, StateProbe.Frame(idxDf), "doc_id", "text",
+        cap = Some(StateProbe.SizeColumn("df", 2)), bloom = Some((bf, 1)))
     }
     assert(e1.getMessage.contains("FALSE NEGATIVES"))
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.incrementalContamination(incDocs, idxDf, "doc_id", "text",
-        dfCap = None, dfCol = Some("df"), bloom = Some((bf, 1)))
+      Dedup.incrementalContamination(incDocs, StateProbe.Frame(idxDf), "doc_id", "text",
+        cap = None, bloom = Some((bf, 1)))
     }
     assert(e2.getMessage.contains("bloom"))
     // Equal caps (and a LOOSER bloom) are fine.
-    Dedup.incrementalContamination(incDocs, idxDf, "doc_id", "text",
-      dfCap = Some(1), dfCol = Some("df"), bloom = Some((bf, 1))).count()
+    Dedup.incrementalContamination(incDocs, StateProbe.Frame(idxDf), "doc_id", "text",
+      cap = Some(StateProbe.SizeColumn("df", 1)), bloom = Some((bf, 1))).count()
   }
 }

@@ -1,7 +1,7 @@
 package graft.corpus
 
 import graft.SparkSpec
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, StateProbe}
 import org.apache.spark.sql.functions._
 
 /** Incremental embedding-cosine near-dup against persisted sign-LSH
@@ -30,7 +30,7 @@ class IncrementalCosineSpec extends SparkSpec {
 
   test("verdicts equal full banded pipeline restricted to cross pairs") {
     val got = Dedup.incrementalCosineNearDups(
-        incVecs, stateVecs, stateKeys, "vec_id", "embedding", threshold = 0.3)
+        incVecs, stateVecs, StateProbe.Frame(stateKeys), "vec_id", "embedding", threshold = 0.3)
       .as[(Long, Boolean, Option[Long], Option[Double])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
 
@@ -54,7 +54,7 @@ class IncrementalCosineSpec extends SparkSpec {
 
   test("cap 0 accepts everything; packed key carries 0-based table") {
     val got = Dedup.incrementalCosineNearDups(
-        incVecs, stateVecs, stateKeys, "vec_id", "embedding",
+        incVecs, stateVecs, StateProbe.Frame(stateKeys), "vec_id", "embedding",
         threshold = 0.3, bucketCap = Some(0))
       .as[(Long, Boolean, Option[Long], Option[Double])].collect()
     assert(got.forall(_._2))

@@ -1,7 +1,7 @@
 package graft.corpus
 
 import graft.SparkSpec
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, StateProbe}
 import org.apache.spark.sql.functions._
 
 /** Incremental SimHash near-dup dedup against persisted Manku-key
@@ -32,7 +32,7 @@ class IncrementalSimhashSpec extends SparkSpec {
 
   test("verdicts equal full banded self-join restricted to cross pairs") {
     val got = Dedup.incrementalSimhashNearDups(
-        incDocs, stateKeys, "doc_id", "text")
+        incDocs, StateProbe.Frame(stateKeys), "doc_id", "text")
       .as[(Long, Boolean, Option[Long], Option[Long])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
 
@@ -56,7 +56,7 @@ class IncrementalSimhashSpec extends SparkSpec {
 
   test("bucket cap skips oversized state buckets (cap 0 accepts everything)") {
     val got = Dedup.incrementalSimhashNearDups(
-        incDocs, stateKeys, "doc_id", "text", bucketCap = Some(0))
+        incDocs, StateProbe.Frame(stateKeys), "doc_id", "text", bucketCap = Some(0))
       .as[(Long, Boolean, Option[Long], Option[Long])].collect()
     assert(got.forall(_._2), "cap 0 must leave no probeable bucket")
     assert(got.length == 4)

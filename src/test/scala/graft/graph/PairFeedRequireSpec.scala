@@ -1,68 +1,109 @@
 package graft.graph
 
+import java.nio.file.Files
 import graft.SparkSpec
-import graft.queries.CorpusQueries
+import graft.ops.PersistedState
+import graft.queries.{CorpusQueries, EntityQueries}
 
-/** The shared incremental pair feed (dd_incremental_clusters,
+/** Every member that probes a persisted key state checks the probe's
+  * layout itself (graft.dedup.StateProbe): the state must enter the
+  * probe join as a bucketed scan with no exchange below the join. Per
+  * row, the member's state carries its freshness properties but was
+  * rewritten WITHOUT bucketing, so the member's own prepare accepts it
+  * as current; the member must then fail with
+  * `<label> did not plan a bucketed scan` instead of letting the probe
+  * re-shuffle the state silently.
+  *
+  * The shared pair feed (dd_incremental_clusters,
   * pg_incremental_pagerank, pg_incremental_triangles) is built once per
   * source generation by whichever family member runs first, so its
-  * layout REQUIREs must run inside the feed builder, not in one
-  * member's body. Here the LSH band state carries its freshness
-  * properties but was written WITHOUT bucketing, and PageRank is the
-  * first member to run in the session: the exchange-free probe REQUIRE
-  * must fail the query instead of letting the probe re-shuffle the
-  * state silently.
+  * REQUIRE runs inside the feed builder on every call: the PageRank row
+  * covers it.
   *
-  * End to end on purpose, over a synthetic corpus written to a fresh
-  * directory: a never-seen source fingerprint means no memo of the
-  * feed exists yet in this session. */
-class PairFeedRequireSpec extends SparkSpec {
-  import spark.implicits._
+  * End to end on purpose, over a copy of the in-repo sf0.01 fixture in a
+  * fresh directory: a never-seen source tag means no state or memo of
+  * this session is reused. */
+class PairFeedRequireSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
-  test("pair-feed REQUIREs fire when pg_incremental_pagerank builds the feed first") {
-    val d = SparkSpec.tempDir("graft-pairfeed")
-    val tag = d.toString.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_")
-    try {
-      // 15 groups of 4 near-duplicates (30 shared words, one distinct
-      // tail word each), spread over every doc_id % 3 class, written as
-      // ONE parquet file so the source fingerprint is its own.
-      val docs = (0 until 60).map { i =>
-        (i.toLong, (1 to 30).map(w => s"g${i / 4}w$w").mkString(" ") + s" tail$i")
-      }.toDF("doc_id", "text")
-      val stage = d.resolve("stage").toString
-      docs.coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, d.resolve("documents.parquet"))
-      val dir = d.toString
+  private val fixture = "perfbench/data/sf0.01"
 
+  private lazy val dir: String = {
+    val root = SparkSpec.tempDir("graft-pairfeed")
+    Files.list(java.nio.file.Paths.get(fixture)).forEach { f =>
+      Files.copy(f, root.resolve(f.getFileName)); ()
+    }
+    root.toString
+  }
+
+  private def lsh(d: String): Unit = CorpusQueries.prepareLshState(spark, d)
+  private def er(d: String): Unit = EntityQueries.prepareErState(spark, d)
+  private def contam(d: String): Unit = CorpusQueries.prepareContamState(spark, d)
+
+  /** (test name, member, its state, the state's build, REQUIRE label) */
+  private val members: Seq[(String, String, PersistedState, String => Unit, String)] = Seq(
+    ("dd_incremental_neardup fails on an unbucketed LSH state",
+      "dd_incremental_neardup", PersistedState.LshState, lsh, "LSH state"),
+    ("dd_incremental_simhash fails on an unbucketed SimHash state",
+      "dd_incremental_simhash", PersistedState.SimhashState,
+      d => CorpusQueries.prepareSimhashState(spark, d), "SimHash state"),
+    ("dd_incremental_cosine fails on an unbucketed cosine state",
+      "dd_incremental_cosine", PersistedState.CosineState,
+      d => CorpusQueries.prepareCosineState(spark, d), "cosine LSH state"),
+    ("dd_incremental_contamination fails on an unbucketed shingle index",
+      "dd_incremental_contamination", PersistedState.ContamState, contam,
+      "test-suite shingle index"),
+    ("pair-feed REQUIREs fire when pg_incremental_pagerank builds the feed first",
+      "pg_incremental_pagerank", PersistedState.LshState, lsh, "LSH state"),
+    ("er_incremental_clusters fails on an unbucketed ER key state",
+      "er_incremental_clusters", PersistedState.ErKeys, er, "ER key state"),
+    ("er_incremental_clusters_capped fails on an unbucketed ER key state",
+      "er_incremental_clusters_capped", PersistedState.ErKeys, er, "ER key state"),
+    ("er_incremental_survivorship fails on an unbucketed ER key state",
+      "er_incremental_survivorship", PersistedState.ErKeys, er, "ER key state"),
+    ("pipe_crawl_guarded fails on an unbucketed shingle index",
+      "pipe_crawl_guarded", PersistedState.ContamState, contam,
+      "test-suite shingle index"),
+    ("pipe_incremental_crawl fails on an unbucketed LSH state",
+      "pipe_incremental_crawl", PersistedState.LshState, lsh, "LSH state"))
+
+  members.foreach { case (name, member, state, build, label) =>
+    test(name) {
+      val d = dir
       // Build the state as the registry does, then rewrite it without
-      // bucketing under the same freshness properties, so the query's
-      // own prepareLshState accepts it as current.
-      CorpusQueries.prepareLshState(spark, dir)
-      val table = graft.ops.PersistedState.LshState.name(dir)
+      // bucketing under the same graft.* properties.
+      build(d)
+      val table = state.name(d)
       val props = spark.sql(s"SHOW TBLPROPERTIES `$table`").collect()
         .map(r => r.getString(0) -> r.getString(1))
         .filter(_._1.startsWith("graft."))
-      val bands = spark.table(table).localCheckpoint()
+      val unbucketed = spark.table(table).localCheckpoint()
       spark.sql(s"DROP TABLE `$table`")
-      bands.write.saveAsTable(table)
+      unbucketed.write.saveAsTable(table)
       spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES (" +
         props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
-      assert(spark.table(table).count() > 0)
-
-      val e = intercept[IllegalArgumentException] {
-        graft.SparkEntry.queries("pg_incremental_pagerank")(spark, dir).count()
+      try {
+        assert(spark.table(table).count() > 0)
+        val e = intercept[IllegalArgumentException] {
+          graft.SparkEntry.queries(member)(spark, d).count()
+        }
+        assert(e.getMessage.contains(s"$label did not plan a bucketed scan"), e.getMessage)
+      } finally {
+        // The next row's build rewrites the state bucketed.
+        spark.sql(s"DROP TABLE IF EXISTS `$table`")
       }
-      assert(e.getMessage.contains("LSH state did not plan a bucketed scan"), e.getMessage)
-    } finally {
-      spark.catalog.listTables().collect()
-        .filter(_.name.endsWith(tag))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
-      val wh = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-      Option(wh.listFiles()).toSeq.flatten.filter(_.getName.endsWith(tag))
-        .foreach(f => org.apache.commons.io.FileUtils.deleteDirectory(f))
-      org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
     }
+  }
+
+  // The copy's states and lineages: every catalog table and warehouse
+  // entry tagged with it.
+  override def afterAll(): Unit = {
+    val tag = PersistedState.tagOf(dir)
+    spark.catalog.listTables().collect()
+      .filter(_.name.endsWith(tag))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    val wh = new java.io.File(PersistedState.warehouse(spark))
+    Option(wh.listFiles()).toSeq.flatten.filter(_.getName.endsWith(tag))
+      .foreach(f => org.apache.commons.io.FileUtils.deleteDirectory(f))
+    super.afterAll()
   }
 }

@@ -16,8 +16,11 @@ import graft.similarity.Similarity
   * twice: the second call restarts on its checkpoint and commits no
   * micro-batch, and both calls return the set an independent batch
   * join computes. A changed cap, or a rewritten source file, resets the
-  * lineage and the drain reprocesses to the same set. No call leaves an
-  * entry in java.io.tmpdir. */
+  * lineage and the drain reprocesses to the same set, and so does a
+  * re-run after either crash of a drain: a lineage left empty without
+  * its `_GRAFT_SRC` (a reset that died before the marker write), and a
+  * checkpoint holding an offset with no commit. No call leaves an entry
+  * in java.io.tmpdir. */
 class GateLineageSpec extends SparkSpec {
 
   /** The in-repo sf0.01 fixture, read only (TablesSchemaSpec's). */
@@ -140,7 +143,8 @@ class GateLineageSpec extends SparkSpec {
           emb.filter(col("vec_id") % 3 =!= 2), threshold = 0.3, bucketCap = cap),
           cosineRef),
         ("er_probe", "customer.parquet", cap => ErProbe.candidatesOnce(
-          spark, d, PersistedState.ErKeys.name(d), blockCap = cap), erRef))
+          spark, d, PersistedState.ErKeys.name(d),
+          cap = graft.dedup.StateProbe.windowed(cap)), erRef))
 
       val tmpBefore = tmpEntries
       gates.foreach { case (name, src, gate, refDf) =>
@@ -169,8 +173,27 @@ class GateLineageSpec extends SparkSpec {
         val (rolled, b4) = drain(gate(Some(Int.MaxValue)))
         assert(b4 > 0, s"$name: a rewritten source must reset the lineage")
         assert(rolled == ref, s"$name: rolled source != batch join")
-        assert(new java.io.File(PersistedState(s"st_$name", Nil).path(spark, d)).isDirectory,
-          s"$name: lineage not under the warehouse")
+        val lineage = java.nio.file.Paths.get(PersistedState(s"st_$name", Nil).path(spark, d))
+        assert(lineage.toFile.isDirectory, s"$name: lineage not under the warehouse")
+
+        // Crash (i): a reset deleted and recreated the lineage but died
+        // before recording _GRAFT_SRC — an empty directory.
+        ScaleOps.deleteLocal(lineage.toFile)
+        Files.createDirectories(lineage)
+        val (healed, b5) = drain(gate(Some(Int.MaxValue)))
+        assert(b5 > 0, s"$name: a lineage without _GRAFT_SRC must drain its input")
+        assert(healed == ref, s"$name: re-run over an empty lineage != batch join")
+
+        // Crash (ii): a drain died after logging its last offset and
+        // before committing it — the checkpoint holds an offset with no
+        // commit, so the re-run replays that batch.
+        val commits = lineage.resolve("ckpt").resolve("commits").toFile
+        val last = commits.listFiles().map(_.getName)
+          .filter(n => n.nonEmpty && n.forall(_.isDigit)).maxBy(_.toLong)
+        Seq(last, s".$last.crc").foreach(n => Files.deleteIfExists(commits.toPath.resolve(n)))
+        val (replayed, b6) = drain(gate(Some(Int.MaxValue)))
+        assert(b6 > 0, s"$name: an uncommitted offset must be replayed")
+        assert(replayed == ref, s"$name: re-run over an uncommitted offset != batch join")
       }
       val leaked = tmpEntries -- tmpBefore
       assert(leaked.isEmpty, s"gate drains left entries in java.io.tmpdir: $leaked")
