@@ -234,8 +234,7 @@ object Dedup {
                           stateBands: StateProbe.State, idCol: String, textCol: String,
                           numHashes: Int = 32, rowsPerBand: Int = 4,
                           shingleN: Int = 3, threshold: Double = 0.8,
-                          bandBucketCap: Option[Int] = None,
-                          memoTag: Option[String] = None): DataFrame = {
+                          bandBucketCap: Option[Int] = None): DataFrame = {
     // Shared-key CacheOnce with [[incrementalNearDupPairs]]: the same
     // increment over the same corpus sketches ONCE per session no matter
     // which incremental-family query runs first (the verdict query, the
@@ -256,14 +255,12 @@ object Dedup {
     // chain (state bucket-size window + band join + distinct) executed
     // TWICE per action and re-executed per invocation — ~30 of the
     // query's measured ~40 s-cpu per warm rep at sf0.1. One eager
-    // materialization per (memoTag = state/source generation), every
-    // consumer reads a LogicalRDD leaf; the probe checked its own plan
-    // above, before the truncation erases it. Collision-bounded by the
-    // cap, so increment-pair-graph-sized — inside the CacheOnce size
-    // contract. No memoTag (library callers that already truncate their
-    // whole output) keeps the old shape.
-    val cands = memoTag.fold(cands0)(tag =>
-      graft.ops.CacheOnce.swapTruncated("incr-nd-cands", tag, cands0))
+    // materialization per input generation (CacheOnce keys it by the
+    // state and source files the probe reads), every consumer reads a
+    // LogicalRDD leaf; the probe checked its own plan above, before the
+    // truncation erases it. Collision-bounded by the cap, so
+    // increment-pair-graph-sized — inside the CacheOnce size contract.
+    val cands = graft.ops.CacheOnce.swapTruncated("incr-nd-cands", cands0)
     val stateSets = stateDocs
       .join(cands.select(col("id1").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol), explode(distinctShingles(col(textCol), shingleN)).as("shingle"))
@@ -454,60 +451,25 @@ object Dedup {
     * when per-shingle df sits near or below K the cap's window sort
     * costs more than it prunes (measured: 55s capped vs 37s uncapped at
     * the 10-copy-density sf1 fixture — SCALE.md). */
-  /** Bounded memo for the test-side Bloom filter + its sizing count —
-    * the two DRIVER JOBS every invocation of [[bloomContamination]]
-    * paid (a full count action + the bloomFilter aggregate) even though
-    * both are constants of the (test corpus generation, shingleN, fpp):
-    * the contamStateBloom discipline applied to the ad-hoc path. The key
-    * is `memoTag|n=shingleN|fpp=fpp|test=<semantic hash>`: the caller's
-    * `memoTag` (which must carry the test source's generation
-    * fingerprint), the shingle width `shingleN`, the filter's `fpp`,
-    * and the semantic hash of the test shingle frame's analyzed plan,
-    * so two test splits under one tag never share a filter. */
-  private val testBloomMemo = new java.util.LinkedHashMap[
-      String, (Long, org.apache.spark.util.sketch.BloomFilter)](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String,
-          (Long, org.apache.spark.util.sketch.BloomFilter)]): Boolean = size() > 8
-  }
-
   def bloomContamination(train: DataFrame, test: DataFrame, idCol: String,
                          textCol: String, shingleN: Int = 3,
                          minShared: Int = 3, fpp: Double = 0.01,
                          topNPerTest: Option[Int] = None,
-                         maxTrainPerShingle: Option[Int] = None,
-                         memoTag: Option[String] = None): DataFrame = {
+                         maxTrainPerShingle: Option[Int] = None): DataFrame = {
     val testSh = graft.ops.CacheOnce.swap("bloom-test-shingles",
       test.select(col(idCol).as("test_id"),
         explode(distinctShingles(col(textCol), shingleN)).as("shingle")))
+    // The test-side filter and its sizing count are two driver jobs
+    // whose result is a constant of the test split: memoized by the
+    // test shingle frame's key (its plan — the split and `shingleN` —
+    // and its files) with `fpp` in the group, so two splits or two
+    // rates never share a filter; a wrong filter would prune genuinely
+    // shared train shingles and report contaminated docs clean. The
     // (doc, shingle) row count over-estimates distinct shingles — a
     // slightly over-sized filter, never an under-sized (leaky) one.
-    def build(): (Long, org.apache.spark.util.sketch.BloomFilter) = {
+    val bloom = graft.ops.CacheOnce.value(s"bloom-test-filter:fpp=$fpp", testSh) {
       val expected = math.max(testSh.count(), 1L)
-      (expected, testSh.stat.bloomFilter("shingle", expected, fpp))
-    }
-    val (_, bloom) = memoTag match {
-      case None => build()
-      case Some(tag) =>
-        // The test frame's semantic hash is part of the key, not just
-        // the caller's tag: two callers reusing the same source tag
-        // over DIFFERENT test splits (doc_id % 2 vs % 3) must never
-        // share a filter — a wrong filter prunes genuinely shared
-        // train shingles and reports contaminated docs clean, with no
-        // error surfaced (r19 review finding).
-        val key = s"$tag|n=$shingleN|fpp=$fpp|" +
-          s"test=${testSh.queryExecution.analyzed.semanticHash()}"
-        val hit = testBloomMemo.synchronized(testBloomMemo.get(key))
-        if (hit != null) hit
-        else {
-          // Build outside the lock (two Spark jobs); racing builders of
-          // the same key produce identical filters — idempotent put.
-          val v = build()
-          testBloomMemo.synchronized {
-            val raced = testBloomMemo.get(key)
-            if (raced != null) raced else { testBloomMemo.put(key, v); v }
-          }
-        }
+      testSh.stat.bloomFilter("shingle", expected, fpp)
     }
     val trainShAll = train.select(col(idCol).as("train_id"),
       explode(distinctShingles(col(textCol), shingleN)).as("shingle"))
@@ -945,15 +907,8 @@ object Dedup {
     * is row-identical to a full re-cluster over the combined pair set
     * (the registered oracle recomputes precisely that). Returns the
     * updated (node, cluster_id) state. */
-  /** `memoTag` (r19 fingerprint sweep): folded into the truncated pair
-    * memo's NAME so a mid-session state/source regeneration can never
-    * serve a stale lineage-free frame — required whenever `newPairs` is
-    * a fresh plan over state TABLES by name (their semantic hash does
-    * not change on an in-place rebuild); redundant but harmless when
-    * the input is already a generation-keyed LogicalRDD leaf. */
   def incrementalClusters(stateLabels: DataFrame, newPairs: DataFrame,
-                          idCols: (String, String) = ("id1", "id2"),
-                          memoTag: String = ""): DataFrame = {
+                          idCols: (String, String) = ("id1", "id2")): DataFrame = {
     val (c1, c2) = idCols
     // The pair input is typically the END of a near-dup pipeline
     // (minhash + exact verify); this operator references it through the
@@ -967,8 +922,10 @@ object Dedup {
     // ~10 s of a 13 s warm run. The eager materialization is
     // increment-sized by construction (every caller feeds an
     // increment-bounded pair set) and is the designated parquet-
-    // checkpoint seam at cluster scale.
-    val pairs = graft.ops.CacheOnce.swapTruncated("incr-cluster-pairs", memoTag,
+    // checkpoint seam at cluster scale. CacheOnce keys it by the files
+    // `newPairs` reads, so a pair feed over state tables rebuilt in
+    // place never serves the old lineage-free frame.
+    val pairs = graft.ops.CacheOnce.swapTruncated("incr-cluster-pairs",
       newPairs.select(col(c1).as("a"), col(c2).as("b"))
         .filter(col("a") =!= col("b")))
     val nodes = pairs.select(col("a").as("node"))
@@ -1077,8 +1034,7 @@ object Dedup {
                                 vecCol: String, threshold: Double,
                                 numPlanes: Int = 8, numTables: Int = 4,
                                 dim: Int = 64, seed: Long = 42L,
-                                bucketCap: Option[Int] = None,
-                                memoTag: Option[String] = None): DataFrame = {
+                                bucketCap: Option[Int] = None): DataFrame = {
     import graft.similarity.Similarity
     val incBase = graft.ops.CacheOnce.swap("incr-inc-cosvecs",
       incVecs.filter(Similarity.l2norm(col(vecCol)) > 0)
@@ -1094,8 +1050,7 @@ object Dedup {
     // left-semi prune AND the verify join — truncated once per
     // generation, both consumers read a LogicalRDD leaf and the probe
     // (state bucket-size window + key join + distinct) executes once.
-    val cands = memoTag.fold(cands0)(tag =>
-      graft.ops.CacheOnce.swapTruncated("incr-cos-cands", tag, cands0))
+    val cands = graft.ops.CacheOnce.swapTruncated("incr-cos-cands", cands0)
     val stateV = stateVecs
       .join(cands.select(col("id1").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol).as("id1"), col(vecCol).as("_v1"),

@@ -45,8 +45,7 @@ object PageRank {
     * of the edge set — reproducible by any ANSI engine as `iters`
     * unrolled join+aggregate passes. */
   def pageRank(edges: DataFrame, iters: Int = 3, damping: Double = 0.85,
-               roundTo: Int = 6, symmetric: Boolean = false,
-               memoTag: String = ""): DataFrame = {
+               roundTo: Int = 6, symmetric: Boolean = false): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
     // TRUNCATE the RAW edge list, then derive EVERYTHING from the leaf:
     // deg, the superstep join frame, the node count and the init ranks
@@ -62,11 +61,9 @@ object PageRank {
     // driver gap over ~0.6 s of tasks — the same fat-leaf arithmetic
     // that motivated swapTruncated on the incremental path). After
     // truncation every reference costs the analyzer one LogicalRDD
-    // leaf.
-    // memoTag (r19 fingerprint sweep): callers whose edge frame is a
-    // fresh plan over tables by name fold a generation fingerprint into
-    // the memo tag; LogicalRDD-leaf-fed callers are keyed by the leaf.
-    val e = graft.ops.CacheOnce.swapTruncated("pagerank-edges", memoTag, edges)
+    // leaf. An edge frame over tables by name is keyed by the files
+    // they list, a LogicalRDD-leaf-fed one by the leaf (CacheOnce).
+    val e = graft.ops.CacheOnce.swapTruncated("pagerank-edges", edges)
     // deg is node-cardinality sized and referenced by every superstep's
     // join AND every teleport broadcast (~2*iters references, each its
     // own stage if recomputed) — persist it alongside the edges.
@@ -158,8 +155,7 @@ object PageRank {
     * invariant. */
   def incrementalPageRank(stateEdges: DataFrame, incEdges: DataFrame,
                           stateRanks: DataFrame, iters: Int = 2,
-                          damping: Double = 0.85, roundTo: Int = 6,
-                          memoTag: String = ""): DataFrame = {
+                          damping: Double = 0.85, roundTo: Int = 6): DataFrame = {
     require(iters >= 1, "incrementalPageRank needs at least one iteration")
     // TRUNCATED, not just cached: the increment feed is typically a
     // deep plan (LSH probe + verify) referenced by deg, the dangle
@@ -169,7 +165,7 @@ object PageRank {
     // dominated the warm runtime (measured ~10 s of a 13 s refresh at
     // sf0.1, SCALE.md). After truncation each reference is
     // one LogicalRDD leaf.
-    val incE = graft.ops.CacheOnce.swapTruncated("ipr-inc-edges", memoTag, incEdges)
+    val incE = graft.ops.CacheOnce.swapTruncated("ipr-inc-edges", incEdges)
     // Merged out-degrees: the state side's aggregate rides the bucketing
     // (no exchange), and the merge with the increment's degrees is a
     // node-sized full-outer join PINNED sort-merge on the state side —
@@ -240,13 +236,11 @@ object PageRank {
       // appended a fresh dead rpd-final entry per rep (measured: 28
       // stages / ~13 s-cpu per warm sf0.1 rep that the memo was built
       // to avoid). Kept, the whole chain memo-hits across refreshes of
-      // one state generation: entries are one per generation,
-      // node-sized, and CacheOnce's GROUP LRU (eviction keyed on the
-      // name's prefix before the ':' tag, maxPerNameTruncated per
-      // group) bounds dead generations across source regenerations —
-      // the tag-in-name keying alone would give each generation a
-      // singleton name the per-name bound never fires on.
-      val rpd = graft.ops.CacheOnce.swapTruncated(s"ipr-rpd-$i", memoTag,
+      // one state generation: entries are one per generation (CacheOnce
+      // keys each by the state files its plan reads), node-sized, and
+      // the group's LRU (maxPerNameTruncated per superstep group)
+      // bounds dead generations across source regenerations.
+      val rpd = graft.ops.CacheOnce.swapTruncated(s"ipr-rpd-$i",
         ranks.join(deg, ranks("id") === deg("src"))
           .select(col("src"), (col("r") / col("_deg")).as("_rpd")))
       val msgs = stateEdges.hint("merge").join(rpd, Seq("src"))

@@ -109,8 +109,7 @@ object Triangles {
     * adjacency still serves the src-keyed candEE probe. */
   def incrementalPerNodeCounts(stateAdj: DataFrame, statePairs: DataFrame,
                                deltaPairs: DataFrame,
-                               stateCounts: DataFrame,
-                               memoTag: String = ""): DataFrame = {
+                               stateCounts: DataFrame): DataFrame = {
     // Canonicalize the delta (cross pairs arrive state-id-first, not
     // id-sorted) and TRUNCATE it (swapTruncated, not swap): the delta
     // feeds five enumeration legs — seven plan references — and is the
@@ -118,7 +117,7 @@ object Triangles {
     // cached plan would embed that chain's analyzed tree seven times
     // in the refresh plan (the cluster family's measured analysis-cost
     // class). Increment-bounded by construction.
-    val dp = graft.ops.CacheOnce.swapTruncated("itri-delta", memoTag,
+    val dp = graft.ops.CacheOnce.swapTruncated("itri-delta",
       deltaPairs.select(least(col("id1"), col("id2")).as("id1"),
         greatest(col("id1"), col("id2")).as("id2")).distinct())
     // Close-join discipline (r15, replacing r14's broadcast closes): at

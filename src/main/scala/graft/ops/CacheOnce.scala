@@ -1,27 +1,44 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.storage.StorageLevel
 
-/** Keyed persist-with-replacement for computed intermediates that a
-  * downstream plan references more than once (a feature table feeding an
-  * ANN search, the exploded shingle set feeding both MinHash stages).
+/** Keyed memos for computed intermediates that a downstream plan
+  * references more than once (a feature table feeding an ANN search,
+  * the exploded shingle set feeding both MinHash stages), and for the
+  * driver-side values built from them (a Bloom filter).
   *
-  * `persist()` entries live in the session CacheManager until explicitly
-  * released — the ContextCleaner never reclaims them — so a library
-  * function that persists on every call leaks its heaviest intermediate
-  * for the session lifetime. `swap` bounds that: entries are keyed by
-  * (name, SEMANTIC HASH of the analyzed plan), so
-  *  - the same input re-requested returns the already-persisted frame
-  *    (no duplicate cache, no mid-job unpersist of a frame an earlier
+  * THE KEY. Every memo is keyed by (group, SEMANTIC HASH of the frame's
+  * analyzed plan, GENERATION), where the generation is the sorted
+  * (path, length, mtime) of every file listed by every file-source leaf
+  * of that plan, subqueries included. The semantic hash alone is not
+  * enough: a parquet path rewritten in place, or a bucketed table
+  * rebuilt under its name, analyzes to the same plan and hashes the
+  * same, so a memo keyed by the hash would keep serving the old rows —
+  * and a truncated memo has no lineage to recompute them from. The
+  * listing is the one each leaf's `PartitioningAwareFileIndex` already
+  * holds (`InMemoryFileIndex` for paths and catalog tables,
+  * `MetadataLogFileIndex` for a sink read back through its log), so the
+  * generation costs no listing and no job; a leaf over any other index
+  * contributes its root paths. A leaf that is itself a memo's output (a
+  * truncated `LogicalRDD`) hashes by its RDD, so a chain of memos misses
+  * all the way down once its first input moves. Callers pass no tag.
+  *
+  * THE BOUND. `persist()` entries live in the session CacheManager until
+  * explicitly released — the ContextCleaner never reclaims them — so a
+  * library function that persists on every call leaks its heaviest
+  * intermediate for the session lifetime. Each group keeps its entries
+  * in insertion order and evicts the oldest beyond its bound, so
+  *  - the same input re-requested returns the already-built entry (no
+  *    duplicate cache, no mid-job unpersist of a frame an earlier
   *    caller still references lazily), and
   *  - two interleaved calls over DIFFERENT corpora each keep their own
-  *    cache instead of evicting each other (a silent 2x read regression
-  *    exactly where caching mattered).
-  * Only when a name accumulates more than `maxPerName` distinct plans is
-  * the oldest evicted (LRU) — the bound that keeps a long session from
-  * pinning every corpus it ever touched. At cluster scale the same seam
-  * is where a parquet checkpoint goes. */
+  *    entry instead of evicting each other (a silent 2x read regression
+  *    exactly where caching mattered), while
+  *  - a source regenerated mid-session cannot pin every dead
+  *    generation it ever had. [[release]]`(group)` frees a group. */
 object CacheOnce {
   val maxPerName = 4
 
@@ -43,25 +60,48 @@ object CacheOnce {
     * or exploded shingle set through here. */
   val maxPerNameTruncated = 16
 
-  private val live = scala.collection.mutable.LinkedHashMap.empty[(String, Int), DataFrame]
+  private type Generation = Seq[(String, Long, Long)]
+  private type Key = (String, Int, Generation)
 
-  def swap(name: String, df: DataFrame,
-           level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    synchronized {
-      val key = (name, df.queryExecution.analyzed.semanticHash())
-      live.get(key) match {
-        case Some(cached) => cached
-        case None =>
-          val cached = df.persist(level)
-          live(key) = cached
-          val mine = live.keys.filter(_._1 == name).toSeq
-          if (mine.size > maxPerName) {
-            val victim = mine.head // LinkedHashMap keeps insertion order
-            live.remove(victim).foreach(_.unpersist())
-          }
-          cached
-      }
+  private def key(group: String, df: DataFrame): Key = {
+    val plan = df.queryExecution.analyzed
+    val files = plan.collectWithSubqueries {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r.location }.flatMap {
+      case idx: PartitioningAwareFileIndex =>
+        idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      case idx => idx.rootPaths.map(p => (p.toString, -1L, -1L))
     }
+    (group, plan.semanticHash(), files.distinct.sorted)
+  }
+
+  /** One memo: entries per group in insertion order, the oldest of a
+    * group freed beyond `bound`. Callers hold the CacheOnce lock. */
+  private final class Memo[V](bound: Int, free: V => Unit) {
+    private val entries = scala.collection.mutable.LinkedHashMap.empty[Key, V]
+    def get(k: Key): Option[V] = entries.get(k)
+    def getOrElseUpdate(k: Key)(build: => V): V = entries.getOrElse(k, {
+      val v = build
+      entries(k) = v
+      val mine = entries.keys.filter(_._1 == k._1).toSeq
+      if (mine.size > bound) entries.remove(mine.head).foreach(free)
+      v
+    })
+    def release(group: String): Unit =
+      entries.keys.filter(_._1 == group).toSeq.foreach(k => entries.remove(k).foreach(free))
+  }
+
+  private val persisted = new Memo[DataFrame](maxPerName, _.unpersist())
+  private val truncated = new Memo[DataFrame](maxPerNameTruncated, Materialize.release)
+  private val values = new Memo[Any](maxPerName, _ => ())
+
+  /** `df` persisted at `level`, or the frame an earlier call persisted
+    * under the same key. */
+  def swap(name: String, df: DataFrame,
+           level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+    val k = key(name, df)
+    synchronized(persisted.getOrElseUpdate(k)(df.persist(level)))
+  }
 
   /** [[swap]] + eager PLAN truncation, for frames consumed by
     * iterative plan builders (an incremental PageRank's pair feed, a
@@ -72,56 +112,48 @@ object CacheOnce {
     * deep LSH-verify feed spends 10+ s in plan analysis while its
     * tasks run ~1 s (measured at sf0.1, SCALE.md). Here the frame is
     * materialized once ([[Materialize.eagerDurable]] — a LogicalRDD
-    * leaf) and memoized under the (group, tag, semantic hash) key, so
-    * repeat calls return the truncated frame without re-executing, and
-    * every downstream reference costs the analyzer a single leaf node.
+    * leaf) and memoized under `group` by the CacheOnce key, so repeat
+    * calls return the truncated frame without re-executing, and every
+    * downstream reference costs the analyzer a single leaf node.
     * EAGER (the data computes at call time, not at the terminal
     * action); eviction frees the checkpoint blocks via
     * [[Materialize.release]].
-    *
-    * `group` names the operator family's memo (`"pagerank-edges"`) and
-    * `tag` the generation within it — callers pass the source
-    * fingerprint, so a mid-session source regeneration gets its own
-    * entry. The LRU bound counts entries per GROUP: keyed per tag
-    * alone, every generation would be its own singleton and a
-    * regenerating source would leak every dead generation's checkpoint
-    * until JVM exit. [[release]]`(group)` frees every tag of the group.
     *
     * CONTRACT, stricter than [[swap]]'s: do not hold a returned frame
     * across more than `maxPerNameTruncated` later `swapTruncated` calls
     * in the SAME group. A plain `swap` frame evicted while still
     * referenced silently degrades to a recompute; a truncated frame has
     * no lineage left to recompute from, so an action over an evicted
-    * one FAILS. Current callers take one generation per state
-    * fingerprint and act before the next, so the bound is never
-    * approached. */
-  def swapTruncated(group: String, tag: String, df: DataFrame): DataFrame = synchronized {
-    val key = ((group, tag), df.queryExecution.analyzed.semanticHash())
-    liveT.get(key) match {
-      case Some(t) => t
-      case None =>
-        val t = Materialize.eagerDurable(df)
-        liveT(key) = t
-        val mine = liveT.keys.filter(_._1._1 == group).toSeq
-        if (mine.size > maxPerNameTruncated) {
-          val victim = mine.head // LinkedHashMap keeps insertion order
-          liveT.remove(victim).foreach(Materialize.release)
-        }
-        t
-    }
+    * one FAILS. Current callers take one entry per input generation and
+    * act before the next, so the bound is never approached. */
+  def swapTruncated(group: String, df: DataFrame): DataFrame = {
+    val k = key(group, df)
+    synchronized(truncated.getOrElseUpdate(k)(Materialize.eagerDurable(df)))
   }
 
-  private val liveT =
-    scala.collection.mutable.LinkedHashMap.empty[((String, String), Int), DataFrame]
+  /** A driver-side value derived from `df` (a Bloom filter over a test
+    * split, a filter deserialized from a checkpoint), memoized under
+    * `group` by `df`'s CacheOnce key: `build` runs once per key and
+    * again once `df`'s files move. It runs OUTSIDE the lock — it may
+    * run Spark jobs, and a concurrent caller of another key must not
+    * wait on them; two racing builders of one key both run, and the
+    * first value stored is returned to both. `df` is only keyed, never
+    * executed here: `build` decides what to run. Bounded like [[swap]],
+    * `maxPerName` per group; nothing is freed on eviction. */
+  def value[A](group: String, df: DataFrame)(build: => A): A = {
+    val k = key(group, df)
+    synchronized(values.get(k)).getOrElse {
+      val v = build
+      synchronized(values.getOrElseUpdate(k)(v))
+    }.asInstanceOf[A]
+  }
 
-  /** Drop and unpersist every cached plan under `name`: the [[swap]]
-    * entries of that name and the [[swapTruncated]] entries of every
-    * tag in that group. */
+  /** Drop and free every entry under `name`: the [[swap]],
+    * [[swapTruncated]] and [[value]] entries of that group. */
   def release(name: String): Unit = synchronized {
-    live.keys.filter(_._1 == name).toSeq
-      .foreach(k => live.remove(k).foreach(_.unpersist()))
-    liveT.keys.filter(_._1._1 == name).toSeq
-      .foreach(k => liveT.remove(k).foreach(Materialize.release))
+    persisted.release(name)
+    truncated.release(name)
+    values.release(name)
   }
 }
 

@@ -441,21 +441,26 @@ object ScaleOps {
     * whose per-row narrow work is heavy (quality/lang scoring, per-row
     * sketching) inserts a repartition after the source ONLY under this
     * guard: identity on any multi-file 100 TB landing directory, where
-    * the source scan is already parallel. Memoized per (path,
-    * fingerprint) — the guard is a layout property of the source
+    * the source scan is already parallel. Memoized per path, one entry
+    * holding the fingerprint it was computed at and replaced when the
+    * fingerprint moves — the guard is a layout property of the source
     * generation, not worth a planning round per drain. */
   private val narrowMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Boolean]
-  def narrowScanAt(spark: SparkSession, path: String): Boolean = {
-    val key = (path, fileFingerprint(path))
-    val hit = narrowMemo.get(key)
-    if (hit != null) hit.booleanValue()
-    else {
-      val want = spark.sparkContext.defaultParallelism
-      val v = Tables.parquet(spark, path).rdd.getNumPartitions * 2 <= want
-      narrowMemo.putIfAbsent(key, java.lang.Boolean.valueOf(v))
-      v
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Boolean)]
+  def narrowScanAt(spark: SparkSession, path: String): Boolean =
+    generationMemo(narrowMemo, path, fileFingerprint(path)) {
+      Tables.parquet(spark, path).rdd.getNumPartitions * 2 <=
+        spark.sparkContext.defaultParallelism
     }
+
+  /** `memo`'s value for `key` if it was computed at `generation`, else
+    * `build`'s, stored in place of the superseded one: one entry per
+    * key, so a session never keeps a dead generation. */
+  private def generationMemo[K, V](memo: java.util.concurrent.ConcurrentHashMap[K, (String, V)],
+                                   key: K, generation: String)(build: => V): V = {
+    val hit = memo.get(key)
+    if (hit != null && hit._1 == generation) hit._2
+    else { val v = build; memo.put(key, (generation, v)); v }
   }
 
   /** Fingerprint of a source file for [[ensurePartitioned]]: length +
@@ -600,12 +605,13 @@ object ScaleOps {
   /** [[rowGroupRanges]] memoized per layout GENERATION: the footer walk
     * costs one driver I/O round per file per call, and the sc* layout
     * REQUIREs re-ran it every rep over a tree that can only change when
-    * its `_GRAFT_SRC` generation marker does — so the memo keys on
-    * (path, column, marker content) and one tiny marker read replaces
-    * the N-footer walk on every warm call. A layout rebuilt under a new
-    * fingerprint re-walks. */
+    * its `_GRAFT_SRC` generation marker does — so the memo keeps one
+    * entry per (path, column) with the marker content it was walked at,
+    * and one tiny marker read replaces the N-footer walk on every warm
+    * call. A layout rebuilt under a new fingerprint re-walks and
+    * replaces the entry. */
   private val rangesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Seq[(Long, Long)]]
+    new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Seq[(Long, Long)])]
 
   def rowGroupRangesMemo(path: String, column: String): Seq[(Long, Long)] = {
     val conf = hadoopConf()
@@ -613,17 +619,8 @@ object ScaleOps {
     val fs = base.getFileSystem(conf)
     val marker = new org.apache.hadoop.fs.Path(base, "_GRAFT_SRC")
     if (!fs.exists(marker)) rowGroupRanges(path, column)
-    else {
-      val gen = readUtf8(fs, marker)
-      val key = (path, column, gen)
-      val hit = rangesMemo.get(key)
-      if (hit != null) hit
-      else {
-        val v = rowGroupRanges(path, column)
-        rangesMemo.putIfAbsent(key, v)
-        v
-      }
-    }
+    else generationMemo(rangesMemo, (path, column), readUtf8(fs, marker))(
+      rowGroupRanges(path, column))
   }
 
   /** Row-group [min, max] statistics of an INT64 column across every

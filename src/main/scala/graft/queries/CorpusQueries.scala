@@ -35,13 +35,10 @@ object CorpusQueries {
     // s_ivf_recall), and the report references it twice (numerator
     // join + denominator count) — it now computes once per session
     // instead of twice per report per rep.
-    // Memo names carry the SOURCE fingerprint (review r18): the
-    // truncated frame has no lineage to recompute from, so an
-    // in-session regeneration of the backing file must miss the memo
-    // (the bloomMemo/rowGroupRangesMemo generation-key discipline
-    // applied to truncated plans).
-    val gen = graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")
-    val exact = graft.ops.CacheOnce.swapTruncated("ann-exact-top5", gen,
+    // The truncated frame has no lineage to recompute from: CacheOnce
+    // keys it by the embeddings files its plan reads, so an in-session
+    // regeneration of that file misses the memo.
+    val exact = graft.ops.CacheOnce.swapTruncated("ann-exact-top5",
       Similarity.cosineTopK(
         emb.filter(col("vec_id") < 200)
           .select(col("vec_id").as("qid"), col("embedding").as("qv")),
@@ -52,7 +49,7 @@ object CorpusQueries {
     // memo bounds live generations per name (LRU-released), where an
     // unreleased per-invocation checkpoint accumulated one reliable-
     // checkpoint copy per rep (review r18).
-    val scoredM = graft.ops.CacheOnce.swapTruncated("ann-scored", gen, scored)
+    val scoredM = graft.ops.CacheOnce.swapTruncated("ann-scored", scored)
     val approxTop = Similarity.topKWindow(scoredM, 5)
       .filter(col("query_id") < 200).select("query_id", "neighbor_id")
     val hits = exact.join(approxTop, Seq("query_id", "neighbor_id"), "left_semi")
@@ -1467,7 +1464,6 @@ FROM jb GROUP BY 1""") { (s, d) =>
       // runs first pays the band join + Jaccard verify, the other reads
       // the verified pair set from cache.
       graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
     },
@@ -1499,12 +1495,10 @@ ${step("p2", "p3")}
 SELECT id AS doc_id, round(r, 6) AS rank FROM p3"""
     }) { (s, d) =>
       val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
       graft.graph.PageRank.pageRank(graft.graph.PageRank.symmetrize(pairs),
-          iters = 3, damping = 0.85, roundTo = 6, symmetric = true,
-          memoTag = ":" + graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+          iters = 3, damping = 0.85, roundTo = 6, symmetric = true)
         .select(col("id").as("doc_id"), col("rank"))
     },
 
@@ -1518,7 +1512,6 @@ SELECT id AS doc_id, round(r, 6) AS rank FROM p3"""
     // one triangle set.
     Q("pg_triangles", trianglesOracleSql) { (s, d) =>
       val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
       graft.graph.Triangles.perNodeCounts(pairs)
@@ -1566,7 +1559,6 @@ FROM fl WINDOW w AS (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id)
 QUALIFY row_number() OVER w <= 3""") { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
       Similarity.cosineTopKExcluding(
@@ -2011,8 +2003,7 @@ FROM m""") { (s, d) =>
       // twice via the symmetric union, so the un-truncated shape also
       // executed the collision join twice per action). The top-k window
       // is the only per-rep work left.
-      val gen = graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")
-      val scored = graft.ops.CacheOnce.swapTruncated("ann-scored", gen,
+      val scored = graft.ops.CacheOnce.swapTruncated("ann-scored",
         Similarity.annScored(Tables.embeddings(s, d), "vec_id", "embedding",
           numPlanes = Some(annPlanes), numTables = annTables,
           bucketCap = Some(annBucketCap), candidateCap = Some(annCap)))
@@ -2062,8 +2053,7 @@ LEFT JOIN best ON best.id2 = i.vec_id""") { (s, d) =>
         emb.filter(col("vec_id") % 3 =!= 2),
         StateProbe.Persisted(s, d, CosineState, "cosine LSH state"),
         "vec_id", "embedding", threshold = 0.3,
-        bucketCap = Some(CosineState.stat(s, d).toInt),
-        memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/embeddings.parquet")))
+        bucketCap = Some(CosineState.stat(s, d).toInt))
     },
 
     // The cosine family's streamed front gate — completes the probe
@@ -2624,7 +2614,7 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
       // every increment doc unique.
       //
       // r19 (VERDICT item 1): the probe candidate feed is TRUNCATED
-      // inside incrementalNearDups (memoTag = source generation), so
+      // inside incrementalNearDups (one entry per input generation), so
       // the probe executes ONCE per session instead of twice per action
       // per rep; StateProbe checks the layout on the probe's own plan
       // BEFORE truncation, where the bucketed scan is still visible.
@@ -2638,8 +2628,7 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
         lshProbeState(s, d),
         "doc_id", "text", numHashes = 32, rowsPerBand = 4,
         shingleN = 2, threshold = 0.5,
-        bandBucketCap = Some(LshState.stat(s, d).toInt),
-        memoTag = Some(graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")))
+        bandBucketCap = Some(LshState.stat(s, d).toInt))
     },
 
     // Band-bucket blocking audit for the LSH family — er_blocking_audit's
@@ -2721,14 +2710,12 @@ FROM bk""") { (s, d) =>
           Seq("band_key"))
         .groupBy("id1", "id2")
         .agg((min(col("_bsz")) <= cap).as("capped_ok"))
-      // Memoized truncation (generation-keyed name — see recallReport's
-      // note): the annotated pair set feeds the count aggregate, the
-      // verify chain's probe-pruned state rescan, and the capped-flag
-      // re-join; the memo's LRU releases superseded checkpoints where a
-      // bare per-invocation eagerDurable leaked one per rep.
-      val cdm = graft.ops.CacheOnce.swapTruncated(
-        "cap-audit-pairs", graft.ops.ScaleOps.fileFingerprint(
-          s"$d/documents.parquet"), pairsAnn)
+      // Memoized truncation: the annotated pair set feeds the count
+      // aggregate, the verify chain's probe-pruned state rescan, and the
+      // capped-flag re-join; the memo's LRU releases superseded
+      // checkpoints where a bare per-invocation eagerDurable leaked one
+      // per rep.
+      val cdm = graft.ops.CacheOnce.swapTruncated("cap-audit-pairs", pairsAnn)
       // Cross pairs only, verified ONCE on the uncapped feed (the
       // capped feed is a subset): verifyCrossPairs skips the inc-inc
       // self-verify subtree the old shape computed and filtered away.
@@ -2812,27 +2799,24 @@ FROM bk""") { (s, d) =>
       prepareLshState(s, d); prepareCentroidState(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
-      // r19 fingerprint sweep (VERDICT item 3): these stage frames
-      // reference state TABLES by name, whose semantic hash survives an
-      // in-place rebuild — the generation fingerprint in the NAME is
-      // what invalidates them.
-      val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-      val exactAcc = graft.ops.CacheOnce.swapTruncated("pipe-g-exact-acc", fp,
+      // These stage frames reference state TABLES by name, whose semantic
+      // hash survives an in-place rebuild; CacheOnce's key also carries
+      // the files each table lists, so a rebuilt state misses.
+      val exactAcc = graft.ops.CacheOnce.swapTruncated("pipe-g-exact-acc",
         Dedup.incrementalDedup(inc, DedupState.table(s, d),
           "doc_id", "text").select(col("doc_id")))
-      val contamV = graft.ops.CacheOnce.swapTruncated("pipe-g-contam", fp,
+      val contamV = graft.ops.CacheOnce.swapTruncated("pipe-g-contam",
         Dedup.incrementalContamination(
           inc.join(exactAcc, Seq("doc_id"), "left_semi"), contamProbeState(s, d),
           "doc_id", "text", shingleN = 3, minShared = 3,
           cap = contamCap(s, d), bloom = Some(contamStateBloom(s, d))))
       val clean = contamV.filter(!col("contaminated")).select(col("doc_id"))
-      val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-g-nd-verdicts", fp,
+      val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-g-nd-verdicts",
         Dedup.incrementalNearDups(
           inc.join(clean, Seq("doc_id"), "left_semi"),
           docs.filter(col("doc_id") % 3 =!= 2), lshProbeState(s, d),
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
-          threshold = 0.5, bandBucketCap = Some(LshState.stat(s, d).toInt),
-          memoTag = Some(s"pipe-g:$fp")))
+          threshold = 0.5, bandBucketCap = Some(LshState.stat(s, d).toInt)))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
       val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
@@ -2874,19 +2858,15 @@ FROM bk""") { (s, d) =>
       // the final verdict join) — CacheOnce'd so one action evaluates
       // the digest gate and the LSH probe chain once, not two/three
       // times (the same multi-consumer recompute pageRank had).
-      // r19 fingerprint sweep: generation fingerprint in the memo names
-      // (state tables are referenced by NAME — see pipe_crawl_guarded).
-      val fp = graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")
-      val exactAcc = graft.ops.CacheOnce.swapTruncated("pipe-incr-exact-acc", fp,
+      val exactAcc = graft.ops.CacheOnce.swapTruncated("pipe-incr-exact-acc",
         Dedup.incrementalDedup(inc, DedupState.table(s, d),
           "doc_id", "text").select(col("doc_id")))
-      val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-incr-nd-verdicts", fp,
+      val ndVerdicts = graft.ops.CacheOnce.swapTruncated("pipe-incr-nd-verdicts",
         Dedup.incrementalNearDups(
           inc.join(exactAcc, Seq("doc_id"), "left_semi"),
           docs.filter(col("doc_id") % 3 =!= 2), lshProbeState(s, d),
           "doc_id", "text", numHashes = 32, rowsPerBand = 4, shingleN = 2,
-          threshold = 0.5, bandBucketCap = Some(LshState.stat(s, d).toInt),
-          memoTag = Some(s"pipe-incr:$fp")))
+          threshold = 0.5, bandBucketCap = Some(LshState.stat(s, d).toInt)))
       val ndAcc = ndVerdicts.filter(col("accepted")).select(col("doc_id"))
       val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"), col("embedding").as("cv"),
@@ -2942,12 +2922,7 @@ FROM bk""") { (s, d) =>
         docs.filter(col("doc_id") % 2 === 0),
         docs.filter(col("doc_id") % 2 === 1),
         "doc_id", "text", shingleN = 3, minShared = 3,
-        topNPerTest = Some(contaminationTopN),
-        // r19: the test-side Bloom + its sizing count are constants of
-        // the source generation — memoized, they stop costing two
-        // driver-visible jobs per invocation (§5 driver discipline).
-        memoTag = Some("dd-bloom:" +
-          graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet")))
+        topNPerTest = Some(contaminationTopN))
     },
 
     // Verbatim-span contamination: the maximal copied token runs
@@ -3007,7 +2982,6 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // subtree matched the cached plan); a truncated LogicalRDD is
       // invisible to that substitution, so share the memo explicitly.
       val pairs = graft.ops.CacheOnce.swapTruncated("minhash-md5-neardups",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
         Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))
       Dedup.connectedComponents(pairs)
@@ -3040,8 +3014,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // session for all three family members; its watch and scale
       // REQUIREs run inside sharedUncappedIncPairs on every call.
       val incPairs = sharedUncappedIncPairs(s, d)
-      Dedup.incrementalClusters(state, incPairs,
-        memoTag = ":" + graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+      Dedup.incrementalClusters(state, incPairs)
     },
 
     // The incremental cluster family's STREAMING end: the increment
@@ -3112,8 +3085,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       val incPairs = sharedUncappedIncPairs(s, d)
       val out = graft.graph.PageRank.incrementalPageRank(
           stateEdges, graft.graph.PageRank.symmetrize(incPairs),
-          stateRanks, iters = 2, damping = 0.85, roundTo = 6,
-          memoTag = ":" + graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+          stateRanks, iters = 2, damping = 0.85, roundTo = 6)
         .select(col("id").as("doc_id"), col("rank"))
       graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
         out.queryExecution.executedPlan, "PageRank edge/LSH state")
@@ -3146,8 +3118,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // and pg_incremental_pagerank — one probe+verify per session.
       val incPairs = sharedUncappedIncPairs(s, d)
       val out = graft.graph.Triangles.incrementalPerNodeCounts(
-          stateAdj, statePairs, incPairs, stateCounts,
-          memoTag = ":" + graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"))
+          stateAdj, statePairs, incPairs, stateCounts)
         .select(col("id").as("doc_id"), col("triangles"))
       graft.plans.PlanChecks.requireExchangeFreeBucketedProbe(
         out.queryExecution.executedPlan, "triangle edge/pair/LSH state")
@@ -3644,7 +3615,6 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
         "doc_id", "text", jaccardThreshold = 0.5, shingleN = 2,
         precomputedPairs = Some(graft.ops.CacheOnce.swapTruncated(
           "minhash-md5-neardups",
-          graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"),
           Dedup.minhashNearDupsMd5(Tables.documents(s, d), "doc_id", "text",
             numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))))
     },
@@ -3748,8 +3718,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
       // ordering above). Write via tmp + swap so a reader of the
       // settled dir never sees a half-written overwrite; the swap's
       // own crash window is healed by the recovery above.
-      Dedup.incrementalClusters(priorState, pairs,
-          memoTag = s":$fp|${drain.newFiles.size}")
+      Dedup.incrementalClusters(priorState, pairs)
         .write.mode("overwrite").parquet(tmpDir)
       graft.ops.ScaleOps.publishDirSwap(s, tmpDir, settledDir)
       drain.advance()
@@ -4060,8 +4029,7 @@ FROM rw"""
     }
     require(docScans.exists { case (_, path) => PlanChecks.pathHasLeftSemi(path) },
       "state-side text rescan is not collision-pruned (no left-semi above it)")
-    graft.ops.CacheOnce.swapTruncated("incr-nd-pairs-uncapped",
-      graft.ops.ScaleOps.fileFingerprint(s"$d/documents.parquet"), feed)
+    graft.ops.CacheOnce.swapTruncated("incr-nd-pairs-uncapped", feed)
   }
 
   /** LSH band state + the VERDICT-path band cap, persisted at state-build time: cap =
@@ -4201,40 +4169,17 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * .incrementalContamination]]'s bloom parameter now requires, so a
     * probe can never silently pair this filter with a looser cap).
     * Driver-small: a few MB of bits at 1% fpp over the suite's distinct
-    * shingles. Memoized per (checkpoint path, SOURCE fingerprint) — two
-    * probes of the same state (the incremental query + the guarded
-    * pipeline) parse the hex once, while a state rebuilt in place under
-    * a changed source still re-reads (the same staleness key
-    * `prepareContamState` itself rebuilds on). Bounded by a synchronized
-    * insertion-order LRU (evicts only the OLDEST entry — the old
-    * size-then-clear wiped hot entries and raced concurrent rebuilds). */
-  private val bloomMemo = new java.util.LinkedHashMap[
-      (String, String), (org.apache.spark.util.sketch.BloomFilter, Int)](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String),
-          (org.apache.spark.util.sketch.BloomFilter, Int)]): Boolean = size() > 8
-  }
+    * shingles. Memoized by [[graft.ops.CacheOnce.value]] over the
+    * checkpoint's read: two probes of the same state (the incremental
+    * query + the guarded pipeline) parse the hex once, while a state
+    * rebuilt in place re-reads. */
   private[queries] def contamStateBloom(s: org.apache.spark.sql.SparkSession,
                                         d: String): (org.apache.spark.util.sketch.BloomFilter, Int) = {
     prepareContamState(s, d)
-    val key = (ContamBloom.path(s, d), ContamBloom.fingerprint(d))
-    val hit = bloomMemo.synchronized(bloomMemo.get(key))
-    if (hit != null) hit
-    else {
-      // Build OUTSIDE the lock — the hex read is a Spark job, and
-      // holding the memo lock across it would block a
-      // concurrent caller of a DIFFERENT state for the whole build.
-      // Two racing builders of the SAME key both succeed; the loser's
-      // identical filter is discarded by the second put (idempotent:
-      // both deserialize the same checkpoint).
-      val v = (graft.functions.BloomFunctions.fromHex(
-          Tables.parquet(s, key._1).head().getString(0)),
-        ContamState.stat(s, d).toInt)
-      bloomMemo.synchronized {
-        val raced = bloomMemo.get(key)
-        if (raced != null) raced else { bloomMemo.put(key, v); v }
-      }
-    }
+    val checkpoint = ContamBloom.read(s, d)
+    graft.ops.CacheOnce.value("contam-bloom", checkpoint)(
+      (graft.functions.BloomFunctions.fromHex(checkpoint.head().getString(0)),
+        ContamState.stat(s, d).toInt))
   }
 
   /** One-time bucketed CTAS of the TEST SUITE's distinct 3-shingles

@@ -239,7 +239,6 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
     // Levenshtein verify and re-analyzed its tree. One execution per
     // session, every consumer reads a LogicalRDD leaf.
     graft.ops.CacheOnce.swapTruncated("er-matches-verified",
-      graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
       EntityResolution.verifyByEditDistance(cands, k, "rid", "norm",
         exactCols = Seq("nation"), maxDist = 1))
   }
@@ -333,10 +332,8 @@ FROM comp GROUP BY 1""") { (s, d) =>
       // one probe + verify + merge per session no matter which of the
       // two runs first, and the returned frame is one LogicalRDD leaf.
       graft.ops.CacheOnce.swapTruncated("er-inc-updated",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          ErClusters.read(s, d), incrementPairs(s, d, capped = false), ("rid1", "rid2"),
-          memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
+          ErClusters.read(s, d), incrementPairs(s, d, capped = false), ("rid1", "rid2")))
     },
 
     // The CAP-AWARE twin of er_incremental_clusters — the operational
@@ -357,10 +354,8 @@ FROM comp GROUP BY 1""") { (s, d) =>
       prepareErState(s, d)
       // Truncated merged map (capped feed — its own memo entry).
       graft.ops.CacheOnce.swapTruncated("er-inc-updated-capped",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(
-          ErClusters.read(s, d), incrementPairs(s, d, capped = true), ("rid1", "rid2"),
-          memoTag = ":er-capped:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
+          ErClusters.read(s, d), incrementPairs(s, d, capped = true), ("rid1", "rid2")))
     },
 
     // The streaming front gate of incremental ER (st_lsh_probe's shape
@@ -459,10 +454,8 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
       // same class the merge already writes back as the new state in
       // production.
       val updated = graft.ops.CacheOnce.swapTruncated("er-inc-updated",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"),
         graft.dedup.Dedup.incrementalClusters(state, incrementPairs(s, d, capped = false),
-          ("rid1", "rid2"),
-          memoTag = ":er:" + graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet")))
+          ("rid1", "rid2")))
       val changed = updated
         .join(state.withColumnRenamed("cluster_id", "_old"), Seq("node"), "left")
         .filter(col("_old").isNull || col("_old") =!= col("cluster_id"))

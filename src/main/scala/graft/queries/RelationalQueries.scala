@@ -591,8 +591,7 @@ GROUP BY 1""") { (s, d) =>
       // tasks). One LogicalRDD leaf instead; the REQUIREd 2-join delta
       // shape still sees orders⋈customer through customerV3 (dimNew)
       // and the dimOld⋈dimNew delta, which keep their customer scans.
-      val h = graft.ops.CacheOnce.swapTruncated("ivm-scd2-h12",
-        graft.ops.ScaleOps.fileFingerprint(s"$d/customer.parquet"), h12(s, d))
+      val h = graft.ops.CacheOnce.swapTruncated("ivm-scd2-h12", h12(s, d))
       val h123 = graft.ops.ScdOps.scd2Apply(h, customerV3(s, d), keys, tracked, newVer = 3L)
       val dimOld = frontierBands(h)
         .select(col("c_custkey"), col("bal_band").as("_ob"))

@@ -104,4 +104,26 @@ class PersistedStateSiteSpec extends AnyFunSuite {
     assert(offending.isEmpty,
       "probe key states through graft.dedup.StateProbe:\n" + offending.mkString("\n"))
   }
+
+  /** A memo is keyed by the files its plan reads (`graft.ops.CacheOnce`):
+    * a hand-passed source fingerprint, a `memoTag` parameter or a
+    * hand-rolled LRU is a second key rule that misses a rebuilt state
+    * whose source file did not change. */
+  private val familyDirs = Seq("/queries/", "/dedup/", "/graph/", "/similarity/")
+  private val memoForbidden = Seq(
+    "a fingerprint tag under a query family" -> ((f: java.nio.file.Path, line: String) =>
+      familyDirs.exists(f.toString.contains) && line.contains("fileFingerprint(")),
+    "a memoTag" -> ((_: java.nio.file.Path, line: String) =>
+      """\bmemoTag\b""".r.findFirstIn(line).nonEmpty),
+    "a hand-rolled LRU" -> ((f: java.nio.file.Path, line: String) =>
+      f.getFileName.toString != "CacheOnce.scala" && line.contains("removeEldestEntry")))
+
+  test("memos are keyed only by CacheOnce: no fingerprint tag, memoTag or LRU") {
+    val offending = for {
+      (f, line, n) <- mainLines
+      why <- memoForbidden.collect { case (w, hit) if hit(f, line) => w }
+    } yield s"$f:$n: $why: ${line.trim}"
+    assert(offending.isEmpty,
+      "key memos through graft.ops.CacheOnce:\n" + offending.mkString("\n"))
+  }
 }

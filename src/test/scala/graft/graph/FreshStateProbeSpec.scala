@@ -15,15 +15,15 @@ import graft.SparkSpec
   * releases the build-scoped entries when the rank layout was written
   * by this call (CorpusQueries.preparePageRankState).
   *
-  * End-to-end on purpose: a COPIED documents.parquet gets a
-  * never-seen-before state tag and source fingerprint, so the state
-  * family always builds fresh inside this very session before the
-  * registered query's own requireExchangeFreeBucketedProbe runs. */
+  * End-to-end on purpose: a COPIED documents.parquet (the in-repo
+  * sf0.01 fixture's) gets a never-seen-before state tag and source
+  * fingerprint, so the state family always builds fresh inside this
+  * very session before the registered query's own
+  * requireExchangeFreeBucketedProbe runs. */
 class FreshStateProbeSpec extends SparkSpec {
 
   test("fresh-built graph state + probe in ONE session stays exchange-free") {
-    val src = new java.io.File("/root/testdata/sf0.001/documents.parquet")
-    assume(src.isFile, "driver testdata not present")
+    val src = new java.io.File("perfbench/data/sf0.01/documents.parquet")
     val d = SparkSpec.tempDir("graft-fresh-tri")
     java.nio.file.Files.copy(src.toPath, d.resolve("documents.parquet"))
     try {
