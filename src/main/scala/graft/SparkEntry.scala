@@ -201,42 +201,27 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("j12_left_chain")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each builds
+    * the prepared states it declares ([[Q.run]]) before its body. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(q => q.name -> q.run).toMap
+    registry.map(q => q.name -> (q.run _)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Every query has one. */
   def oracleSql: Map[String, String] =
     registry.map(q => q.name -> q.oracle).toMap
 
-  /** Registered names in registry order, duplicates kept: `queries` and
-    * `oracleSql` are maps, so they cannot show a name registered twice. */
-  private[graft] def registryNames: Seq[String] = registry.map(_.name)
+  /** The registered queries in registry order, duplicates kept: `queries`
+    * and `oracleSql` are maps, so they cannot show a name registered twice. */
+  private[graft] def registered: Seq[Q] = registry
 
-  /** One-time physical-layout prep for `sfDir` (bucketed CTAS etc.) —
-    * idempotent; every query also self-prepares, so calling this is only
-    * about keeping one-time layout cost out of a timed run. */
-  def prepare(spark: SparkSession, sfDir: String): Unit = {
-    ScaleQueries.prepare(spark, sfDir)
-    CorpusQueries.prepareDedupState(spark, sfDir)
-    CorpusQueries.prepareLshState(spark, sfDir)
-    CorpusQueries.prepareSimhashState(spark, sfDir)
-    CorpusQueries.prepareCentroidState(spark, sfDir)
-    CorpusQueries.prepareClusterState(spark, sfDir)
-    CorpusQueries.prepareTallyState(spark, sfDir)
-    CorpusQueries.prepareMetricsState(spark, sfDir)
-    CorpusQueries.prepareUsersState(spark, sfDir)
-    CorpusQueries.prepareHllState(spark, sfDir)
-    CorpusQueries.prepareBottomkState(spark, sfDir)
-    CorpusQueries.prepareCosineState(spark, sfDir)
-    CorpusQueries.prepareContamState(spark, sfDir)
-    CorpusQueries.prepareJoinAggState(spark, sfDir)
-    CorpusQueries.prepareQuantState(spark, sfDir)
-    EntityQueries.prepareErState(spark, sfDir)
-    EntityQueries.prepareErFullClusters(spark, sfDir)
-    EntityQueries.prepareErSurvState(spark, sfDir)
-    CorpusQueries.preparePageRankState(spark, sfDir)
-    RelationalQueries.prepareScd2AggState(spark, sfDir)
-  }
+  /** The builds [[prepare]] runs: the union of every registered query's
+    * closure, in dependency order. */
+  private[graft] def prepared: Seq[Build] = Build.closure(registry.flatMap(_.reads))
+
+  /** Builds every prepared state a registered query reads, over `sfDir`:
+    * idempotent, and only worth calling to keep one-time builds out of a
+    * timed run, since each query builds its own closure first. */
+  def prepare(spark: SparkSession, sfDir: String): Unit =
+    prepared.foreach(_.run(spark, sfDir))
 }

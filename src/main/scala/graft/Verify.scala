@@ -26,6 +26,10 @@ object Verify {
     // sets go through reliable checkpoint(), the cluster-safe default.
     val ckptDir = Files.createTempDirectory("graft-ckpt").toFile
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    // Derby's home (src_jdbc_roundtrip's embedded database writes its
+    // log there) is a directory of this run's own, deleted with it.
+    val derbyHome = Files.createTempDirectory("graft-derby").toFile
+    System.setProperty("derby.system.home", derbyHome.toString)
     new java.io.File(outDir).mkdirs()
     // One output file keeps the driver-side DuckDB compare simple, but a
     // 1-task final stage serializes multi-10M-row results (the 10x-fixture
@@ -67,5 +71,6 @@ object Verify {
         vio.map(v => s"${v.what} (${v.fragment})").distinct.mkString("; "))
     spark.stop()
     graft.ops.ScaleOps.deleteLocal(ckptDir)
+    graft.ops.ScaleOps.deleteLocal(derbyHome)
   }
 }

@@ -62,9 +62,18 @@ final case class PersistedState(family: String, sources: Seq[String],
     * `graft.stat`: one catalog lookup, the one freshness makes, and no
     * job. Call after the build. */
   def stat(spark: SparkSession, sfDir: String): Long =
+    published(spark, sfDir, "graft.stat", "build it capped first").toLong
+
+  /** The bucket count a [[bucketed]] build derived and published as
+    * `graft.buckets`, read like [[stat]]. Call after the build. */
+  def buckets(spark: SparkSession, sfDir: String): Int =
+    published(spark, sfDir, "graft.buckets", "build it first").toInt
+
+  private def published(spark: SparkSession, sfDir: String, key: String,
+                        hint: String): String =
     org.apache.spark.sql.GraftShim.tableProperties(spark, name(sfDir))
-      .flatMap(_.get("graft.stat")).fold(throw new IllegalStateException(
-        s"${name(sfDir)} has no published graft.stat — build it capped first"))(_.toLong)
+      .flatMap(_.get(key)).getOrElse(throw new IllegalStateException(
+        s"${name(sfDir)} has no published $key — $hint"))
 
   /** An empty directory for this call: the family's path, emptied and
     * stamped with the current fingerprint as `_GRAFT_SRC` ([[StateGc]]

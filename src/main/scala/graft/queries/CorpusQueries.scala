@@ -221,7 +221,7 @@ ${p}sg AS MATERIALIZED (SELECT d.doc_id, CAST(coalesce(${p}sg0.sig_hi, 0) AS BIG
     * side, Manku composite-key collision, state buckets over the
     * DERIVED cap dropped (greatest(16, 4 · mean bucket size) — the
     * verdict-path treatment, recomputed here from the bucket rows
-    * exactly as prepareSimhashState persists it), Hamming <= 3 verified
+    * exactly as simhashBuild persists it), Hamming <= 3 verified
     * directly from the signatures (no text re-read — SimHash's
     * structural advantage over the MinHash twin), then a deterministic
     * best witness (hamming asc, state id asc) and a verdict row for
@@ -548,7 +548,7 @@ ${crossVerifyCtes(0.5)}"""
     * acceptance gate can have. Since r17 every probe path (verdict AND
     * budget) uses the DERIVED cap greatest(thisFloor, 4 · mean bucket
     * size), published with the state at build time as `graft.stat`
-    * ([[prepareLshState]]) so probes stay O(increment). At driver SFs the
+    * ([[lshBuild]]) so probes stay O(increment). At driver SFs the
     * mean is ~1 and this floor binds, so the derived cap IS 16 there. */
   private[queries] val lshBandBucketCap = 16
 
@@ -581,7 +581,7 @@ ${crossVerifyCtes(0.5)}"""
     $floor))"""
 
   /** DERIVED-cap state-side band CTE — the tail-aware cap recomputed
-    * from abnd itself, mirroring the statistic prepareLshState
+    * from abnd itself, mirroring the statistic lshBuild
     * publishes (same rows, same integer arithmetic). At
     * driver SFs the mean is ~1 and the floor binds; at
     * mass-duplication density the cap rides the corpus instead of
@@ -2045,9 +2045,8 @@ best AS (SELECT id2, id1, cosine FROM (
 SELECT i.vec_id, best.id1 IS NULL AS accepted,
   best.id1 AS best_state_id, best.cosine AS best_cosine
 FROM (SELECT vec_id FROM embeddings WHERE vec_id % 3 = 2) i
-LEFT JOIN best ON best.id2 = i.vec_id""") { (s, d) =>
+LEFT JOIN best ON best.id2 = i.vec_id""", CosineState) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      prepareCosineState(s, d)
       Dedup.incrementalCosineNearDups(
         emb.filter(col("vec_id") % 3 === 2),
         emb.filter(col("vec_id") % 3 =!= 2),
@@ -2081,8 +2080,8 @@ SELECT DISTINCT l.vec_id AS state_id, r.vec_id AS inc_id,
   round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.nrm), 4) AS cosine
 FROM abkc l JOIN bbk r ON l.tb_key = r.tb_key
 JOIN anv a ON a.vec_id = l.vec_id JOIN bnv b ON b.vec_id = r.vec_id
-WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.nrm), 4) >= 0.3""") { (s, d) =>
-      prepareCosineState(s, d)
+WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.nrm), 4) >= 0.3""",
+      CosineState) { (s, d) =>
       graft.streaming.CosineProbe.verifiedOnce(s, d, CosineState.name(d),
         Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
         threshold = 0.3, bucketCap = Some(CosineState.stat(s, d).toInt))
@@ -2178,9 +2177,8 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     // work, no retraining, no shuffle beyond the argmax window keyed by
     // vec_id. The oracle re-derives the same training trajectory and
     // assigns only the increment.
-    Q("s_incremental_assign", kmeansAssignOracleSql(8, 2, 64)) { (s, d) =>
+    Q("s_incremental_assign", kmeansAssignOracleSql(8, 2, 64), CentroidState) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareCentroidState(s, d)
       val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
@@ -2209,9 +2207,8 @@ WHERE round(${OracleSqlGen.dot("a.embedding", "b.embedding", 64)} / (a.nrm * b.n
     // is where the new crawl differs from the corpus the centroids
     // were trained on. Cells empty on one side survive via the full
     // outer join (count 0, cohesion null).
-    Q("s_embedding_drift", embeddingDriftOracleSql(8, 2, 64)) { (s, d) =>
+    Q("s_embedding_drift", embeddingDriftOracleSql(8, 2, 64), CentroidState) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareCentroidState(s, d)
       val cents = CentroidState.read(s, d)
       val cn = cents.select(col("vec_id").as("cell"),
         col("embedding").as("cv"),
@@ -2317,9 +2314,8 @@ best AS (SELECT inc_id, test_id, n_shared FROM (
   FROM pairs) WHERE rn = 1)
 SELECT i.doc_id, best.test_id IS NOT NULL AS contaminated,
   best.test_id AS best_test_id, best.n_shared
-FROM inc i LEFT JOIN best ON best.inc_id = i.doc_id""") { (s, d) =>
+FROM inc i LEFT JOIN best ON best.inc_id = i.doc_id""", ContamState, ContamBloom) { (s, d) =>
       val docs = Tables.documents(s, d)
-      prepareContamState(s, d)
       Dedup.incrementalContamination(
         docs.filter(col("doc_id") % 6 === 2), contamProbeState(s, d),
         "doc_id", "text", shingleN = 3, minShared = 3,
@@ -2345,8 +2341,7 @@ SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_shingles,
   CAST(max(c) AS BIGINT) AS max_df,
   CAST(sum(CASE WHEN c > (SELECT cap FROM capv) THEN c ELSE 0 END) AS BIGINT) AS n_hot_rows,
   CAST((SELECT cap FROM capv) AS BIGINT) AS derived_cap
-FROM df""") { (s, d) =>
-      prepareContamState(s, d)
+FROM df""", ContamState) { (s, d) =>
       val df = ContamState.table(s, d)
         .groupBy(col("shingle")).agg(count(lit(1)).as("c"))
       val cap = ContamState.stat(s, d)
@@ -2516,17 +2511,16 @@ FROM df""") { (s, d) =>
 d2 AS (SELECT doc_id, md5(text) AS content_hash FROM documents WHERE doc_id % 3 = 2),
 w AS (SELECT content_hash, min(doc_id) AS doc_id FROM d2 GROUP BY 1)
 SELECT doc_id, content_hash FROM w
-WHERE NOT EXISTS (SELECT 1 FROM d1 WHERE d1.content_hash = w.content_hash)""") { (s, d) =>
+WHERE NOT EXISTS (SELECT 1 FROM d1 WHERE d1.content_hash = w.content_hash)""", DedupState) { (s, d) =>
       // Cloned session: broadcast + AQE off only HERE so the static
       // plan check is deterministic (a broadcast anti-join would also
       // be shuffle-free but would not exercise the bucketed layout).
       val ss = s.newSession()
       ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       ss.conf.set("spark.sql.adaptive.enabled", "false")
-      // One-time state write (idempotent, catalog-keyed) — ALSO run by
-      // SparkEntry.prepare so Bench keeps the CTAS out of the timed
-      // body and measures the steady state, sc1-style.
-      val buckets = prepareDedupState(ss, d)
+      // The declared state is built before the body (one catalog lookup
+      // when fresh); its derived bucket count is published with it.
+      val buckets = DedupState.buckets(ss, d)
       // Pin shuffle partitions to the state's DERIVED bucket count so
       // the increment aggregate's hash partitioning aligns with the
       // bucketing 1:1 — otherwise EnsureRequirements adds a second
@@ -2599,15 +2593,14 @@ UNION ALL SELECT doc_id, CAST(2 AS BIGINT), h FROM a2""") { (s, d) =>
     // state shingles recompute only for docs that collided. One verdict
     // row per increment doc with a deterministic best witness, so the
     // oracle reproduces the whole pass.
-    Q("dd_incremental_neardup", incrementalNearDupSql) { (s, d) =>
+    Q("dd_incremental_neardup", incrementalNearDupSql, LshState) { (s, d) =>
       // No session-wide broadcast disable: the probe join carries a
       // merge hint inside incrementalNearDups (the bucketed state side
       // stays exchange-free), while the small verify joins are free to
       // broadcast — forcing SMJ everywhere cost ~40% of the query.
       val docs = Tables.documents(s, d)
-      prepareLshState(s, d)
       // VERDICT path → the DERIVED cap (published at state-build time,
-      // read back as the state's graft.stat — see prepareLshState's policy
+      // read back as the state's graft.stat — see lshBuild's policy
       // note): at driver SFs the floor binds and this IS
       // lshBandBucketCap; at mass-duplication density the cap rides
       // the corpus instead of zeroing the probe and silently marking
@@ -2650,8 +2643,7 @@ SELECT CAST(sum(c) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_buckets,
   CAST(sum(c * (c - 1) // 2) AS BIGINT) AS n_candidate_pairs,
   CAST(max(c) AS BIGINT) AS max_bucket,
   CAST(${tailCapExpr("bnd", lshBandBucketCap.toString)} AS BIGINT) AS derived_cap
-FROM bk""") { (s, d) =>
-      prepareLshState(s, d)
+FROM bk""", LshState) { (s, d) =>
       LshState.table(s, d)
         .groupBy(col("band_key")).agg(count(lit(1)).as("c"))
         .agg(sum(col("c")).as("n_rows"), count(lit(1)).as("n_buckets"),
@@ -2678,8 +2670,7 @@ FROM bk""") { (s, d) =>
     // rows). Verification runs ONCE, on the uncapped feed: the capped
     // candidate set is a subset, so its verified set is vf ∩ capped
     // candidates — a semi-join, not a second Jaccard pass.
-    Q("dd_cap_recall_audit", capRecallAuditSql) { (s, d) =>
-      prepareLshState(s, d)
+    Q("dd_cap_recall_audit", capRecallAuditSql, LshState) { (s, d) =>
       val cap = LshState.stat(s, d).toInt
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
@@ -2741,9 +2732,8 @@ FROM bk""") { (s, d) =>
     // rescan collided docs' text for Jaccard; this path touches only
     // the bucketed key table). Derived verdict-path cap, same policy
     // as dd_incremental_neardup.
-    Q("dd_incremental_simhash", incrementalSimhashSql) { (s, d) =>
+    Q("dd_incremental_simhash", incrementalSimhashSql, SimhashState) { (s, d) =>
       val docs = Tables.documents(s, d)
-      prepareSimhashState(s, d)
       val out = graft.dedup.Dedup.incrementalSimhashNearDups(
         docs.filter(col("doc_id") % 3 === 2),
         StateProbe.Persisted(s, d, SimhashState, "SimHash state"),
@@ -2769,8 +2759,7 @@ FROM bk""") { (s, d) =>
     // Hamming filters inside the stateless stream-static join, and no
     // batch verify tail exists. Derived bucket cap (persisted at state
     // build — the r17 default for every probe path), cap-aware oracle.
-    Q("st_simhash_probe", simhashProbeSql) { (s, d) =>
-      prepareSimhashState(s, d)
+    Q("st_simhash_probe", simhashProbeSql, SimhashState) { (s, d) =>
       graft.streaming.SimhashProbe.verifiedOnce(s, d, SimhashState.name(d),
         bucketCap = Some(SimhashState.stat(s, d).toInt))
     },
@@ -2793,10 +2782,9 @@ FROM bk""") { (s, d) =>
     // novel document; only clean docs pay the LSH probe and centroid
     // assignment. Four persisted states, one pass, one verdict row per
     // increment doc: exact_dup / contaminated / near_dup / accepted.
-    Q("pipe_crawl_guarded", pipeCrawlGuardedSql) { (s, d) =>
+    Q("pipe_crawl_guarded", pipeCrawlGuardedSql,
+      DedupState, ContamState, ContamBloom, LshState, CentroidState) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareDedupState(s, d); prepareContamState(s, d)
-      prepareLshState(s, d); prepareCentroidState(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
       // These stage frames reference state TABLES by name, whose semantic
@@ -2849,9 +2837,8 @@ FROM bk""") { (s, d) =>
           col("cell").cast("long").as("cell"))
     },
 
-    Q("pipe_incremental_crawl", pipeIncrementalCrawlSql) { (s, d) =>
+    Q("pipe_incremental_crawl", pipeIncrementalCrawlSql, DedupState, LshState, CentroidState) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareDedupState(s, d); prepareLshState(s, d); prepareCentroidState(s, d)
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
       // Both stage outputs feed TWO consumers each (the next stage and
@@ -2903,8 +2890,7 @@ FROM bk""") { (s, d) =>
     // state dd_incremental_neardup buckets on, via a stateless
     // stream-static join; the settled distinct equals the batch
     // candidate set at any arrival order.
-    Q("st_lsh_probe", lshProbeSql) { (s, d) =>
-      prepareLshState(s, d)
+    Q("st_lsh_probe", lshProbeSql, LshState) { (s, d) =>
       graft.streaming.LshProbe.candidatesOnce(s, d, LshState.name(d),
         bandBucketCap = Some(LshState.stat(s, d).toInt))
     },
@@ -3007,8 +2993,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // re-cluster over the combined pair graph (recursive CTE): the
     // incremental path must reproduce it row-for-row, and a capped
     // probe would drop pairs the full re-cluster keeps.
-    Q("dd_incremental_clusters", incrementalClustersOracleSql) { (s, d) =>
-      prepareClusterState(s, d); prepareLshState(s, d)
+    Q("dd_incremental_clusters", incrementalClustersOracleSql, ClusterState, LshState) { (s, d) =>
       val state = ClusterState.read(s, d)
       // The feed is the r19 SHARED truncation — executed once per
       // session for all three family members; its watch and scale
@@ -3029,7 +3014,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // incremental path == the full re-cluster oracle, at any arrival
     // order and any drain boundary. Probe UNCAPPED for the same reason
     // as dd_incremental_clusters.
-    Q("st_incremental_clusters", incrementalClustersOracleSql) { (s, d) =>
+    Q("st_incremental_clusters", incrementalClustersOracleSql, ClusterState, LshState) { (s, d) =>
       watermarkedStreamClusters(s, d, capped = false)
     },
 
@@ -3050,7 +3035,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // by hash, never waived. At driver SFs only the floor binds and
     // the result equals the uncapped query's.
     Q("st_incremental_clusters_capped",
-      cappedIncrementalClustersOracleSql) { (s, d) =>
+      cappedIncrementalClustersOracleSql, ClusterState, LshState) { (s, d) =>
       watermarkedStreamClusters(s, d, capped = true)
     },
 
@@ -3068,8 +3053,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // round only node-sized frames and the keyed message aggregate
     // move. Oracle = the full unrolled recompute of both phases with
     // bit-identical teleport constants.
-    Q("pg_incremental_pagerank", incrementalPageRankOracleSql) { (s, d) =>
-      preparePageRankState(s, d); prepareLshState(s, d)
+    Q("pg_incremental_pagerank", incrementalPageRankOracleSql, PgEdges, PgRanks, LshState) { (s, d) =>
       // Watch registered BEFORE the refresh is built: the per-superstep
       // truncations execute supersteps 1..iters-1 as EAGER jobs at plan
       // build, and their bucketed edge-state joins must land inside the
@@ -3102,8 +3086,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // (REQUIREd); everything else that moves is increment-sized. The
     // oracle is the full merged-graph recount (pg_triangles' own SQL):
     // state + delta == full is the IVM invariant, checked by hash.
-    Q("pg_incremental_triangles", trianglesOracleSql) { (s, d) =>
-      prepareTriangleState(s, d); prepareLshState(s, d)
+    Q("pg_incremental_triangles", trianglesOracleSql, PgEdges, PgPairs, PgTris, LshState) { (s, d) =>
       // Registered BEFORE the refresh builds: the delta truncation
       // executes as an EAGER job at plan build, and its bucketed
       // graph-state joins must land inside the watch window (the
@@ -3148,8 +3131,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // invariant (count's commutative-monoid property), checked by hash.
     Q("ivm_daily_tally",
       "SELECT CAST(ts + INTERVAL 8 HOUR AS DATE) AS obs_date, event_type, " +
-        "CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2") { (s, d) =>
-      prepareTallyState(s, d)
+        "CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2", IvmTally) { (s, d) =>
       val state = IvmTally.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
@@ -3181,8 +3163,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         // guard an nv=0 group (legal: value is nullable) kills the
         // oracle run instead of comparing NULL==NULL.
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
-        "FROM c GROUP BY 1, 2") { (s, d) =>
-      prepareMetricsState(s, d)
+        "FROM c GROUP BY 1, 2", IvmMetrics) { (s, d) =>
       val state = IvmMetrics.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
@@ -3207,8 +3188,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     Q("ivm_daily_users",
       "SELECT CAST(ts + INTERVAL 8 HOUR AS DATE) AS obs_date, event_type, " +
         "CAST(count(DISTINCT user_id) AS BIGINT) AS n_users " +
-        "FROM events GROUP BY 1, 2") { (s, d) =>
-      prepareUsersState(s, d)
+        "FROM events GROUP BY 1, 2", IvmUsers) { (s, d) =>
       val state = IvmUsers.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
@@ -3232,8 +3212,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "event_type, CAST(round(value * 100) AS BIGINT) AS cents, value FROM events) " +
         "SELECT obs_month, event_type, CAST(count(*) AS BIGINT) AS n, " +
         "CAST(sum(cents) AS BIGINT) / 100.0 AS total_value " +
-        "FROM c GROUP BY 1, 2") { (s, d) =>
-      prepareMetricsState(s, d)
+        "FROM c GROUP BY 1, 2", IvmMetrics) { (s, d) =>
       val state = IvmMetrics.read(s, d)
       val incr = Tables.events(s, d).filter(col("event_id") % 3 === 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
@@ -3263,8 +3242,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // touches only the increment. Counts exact, distinct at 1e-3
     // fixed point with the LC small-range switch; oracle = the full
     // profile recompute (monoid merge + register max-merge == full).
-    Q("dq_incremental_profile", dqIncProfileSql) { (s, d) =>
-      prepareDqProfState(s, d)
+    Q("dq_incremental_profile", dqIncProfileSql, DqProfCounts, DqProfRegs) { (s, d) =>
       val docs = Tables.documents(s, d)
       val inc = docs.filter(col("doc_id") % 3 === 2)
       val counts = DqProfCounts.read(s, d)
@@ -3318,8 +3296,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "SELECT obs_date, event_type, CAST(count(*) AS BIGINT) AS n, " +
         "CAST(sum(cents) AS BIGINT) / 100.0 AS total_value, " +
         "(CAST(sum(cents) AS BIGINT) * 100 // nullif(count(value), 0)) / 10000.0 AS avg_value " +
-        "FROM c GROUP BY 1, 2") { (s, d) =>
-      prepareMetricsState(s, d)
+        "FROM c GROUP BY 1, 2", IvmMetrics) { (s, d) =>
       val state = IvmMetrics.read(s, d)
       val deltas = Tables.events(s, d)
         .filter(col("event_id") % 3 =!= 2 && col("event_id") % 7 === 3 &&
@@ -3360,8 +3337,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // estimate via a single integer division, raw HLL without
     // small/large-range corrections — v_zero ships so a consumer can
     // apply linear counting downstream); no float ever compares.
-    Q("ivm_daily_users_hll", hllUsersOracleSql) { (s, d) =>
-      prepareHllState(s, d)
+    Q("ivm_daily_users_hll", hllUsersOracleSql, IvmHll) { (s, d) =>
       val state = IvmHll.read(s, d)
       val incr = hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
@@ -3414,9 +3390,8 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // full-recompute oracle pins the merge invariant by hash.
     // t_hash_sample is the stateless Bernoulli cousin (fixed RATE);
     // bottom-k holds fixed SIZE, the shape eval sets and audits want.
-    Q("ivm_bottomk_sample", bottomkOracleSql) { (s, d) =>
+    Q("ivm_bottomk_sample", bottomkOracleSql, IvmBottomk) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareBottomkState(s, d)
       val state = IvmBottomk.read(s, d)
       val incr = bottomkRanked(
         Tables.events(s, d).filter(col("event_id") % 3 === 2))
@@ -3457,9 +3432,8 @@ FROM comp GROUP BY 1""") { (s, d) =>
         "SELECT obs_date, event_type, CAST(max(n) AS BIGINT) AS n, " +
         "min(CASE WHEN cum >= (n + 1) // 2 THEN bucket END) AS p50_bucket, " +
         "min(CASE WHEN cum >= (9 * n + 9) // 10 THEN bucket END) AS p90_bucket " +
-        "FROM x GROUP BY 1, 2") { (s, d) =>
+        "FROM x GROUP BY 1, 2", IvmQuant) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      prepareQuantState(s, d)
       val state = IvmQuant.read(s, d)
       val incr = quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 === 2))
       val merged = state.unionByName(incr)
@@ -3488,8 +3462,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
       "SELECT CAST(o_orderdate AS DATE) AS order_date, " +
         "CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty, " +
         "CAST(count(*) AS BIGINT) AS n_items " +
-        "FROM orders JOIN lineitem ON l_orderkey = o_orderkey GROUP BY 1") { (s, d) =>
-      prepareJoinAggState(s, d)
+        "FROM orders JOIN lineitem ON l_orderkey = o_orderkey GROUP BY 1", IvmJoinAgg) { (s, d) =>
       val state = IvmJoinAgg.read(s, d)
       val o = Tables.orders(s, d); val l = Tables.lineitem(s, d)
       val deltas = Seq(
@@ -3642,14 +3615,13 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * persists (node, cluster_id) sorted by node (cluster once, merge
     * increments forever) — dd_incremental_clusters' cluster state.
     * Idempotent per documents generation. */
-  def prepareClusterState(s: org.apache.spark.sql.SparkSession,
-                          d: String): Unit =
+  private val clusterBuild = Build(ClusterState)((s, d) =>
     ClusterState.sorted(s, d, "node")(
       graft.dedup.Dedup.connectedComponents(
         graft.dedup.Dedup.minhashNearDupsMd5(
           Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
           "doc_id", "text",
-          numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5)))
+          numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5))))
 
   /** The streamed incremental-cluster pipeline behind
     * st_incremental_clusters(_capped), watermark-bounded (verdict-17
@@ -3680,7 +3652,6 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
   private def watermarkedStreamClusters(s: org.apache.spark.sql.SparkSession,
                                         d: String,
                                         capped: Boolean): org.apache.spark.sql.DataFrame = {
-    prepareClusterState(s, d); prepareLshState(s, d)
     val docs = Tables.documents(s, d)
     val lineage = if (capped) StCcCapped else StCcCands
     val base = lineage.path(s, d)
@@ -3729,22 +3700,21 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
   /** One-time k-means training on the day-1 vectors; persists the k
     * centroids (train once, assign forever). Idempotent per (path,
     * source fingerprint). */
-  def prepareCentroidState(s: org.apache.spark.sql.SparkSession,
-                           d: String): Unit =
+  private val centroidBuild = Build(CentroidState)((s, d) =>
     CentroidState.sorted(s, d, "vec_id")(
       graft.similarity.Similarity.kmeansCentroids(
         Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
         "vec_id", "embedding", k = 8, iters = 2, dim = 64,
-        roundMeans = Some(6)))
+        roundMeans = Some(6))))
 
   /** ivm_daily_tally's persisted partial-aggregate state (day-1 daily
     * tallies). */
-  def prepareTallyState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val tallyBuild = Build(IvmTally)((s, d) =>
     IvmTally.sorted(s, d, "obs_date")(
       Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
-        .agg(count(lit(1)).as("n")))
+        .agg(count(lit(1)).as("n"))))
 
   /** ivm_daily_metrics' persisted partial-aggregate state: the
     * commutative-monoid triple (count(*), count(value), sum(cents)) per
@@ -3756,13 +3726,13 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * (observed: 42.90625 → 42.9063 Spark HALF_UP / 42.9062 DuckDB
     * half-even). Integer partials + floor-division presentation are
     * tie-free and bit-identical in both engines. */
-  def prepareMetricsState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val metricsBuild = Build(IvmMetrics)((s, d) =>
     IvmMetrics.sorted(s, d, "obs_date")(
       Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
         .groupBy(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"))
         .agg(count(lit(1)).as("n"), count(col("value")).as("nv"),
-          sum(round(col("value") * 100).cast("long")).as("cents")))
+          sum(round(col("value") * 100).cast("long")).as("cents"))))
 
   /** ivm_daily_users' persisted SUPPORT relation: count(DISTINCT x) is
     * not a commutative monoid over counts (2 distinct ∪ 3 distinct is
@@ -3770,12 +3740,12 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     * distinct (day, type, user) triples themselves — the support — and
     * derives the count at presentation. State size rides the support
     * cardinality (bounded by days × types × users), never raw events. */
-  def prepareUsersState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val usersBuild = Build(IvmUsers)((s, d) =>
     IvmUsers.sorted(s, d, "obs_date")(
       Tables.events(s, d).filter(col("event_id") % 3 =!= 2)
         .select(graft.ops.ColumnOps.toLocalDate(col("ts"), "Australia/Perth")
           .as("obs_date"), col("event_type"), col("user_id"))
-        .distinct())
+        .distinct()))
 
   // ---- ivm_daily_users_hll: deterministic HLL-register sketch ----
   // 64 buckets (p=6) over the md5-derived 64-bit user hash, carried as
@@ -3916,16 +3886,16 @@ FROM rw"""
 
   /** ivm_bottomk_sample's persisted state: day-1 events reduced to the
     * 32 rank-smallest per (day, type) — k rows per group forever. */
-  def prepareBottomkState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val bottomkBuild = Build(IvmBottomk)((s, d) =>
     IvmBottomk.sorted(s, d, "obs_date")(
-      bottomkRanked(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)))
+      bottomkRanked(Tables.events(s, d).filter(col("event_id") % 3 =!= 2))))
 
   /** ivm_daily_users_hll's persisted REGISTER state: day-1 events
     * reduced to (day, type, bucket, max rank) — O(groups · 64) rows no
     * matter how many events or users day 1 held. */
-  def prepareHllState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val hllBuild = Build(IvmHll)((s, d) =>
     IvmHll.sorted(s, d, "obs_date")(
-      hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)))
+      hllRegisters(Tables.events(s, d).filter(col("event_id") % 3 =!= 2))))
 
   /** ivm_daily_quantiles' persisted SKETCH state: per-(day, type)
     * dollar-bucket histograms of `value` — the mergeable-summary
@@ -3949,9 +3919,9 @@ FROM rw"""
       floor(col("value")).cast("long").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
 
-  def prepareQuantState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val quantBuild = Build(IvmQuant)((s, d) =>
     IvmQuant.sorted(s, d, "obs_date")(
-      quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 =!= 2)))
+      quantBuckets(Tables.events(s, d).filter(col("event_id") % 3 =!= 2))))
 
   /** ivm_join_agg's persisted day-1 JOIN-aggregate state: the
     * orders ⋈ lineitem daily quantity rollup over the day-1 slices of
@@ -3982,10 +3952,10 @@ FROM rw"""
       .groupBy(col("order_date"))
       .agg(sum(col("qty")).as("total_qty"), count(lit(1)).as("n_items"))
 
-  def prepareJoinAggState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val joinAggBuild = Build(IvmJoinAgg)((s, d) =>
     IvmJoinAgg.sorted(s, d, "order_date")(
       joinAggPartial(ordersOld(Tables.orders(s, d)),
-        lineitemOld(Tables.lineitem(s, d))))
+        lineitemOld(Tables.lineitem(s, d)))))
 
   /** The UNCAPPED increment-bounded verified pair feed, truncated ONCE
     * per source generation and shared by its three consumers
@@ -4060,13 +4030,13 @@ FROM rw"""
     * every later increment probes it exchange-free, with the derived cap
     * published from the freshly built table in the same step
     * (`LshState.stat`), so cap and state can never drift. */
-  def prepareLshState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val lshBuild = Build(LshState)((s, d) =>
     LshState.bucketed(s, d, Seq("band_key"), cap = Some(tailCap)) {
       val sets = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
         .select(col("doc_id"),
           explode(graft.dedup.Dedup.distinctShingles(col("text"), 2)).as("shingle"))
       graft.dedup.Dedup.bandKeys(sets, "doc_id", 32, 4)
-    }
+    })
 
   /** The LSH band state as its probes read it: checked under "LSH state". */
   private def lshProbeState(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -4081,15 +4051,15 @@ FROM rw"""
   /** One-time bucketed CTAS of the accepted set's SimHash Manku keys
     * (doc_id, sig_hi, sig_lo, mkey), bucketed on mkey — the probe-join
     * key — plus the derived verdict-path bucket cap published with the
-    * freshly built table ([[prepareLshState]]'s policy applied to the
+    * freshly built table ([[lshBuild]]'s policy applied to the
     * SimHash family: the cap is a layout statistic, computed once at
     * state-build time, so probes stay O(increment)). */
-  def prepareSimhashState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val simhashBuild = Build(SimhashState)((s, d) =>
     SimhashState.bucketed(s, d, Seq("mkey"), cap = Some(tailCap))(
       graft.dedup.Dedup.simhashMankuKeysMd5(
         graft.dedup.Dedup.simhashMd5(
           Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
-          "doc_id", "text"), "doc_id"))
+          "doc_id", "text"), "doc_id")))
 
   // ---- dq_incremental_profile: maintained per-column profile ----
 
@@ -4125,14 +4095,12 @@ FROM rw"""
       .groupBy(col("col_name"), col("bucket"))
       .agg(max(expr(rhoCaseSql("_w58"))).as("r"))
 
-  /** dq_incremental_profile's persisted state: per-column count
-    * partials + per-(column, bucket) HLL registers over day-1 docs —
-    * O(cols) + O(cols x 64) rows no matter the corpus size. */
-  def prepareDqProfState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    def day1 = Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-    DqProfCounts.sorted(s, d, "col_name")(dqProfCounts(day1))
-    DqProfRegs.sorted(s, d, "col_name")(dqProfRegisters(day1))
-  }
+  /** dq_incremental_profile's persisted states are built over the
+    * day-1 docs: per-column count partials ([[DqProfCounts]]) and
+    * per-(column, bucket) HLL registers ([[DqProfRegs]]) — O(cols) +
+    * O(cols x 64) rows no matter the corpus size. */
+  private def dqProfDay1(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
 
   /** dq_incremental_profile oracle: the SAME profile recomputed over
     * ALL documents — counts are monoids and registers max-merge, so
@@ -4163,7 +4131,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
   }
 
   /** The persisted suite-shingle Bloom filter (built at state-build time
-    * over the CAPPED index — see [[prepareContamState]]), deserialized
+    * over the CAPPED index — see [[contamBuild]]), deserialized
     * from its 1-row checkpoint and returned WITH the cap it was built at
     * (the persisted derived cap — the pair [[graft.dedup.Dedup
     * .incrementalContamination]]'s bloom parameter now requires, so a
@@ -4175,7 +4143,6 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * rebuilt in place re-reads. */
   private[queries] def contamStateBloom(s: org.apache.spark.sql.SparkSession,
                                         d: String): (org.apache.spark.util.sketch.BloomFilter, Int) = {
-    prepareContamState(s, d)
     val checkpoint = ContamBloom.read(s, d)
     graft.ops.CacheOnce.value("contam-bloom", checkpoint)(
       (graft.functions.BloomFunctions.fromHex(checkpoint.head().getString(0)),
@@ -4193,7 +4160,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * `graft.stat`, like every other derived cap) and the capped index's
     * shingle Bloom filter (1% fpp, hex-serialized 1-row checkpoint) that
     * prefilters each increment's shingles in their scan stage. */
-  def prepareContamState(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+  private val contamBuild = Build(ContamState) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     ContamState.bucketed(s, d, Seq("shingle"),
       cap = Some(graft.ops.KeyCap(8L, 4L, tail = false)))(
@@ -4201,6 +4168,11 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
         .select(col("doc_id").as("test_id"),
           explode(graft.dedup.Dedup.distinctShingles(col("text"), 3)).as("shingle"))
         .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle"))))
+  }
+
+  /** The capped shingle index's Bloom filter ([[contamBuild]]),
+    * built from the published index and its cap. */
+  private val contamBloomBuild = Build(ContamBloom, ContamState)((s, d) =>
     ContamBloom.sorted(s, d, "bloom_hex") {
       val cap = ContamState.stat(s, d)
       val keys = ContamState.table(s, d)
@@ -4208,8 +4180,7 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
       val bf = keys.stat.bloomFilter("shingle", math.max(keys.count(), 1L), 0.01)
       import s.implicits._
       Seq(graft.functions.BloomFunctions.toHex(bf)).toDF("bloom_hex")
-    }
-  }
+    })
 
   /** The test-suite shingle index as its probes read it, and its df cap
     * as a scan predicate on the build-time `df` column. */
@@ -4220,13 +4191,25 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
 
   /** One-time bucketed CTAS of the accepted set's sign-LSH bucket rows
     * (vec_id, tb_key), bucketed on tb_key — the probe-join key — plus
-    * the derived verdict-path bucket cap (the [[prepareLshState]] policy
+    * the derived verdict-path bucket cap (the [[lshBuild]] policy
     * applied to the embedding modality). */
-  def prepareCosineState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  private val cosineBuild = Build(CosineState)((s, d) =>
     CosineState.bucketed(s, d, Seq("tb_key"), cap = Some(tailCap))(
       graft.dedup.Dedup.cosineBucketKeys(
         Tables.embeddings(s, d).filter(col("vec_id") % 3 =!= 2),
-        "vec_id", "embedding"))
+        "vec_id", "embedding")))
+
+  /** The closes' pair state: the canonical (src < dst) edge set of the
+    * edge state, bucketed AND sorted on the closes' composite join key
+    * (src, dst) — see Triangles.incrementalPerNodeCounts' 4-arg doc for
+    * why the src-bucketed adjacency cannot serve these joins
+    * exchange-free (requireAllClusterKeysForCoPartition); |E| rows.
+    * Bucket count derived from the pair state's own size (the layout
+    * contract — keys, sort, sizing policy — rides graft.layout, so the
+    * old hand-written "|src,dst" fingerprint bump is retired). */
+  private val pairBuild = Build(PgPairs, PgEdges)((s, d) =>
+    PgPairs.bucketed(s, d, Seq("src", "dst"))(
+      PgEdges.table(s, d).filter(col("src") < col("dst"))))
 
   /** One-time triangle-count checkpoint over EXACTLY the persisted edge
     * state ("count once, maintain forever") — computed from the state
@@ -4234,41 +4217,20 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     * edge-state CTAS with pg_incremental_pagerank: one graph, two
     * maintained signals (rank + local clustering). The checkpoint is one
     * row per state-graph node in >= 1 triangle — the additive state the
-    * delta decomposition merges into. The closes' pair state is the
-    * canonical (src < dst) edge set, bucketed+sorted on the composite
-    * (src, dst) close-join key (the src-bucketed adjacency cannot serve
-    * those joins exchange-free — requireAllClusterKeysForCoPartition);
-    * |E| rows. Idempotent per documents generation. */
-  def prepareTriangleState(s: org.apache.spark.sql.SparkSession,
-                           d: String): Unit = {
-    preparePageRankState(s, d)
-    // The closes' pair state: the canonical id-sorted edge set,
-    // bucketed AND sorted on the closes' composite join key (src, dst)
-    // — see Triangles.incrementalPerNodeCounts' 4-arg doc for why the
-    // src-bucketed adjacency cannot serve these joins exchange-free.
-    // Bucket count derived from the pair state's own size (the layout
-    // contract — keys, sort, sizing policy — rides graft.layout, so the
-    // old hand-written "|src,dst" fingerprint bump is retired).
-    PgPairs.bucketed(s, d, Seq("src", "dst"))(
-      PgEdges.table(s, d).filter(col("src") < col("dst")))
+    * delta decomposition merges into. Idempotent per documents
+    * generation. */
+  private val triangleBuild = Build(PgTris, PgEdges)((s, d) =>
     PgTris.sorted(s, d, "id")(
       graft.graph.Triangles.perNodeCounts(
         PgEdges.table(s, d).filter(col("src") < col("dst"))
-          .select(col("src").as("id1"), col("dst").as("id2"))))
-  }
+          .select(col("src").as("id1"), col("dst").as("id2")))))
 
-  /** One-time edge-state CTAS + from-uniform rank trajectory over it
-    * ("rank once, refresh forever"): the edge state is the bucketed
-    * symmetrized near-dup graph of the accepted docs, bucketed AND
-    * sorted on `src` — the probe-join column of every PageRank
-    * superstep, so the |E|-sized frame rides its layout through every
-    * refresh round with no exchange. The rank state (one row per
-    * state-graph node, the 6-decimal checkpoint the refresh seeds from)
-    * is pageRank(3 supersteps) over EXACTLY that table — computed from
-    * the persisted frame, so seed and state can never drift. Idempotent
-    * per documents generation. */
-  def preparePageRankState(s: org.apache.spark.sql.SparkSession,
-                           d: String): Unit = {
+  /** One-time edge-state CTAS: the bucketed symmetrized near-dup graph
+    * of the accepted docs, bucketed AND sorted on `src` — the probe-join
+    * column of every PageRank superstep, so the |E|-sized frame rides
+    * its layout through every refresh round with no exchange.
+    * Idempotent per documents generation. */
+  private val edgeBuild = Build(PgEdges) { (s, d) =>
     // Sorted on BOTH keys (r16 advisory): the triangle closes are
     // sort-merge joins on (src, dst), and a src-only sort spec made
     // every refresh pay two full-state per-partition sorts. The old
@@ -4283,17 +4245,25 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
           Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2),
           "doc_id", "text",
           numHashes = 32, rowsPerBand = 4, shingleN = 2, threshold = 0.5)))
-    // The `symmetric = true` waiver below rests on "the edge table IS a
-    // symmetrize() CTAS" — but every LATER call reads the table back, so
-    // the claim is checked ONCE per fingerprint, where the table is
-    // written (see PageRank.assertNoDangles).
+    // The rank build's `symmetric = true` waiver rests on "the edge
+    // table IS a symmetrize() CTAS" — but every LATER call reads the
+    // table back, so the claim is checked ONCE per fingerprint, where
+    // the table is written (see PageRank.assertNoDangles).
     if (built)
       graft.graph.PageRank.assertNoDangles(PgEdges.table(s, d),
         s"edge state ${PgEdges.name(d)}")
-    // symmetric = true: the edge table IS a symmetrize() CTAS (just
-    // above, dst ⊆ src asserted at build), so the dangle guard is
-    // waived by construction — the same waiver pg_pagerank takes on its
-    // inline symmetrize output.
+  }
+
+  /** The from-uniform rank trajectory over the edge state ("rank once,
+    * refresh forever"): one row per state-graph node, the 6-decimal
+    * checkpoint the refresh seeds from — pageRank(3 supersteps) over
+    * EXACTLY the persisted edge table, so seed and state can never
+    * drift. */
+  private val rankBuild = Build(PgRanks, PgEdges) { (s, d) =>
+    // symmetric = true: the edge table IS a symmetrize() CTAS (dst ⊆ src
+    // asserted at its build), so the dangle guard is waived by
+    // construction — the same waiver pg_pagerank takes on its inline
+    // symmetrize output.
     val builtRank = PgRanks.sorted(s, d, "id")(
       graft.graph.PageRank.pageRank(PgEdges.table(s, d),
         iters = 3, damping = 0.85, roundTo = 6, symmetric = true))
@@ -4311,13 +4281,22 @@ FROM cnt c JOIN rw ON rw.col_name = c.col_name"""
     }
   }
 
-  /** One-time bucketed CTAS of dd_incremental's digest state
-    * (idempotent, catalog-keyed) — called from SparkEntry.prepare so
-    * Bench pays the write OUTSIDE the timed body ("write once,
-    * anti-join forever"); the query also self-prepares for standalone
-    * runs. Returns the state's bucket count. */
-  def prepareDedupState(s: org.apache.spark.sql.SparkSession, d: String): Int =
+  /** One-time bucketed CTAS of dd_incremental's digest state ("write
+    * once, anti-join forever"); the query reads its derived bucket count
+    * back from the published table. */
+  private val dedupBuild = Build(DedupState)((s, d) =>
     DedupState.bucketed(s, d, Seq("content_hash"))(
       Tables.documents(s, d).filter(col("doc_id") % 3 =!= 2)
-        .select(md5(col("text")).as("content_hash")).distinct())._2
+        .select(md5(col("text")).as("content_hash")).distinct()))
+
+  /** Every prepared state of the corpus, IVM and graph queries, each with
+    * its one build: `Build(family, families its build reads*)`. */
+  val builds: Seq[Build] = Seq(dedupBuild, lshBuild, simhashBuild, cosineBuild,
+    contamBuild, contamBloomBuild, centroidBuild, clusterBuild, tallyBuild,
+    metricsBuild, usersBuild, hllBuild, bottomkBuild, quantBuild, joinAggBuild,
+    Build(DqProfCounts)((s, d) =>
+      DqProfCounts.sorted(s, d, "col_name")(dqProfCounts(dqProfDay1(s, d)))),
+    Build(DqProfRegs)((s, d) =>
+      DqProfRegs.sorted(s, d, "col_name")(dqProfRegisters(dqProfDay1(s, d)))),
+    edgeBuild, rankBuild, pairBuild, triangleBuild)
 }

@@ -178,16 +178,15 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
     * own surface is the ELECTION window, not the clustering, which
     * er_clusters exercises live and er_incremental_clusters maintains
     * incrementally. */
-  def prepareErFullClusters(s: SparkSession, d: String): Unit =
+  private val fullClustersBuild = Build(ErFullClusters)((s, d) =>
     ErFullClusters.sorted(s, d, "node")(
-      graft.dedup.Dedup.connectedComponents(matches(s, d), ("rid1", "rid2")))
+      graft.dedup.Dedup.connectedComponents(matches(s, d), ("rid1", "rid2"))))
 
   /** er_incremental_survivorship's persisted CANONICAL map over the
     * day-1 cluster state — one (cluster_id, canonical_rid,
     * canonical_name) row per state cluster, elected once at state-build
     * time; increments re-elect only the clusters they dirty. */
-  def prepareErSurvState(s: SparkSession, d: String): Unit = {
-    prepareErState(s, d)
+  private val survivorsBuild = Build(ErSurvivors, ErClusters)((s, d) =>
     ErSurvivors.sorted(s, d, "cluster_id")(
       EntityResolution.survivorship(
         ErClusters.read(s, d)
@@ -197,36 +196,42 @@ SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY 1"""
         "rid", "cluster_id",
         preference = when(col("name").rlike("^Customer#[0-9]+$"), 0).otherwise(1))
         .select(col("cluster_id"), col("rid").as("canonical_rid"),
-          col("name").as("canonical_name")))
-  }
+          col("name").as("canonical_name"))))
 
   /** One-time bucketed CTAS of the ACCEPTED entities' blocking keys
     * (rid, bkey, bsz — bucketed on bkey, the probe-join column; bsz is
     * the block size, windowed ONCE here so cap filters are scan
-    * predicates instead of per-probe windows) and one-time clustering
-    * of their match graph; each increment then probes/merges without
-    * ever re-blocking or re-clustering the stock. The derived block cap
+    * predicates instead of per-probe windows); each increment then
+    * probes it without ever re-blocking the stock. The derived block cap
     * is published with the state as `graft.stat`: greatest(floor,
     * mult · mean state block size), a layout statistic of the key state
     * read back O(1) per probe (the LSH/SimHash/cosine families' cap
-    * convention). Idempotent per customer generation. */
-  def prepareErState(s: SparkSession, d: String): Unit = {
-    // Built only when a layout below is stale: fresh states cost lookups.
-    lazy val stateK = keyedRecords(s, d).filter(!incPred)
-    // Bucket count derived from the key state's own staged size
-    // (ScaleOps.ensureBucketedDerived — the verdict-17 layout policy).
+    * convention). Bucket count derived from the key state's own staged
+    * size (ScaleOps.ensureBucketedDerived — the verdict-17 layout
+    * policy). Idempotent per customer generation. */
+  private val keysBuild = Build(ErKeys)((s, d) =>
     ErKeys.bucketed(s, d, Seq("bkey"),
       cap = Some(graft.ops.KeyCap(erBlockCap.toLong, erCapMeanMult.toLong, tail = false)))(
-      passKeyRows(stateK).withColumn("bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("bkey"))))
-    ErClusters.sorted(s, d, "node")(
+      passKeyRows(keyedRecords(s, d).filter(!incPred)).withColumn("bsz", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("bkey")))))
+
+  /** One-time clustering of the accepted entities' match graph; each
+    * increment then merges into it without re-clustering the stock.
+    * Idempotent per customer generation. */
+  private val clustersBuild = Build(ErClusters)((s, d) =>
+    ErClusters.sorted(s, d, "node") {
+      val stateK = keyedRecords(s, d).filter(!incPred)
       graft.dedup.Dedup.connectedComponents(
         EntityResolution.verifyByEditDistance(
           EntityResolution.blockedCandidates(stateK, "rid",
             passKeys = EntityResolution.blockPassKeys(col("nation"), col("digits"))),
           stateK, "rid", "norm", Seq("nation"), maxDist = 1),
-        ("rid1", "rid2")))
-  }
+        ("rid1", "rid2"))
+    })
+
+  /** Every prepared ER state with its one build:
+    * `Build(family, families its build reads*)`. */
+  val builds: Seq[Build] = Seq(keysBuild, clustersBuild, fullClustersBuild, survivorsBuild)
 
   private def matches(s: SparkSession, d: String): DataFrame = {
     val k = keyedRecords(s, d)
@@ -326,8 +331,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // incrementalClusters operator (increment-bounded CC over cluster
     // representatives + one broadcast state remap). The oracle is the
     // FULL re-cluster over the complete match graph.
-    Q("er_incremental_clusters", erIncClustersOracleSql) { (s, d) =>
-      prepareErState(s, d)
+    Q("er_incremental_clusters", erIncClustersOracleSql, ErKeys, ErClusters) { (s, d) =>
       // Same (name, plan) as er_incremental_survivorship's merged map:
       // one probe + verify + merge per session no matter which of the
       // two runs first, and the returned frame is one LogicalRDD leaf.
@@ -350,8 +354,7 @@ FROM comp GROUP BY 1""") { (s, d) =>
     // uncapped (increment-bounded by definition) — exactly what the
     // cap-aware oracle reproduces. er_blocking_audit still reports the
     // cap and the uncapped volume per pass.
-    Q("er_incremental_clusters_capped", erIncClustersCappedOracleSql) { (s, d) =>
-      prepareErState(s, d)
+    Q("er_incremental_clusters_capped", erIncClustersCappedOracleSql, ErKeys, ErClusters) { (s, d) =>
       // Truncated merged map (capped feed — its own memo entry).
       graft.ops.CacheOnce.swapTruncated("er-inc-updated-capped",
         graft.dedup.Dedup.incrementalClusters(
@@ -390,8 +393,7 @@ stc AS (SELECT rid, bkey FROM
   WHERE bsz <= (SELECT greatest($erBlockCap, $erCapMeanMult * count(*) // count(DISTINCT bkey)) FROM st)),
 inc AS (SELECT rid, bkey FROM p WHERE (rid // 2) % 3 = 2)
 SELECT DISTINCT stc.rid AS state_rid, inc.rid AS inc_rid
-FROM stc JOIN inc ON stc.bkey = inc.bkey""") { (s, d) =>
-      prepareErState(s, d)
+FROM stc JOIN inc ON stc.bkey = inc.bkey""", ErKeys) { (s, d) =>
       // Cap read from the state's published graft.stat (O(1)); the block
       // sizes were windowed into the state at CTAS — nothing state-sized is
       // recomputed per probe. Same value the in-plan derivation produced.
@@ -409,8 +411,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
     row_number() OVER (PARTITION BY comp.cluster_id ORDER BY
       CASE WHEN regexp_full_match(k.name, 'Customer#[0-9]+') THEN 0 ELSE 1 END,
       k.rid) AS rn
-  FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""") { (s, d) =>
-      prepareErFullClusters(s, d)
+  FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""", ErFullClusters) { (s, d) =>
       val k = keyedRecords(s, d)
       val clustered = ErFullClusters.read(s, d)
         .join(k.select(col("rid").as("node"), col("name")), Seq("node"))
@@ -441,8 +442,7 @@ SELECT cluster_id, rid AS canonical_rid, name AS canonical_name FROM (
     row_number() OVER (PARTITION BY comp.cluster_id ORDER BY
       CASE WHEN regexp_full_match(k.name, 'Customer#[0-9]+') THEN 0 ELSE 1 END,
       k.rid) AS rn
-  FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""") { (s, d) =>
-      prepareErState(s, d); prepareErSurvState(s, d)
+  FROM comp JOIN k ON k.rid = comp.node) WHERE rn = 1""", ErKeys, ErClusters, ErSurvivors) { (s, d) =>
       val k = keyedRecords(s, d)
       val state = ErClusters.read(s, d)
       // shared key with er_incremental_clusters: one merged map per

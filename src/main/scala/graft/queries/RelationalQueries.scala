@@ -83,7 +83,8 @@ object RelationalQueries {
     graft.ops.ScdOps.scd2Merge(customerV1(s, d), customerV2(s, d),
       Seq("c_custkey"), Seq("c_acctbal", "c_mktsegment"), fromVer = 1L, toVer = 2L)
 
-  /** ivm_scd2_agg's persisted day-1 state: the composed aggregate over
+  /** The build of this file's one prepared state, ivm_scd2_agg's
+    * persisted day-1 state: the composed aggregate over
     * the OLD facts and the v2-era frontier. Fingerprinted on BOTH
     * sources (the state derives from orders and customer alike) plus a
     * derivation-format token ([[graft.ops.PersistedState.IvmScd2]]):
@@ -91,10 +92,10 @@ object RelationalQueries {
     * source files and serves stale (how the r17 30× re-verify first
     * caught ivm_scd2_agg mismatching: the r16 sweep's state survived in
     * the shared warehouse). */
-  def prepareScd2AggState(s: org.apache.spark.sql.SparkSession, d: String): Unit =
+  val builds: Seq[Build] = Seq(Build(IvmScd2)((s, d) =>
     IvmScd2.sorted(s, d, "bal_band")(
       scd2AggPartial(factCents(s, d).filter(col("o_orderkey") % 3 =!= 2),
-        frontierBands(h12(s, d))))
+        frontierBands(h12(s, d))))))
 
   private val scd2V12Ctes: String =
     """v1 AS (SELECT c_custkey, c_acctbal, c_mktsegment FROM customer),
@@ -579,8 +580,7 @@ SELECT CAST(floor(v3.c_acctbal / 100) AS BIGINT) AS bal_band,
   CAST(count(*) AS BIGINT) AS n_orders,
   CAST(sum(f.cents) AS BIGINT) / 100.0 AS total_value
 FROM f JOIN v3 ON f.o_custkey = v3.c_custkey
-GROUP BY 1""") { (s, d) =>
-      prepareScd2AggState(s, d)
+GROUP BY 1""", IvmScd2) { (s, d) =>
       val state = IvmScd2.read(s, d)
       val keys = Seq("c_custkey")
       val tracked = Seq("c_acctbal", "c_mktsegment")

@@ -26,8 +26,8 @@ object CosineProbe {
     * semantics). Verified pairs land in the gate's [[GateLineage]] sink
     * (keyed on embeddings.parquet, the state table's generation, the
     * threshold and the cap; `stateVecs` must derive from the same
-    * embeddings file). A re-run on an unchanged generation commits no
-    * micro-batch. */
+    * embeddings file). A re-run on an unchanged generation starts no
+    * stream. */
   def verifiedOnce(spark: SparkSession, sfDir: String, stateTable: String,
                    stateVecs: DataFrame, threshold: Double,
                    bucketCap: Option[Int] = None): DataFrame = {

@@ -23,7 +23,7 @@ object ErProbe {
   /** One AvailableNow drain of the customer increment (custkey % 3 = 2;
     * both dirty copies of an entity derive in-stream) against
     * `stateTable` ((rid, bkey, bsz) bucketed on bkey — written by
-    * EntityQueries.prepareErState). Returns the settled DISTINCT
+    * the ErKeys build in EntityQueries). Returns the settled DISTINCT
     * candidate pairs (state_rid, inc_rid). `cap` is the collision
     * budget of the batch blocking pass and st_lsh_probe: a state block
     * above it is degenerate dirt density, and every arriving record
@@ -36,7 +36,7 @@ object ErProbe {
     * state-sized recomputed per probe. The sink is the gate's
     * [[GateLineage]], keyed on customer.parquet, the state table's
     * generation and the cap: a re-run on an unchanged generation
-    * commits no micro-batch. */
+    * starts no stream. */
   def candidatesOnce(spark: SparkSession, sfDir: String,
                      stateTable: String,
                      cap: Option[StateProbe.Cap] = None): DataFrame = {

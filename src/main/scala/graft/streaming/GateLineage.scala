@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.StructType
   * fingerprint holds, a drain restarts on its own checkpoint: the file
   * source has already seen every input file, so an unchanged generation
   * commits no micro-batch and the settled sink is read back as it
-  * stands. A rolled fingerprint resets sink, checkpoint and everything
-  * else under the directory as one unit (the checkpoint's seen-file log
+  * stands; a probe gate's provably current lineage starts no stream at
+  * all ([[drainDistinct]]). A rolled fingerprint resets sink, checkpoint
+  * and everything else under the directory as one unit (the checkpoint's seen-file log
   * dedupes by path, so a same-path regen would otherwise never
   * reprocess). Each lineage is a [[graft.ops.PersistedState]] family
   * (`st_<gate>`), so its name ends with the source dir's tag and its
@@ -77,7 +78,19 @@ object GateLineage {
     * lineage. A FILE sink, not a memory sink: the memory sink collects
     * every row to the driver (at a 30-copy-density fixture the ER
     * gate's ~50M candidate pairs exceeded spark.driver.maxResultSize),
-    * and append sink → downstream batch is the deployment shape. */
+    * and append sink → downstream batch is the deployment shape.
+    *
+    * A CURRENT lineage starts no `StreamingQuery`: the sink is read as
+    * it stands. Current means [[resetIfStale]] kept the lineage (the
+    * fingerprint holds) and the checkpoint's latest offset has a commit
+    * (the last drain finished every batch it planned, and the file sink
+    * logs a batch before its commit). Every probe gate streams ONE named
+    * file of the sf dir ([[Gate.file]]'s glob) whose `len:mtime` leads
+    * the fingerprint, so on a current lineage the source lists exactly
+    * the file that offset recorded, already in its seen-file log, and a
+    * started drain would commit no batch: skipping it changes no row. A
+    * reset lineage, or an offset left without its commit by a crash,
+    * streams. */
   private[streaming] def drainDistinct(spark: SparkSession,
                                        lineage: graft.ops.PersistedState,
                                        sfDir: String,
@@ -85,11 +98,22 @@ object GateLineage {
                                        sinkSchema: StructType)
                                       (stream: SparkSession => DataFrame): DataFrame = {
     val base = lineage.path(spark, sfDir)
-    resetIfStale(spark, base,
+    val reset = resetIfStale(spark, base,
       probeFingerprint(spark, s"$sfDir/${lineage.sources.head}", stateTable, params))
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"
-    Gate.land(stream(Gate.session(spark, Some(ckpt))), data, ckpt)
+    if (reset || !lastOffsetCommitted(spark, ckpt))
+      Gate.land(stream(Gate.session(spark, Some(ckpt))), data, ckpt)
     spark.read.schema(sinkSchema).parquet(data).distinct()
+  }
+
+  /** True when the checkpoint at `ckpt` has logged an offset and the
+    * latest one has a commit (both logs name each batch file by its id). */
+  private def lastOffsetCommitted(spark: SparkSession, ckpt: String): Boolean = {
+    val offsets = new Path(ckpt, "offsets")
+    val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(offsets) && fs.listStatus(offsets).map(_.getPath.getName)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).maxOption
+      .exists(id => fs.exists(new Path(ckpt, s"commits/$id")))
   }
 }

@@ -66,14 +66,14 @@ object LshProbe {
   }
 
   /** One AvailableNow drain of the increment (doc_id % 3 = 2) against
-    * `stateTable` (written by prepareLshState: (doc_id, band_key)
+    * `stateTable` (written by the LshState build: (doc_id, band_key)
     * bucketed on band_key). Returns the settled DISTINCT candidate
     * pairs (state_id, inc_id). Collisions land in the parquet append
     * sink of the gate's [[GateLineage]] (keyed on the documents file,
     * the state table's generation, the sketch parameters and the cap),
     * and the distinct runs as a distributed read-back — the
     * append-sink → downstream-batch deployment shape. A re-run on an
-    * unchanged generation commits no micro-batch. */
+    * unchanged generation starts no stream. */
   def candidatesOnce(spark: SparkSession, sfDir: String,
                      stateTable: String, numHashes: Int = 32,
                      rowsPerBand: Int = 4, shingleN: Int = 2,

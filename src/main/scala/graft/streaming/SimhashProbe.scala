@@ -22,7 +22,7 @@ import graft.dedup.StateProbe
 object SimhashProbe {
 
   /** One AvailableNow drain of the increment (doc_id % 3 = 2) against
-    * `stateTable` (written by prepareSimhashState: (doc_id, sig_hi,
+    * `stateTable` (written by the SimhashState build: (doc_id, sig_hi,
     * sig_lo, mkey) bucketed on mkey). Returns the settled DISTINCT
     * verified pairs (state_id, inc_id, hamming).
     *
@@ -32,7 +32,7 @@ object SimhashProbe {
     * before the stream ever joins. Verified pairs land in the gate's
     * [[GateLineage]] sink (keyed on documents.parquet, the state table's
     * generation, `maxHamming`, `blocks` and the cap). A re-run on an
-    * unchanged generation commits no micro-batch. */
+    * unchanged generation starts no stream. */
   def verifiedOnce(spark: SparkSession, sfDir: String, stateTable: String,
                    maxHamming: Int = 3, blocks: Int = 6,
                    bucketCap: Option[Int] = None): DataFrame = {

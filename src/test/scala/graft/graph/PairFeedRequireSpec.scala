@@ -3,13 +3,13 @@ package graft.graph
 import java.nio.file.Files
 import graft.SparkSpec
 import graft.ops.PersistedState
-import graft.queries.{CorpusQueries, EntityQueries}
+import graft.queries.Build
 
 /** Every member that probes a persisted key state checks the probe's
   * layout itself (graft.dedup.StateProbe): the state must enter the
   * probe join as a bucketed scan with no exchange below the join. Per
   * row, the member's state carries its freshness properties but was
-  * rewritten WITHOUT bucketing, so the member's own prepare accepts it
+  * rewritten WITHOUT bucketing, so the member's own build accepts it
   * as current; the member must then fail with
   * `<label> did not plan a bucketed scan` instead of letting the probe
   * re-shuffle the state silently.
@@ -35,43 +35,38 @@ class PairFeedRequireSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll
     root.toString
   }
 
-  private def lsh(d: String): Unit = CorpusQueries.prepareLshState(spark, d)
-  private def er(d: String): Unit = EntityQueries.prepareErState(spark, d)
-  private def contam(d: String): Unit = CorpusQueries.prepareContamState(spark, d)
-
-  /** (test name, member, its state, the state's build, REQUIRE label) */
-  private val members: Seq[(String, String, PersistedState, String => Unit, String)] = Seq(
+  /** (test name, member, its state, REQUIRE label) */
+  private val members: Seq[(String, String, PersistedState, String)] = Seq(
     ("dd_incremental_neardup fails on an unbucketed LSH state",
-      "dd_incremental_neardup", PersistedState.LshState, lsh, "LSH state"),
+      "dd_incremental_neardup", PersistedState.LshState, "LSH state"),
     ("dd_incremental_simhash fails on an unbucketed SimHash state",
-      "dd_incremental_simhash", PersistedState.SimhashState,
-      d => CorpusQueries.prepareSimhashState(spark, d), "SimHash state"),
+      "dd_incremental_simhash", PersistedState.SimhashState, "SimHash state"),
     ("dd_incremental_cosine fails on an unbucketed cosine state",
-      "dd_incremental_cosine", PersistedState.CosineState,
-      d => CorpusQueries.prepareCosineState(spark, d), "cosine LSH state"),
+      "dd_incremental_cosine", PersistedState.CosineState, "cosine LSH state"),
     ("dd_incremental_contamination fails on an unbucketed shingle index",
-      "dd_incremental_contamination", PersistedState.ContamState, contam,
+      "dd_incremental_contamination", PersistedState.ContamState,
       "test-suite shingle index"),
     ("pair-feed REQUIREs fire when pg_incremental_pagerank builds the feed first",
-      "pg_incremental_pagerank", PersistedState.LshState, lsh, "LSH state"),
+      "pg_incremental_pagerank", PersistedState.LshState, "LSH state"),
     ("er_incremental_clusters fails on an unbucketed ER key state",
-      "er_incremental_clusters", PersistedState.ErKeys, er, "ER key state"),
+      "er_incremental_clusters", PersistedState.ErKeys, "ER key state"),
     ("er_incremental_clusters_capped fails on an unbucketed ER key state",
-      "er_incremental_clusters_capped", PersistedState.ErKeys, er, "ER key state"),
+      "er_incremental_clusters_capped", PersistedState.ErKeys, "ER key state"),
     ("er_incremental_survivorship fails on an unbucketed ER key state",
-      "er_incremental_survivorship", PersistedState.ErKeys, er, "ER key state"),
+      "er_incremental_survivorship", PersistedState.ErKeys, "ER key state"),
     ("pipe_crawl_guarded fails on an unbucketed shingle index",
-      "pipe_crawl_guarded", PersistedState.ContamState, contam,
+      "pipe_crawl_guarded", PersistedState.ContamState,
       "test-suite shingle index"),
     ("pipe_incremental_crawl fails on an unbucketed LSH state",
-      "pipe_incremental_crawl", PersistedState.LshState, lsh, "LSH state"))
+      "pipe_incremental_crawl", PersistedState.LshState, "LSH state"))
 
-  members.foreach { case (name, member, state, build, label) =>
+  members.foreach { case (name, member, state, label) =>
     test(name) {
       val d = dir
-      // Build the state as the registry does, then rewrite it without
-      // bucketing under the same graft.* properties.
-      build(d)
+      // Build the member's declared states as the registry does, then
+      // rewrite its key state without bucketing under the same graft.*
+      // properties.
+      Build.prepare(spark, d, graft.SparkEntry.registered.find(_.name == member).get.reads)
       val table = state.name(d)
       val props = spark.sql(s"SHOW TBLPROPERTIES `$table`").collect()
         .map(r => r.getString(0) -> r.getString(1))

@@ -121,14 +121,10 @@ class KeyCapSpec extends SparkSpec {
 
   test("each family's published graft.stat equals its former cap value on the " +
     "vendored sf0.01 fixture") {
-    import graft.queries.{CorpusQueries, EntityQueries}
     import PersistedState._
     val d = "perfbench/data/sf0.01"
-    CorpusQueries.prepareLshState(spark, d)
-    CorpusQueries.prepareSimhashState(spark, d)
-    CorpusQueries.prepareContamState(spark, d)
-    CorpusQueries.prepareCosineState(spark, d)
-    EntityQueries.prepareErState(spark, d)
+    graft.queries.Build.prepare(spark, d,
+      Seq(LshState, SimhashState, ContamState, CosineState, ErKeys))
     // The values the graft_dd_lshcap_, graft_dd_simhashcap_,
     // graft_dd_contamcap_, graft_dd_cosinecap_ and graft_er_cap_
     // layouts held for this fixture before the caps were published with

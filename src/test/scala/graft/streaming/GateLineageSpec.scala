@@ -8,13 +8,13 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.SparkSpec
 import graft.dedup.Dedup
 import graft.ops.{EntityResolution, PersistedState, ScaleOps}
-import graft.queries.{CorpusQueries, EntityQueries}
+import graft.queries.Build
 import graft.similarity.Similarity
 
 /** The four settled-distinct probe gates drain into one generation-keyed
   * lineage ([[GateLineage]]). On a copy of sf0.01, each gate runs
-  * twice: the second call restarts on its checkpoint and commits no
-  * micro-batch, and both calls return the set an independent batch
+  * twice: the second call finds its lineage current and starts no
+  * stream query, and both calls return the set an independent batch
   * join computes. A changed cap, or a rewritten source file, resets the
   * lineage and the drain reprocesses to the same set, and so does a
   * re-run after either crash of a drain: a lineage left empty without
@@ -29,14 +29,17 @@ class GateLineageSpec extends SparkSpec {
   private def pairs(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
 
   // Every drain here runs on the shared stream session; the listener
-  // counts the micro-batches its queries commit. A query's termination
-  // event follows its progress events on the bus, so waiting for it
-  // fences the count.
+  // counts the queries it starts (reported synchronously by start()) and
+  // the micro-batches they commit. A query's termination event follows
+  // its progress events on the bus, so waiting for it fences the count.
+  private val started = new AtomicInteger
   private val batches = new AtomicInteger
   private val terminated = new AtomicInteger
   private lazy val listening: Unit =
     Gate.session(spark).streams.addListener(new StreamingQueryListener {
-      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        started.incrementAndGet(); ()
+      }
       def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
         batches.incrementAndGet(); ()
       }
@@ -45,17 +48,26 @@ class GateLineageSpec extends SparkSpec {
       }
     })
 
-  /** Runs `gate` (one stream query) and returns its collected rows with
-    * the number of micro-batches the query committed. */
-  private def drain(gate: => DataFrame): (Set[Seq[Any]], Int) = {
+  /** Runs `gate` (at most one stream query) and returns its collected
+    * rows with the number of stream queries it started and of
+    * micro-batches they committed. */
+  private def drainCounted(gate: => DataFrame): (Set[Seq[Any]], Int, Int) = {
     listening
-    val (b0, t0) = (batches.get(), terminated.get())
+    val (s0, b0, t0) = (started.get(), batches.get(), terminated.get())
     val out = pairs(gate)
+    val starts = started.get() - s0
     val deadline = System.currentTimeMillis() + 30000
-    while (terminated.get() == t0 && System.currentTimeMillis() < deadline)
+    while (terminated.get() - t0 < starts && System.currentTimeMillis() < deadline)
       Thread.sleep(20)
-    assert(terminated.get() > t0, "drain did not report termination")
-    (out, batches.get() - b0)
+    assert(terminated.get() - t0 >= starts, "drain did not report termination")
+    (out, starts, batches.get() - b0)
+  }
+
+  /** [[drainCounted]] of a gate that must start its stream query. */
+  private def drain(gate: => DataFrame): (Set[Seq[Any]], Int) = {
+    val (out, starts, b) = drainCounted(gate)
+    assert(starts == 1, s"the drain started $starts stream queries, not 1")
+    (out, b)
   }
 
   private def tmpEntries: Set[String] =
@@ -71,10 +83,8 @@ class GateLineageSpec extends SparkSpec {
     }
     val tag = PersistedState.tagOf(d)
     try {
-      CorpusQueries.prepareLshState(spark, d)
-      CorpusQueries.prepareSimhashState(spark, d)
-      CorpusQueries.prepareCosineState(spark, d)
-      EntityQueries.prepareErState(spark, d)
+      Build.prepare(spark, d, Seq(PersistedState.LshState, PersistedState.SimhashState,
+        PersistedState.CosineState, PersistedState.ErKeys))
 
       val docs = graft.Tables.documents(spark, d)
       val incDoc = col("doc_id") % 3 === 2
@@ -154,9 +164,11 @@ class GateLineageSpec extends SparkSpec {
         val (first, b1) = drain(gate(None))
         assert(b1 > 0, s"$name: a fresh lineage must drain its input")
         assert(first == ref, s"$name: settled set != batch join")
-        val (second, b2) = drain(gate(None))
+        // A current lineage is read as it stands: no stream query starts.
+        val (second, n2, b2) = drainCounted(gate(None))
+        assert(n2 == 0, s"$name: a current lineage started $n2 stream queries")
         assert(b2 == 0, s"$name: unchanged generation committed $b2 micro-batch(es)")
-        assert(second == first, s"$name: re-run changed the settled set")
+        assert(second == ref, s"$name: re-run on a current lineage != batch join")
 
         // A different cap is a different generation (Int.MaxValue never
         // binds, so the set must not move).
@@ -218,10 +230,11 @@ class GateLineageSpec extends SparkSpec {
       .foreach { case (q, lineage) =>
         val run = graft.SparkEntry.queries(q)
         // The first call may build the lineage (and its cached staging).
-        val (first, _) = drain(run(spark, d))
-        assert(first.nonEmpty, s"$q returned no rows")
+        val (first, n1, _) = drainCounted(run(spark, d))
+        assert(n1 >= 1 && first.nonEmpty, s"$q started no stream or returned no rows")
         val tmpBefore = tmpEntries
-        val (second, b) = drain(run(spark, d))
+        val (second, n2, b) = drainCounted(run(spark, d))
+        assert(n2 >= 1, s"$q: re-run started no stream")
         assert(b == 0, s"$q: unchanged staging committed $b micro-batch(es)")
         assert(second == first, s"$q: re-run changed the result")
         assert(tmpEntries == tmpBefore, s"$q: re-run left entries in java.io.tmpdir")

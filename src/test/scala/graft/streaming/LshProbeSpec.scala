@@ -13,7 +13,7 @@ class LshProbeSpec extends SparkSpec {
 
   test("streamed narrow banding settles to the batch band-join candidate set") {
     val d = "/root/testdata/sf0.001"
-    graft.queries.CorpusQueries.prepareLshState(spark, d)
+    graft.queries.Build.prepare(spark, d, Seq(graft.ops.PersistedState.LshState))
     val got = LshProbe.candidatesOnce(
         spark, d, graft.ops.PersistedState.LshState.name(d))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -52,7 +52,7 @@ class LshProbeSpec extends SparkSpec {
     "an aged re-drain hands back ZERO new files, advance() is what moves " +
     "the marker, and a rolled source fingerprint resets the lineage") {
     val d = "/root/testdata/sf0.001"
-    graft.queries.CorpusQueries.prepareLshState(spark, d)
+    graft.queries.Build.prepare(spark, d, Seq(graft.ops.PersistedState.LshState))
     val state = graft.ops.PersistedState.LshState.name(d)
     val base = SparkSpec.tempDir("graft_wm_probe").toString + "/lineage"
     GateLineage.resetIfStale(spark, base, "fp-1")
