@@ -23,10 +23,13 @@ import org.apache.spark.sql.types.StructType
   * (`ParquetFileFormat.readSchemaFromFooter`, a
   * `ParquetToSparkSchemaConverter` over the session's SQL conf) and
   * passes the result as an explicit read schema. The footer is cached
-  * per read path, valid while the first data file's (path, length,
-  * mtime) holds: a rewrite in place lands new part files and
-  * re-resolves, and one footer read per file generation serves both the
-  * schema and [[eventsTsUnit]]. The inferring read is kept whenever the
+  * per read path, valid while the first data file's generation holds
+  * ([[graft.ops.Generation.ofFiles]] of that one file: its path,
+  * length and mtime — the only file the schema is read from, so a part
+  * file rewritten behind it leaves the schema as Spark would infer it):
+  * a rewrite in place of that file, or a new first file, re-resolves,
+  * and one footer read per file generation serves both the schema and
+  * [[eventsTsUnit]]. The inferring read is kept whenever the
   * footer would not speak for Spark's own answer — the path is missing
   * or a glob, holds no data file, holds parquet summary files
   * (`_metadata`/`_common_metadata`, which Spark prefers) or a streaming
@@ -79,13 +82,6 @@ object Tables {
       file.map(footer(path, _, conf))
     }
 
-  /** Whether Spark's file index lists `name` as a data file: hidden
-    * (`_`/`.`-prefixed, except `_k=v` partition directories), copying
-    * and summary files are not data. */
-  private def isData(name: String): Boolean =
-    !(name.startsWith("_") && !name.contains("=")) &&
-      !name.startsWith(".") && !name.endsWith("._COPYING_")
-
   /** First data file among `entries` in Spark's own order — the
     * lexicographic order of full path strings, which a depth-first walk
     * reproduces when directory names sort with their trailing `/`.
@@ -94,7 +90,7 @@ object Tables {
     * writer bug, not a reader concern. */
   private def firstParquetFile(fs: FileSystem, entries: Array[FileStatus])
       : Option[FileStatus] =
-    entries.filter(e => isData(e.getPath.getName))
+    entries.filter(e => graft.ops.Generation.isData(e.getPath.getName))
       .sortBy(e => e.getPath.getName + (if (e.isDirectory) "/" else ""))
       .iterator
       .flatMap { e =>
@@ -105,7 +101,7 @@ object Tables {
   /** What the engine needs from one footer: the file schema and
     * key-value metadata (Spark's schema conversion input) and the first
     * row group's `ts` statistics ([[eventsTsUnit]]'s fallback input). */
-  private final class Footer(val generation: String, file: Path,
+  private final class Footer(file: Path,
                              meta: FileMetaData,
                              firstTsStats: Option[Statistics[_]]) {
     def schema(conf: org.apache.spark.sql.internal.SQLConf): StructType = {
@@ -150,20 +146,15 @@ object Tables {
   }
 
   /** Footer cache: one entry per read path, replaced when the path's
-    * first data file changes generation (path, length or mtime) — a
-    * directory's own mtime does not change on content overwrite, its
-    * part files do. Keyed by read path, not generation, so superseded
-    * generations are dropped rather than kept until JVM exit. */
+    * first data file changes generation ([[graft.ops.Generation.memo]]).
+    * Keyed by read path, not generation, so superseded generations are
+    * dropped rather than kept until JVM exit. */
   private val footers =
-    new java.util.concurrent.ConcurrentHashMap[String, Footer]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Footer)]()
 
   private def footer(path: String, file: FileStatus,
-                     conf: org.apache.hadoop.conf.Configuration): Footer = {
-    val generation =
-      s"${file.getPath}:${file.getLen}:${file.getModificationTime}"
-    val hit = footers.get(path)
-    if (hit != null && hit.generation == generation) hit
-    else {
+                     conf: org.apache.hadoop.conf.Configuration): Footer =
+    graft.ops.Generation.memo(footers, path, graft.ops.Generation.ofFiles(Seq(file))) {
       import scala.jdk.CollectionConverters._
       val meta = org.apache.spark.sql.execution.datasources.parquet
         .ParquetFooterReader.readFooter(
@@ -172,11 +163,8 @@ object Tables {
       val tsStats = meta.getBlocks.asScala.headOption
         .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == "ts"))
         .map(_.getStatistics)
-      val f = new Footer(generation, file.getPath, meta.getFileMetaData, tsStats)
-      footers.put(path, f)
-      f
+      new Footer(file.getPath, meta.getFileMetaData, tsStats)
     }
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
@@ -11,9 +12,10 @@ import org.apache.spark.storage.StorageLevel
   * driver-side values built from them (a Bloom filter).
   *
   * THE KEY. Every memo is keyed by (group, SEMANTIC HASH of the frame's
-  * analyzed plan, GENERATION), where the generation is the sorted
-  * (path, length, mtime) of every file listed by every file-source leaf
-  * of that plan, subqueries included. The semantic hash alone is not
+  * analyzed plan, GENERATION), where the generation is
+  * [[Generation.ofFiles]] — the digest of the (path, length, mtime) of
+  * every file listed by every file-source leaf of that plan, subqueries
+  * included. The semantic hash alone is not
   * enough: a parquet path rewritten in place, or a bucketed table
   * rebuilt under its name, analyzes to the same plan and hashes the
   * same, so a memo keyed by the hash would keep serving the old rows —
@@ -22,7 +24,7 @@ import org.apache.spark.storage.StorageLevel
   * holds (`InMemoryFileIndex` for paths and catalog tables,
   * `MetadataLogFileIndex` for a sink read back through its log), so the
   * generation costs no listing and no job; a leaf over any other index
-  * contributes its root paths. A leaf that is itself a memo's output (a
+  * contributes its root paths (as unlisted statuses, length -1). A leaf that is itself a memo's output (a
   * truncated `LogicalRDD`) hashes by its RDD, so a chain of memos misses
   * all the way down once its first input moves. Callers pass no tag.
   *
@@ -60,19 +62,18 @@ object CacheOnce {
     * or exploded shingle set through here. */
   val maxPerNameTruncated = 16
 
-  private type Generation = Seq[(String, Long, Long)]
-  private type Key = (String, Int, Generation)
+  /** (group, plan semantic hash, generation of the files it reads). */
+  private type Key = (String, Int, String)
 
   private def key(group: String, df: DataFrame): Key = {
     val plan = df.queryExecution.analyzed
     val files = plan.collectWithSubqueries {
       case l: LogicalRelation => l.relation
     }.collect { case r: HadoopFsRelation => r.location }.flatMap {
-      case idx: PartitioningAwareFileIndex =>
-        idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-      case idx => idx.rootPaths.map(p => (p.toString, -1L, -1L))
+      case idx: PartitioningAwareFileIndex => idx.allFiles().toSeq
+      case idx => idx.rootPaths.map(p => new FileStatus(-1L, true, 0, 0L, -1L, p))
     }
-    (group, plan.semanticHash(), files.distinct.sorted)
+    (group, plan.semanticHash(), Generation.ofFiles(files))
   }
 
   /** One memo: entries per group in insertion order, the oldest of a

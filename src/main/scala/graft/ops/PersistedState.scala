@@ -13,12 +13,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    at one scale factor can never satisfy (or poison) a run at another,
   *    and [[StateGc]] keeps a generation by its name's tag;
   *  - the PATH, that name under the session's warehouse dir;
-  *  - the FINGERPRINT that decides staleness: the `len:mtime` of each of
-  *    `sources` (files directly under the source dir) joined by `|`,
-  *    then `version` verbatim, then any runtime suffix the call passes
-  *    (a bucket count, a cap, a staging's parameters). A fingerprint
-  *    always starts with the first source's `len:mtime`, the base
-  *    [[StateGc]]'s keep rule matches;
+  *  - the FINGERPRINT that decides staleness: the [[Generation]] of each
+  *    of `sources` (entries directly under the source dir, each a file
+  *    or a directory of part files) joined by `|`, then `version`
+  *    verbatim, then any runtime suffix the call passes (a bucket
+  *    count, a cap, a staging's parameters). A file source's generation
+  *    is its `len:mtime`, a directory source's the digest of its data
+  *    files. A fingerprint always starts with the first source's
+  *    generation, the base [[StateGc]]'s keep rule matches;
   *  - the BUILD: every writer takes its frame by name, so a fresh
   *    generation costs one marker read or catalog lookup and never
   *    builds (or analyzes) the frame.
@@ -46,7 +48,7 @@ final case class PersistedState(family: String, sources: Seq[String],
     graft.Tables.parquet(spark, path(spark, sfDir))
 
   def fingerprint(sfDir: String, suffix: String = ""): String =
-    sources.map(f => ScaleOps.fileFingerprint(s"$sfDir/$f")).mkString("|") +
+    sources.map(f => Generation.of(s"$sfDir/$f")).mkString("|") +
       version + suffix
 
   /** Bucketed state table, bucket count derived from its staged size
@@ -81,7 +83,7 @@ final case class PersistedState(family: String, sources: Seq[String],
     * every call (landings, round-trip fixture files). */
   def emptied(spark: SparkSession, sfDir: String): String = {
     val p = path(spark, sfDir)
-    graft.streaming.GateLineage.reset(spark, p, fingerprint(sfDir))
+    Generation.reset(p, fingerprint(sfDir))
     p
   }
 

@@ -36,12 +36,6 @@ object ScaleOps {
       .agg(sum(col("_partial")).as("n"))
   }
 
-  /** Write `df` as a bucketed+sorted table (parquet, session catalog).
-    * Joins between tables bucketed the same way on `key` plan with zero
-    * exchanges. Idempotent across JVMs: a stale warehouse directory left
-    * by a previous process (whose in-memory metastore is gone) is
-    * removed before the create — `mode(overwrite)` alone only replaces
-    * tables the CURRENT catalog knows about. */
   /** Recursive LOCAL-file delete (fixture/staging/landing cleanup —
     * the one shared copy; layout paths that may be remote go through
     * the Hadoop FS helpers below instead). */
@@ -49,10 +43,6 @@ object ScaleOps {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteLocal)
     f.delete(); ()
   }
-
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    numBuckets: Int, sortCols: Seq[String] = Nil): Unit =
-    writeBucketedKeys(df, table, Seq(key), numBuckets, sortCols)
 
   // ---- Derived bucket counts (layout policy, not a constant) --------
   // A literal bucket count is a scale bug in both directions: 32
@@ -106,11 +96,7 @@ object ScaleOps {
     * and footer row counts — metadata only, never a data scan. */
   private[graft] def parquetStats(spark: SparkSession, path: String): (Long, Long) = {
     import scala.jdk.CollectionConverters._
-    val (fs, base) = hadoopFs(spark, path)
-    val files = fs.listStatus(base).toSeq.filter { st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet") &&
-        !st.getPath.getName.startsWith("_")
-    }
+    val files = Generation.dataFiles(path)
     val bytes = files.map(_.getLen).sum
     val conf = spark.sparkContext.hadoopConfiguration
     val rows = files.map { st =>
@@ -122,10 +108,17 @@ object ScaleOps {
     (bytes, rows)
   }
 
-  /** Multi-key variant of [[writeBucketed]] — for states whose probe
-    * join carries a COMPOSITE key (e.g. the triangle closes' canonical
-    * (src, dst) pair set): Spark's co-partitioning check requires ALL
-    * join keys in the children's hash partitioning by default
+  /** Write `df` as a table bucketed and sorted on `keys` (parquet,
+    * session catalog). Joins between tables bucketed the same way plan
+    * with zero exchanges. Idempotent across JVMs: a stale warehouse
+    * directory left by a previous process (whose in-memory metastore is
+    * gone) is removed before the create — `mode(overwrite)` alone only
+    * replaces tables the CURRENT catalog knows about.
+    *
+    * A state whose probe join carries a COMPOSITE key (e.g. the
+    * triangle closes' canonical (src, dst) pair set) is bucketed on all
+    * of it: Spark's co-partitioning check requires ALL join keys in the
+    * children's hash partitioning by default
     * (requireAllClusterKeysForCoPartition), so a src-only bucketing
     * does NOT make a (src, dst)-keyed sort-merge probe exchange-free —
     * the state side re-shuffles in full (the r17 finding behind the
@@ -168,10 +161,8 @@ object ScaleOps {
     * convention), Hadoop FS so remote warehouses check the same way. */
   private[graft] def assertOneFilePerBucket(spark: SparkSession, loc: String,
                                             numBuckets: Int): Unit = {
-    val (fs, base) = hadoopFs(spark, loc)
     val bucketRe = "_(\\d{5})\\.".r
-    val dataFiles = fs.listStatus(base).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_"))
+    val dataFiles = Generation.dataFiles(loc)
     val ids = dataFiles.flatMap(st =>
       bucketRe.findFirstMatchIn(st.getPath.getName).map(_.group(1).toInt))
     // An all-empty frame writes no data files at all — vacuously fine
@@ -190,35 +181,6 @@ object ScaleOps {
       s"bucketed CTAS at $loc wrote bucket ids beyond numBuckets=$numBuckets")
   }
 
-  /** Idempotent [[writeBucketed]]: skip when the CURRENT catalog already
-    * has the table (within a SharedState the files are then known-good —
-    * bucketing metadata lives in the catalog, so a table the catalog
-    * doesn't know must be rewritten even if stale files exist). This is
-    * the "write once, join forever" contract: layout prep runs once per
-    * (table, warehouse), every later call is a catalog lookup.
-    *
-    * `srcFingerprint` extends the freshness test beyond mere existence —
-    * the bucketed-table analogue of [[ensureSortedBy]]'s layout marker:
-    * the fingerprint is recorded as table property `graft.src`, and a
-    * later call with a DIFFERENT fingerprint drops and rebuilds the
-    * table. Without it, an in-place regen of the source parquet would
-    * silently serve stale bucketed state (the regen-staleness failure
-    * mode the r9 ts-unit incident hit). Empty fingerprint keeps the
-    * existence-only contract for callers whose input is immutable. */
-  /** Returns true when the table was (re)built by THIS call — the hook
-    * for build-time-only invariant checks (e.g. the pagerank edge
-    * state's one-per-fingerprint symmetry assertion), which must run
-    * where the table is written, never on every read-back.
-    *
-    * The frame is taken BY NAME, with the session passed explicitly (the
-    * [[ensureSortedBy]] shape): a fresh table costs one catalog
-    * lookup, and the state frame is neither built nor analyzed. */
-  def ensureBucketed(spark: SparkSession, table: String, key: String,
-                     numBuckets: Int, srcFingerprint: String = "",
-                     sortCols: Seq[String] = Nil)(df: => DataFrame): Boolean =
-    ensureBucketedKeys(spark, table, Seq(key), numBuckets, srcFingerprint,
-      sortCols)(df)
-
   /** Rendered layout contract of a bucketed table — keys, sort columns
     * and bucket sizing — stored as table property `graft.layout` and
     * folded into the freshness test AUTOMATICALLY (ADVICE r17: layout
@@ -232,13 +194,13 @@ object ScaleOps {
   }
 
   /** Fresh when the catalog has the table under the same layout
-    * contract and (when one is given) the same source fingerprint. One
-    * catalog lookup ([[GraftShim.tableProperties]]) serves the whole
-    * test; callers reuse `props` for `graft.buckets`. */
+    * contract and the same source fingerprint. One catalog lookup
+    * ([[GraftShim.tableProperties]]) serves the whole test; callers
+    * reuse `props` for `graft.buckets`. */
   private def bucketedFresh(props: Option[Map[String, String]],
                             srcFingerprint: String, layout: String): Boolean =
     props.exists(p =>
-      (srcFingerprint.isEmpty || p.get("graft.src").contains(srcFingerprint)) &&
+      p.get("graft.src").contains(srcFingerprint) &&
         p.get("graft.layout").contains(layout))
 
   /** The one publish of a bucketed state: fingerprint, layout contract,
@@ -249,16 +211,31 @@ object ScaleOps {
   private def recordBucketedProps(spark: SparkSession, table: String,
                                   srcFingerprint: String, layout: String,
                                   numBuckets: Int, stat: Option[Long] = None): Unit = {
-    val fpProp =
-      if (srcFingerprint.nonEmpty) s"'graft.src' = '$srcFingerprint', " else ""
     val statProp = stat.fold("")(v => s", 'graft.stat' = '$v'")
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES (" +
-      fpProp + s"'graft.layout' = '$layout', 'graft.buckets' = '$numBuckets'$statProp)")
+    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES ('graft.src' = '$srcFingerprint', " +
+      s"'graft.layout' = '$layout', 'graft.buckets' = '$numBuckets'$statProp)")
   }
 
-  /** Multi-key [[ensureBucketed]] — see [[writeBucketedKeys]]. */
+  /** Idempotent [[writeBucketedKeys]]: skipped when the CURRENT catalog
+    * has the table under the same layout contract and source
+    * fingerprint (within a SharedState the files are then known-good —
+    * bucketing metadata lives in the catalog, so a table the catalog
+    * doesn't know is rewritten even if stale files exist). This is the
+    * "write once, join forever" contract: every later call is one
+    * catalog lookup. The fingerprint is recorded as table property
+    * `graft.src`; a call with a DIFFERENT one drops and rebuilds the
+    * table, so an in-place regen of the source never serves stale
+    * bucketed state (the failure the r9 ts-unit incident hit).
+    *
+    * Returns true when the table was (re)built by THIS call — the hook
+    * for build-time-only invariant checks (e.g. the pagerank edge
+    * state's one-per-fingerprint symmetry assertion), which must run
+    * where the table is written, never on every read-back. The frame is
+    * taken BY NAME, with the session passed explicitly: a fresh table
+    * costs one catalog lookup, and the state frame is neither built nor
+    * analyzed. */
   def ensureBucketedKeys(spark: SparkSession, table: String, keys: Seq[String],
-                         numBuckets: Int, srcFingerprint: String = "",
+                         numBuckets: Int, srcFingerprint: String,
                          sortCols: Seq[String] = Nil)(df: => DataFrame): Boolean = {
     val layout = layoutContract(keys, sortCols, s"n=$numBuckets")
     val fresh = bucketedFresh(GraftShim.tableProperties(spark, table),
@@ -270,7 +247,7 @@ object ScaleOps {
     !fresh
   }
 
-  /** [[ensureBucketed]] with the bucket count DERIVED from the state's
+  /** [[ensureBucketedKeys]] with the bucket count DERIVED from the state's
     * own size at CTAS instead of passed in (the verdict-17 scale task:
     * every literal count is wrong at some scale — see [[bucketTargets]]).
     * Build path: the frame is computed ONCE and staged as plain parquet
@@ -296,9 +273,9 @@ object ScaleOps {
     *
     * Returns (builtByThisCall, bucketCount) — the count read back from
     * `graft.buckets` when the generation was already fresh. `df` is by
-    * name, as in [[ensureBucketed]]. */
+    * name, as in [[ensureBucketedKeys]]. */
   def ensureBucketedDerived(spark: SparkSession, table: String, keys: Seq[String],
-                            srcFingerprint: String = "",
+                            srcFingerprint: String,
                             sortCols: Seq[String] = Nil,
                             cap: Option[KeyCap] = None)
                            (df: => DataFrame): (Boolean, Int) = {
@@ -339,7 +316,8 @@ object ScaleOps {
 
   // ---- Hadoop FS plumbing: layout prep must work on hdfs://, s3a://
   // and file:// alike, so every existence check, marker file and listing
-  // below goes through the FileSystem API, never java.io.File.
+  // below goes through the FileSystem API, never java.io.File; a
+  // layout's `_GRAFT_SRC` marker goes through [[Generation]].
 
   private def hadoopFs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -371,42 +349,31 @@ object ScaleOps {
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
-  /** _SUCCESS exists AND (no fingerprint requested OR the recorded one
-    * matches) — the shared freshness test of ensurePartitioned /
-    * ensureSortedBy. */
-  private def layoutFresh(spark: SparkSession, path: String,
-                          srcFingerprint: String): Boolean = {
-    val (fs, base) = hadoopFs(spark, path)
-    val done = new org.apache.hadoop.fs.Path(base, "_SUCCESS")
-    val marker = new org.apache.hadoop.fs.Path(base, "_GRAFT_SRC")
-    fs.exists(done) && (srcFingerprint.isEmpty ||
-      (fs.exists(marker) && readUtf8(fs, marker) == srcFingerprint))
-  }
-
-  private def writeMarker(spark: SparkSession, path: String,
-                          srcFingerprint: String): Unit =
-    if (srcFingerprint.nonEmpty) {
-      val (fs, base) = hadoopFs(spark, path)
-      writeUtf8(fs, new org.apache.hadoop.fs.Path(base, "_GRAFT_SRC"), srcFingerprint)
-    }
+  /** Writes the layout at `path` with `write` unless `path` already
+    * records `srcFingerprint` ([[Generation.recorded]]); the marker is
+    * recorded after the write, and an overwrite removes the old one
+    * before it, so a crash in between leaves a layout the next call
+    * rebuilds. True when this call wrote. */
+  private def ensureLayout(path: String, srcFingerprint: String)
+                          (write: => Unit): Boolean =
+    if (Generation.recorded(path).contains(srcFingerprint)) false
+    else { write; Generation.record(path, srcFingerprint); true }
 
   /** Write `df` as a directory tree partitioned by `partCol` (the
     * physical layout that lets a partition-filtered query read ONE
     * directory out of thousands instead of scanning everything — at
     * 100 TB the difference between touching a day and touching three
-    * years). Idempotent across JVMs via a source fingerprint marker:
-    * skipped only when _SUCCESS exists AND the recorded fingerprint
+    * years). Idempotent across JVMs via the `_GRAFT_SRC` marker
+    * ([[ensureLayout]]): skipped only when the recorded fingerprint
     * matches `srcFingerprint` — a regenerated source re-triggers the
     * write instead of silently serving a stale tree (the same
-    * cross-process staleness writeBucketed guards against). The frame
-    * is by name, as in [[ensureSortedBy]]; true when this call wrote. */
+    * cross-process staleness `graft.src` guards a bucketed table
+    * against). The frame is by name, as in [[ensureSortedBy]]; true
+    * when this call wrote. */
   def ensurePartitioned(spark: SparkSession, path: String, partCol: String,
-                        srcFingerprint: String = "")(df: => DataFrame): Boolean =
-    if (!layoutFresh(spark, path, srcFingerprint)) {
-      df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-      writeMarker(spark, path, srcFingerprint)
-      true
-    } else false
+                        srcFingerprint: String)(df: => DataFrame): Boolean =
+    ensureLayout(path, srcFingerprint)(
+      df.write.mode("overwrite").partitionBy(partCol).parquet(path))
 
   /** Unsplittable-input guard (optimization guide §2.5, "one huge
     * unsplittable file"): parquet scans parallelize by ROW GROUP, so a
@@ -448,30 +415,10 @@ object ScaleOps {
   private val narrowMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Boolean)]
   def narrowScanAt(spark: SparkSession, path: String): Boolean =
-    generationMemo(narrowMemo, path, fileFingerprint(path)) {
+    Generation.memo(narrowMemo, path, Generation.of(path)) {
       Tables.parquet(spark, path).rdd.getNumPartitions * 2 <=
         spark.sparkContext.defaultParallelism
     }
-
-  /** `memo`'s value for `key` if it was computed at `generation`, else
-    * `build`'s, stored in place of the superseded one: one entry per
-    * key, so a session never keeps a dead generation. */
-  private def generationMemo[K, V](memo: java.util.concurrent.ConcurrentHashMap[K, (String, V)],
-                                   key: K, generation: String)(build: => V): V = {
-    val hit = memo.get(key)
-    if (hit != null && hit._1 == generation) hit._2
-    else { val v = build; memo.put(key, (generation, v)); v }
-  }
-
-  /** Fingerprint of a source file for [[ensurePartitioned]]: length +
-    * mtime — cheap and changes whenever the driver regenerates it.
-    * Resolved through the path's Hadoop FileSystem (default
-    * configuration), so non-local sources fingerprint too. */
-  def fileFingerprint(path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val st = p.getFileSystem(hadoopConf()).getFileStatus(p)
-    s"${st.getLen}:${st.getModificationTime}"
-  }
 
   /** Write `df` globally range-clustered by `key`: repartitionByRange
     * gives disjoint key ranges per file, sortWithinPartitions orders
@@ -479,7 +426,7 @@ object ScaleOps {
     * for `key` and a key-range query skips almost all of them (row-group
     * a.k.a. data skipping — the intra-file complement of partition
     * pruning, and the poor man's Z-order for a single key). Idempotent
-    * via the same fingerprint marker as [[ensurePartitioned]].
+    * via the same `_GRAFT_SRC` marker as [[ensurePartitioned]].
     *
     * The frame is taken BY NAME: a fresh layout costs one marker read,
     * and the frame is neither built nor analyzed — which matters most
@@ -491,24 +438,19 @@ object ScaleOps {
     * the build: a cached bare TABLE scan would shadow the table's
     * bucketed scan in every later probe plan of the session). */
   def ensureSortedBy(spark: SparkSession, path: String, key: String, numFiles: Int,
-                     srcFingerprint: String = "",
+                     srcFingerprint: String,
                      writeOptions: Map[String, String] = Map.empty)
                     (df: => DataFrame): Boolean = {
-    // Options participate in the freshness fingerprint UNCONDITIONALLY:
-    // changing e.g. parquet.block.size must rewrite the layout, not
-    // serve the old one — including when no source fingerprint was
-    // given (an empty fp would let layoutFresh pass on _SUCCESS alone).
+    // Options participate in the freshness fingerprint: changing e.g.
+    // parquet.block.size must rewrite the layout, not serve the old one.
     val fp =
       if (writeOptions.isEmpty) srcFingerprint
       else srcFingerprint + "|" +
         writeOptions.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
-    if (!layoutFresh(spark, path, fp)) {
+    ensureLayout(path, fp)(
       df.repartitionByRange(numFiles, col(key))
         .sortWithinPartitions(key)
-        .write.mode("overwrite").options(writeOptions).parquet(path)
-      writeMarker(spark, path, fp)
-      true
-    } else false
+        .write.mode("overwrite").options(writeOptions).parquet(path))
   }
 
   /** Per-FILE [min, max] of an INT64 column from the parquet footers
@@ -518,11 +460,7 @@ object ScaleOps {
                     column: String): Seq[(org.apache.hadoop.fs.Path, Option[(Long, Long)])] = {
     import scala.jdk.CollectionConverters._
     val conf = hadoopConf()
-    val base = new org.apache.hadoop.fs.Path(path)
-    val files = base.getFileSystem(conf).listStatus(base).toSeq.map(_.getPath)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-      .sortBy(_.getName)
-    files.map { f =>
+    Generation.dataFiles(path).map(_.getPath).map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
@@ -557,7 +495,7 @@ object ScaleOps {
                           (deleteKeys: => Seq[Long]): (Int, Int) = {
     val (fs, dstPath) = hadoopFs(spark, dst)
     val countsFile = new org.apache.hadoop.fs.Path(dstPath, "_graft_surgical_counts")
-    if (layoutFresh(spark, dst, srcFingerprint)) {
+    if (Generation.recorded(dst).contains(srcFingerprint)) {
       val Array(rw, cp) = readUtf8(fs, countsFile).trim.split(",").map(_.toInt)
       (rw, cp)
     } else {
@@ -584,20 +522,15 @@ object ScaleOps {
           .sortWithinPartitions(key)
           .write.mode("overwrite").parquet(tmp)
         val (tfs, tPath) = hadoopFs(spark, tmp)
-        tfs.listStatus(tPath).map(_.getPath)
-          .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-          .foreach(f => tfs.rename(f,
-            new org.apache.hadoop.fs.Path(dstPath, "rw-" + f.getName)))
+        Generation.dataFiles(tmp).map(_.getPath).foreach(f => tfs.rename(f,
+          new org.apache.hadoop.fs.Path(dstPath, "rw-" + f.getName)))
         tfs.delete(tPath, true)
       }
       // sanity: the surviving data must not contain any deleted key
       require(Tables.parquet(spark, dst).filter(col(key).isInCollection(keySet)).isEmpty,
         "surgical delete left deleted keys behind — footer stats lied or rewrite failed")
       writeUtf8(fs, countsFile, s"${touched.size},${untouched.size}")
-      // the dir was assembled by hand (copy + rename), so the _SUCCESS
-      // layoutFresh keys on must be written explicitly
-      writeUtf8(fs, new org.apache.hadoop.fs.Path(dstPath, "_SUCCESS"), "")
-      writeMarker(spark, dst, srcFingerprint)
+      Generation.record(dst, srcFingerprint)
       (touched.size, untouched.size)
     }
   }
@@ -605,23 +538,17 @@ object ScaleOps {
   /** [[rowGroupRanges]] memoized per layout GENERATION: the footer walk
     * costs one driver I/O round per file per call, and the sc* layout
     * REQUIREs re-ran it every rep over a tree that can only change when
-    * its `_GRAFT_SRC` generation marker does — so the memo keeps one
-    * entry per (path, column) with the marker content it was walked at,
-    * and one tiny marker read replaces the N-footer walk on every warm
-    * call. A layout rebuilt under a new fingerprint re-walks and
-    * replaces the entry. */
+    * the generation it records ([[Generation.recorded]]) does — so the
+    * memo keeps one entry per (path, column) with the generation it was
+    * walked at, and one tiny marker read replaces the N-footer walk on
+    * every warm call. A layout rebuilt under a new fingerprint re-walks
+    * and replaces the entry; one that records none is walked every call. */
   private val rangesMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String), (String, Seq[(Long, Long)])]
 
-  def rowGroupRangesMemo(path: String, column: String): Seq[(Long, Long)] = {
-    val conf = hadoopConf()
-    val base = new org.apache.hadoop.fs.Path(path)
-    val fs = base.getFileSystem(conf)
-    val marker = new org.apache.hadoop.fs.Path(base, "_GRAFT_SRC")
-    if (!fs.exists(marker)) rowGroupRanges(path, column)
-    else generationMemo(rangesMemo, (path, column), readUtf8(fs, marker))(
-      rowGroupRanges(path, column))
-  }
+  def rowGroupRangesMemo(path: String, column: String): Seq[(Long, Long)] =
+    Generation.recorded(path).fold(rowGroupRanges(path, column))(g =>
+      Generation.memo(rangesMemo, (path, column), g)(rowGroupRanges(path, column)))
 
   /** Row-group [min, max] statistics of an INT64 column across every
     * part file under `path`, straight from the parquet footers — the
@@ -630,14 +557,11 @@ object ScaleOps {
   def rowGroupRanges(path: String, column: String): Seq[(Long, Long)] = {
     import scala.jdk.CollectionConverters._
     val conf = hadoopConf()
-    val base = new org.apache.hadoop.fs.Path(path)
-    // Sorted by name: listStatus order is filesystem-dependent, and
-    // callers that correlate two columns' ranges (sc6's 2-D overlap
-    // check) need both calls to walk row groups in the SAME order.
-    val files = base.getFileSystem(conf).listStatus(base).toSeq.map(_.getPath)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-      .sortBy(_.getName)
-    files.flatMap { f =>
+    // In name order (Generation.dataFiles sorts; a raw listing's order
+    // is filesystem-dependent): callers that correlate two columns'
+    // ranges (sc6's 2-D overlap check) need both calls to walk row
+    // groups in the SAME order.
+    Generation.dataFiles(path).map(_.getPath).flatMap { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
@@ -694,26 +618,18 @@ object ScaleOps {
                    key: String): DataFrame =
     spark.table(leftTable).join(spark.table(rightTable), Seq(key))
 
-  /** Part-file count under `path` (Hadoop FS; _markers excluded) — the
+  /** Data-file count under `path` ([[Generation.dataFiles]]) — the
     * small-files metric [[compact]] exists to drive down. */
-  def partFileCount(spark: SparkSession, path: String): Int = {
-    val (fs, base) = hadoopFs(spark, path)
-    fs.listStatus(base).count { st =>
-      val name = st.getPath.getName
-      st.isFile && name.endsWith(".parquet") && !name.startsWith("_")
-    }
-  }
+  def partFileCount(spark: SparkSession, path: String): Int =
+    Generation.dataFiles(path).size
 
   /** Write `df` as exactly `numFiles` part files (repartition — the
     * deliberately-fragmented fixture writer for the compaction demo).
     * Idempotent via the fingerprint marker; the frame is by name. */
   def ensureFragmented(spark: SparkSession, path: String, numFiles: Int,
-                       srcFingerprint: String = "")(df: => DataFrame): Boolean =
-    if (!layoutFresh(spark, path, srcFingerprint)) {
-      df.repartition(numFiles).write.mode("overwrite").parquet(path)
-      writeMarker(spark, path, srcFingerprint)
-      true
-    } else false
+                       srcFingerprint: String)(df: => DataFrame): Boolean =
+    ensureLayout(path, srcFingerprint)(
+      df.repartition(numFiles).write.mode("overwrite").parquet(path))
 
   /** Small-file compaction: rewrite `src`'s parquet tree as
     * `targetFiles` part files at `dst` (idempotent via the same
@@ -725,12 +641,12 @@ object ScaleOps {
     * per-file open/footer cost until a compaction pass rewrites the
     * day, after which scans read a handful of full-size files. */
   def compact(spark: SparkSession, src: String, dst: String,
-              targetFiles: Int, srcFingerprint: String = ""): Unit =
-    if (!layoutFresh(spark, dst, srcFingerprint)) {
+              targetFiles: Int, srcFingerprint: String): Unit = {
+    ensureLayout(dst, srcFingerprint)(
       Tables.parquet(spark, src).coalesce(targetFiles)
-        .write.mode("overwrite").parquet(dst)
-      writeMarker(spark, dst, srcFingerprint)
-    }
+        .write.mode("overwrite").parquet(dst))
+    ()
+  }
 }
 
 /** A state's derived per-key cap — the collision budget its probes

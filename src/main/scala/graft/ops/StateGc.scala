@@ -12,8 +12,10 @@ import graft.Tables
   * states), gate lineages and staged stream replays — so it is named
   * `graft_<family>_<sourceTag>` by the one tag rule
   * ([[PersistedState.tagOf]]) and freshness-keyed by the descriptor's
-  * fingerprint (`graft.src` table property or `_GRAFT_SRC` marker,
-  * format `len:mtime[|len:mtime][version][:params|&#124;options]`).
+  * fingerprint (`graft.src` table property or the marker
+  * [[Generation.recorded]] reads, format
+  * `gen[|gen][version][:params|&#124;options]`, where each `gen` is a
+  * source's [[Generation]]: a file's `len:mtime`, a directory's digest).
   * ensure* REBUILDS in place when the fingerprint rolls, so a live
   * source never leaks — but a source that disappears (a retired crawl
   * directory, a deleted fixture) strands its whole generation forever,
@@ -25,11 +27,11 @@ import graft.Tables
   *  - its tag must suffix-match a live source dir's tag (longest match
   *    wins, so `..._sf0_1` never claims `..._sf0_11`'s generations); AND
   *  - its recorded fingerprint, when present, must match the CURRENT
-  *    fingerprint of some file in that live dir — exactly (`len:mtime`)
-  *    or as the base of a params/options-suffixed key (`len:mtime:...`,
-  *    `len:mtime|...`), the two suffix forms ensure* writes. A stale
-  *    fingerprint means ensure* would rebuild before serving it, so
-  *    dropping loses nothing.
+  *    [[Generation]] of some entry of that live dir, a file or a
+  *    directory of part files — exactly (`gen`) or as the base of a
+  *    params/options-suffixed key (`gen:...`, `gen|...`), the two suffix
+  *    forms ensure* writes. A stale fingerprint means ensure* would
+  *    rebuild before serving it, so dropping loses nothing.
   *  - a generation with NO recorded fingerprint under a live tag is
   *    kept (conservative: unfingerprinted layouts self-heal via
   *    `_SUCCESS`, and GC must never be the thing that breaks one).
@@ -51,22 +53,6 @@ object StateGc {
   private def fs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Current `len:mtime` fingerprints of every regular file directly in
-    * a live source dir — the candidate bases a recorded generation key
-    * may match. */
-  private def liveFileFps(spark: SparkSession, dir: String): Set[String] = {
-    val (f, p) = fs(spark, dir)
-    if (!f.exists(p)) Set.empty
-    else f.listStatus(p).toSeq.filter(_.isFile)
-      .map(st => s"${st.getLen}:${st.getModificationTime}").toSet
-  }
-
-  private def readMarker(f: org.apache.hadoop.fs.FileSystem,
-                         gen: org.apache.hadoop.fs.Path): Option[String] = {
-    val m = new org.apache.hadoop.fs.Path(gen, "_GRAFT_SRC")
-    if (!f.exists(m)) None else Some(ScaleOps.readUtf8(f, m))
   }
 
   /** A recorded generation key matches a current file fingerprint when
@@ -98,8 +84,14 @@ object StateGc {
     // a generation serving EITHER colliding dir stays live. GC must
     // under-approximate droppability, never a live dir's liveness.
     val liveTags = liveDirs.groupBy(PersistedState.tagOf).toSeq.sortBy(-_._1.length)
+    // The candidate bases a recorded key may match: the current
+    // generation of every entry of a live dir, directories included.
     val fpsByTag = liveTags.map { case (t, ds) =>
-      t -> ds.flatMap(d => liveFileFps(spark, d)).toSet
+      t -> ds.flatMap { d =>
+        val (f, p) = fs(spark, d)
+        if (!f.exists(p)) Nil
+        else f.listStatus(p).toSeq.map(st => Generation.of(st.getPath.toString))
+      }.toSet
     }.toMap
     val entries =
       if (!f.exists(rootP)) Seq.empty
@@ -110,7 +102,7 @@ object StateGc {
       val name = st.getPath.getName
       val props = GraftShim.tableProperties(spark, name)
       val isTable = props.isDefined
-      val recorded = props.fold(readMarker(f, st.getPath))(_.get("graft.src"))
+      val recorded = props.fold(Generation.recorded(st.getPath.toString))(_.get("graft.src"))
       val tagHit = liveTags.collectFirst {
         case (t, _) if name.endsWith("_" + t) => t
       }
@@ -187,17 +179,17 @@ object StateGc {
           val n = st.getPath.getName
           st.isDirectory && n.startsWith("graft_gcdemo") &&
             (n.startsWith(famPrefix) ||
-              st.getModificationTime < System.currentTimeMillis() - 3600000L)
+              Generation.modifiedBefore(st, System.currentTimeMillis() - 3600000L))
         }
         .foreach { st =>
           spark.sql(s"DROP TABLE IF EXISTS `${st.getPath.getName}`")
           f.delete(st.getPath, true); ()
         }
-    val docFp = ScaleOps.fileFingerprint(s"$sfDir/documents.parquet")
+    val docFp = Generation.of(s"$sfDir/documents.parquet")
     def build(name: String, marker: String): Unit = {
       val dir = new java.io.File(wh, name).toString
       spark.range(1).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
-      ScaleOps.writeUtf8(f, new org.apache.hadoop.fs.Path(dir, "_GRAFT_SRC"), marker)
+      Generation.record(dir, marker)
     }
     val liveGen = s"${famPrefix}live_$tag"
     build(liveGen, docFp + ":demo=1")
@@ -209,7 +201,7 @@ object StateGc {
     // still be a readable layout with its marker intact.
     val liveDir = new java.io.File(wh, liveGen).toString
     require(Tables.parquet(spark, liveDir).count() == 1L &&
-      readMarker(f, new org.apache.hadoop.fs.Path(liveDir)).contains(docFp + ":demo=1"),
+      Generation.recorded(liveDir).contains(docFp + ":demo=1"),
       "stateGc demo: live generation damaged by GC")
     val out = report.map { r =>
       val label = r.getString(0).stripPrefix(famPrefix).takeWhile(_ != '_')

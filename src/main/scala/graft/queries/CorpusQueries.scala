@@ -3660,7 +3660,7 @@ SELECT doc_id, quality FROM qv WHERE doc_id NOT IN (SELECT doc_id FROM losers)""
     // the old cap).
     val cap = if (capped) Some(LshState.stat(s, d).toInt) else None
     val fp = lineage.fingerprint(d, cap.fold("")(c => s"|cap=$c"))
-    graft.streaming.GateLineage.resetIfStale(s, base, fp)
+    graft.ops.Generation.resetIfStale(base, fp)
     val drain = graft.streaming.LshProbe.candidatesWatermarked(
       s, d, LshState.name(d), base, bandBucketCap = cap)
     val settledDir = s"$base/settled"

@@ -527,8 +527,8 @@ GROUP BY 1""") { (s, d) =>
     // derived count rebuilds the orders layout in lockstep.
     Build(OrdersBuckets, LineitemBuckets) { (s, d) =>
       val nb = LineitemBuckets.buckets(s, d)
-      ScaleOps.ensureBucketed(s, OrdersBuckets.name(d), "o_orderkey", nb,
-        srcFingerprint = OrdersBuckets.fingerprint(d, s"|nb=$nb"))(
+      ScaleOps.ensureBucketedKeys(s, OrdersBuckets.name(d), Seq("o_orderkey"), nb,
+        OrdersBuckets.fingerprint(d, s"|nb=$nb"))(
         Tables.orders(s, d).select("o_orderkey", "o_orderstatus"))
     },
     Build(EventsPartitioned)((s, d) =>

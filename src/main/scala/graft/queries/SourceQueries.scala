@@ -191,7 +191,7 @@ object SourceQueries {
   private def rtDir(s: org.apache.spark.sql.SparkSession, sfDir: String): String = {
     val rt = graft.ops.PersistedState.SourceRoundTrips
     val base = rt.path(s, sfDir)
-    graft.streaming.GateLineage.resetIfStale(s, base, rt.fingerprint(sfDir))
+    graft.ops.Generation.resetIfStale(base, rt.fingerprint(sfDir))
     base
   }
 }

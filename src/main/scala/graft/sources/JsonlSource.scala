@@ -77,8 +77,8 @@ object JsonlTable {
     require(filesystem.exists(p), s"graft-jsonl: path not found: $path")
     if (filesystem.getFileStatus(p).isFile) Seq(p.toString)
     else filesystem.listStatus(p).toSeq.map(_.getPath)
-      .filter(q => q.getName.endsWith(".json") || q.getName.endsWith(".jsonl"))
-      .filterNot(_.getName.startsWith("_"))
+      .filter(q => graft.ops.Generation.isData(q.getName) &&
+        (q.getName.endsWith(".json") || q.getName.endsWith(".jsonl")))
       .map(_.toString).sorted
   }
 

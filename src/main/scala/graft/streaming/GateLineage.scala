@@ -6,54 +6,34 @@ import org.apache.spark.sql.types.StructType
 
 /** Generation-keyed lineages of the stream gates: one directory per
   * (gate, source dir) under the warehouse, `graft_st_<name>`, holding
-  * the sink, its checkpoint and a `_GRAFT_SRC` fingerprint — the
-  * ensureBucketed staleness convention applied to a stream. While the
-  * fingerprint holds, a drain restarts on its own checkpoint: the file
-  * source has already seen every input file, so an unchanged generation
-  * commits no micro-batch and the settled sink is read back as it
-  * stands; a probe gate's provably current lineage starts no stream at
-  * all ([[drainDistinct]]). A rolled fingerprint resets sink, checkpoint
-  * and everything else under the directory as one unit (the checkpoint's seen-file log
-  * dedupes by path, so a same-path regen would otherwise never
-  * reprocess). Each lineage is a [[graft.ops.PersistedState]] family
-  * (`st_<gate>`), so its name ends with the source dir's tag and its
-  * fingerprint starts with the source file's `len:mtime`:
-  * [[graft.ops.StateGc]] keeps a lineage exactly while its source is
-  * live.
+  * the sink, its checkpoint and the fingerprint it was drained at,
+  * recorded and compared by [[graft.ops.Generation.resetIfStale]] — the
+  * `graft.src` staleness convention of a bucketed state applied to a
+  * stream. While the fingerprint holds, a drain restarts on its own
+  * checkpoint: the file source has already seen every input file, so an
+  * unchanged generation commits no micro-batch and the settled sink is
+  * read back as it stands; a probe gate's provably current lineage
+  * starts no stream at all ([[drainDistinct]]). A rolled fingerprint
+  * resets sink, checkpoint and everything else under the directory as
+  * one unit (the checkpoint's seen-file log dedupes by path, so a
+  * same-path regen would otherwise never reprocess). Each lineage is a
+  * [[graft.ops.PersistedState]] family (`st_<gate>`), so its name ends
+  * with the source dir's tag and its fingerprint starts with the
+  * source's generation: [[graft.ops.StateGc]] keeps a lineage exactly
+  * while its source is live.
   *
   * Single-writer per warehouse, like every persisted state: two
   * concurrent drains of one lineage would race on its checkpoint. */
 object GateLineage {
 
-  /** Reset `baseDir` when its recorded `_GRAFT_SRC` differs from
-    * `srcFingerprint`: the directory is emptied and the new fingerprint
-    * recorded. Returns true when it reset (a fresh lineage). */
-  def resetIfStale(spark: SparkSession, baseDir: String,
-                   srcFingerprint: String): Boolean = {
-    val p = new Path(baseDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(p, "_GRAFT_SRC")
-    val fresh = fs.exists(marker) &&
-      graft.ops.ScaleOps.readUtf8(fs, marker) == srcFingerprint
-    if (!fresh) reset(spark, baseDir, srcFingerprint)
-    !fresh
-  }
-
-  /** Empties `baseDir` and records `srcFingerprint` as its `_GRAFT_SRC`:
-    * a fresh lineage whatever the directory held. */
-  def reset(spark: SparkSession, baseDir: String, srcFingerprint: String): Unit = {
-    val p = new Path(baseDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    graft.ops.ScaleOps.writeUtf8(fs, new Path(p, "_GRAFT_SRC"), srcFingerprint)
-  }
-
-  /** Fingerprint of a probe gate's generation: the streamed source
-    * file's `len:mtime`, then the state table's name, `graft.src` and
-    * `graft.layout`, then `params` (cap and sketch parameters). A state
-    * table that records no `graft.src` has no generation to key on, so
-    * every drain against it starts a fresh lineage. */
+  /** Fingerprint of a probe gate's generation: the streamed source's
+    * [[graft.ops.Generation]] (a probe gate streams ONE named file,
+    * [[Gate.file]], so this is its `len:mtime`; a directory source for a
+    * probe gate is out of scope), then the state table's name,
+    * `graft.src` and `graft.layout`, then `params` (cap and sketch
+    * parameters). A state table that records no `graft.src` has no
+    * generation to key on, so every drain against it starts a fresh
+    * lineage. */
   private[graft] def probeFingerprint(spark: SparkSession, srcPath: String,
                                       stateTable: String,
                                       params: String): String = {
@@ -63,7 +43,7 @@ object GateLineage {
         s"$stateTable;src=$src;layout=${props.getOrElse("graft.layout", "")}"
       case None => s"$stateTable;unkeyed=${java.util.UUID.randomUUID()}"
     }
-    s"${graft.ops.ScaleOps.fileFingerprint(srcPath)}|$state|$params"
+    s"${graft.ops.Generation.of(srcPath)}|$state|$params"
   }
 
   /** The settled-distinct drain every probe gate runs: an AvailableNow
@@ -81,8 +61,8 @@ object GateLineage {
     * and append sink → downstream batch is the deployment shape.
     *
     * A CURRENT lineage starts no `StreamingQuery`: the sink is read as
-    * it stands. Current means [[resetIfStale]] kept the lineage (the
-    * fingerprint holds) and the checkpoint's latest offset has a commit
+    * it stands. Current means [[graft.ops.Generation.resetIfStale]] kept
+    * the lineage (the fingerprint holds) and the checkpoint's latest offset has a commit
     * (the last drain finished every batch it planned, and the file sink
     * logs a batch before its commit). Every probe gate streams ONE named
     * file of the sf dir ([[Gate.file]]'s glob) whose `len:mtime` leads
@@ -98,7 +78,7 @@ object GateLineage {
                                        sinkSchema: StructType)
                                       (stream: SparkSession => DataFrame): DataFrame = {
     val base = lineage.path(spark, sfDir)
-    val reset = resetIfStale(spark, base,
+    val reset = graft.ops.Generation.resetIfStale(base,
       probeFingerprint(spark, s"$sfDir/${lineage.sources.head}", stateTable, params))
     val data = s"$base/data"
     val ckpt = s"$base/ckpt"

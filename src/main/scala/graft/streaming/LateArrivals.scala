@@ -49,14 +49,10 @@ object LateArrivals {
     batches.zipWithIndex.foreach { case (b, i) =>
       val tmp = dir.resolveSibling(dir.getFileName.toString + s"_stage$i")
       b.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no parquet part written under $tmp"))
-        finally listing.close()
+      val part = graft.ops.Generation.dataFiles(tmp.toString).headOption
+        .getOrElse(sys.error(s"no parquet part written under $tmp"))
       val target = dir.resolve(f"b$i%03d.parquet")
-      Files.move(part, target)
+      Files.move(java.nio.file.Paths.get(part.getPath.toUri), target)
       graft.ops.ScaleOps.deleteLocal(tmp.toFile)
       // 10s apart: far above any filesystem mod-time granularity.
       require(target.toFile.setLastModified(t0 + i * 10000L),
@@ -83,10 +79,10 @@ object LateArrivals {
                         (batches: => Seq[DataFrame]): Path = {
     val dir = java.nio.file.Paths.get(stage.path(spark, sfDir))
     val srcFingerprint = stage.fingerprint(sfDir, params)
-    val marker = dir.resolve("_GRAFT_SRC")
     // Cross-process file lock around check+stage: two JVMs racing the
     // same tag must not rm/re-stage the dir under each other (the
-    // second comer re-checks the marker under the lock and reuses).
+    // second comer re-checks the recorded generation under the lock and
+    // reuses).
     val lockPath = dir.resolveSibling(dir.getFileName.toString + ".lock")
     Files.createDirectories(dir.getParent)
     val ch = java.nio.channels.FileChannel.open(lockPath,
@@ -95,11 +91,10 @@ object LateArrivals {
     try {
       val lock = ch.lock()
       try {
-        if (Files.exists(marker) &&
-            new String(Files.readAllBytes(marker), "UTF-8") == srcFingerprint) dir
+        if (graft.ops.Generation.recorded(dir.toString).contains(srcFingerprint)) dir
         else {
           val staged = stageBatches(batches, dir)
-          Files.write(marker, srcFingerprint.getBytes("UTF-8"))
+          graft.ops.Generation.record(dir.toString, srcFingerprint)
           staged
         }
       } finally lock.release()

@@ -115,7 +115,7 @@ object LshProbe {
 
   /** One AvailableNow drain of the increment against `stateTable`
     * through the PERSISTENT sink at `baseDir/data` with checkpoint
-    * `baseDir/ckpt` (caller runs [[GateLineage.resetIfStale]] first).
+    * `baseDir/ckpt` (caller runs [[graft.ops.Generation.resetIfStale]] first).
     * Committed sink files resolve through the sink's `_spark_metadata`
     * log (CompactedLanding's discipline — a torn in-flight file is
     * invisible); the returned pairs read ONLY files beyond the

@@ -73,7 +73,7 @@ object ScdApplyStream {
     val fs = work.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Keyed on the staged dir too: the checkpoint's file source records
     // its path, so a staging that moves must reset the lineage.
-    GateLineage.resetIfStale(spark, work.toString,
+    graft.ops.Generation.resetIfStale(work.toString,
       lineage.fingerprint(sfDir, s"|staged=$staged"))
     // Seed: a reset lineage (or one a crash left before its seed
     // published) holds no version yet.

@@ -67,7 +67,7 @@ object UpsertSink {
     val work = PersistedState.StUpsert.path(spark, sfDir)
     // The checkpoint's file source records the staged dir's path, so the
     // lineage is keyed on it too: a staging that moves resets the lineage.
-    GateLineage.resetIfStale(spark, work,
+    graft.ops.Generation.resetIfStale(work,
       PersistedState.StUpsert.fingerprint(sfDir, s"$params|staged=$staged"))
     val target = s"$work/target"
     val ckpt = s"$work/ckpt"

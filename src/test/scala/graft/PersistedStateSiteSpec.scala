@@ -112,7 +112,7 @@ class PersistedStateSiteSpec extends AnyFunSuite {
   private val familyDirs = Seq("/queries/", "/dedup/", "/graph/", "/similarity/")
   private val memoForbidden = Seq(
     "a fingerprint tag under a query family" -> ((f: java.nio.file.Path, line: String) =>
-      familyDirs.exists(f.toString.contains) && line.contains("fileFingerprint(")),
+      familyDirs.exists(f.toString.contains) && line.contains("Generation.of(")),
     "a memoTag" -> ((_: java.nio.file.Path, line: String) =>
       """\bmemoTag\b""".r.findFirstIn(line).nonEmpty),
     "a hand-rolled LRU" -> ((f: java.nio.file.Path, line: String) =>
@@ -125,5 +125,30 @@ class PersistedStateSiteSpec extends AnyFunSuite {
     } yield s"$f:$n: $why: ${line.trim}"
     assert(offending.isEmpty,
       "key memos through graft.ops.CacheOnce:\n" + offending.mkString("\n"))
+  }
+
+  /** Whether a source or a product is current is decided in one place,
+    * `graft.ops.Generation`: the `_GRAFT_SRC` marker's reads and
+    * writes, every file's mtime, and which files of a directory are
+    * data. A second copy drifts (a directory source judged by its own
+    * `len:mtime` serves stale state; a data filter that differs from
+    * Spark's counts files Spark does not read). Comment lines are not
+    * code; `Bench.scala`, which the benchmark times as it stands, is
+    * exempt. */
+  private val generationForbidden = Seq(
+    "the _GRAFT_SRC marker" -> """_GRAFT_SRC""".r,
+    "a file's mtime" -> """\bgetModificationTime\b""".r,
+    "a data-file filter" -> """startsWith\("_"\)|endsWith\("\.parquet"\)""".r)
+
+  test("generations are decided only in Generation") {
+    val offending = for {
+      (f, line, n) <- mainLines
+      if !Set("Generation.scala", "Bench.scala")(f.getFileName.toString)
+      t = line.trim
+      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/**"))
+      why <- generationForbidden.collect { case (w, re) if re.findFirstIn(line).nonEmpty => w }
+    } yield s"$f:$n: $why: ${line.trim}"
+    assert(offending.isEmpty,
+      "decide generations through graft.ops.Generation:\n" + offending.mkString("\n"))
   }
 }

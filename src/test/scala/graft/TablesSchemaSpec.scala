@@ -34,7 +34,7 @@ class TablesSchemaSpec extends SparkSpec {
       // A partitioned tree: partition columns come from the directory
       // names, the data columns from the nested footer.
       val tree = new java.io.File(root, "by_type").toString
-      ScaleOps.ensurePartitioned(spark, tree, "event_type")(Tables.events(spark, sf))
+      ScaleOps.ensurePartitioned(spark, tree, "event_type", "fp-A")(Tables.events(spark, sf))
       assertSameAsInferred(tree)
       // A bucketed-state stage directory, written as ensureBucketedDerived
       // stages it, and the derived table built through the real path.

@@ -130,10 +130,10 @@ class TrianglesSpec extends SparkSpec {
         (for { a <- 1L to 30L; b <- 1L to 30L
                if a < b && !stateEdges((a, b)) && (a * 13 + b) % 17 == 0
          } yield (a, b)).take(4)
-      graft.ops.ScaleOps.ensureBucketed(spark, tAdj, "src", 4,
+      graft.ops.ScaleOps.ensureBucketedKeys(spark, tAdj, Seq("src"), 4, "fp-adj",
         sortCols = Seq("src", "dst"))(
         PageRank.symmetrize(stateEdges.toSeq.toDF("id1", "id2")))
-      graft.ops.ScaleOps.ensureBucketedKeys(spark, tPair, Seq("src", "dst"), 4)(
+      graft.ops.ScaleOps.ensureBucketedKeys(spark, tPair, Seq("src", "dst"), 4, "fp-pair")(
         spark.table(tAdj).filter($"src" < $"dst"))
       val counts = Triangles.perNodeCounts(stateEdges.toSeq.toDF("id1", "id2"))
       val out = Triangles.incrementalPerNodeCounts(

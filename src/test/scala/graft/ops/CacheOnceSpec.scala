@@ -125,14 +125,14 @@ class CacheOnceSpec extends SparkSpec {
     val dir = SparkSpec.tempDir("graft-cache-bucketed")
     val src = dir.resolve("src.parquet").toString
     Seq(7).toDF("x").write.parquet(src)
-    val srcBefore = ScaleOps.fileFingerprint(src)
+    val srcBefore = Generation.of(src)
     val table = "graft_spec_cacheonce_bucketed"
     try {
-      ScaleOps.ensureBucketed(spark, table, "x", 2, "gen-1")(Seq(1, 2).toDF("x"))
+      ScaleOps.ensureBucketedKeys(spark, table, Seq("x"), 2, "gen-1")(Seq(1, 2).toDF("x"))
       val before = CacheOnce.swapTruncated("spec-bucketed", spark.table(table))
       assert(ints(before) == Seq(1, 2))
-      ScaleOps.ensureBucketed(spark, table, "x", 2, "gen-2")(Seq(3, 4, 5).toDF("x"))
-      assert(ScaleOps.fileFingerprint(src) == srcBefore)
+      ScaleOps.ensureBucketedKeys(spark, table, Seq("x"), 2, "gen-2")(Seq(3, 4, 5).toDF("x"))
+      assert(Generation.of(src) == srcBefore)
       val after = CacheOnce.swapTruncated("spec-bucketed", spark.table(table))
       assert(!(after eq before), "a rebuilt table hit the old generation")
       assert(ints(after) == Seq(3, 4, 5))

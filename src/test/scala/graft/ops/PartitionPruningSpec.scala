@@ -18,7 +18,7 @@ class PartitionPruningSpec extends SparkSpec {
       (1 to 30).map(i => Row(i.toLong, i * 1.5,
         java.sql.Date.valueOf(f"2024-01-${i % 3 + 1}%02d"))))
     val path = SparkSpec.tempDir("graft-prune").toString + "/events"
-    ScaleOps.ensurePartitioned(spark, path, "event_date")(d)
+    ScaleOps.ensurePartitioned(spark, path, "event_date", "src-v0")(d)
 
     val q = spark.read.parquet(path)
       .filter(col("event_date") === lit("2024-01-02").cast("date"))
@@ -41,7 +41,7 @@ class PartitionPruningSpec extends SparkSpec {
       s"pruned scan read $filesRead of $allFiles files — pruning did not happen")
 
     // Idempotence: a second ensurePartitioned is a no-op (same files).
-    ScaleOps.ensurePartitioned(spark, path, "event_date")(d.limit(1))
+    ScaleOps.ensurePartitioned(spark, path, "event_date", "src-v0")(d.limit(1))
     assert(spark.read.parquet(path).count() == 30)
   }
 

@@ -54,7 +54,7 @@ class RowGroupSkippingSpec extends SparkSpec {
   test("rowGroupRanges reads tight disjoint footer stats from a sorted write") {
     val d = df("k BIGINT")((1 to 4000).map(i => Row(i.toLong)))
     val path = SparkSpec.tempDir("graft-rg2").toString + "/t"
-    ScaleOps.ensureSortedBy(spark, path, "k", 4)(d)
+    ScaleOps.ensureSortedBy(spark, path, "k", 4, "fp-rg")(d)
     val ranges = ScaleOps.rowGroupRanges(path, "k")
     assert(ranges.size >= 4)
     // Range clustering means the per-group spans are disjoint and

@@ -29,22 +29,18 @@ class ScaleOpsSpec extends SparkSpec {
     val t = "b_fp_state"
     try {
       val v1 = spark.range(5).selectExpr("id AS k", "id * 2 AS v")
-      ScaleOps.ensureBucketed(spark, t, "k", 2, srcFingerprint = "fp-A")(v1)
+      ScaleOps.ensureBucketedKeys(spark, t, Seq("k"), 2, srcFingerprint = "fp-A")(v1)
       assert(spark.table(t).count() == 5)
       // Same fingerprint: the (different) df must NOT be rewritten —
       // "write once, join forever".
-      ScaleOps.ensureBucketed(spark, t, "k", 2, srcFingerprint = "fp-A")(
+      ScaleOps.ensureBucketedKeys(spark, t, Seq("k"), 2, srcFingerprint = "fp-A")(
         spark.range(9).selectExpr("id AS k", "id AS v"))
       assert(spark.table(t).count() == 5, "matching fingerprint must skip rewrite")
       // Changed fingerprint (source regenerated): MUST drop and rebuild
       // — stale bucketed state is the r9 regen-staleness failure mode.
       val v2 = spark.range(7).selectExpr("id AS k", "id AS v")
-      ScaleOps.ensureBucketed(spark, t, "k", 2, srcFingerprint = "fp-B")(v2)
+      ScaleOps.ensureBucketedKeys(spark, t, Seq("k"), 2, srcFingerprint = "fp-B")(v2)
       assert(spark.table(t).count() == 7, "changed fingerprint must rebuild")
-      // Legacy existence-only contract: empty fingerprint skips while
-      // the table exists, even one written WITH a fingerprint.
-      ScaleOps.ensureBucketed(spark, t, "k", 2)(v1)
-      assert(spark.table(t).count() == 7)
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
@@ -165,18 +161,18 @@ class ScaleOpsSpec extends SparkSpec {
       throw new IllegalStateException("state frame built for a fresh table")
     try {
       val df = spark.range(20).selectExpr("id AS k", "id % 3 AS v")
-      assert(ScaleOps.ensureBucketed(spark, t1, "k", 2, "fp-A")(df))
+      assert(ScaleOps.ensureBucketedKeys(spark, t1, Seq("k"), 2, "fp-A")(df))
       assert(ScaleOps.ensureBucketedKeys(spark, t2, Seq("k", "v"), 2, "fp-A")(df))
       val (built, n) = ScaleOps.ensureBucketedDerived(spark, t3, Seq("k"), "fp-A")(df)
       assert(built)
       // Fresh: a catalog lookup answers, the frame argument is untouched.
-      assert(!ScaleOps.ensureBucketed(spark, t1, "k", 2, "fp-A")(boom))
+      assert(!ScaleOps.ensureBucketedKeys(spark, t1, Seq("k"), 2, "fp-A")(boom))
       assert(!ScaleOps.ensureBucketedKeys(spark, t2, Seq("k", "v"), 2, "fp-A")(boom))
       assert(ScaleOps.ensureBucketedDerived(spark, t3, Seq("k"), "fp-A")(boom) ==
         ((false, n)))
       // Stale: the rebuild needs the frame, so it is evaluated.
       intercept[IllegalStateException](
-        ScaleOps.ensureBucketed(spark, t1, "k", 2, "fp-B")(boom))
+        ScaleOps.ensureBucketedKeys(spark, t1, Seq("k"), 2, "fp-B")(boom))
       intercept[IllegalStateException](
         ScaleOps.ensureBucketedDerived(spark, t3, Seq("k"), "fp-B")(boom))
     } finally Seq(t1, t2, t3).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -226,13 +222,13 @@ class ScaleOpsSpec extends SparkSpec {
     // path a large-fact x large-fact join would take.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      ScaleOps.writeBucketed(
+      ScaleOps.writeBucketedKeys(
         Tables.orders(spark, sf).select("o_orderkey", "o_totalprice"),
-        "b_orders", "o_orderkey", 4)
-      ScaleOps.writeBucketed(
+        "b_orders", Seq("o_orderkey"), 4)
+      ScaleOps.writeBucketedKeys(
         Tables.lineitem(spark, sf)
           .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-        "b_lineitem", "o_orderkey", 4)
+        "b_lineitem", Seq("o_orderkey"), 4)
       val joined = ScaleOps.bucketedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected no shuffle, got:\n$plan")

@@ -25,11 +25,11 @@ class StateGcSpec extends SparkSpec {
     val src = SparkSpec.tempDir("gcsrc")
     val fpFile = src.resolve("state.bin")
     Files.write(fpFile, "v1".getBytes)
-    val f1 = ScaleOps.fileFingerprint(fpFile.toString)
+    val f1 = Generation.of(fpFile.toString)
     val tag = PersistedState.tagOf(src.toString)
     val tbl = s"graft_specgc_tbl_$tag"
     val lay = new java.io.File(wh, s"graft_specgc_lay_$tag").toString
-    ScaleOps.ensureBucketed(spark, tbl, "id", 2, f1)(spark.range(10).toDF("id"))
+    ScaleOps.ensureBucketedKeys(spark, tbl, Seq("id"), 2, f1)(spark.range(10).toDF("id"))
     ScaleOps.ensureSortedBy(spark, lay, "id", 1, f1 + ":p=1")(spark.range(5).toDF("id"))
 
     // Dry run against the live source: everything reports keep, nothing
@@ -60,8 +60,8 @@ class StateGcSpec extends SparkSpec {
 
     // Dead source: rebuild under the new fingerprint, then GC with no
     // live dirs at all — tag_live false, dropped.
-    val f2 = ScaleOps.fileFingerprint(fpFile.toString)
-    ScaleOps.ensureBucketed(spark, tbl, "id", 2, f2)(spark.range(3).toDF("id"))
+    val f2 = Generation.of(fpFile.toString)
+    ScaleOps.ensureBucketedKeys(spark, tbl, Seq("id"), 2, f2)(spark.range(3).toDF("id"))
     val dead = StateGc.run(spark, wh, Seq.empty, "graft_specgc_",
       dryRun = false).collect()
     assert(dead.length == 1 && !dead.head.getBoolean(2) &&
@@ -76,13 +76,13 @@ class StateGcSpec extends SparkSpec {
     val gone = SparkSpec.tempDir("gcgate_gone")
     Seq(live, gone).foreach(d => Files.write(d.resolve("documents.parquet"), "docs".getBytes))
     val tbl = "graft_specgc_gate_state"
-    ScaleOps.ensureBucketed(spark, tbl, "id", 2,
-      ScaleOps.fileFingerprint(live.resolve("documents.parquet").toString))(
+    ScaleOps.ensureBucketedKeys(spark, tbl, Seq("id"), 2,
+      Generation.of(live.resolve("documents.parquet").toString))(
       spark.range(4).toDF("id"))
     def lineage(src: java.nio.file.Path): String = {
       val base = PersistedState("st_specgc_probe", Seq("documents.parquet"))
         .path(spark, src.toString)
-      graft.streaming.GateLineage.resetIfStale(spark, base,
+      Generation.resetIfStale(base,
         graft.streaming.GateLineage.probeFingerprint(spark,
           src.resolve("documents.parquet").toString, tbl, "v1;cap=none"))
       base
@@ -204,7 +204,7 @@ class StateGcSpec extends SparkSpec {
     Files.write(dirB.resolve("b.bin"), "bb-longer".getBytes)
     val tagA = PersistedState.tagOf(dirA.toString)
     assert(tagA == PersistedState.tagOf(dirB.toString), "fixture must collide")
-    val fpB = ScaleOps.fileFingerprint(dirB.resolve("b.bin").toString)
+    val fpB = Generation.of(dirB.resolve("b.bin").toString)
     val gen = new java.io.File(wh, s"graft_specgc_collide_$tagA").toString
     try {
       // Generation keyed to dir B's fingerprint; both dirs declared live

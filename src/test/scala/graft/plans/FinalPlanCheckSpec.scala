@@ -20,7 +20,7 @@ class FinalPlanCheckSpec extends SparkSpec {
 
   private def withState[A](f: => A): A =
     try {
-      ScaleOps.ensureBucketed(spark, table, "k", 4)(
+      ScaleOps.ensureBucketedKeys(spark, table, Seq("k"), 4, "fp-fpc")(
         (1L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))
       f
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")

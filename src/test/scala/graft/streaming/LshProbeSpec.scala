@@ -55,7 +55,7 @@ class LshProbeSpec extends SparkSpec {
     graft.queries.Build.prepare(spark, d, Seq(graft.ops.PersistedState.LshState))
     val state = graft.ops.PersistedState.LshState.name(d)
     val base = SparkSpec.tempDir("graft_wm_probe").toString + "/lineage"
-    GateLineage.resetIfStale(spark, base, "fp-1")
+    graft.ops.Generation.resetIfStale(base, "fp-1")
 
     // Fresh lineage: everything the sink committed is beyond the marker.
     val d1 = LshProbe.candidatesWatermarked(spark, d, state, base)
@@ -81,7 +81,7 @@ class LshProbeSpec extends SparkSpec {
 
     // Rolled fingerprint: lineage (sink, checkpoint, marker) resets as
     // one unit, so the next drain reprocesses from scratch.
-    GateLineage.resetIfStale(spark, base, "fp-2")
+    graft.ops.Generation.resetIfStale(base, "fp-2")
     val d3 = LshProbe.candidatesWatermarked(spark, d, state, base)
     assert(d3.newFiles.nonEmpty &&
       d3.newPairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == ref,
