@@ -108,9 +108,9 @@ class GenerationSpec extends SparkSpec {
       val emptiedBefore = emptied()
       rewrite("events")
       rewrite("customer")
-      val stale = kinds.collect { case (k, build) if !build() => k }
+      val stale = kinds.collect { case (k, build) if !build() => k } ++
+        (if (emptied() == emptiedBefore) Seq("emptied (st_file_sink)") else Nil)
       assert(stale.isEmpty, s"served stale after an in-place part rewrite: $stale")
-      assert(emptied() != emptiedBefore, "an emptied product kept the old generation")
       assert(sorted() == false && erKeys() == false, "a rebuilt product is current")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS `${ErKeys.name(d)}`")
