@@ -24,9 +24,10 @@ import org.apache.spark.storage.StorageLevel
   * holds (`InMemoryFileIndex` for paths and catalog tables,
   * `MetadataLogFileIndex` for a sink read back through its log), so the
   * generation costs no listing and no job; a leaf over any other index
-  * contributes its root paths (as unlisted statuses, length -1). A leaf that is itself a memo's output (a
-  * truncated `LogicalRDD`) hashes by its RDD, so a chain of memos misses
-  * all the way down once its first input moves. Callers pass no tag.
+  * contributes its root paths (as unlisted statuses, length -1). A leaf
+  * that is itself a memo's output (a truncated `LogicalRDD`) hashes by
+  * its RDD, so a chain of memos misses all the way down once its first
+  * input moves. Callers pass no tag.
   *
   * THE BOUND. `persist()` entries live in the session CacheManager until
   * explicitly released — the ContextCleaner never reclaims them — so a

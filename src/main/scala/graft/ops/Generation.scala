@@ -40,30 +40,28 @@ object Generation {
       !name.startsWith(".") && !name.endsWith("._COPYING_")
 
   /** The data files under `path` (the file itself when `path` is one):
-    * one recursive listing, keeping the files every component of whose
-    * path below `path` is data, in Spark's order (the full path
-    * string; for a flat directory, the file name). */
+    * one recursive listing that descends only into data directories and
+    * keeps data files, in Spark's order (the full path string; for a
+    * flat directory, the file name). */
   def dataFiles(path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(ScaleOps.hadoopConf())
     underRoot(fs, fs.getFileStatus(p)).map(_._2)
   }
 
-  /** (path below the root, status) of every data file under `root`. */
+  /** (path below the root, status) of every data file under `root`.
+    * `listStatus` per directory, not `listFiles`: the latter looks up
+    * every file's block locations, which no caller needs. */
   private def underRoot(fs: org.apache.hadoop.fs.FileSystem,
-                        root: FileStatus): Seq[(String, FileStatus)] =
-    if (root.isFile) Seq(root.getPath.getName -> root)
-    else {
-      val base = root.getPath.toUri.getPath.stripSuffix("/") + "/"
-      val files = fs.listFiles(root.getPath, true)
-      val out = Seq.newBuilder[(String, FileStatus)]
-      while (files.hasNext) {
-        val f = files.next()
-        val rel = f.getPath.toUri.getPath.stripPrefix(base)
-        if (rel.split('/').forall(isData)) out += rel -> f
+                        root: FileStatus): Seq[(String, FileStatus)] = {
+    def walk(dir: Path, rel: String): Seq[(String, FileStatus)] =
+      fs.listStatus(dir).toSeq.filter(st => isData(st.getPath.getName)).flatMap { st =>
+        val r = rel + st.getPath.getName
+        if (st.isDirectory) walk(st.getPath, r + "/") else Seq(r -> st)
       }
-      out.result().sortBy(_._2.getPath.toString)
-    }
+    if (root.isFile) Seq(root.getPath.getName -> root)
+    else walk(root.getPath, "").sortBy(_._2.getPath.toString)
+  }
 
   /** The generation of the file or directory at `path` (see the object
     * doc). A missing path throws, as a stat of it does. */
